@@ -46,20 +46,26 @@ import graft.ingest.SchemaInference
   *
   * ==Thread-safety contract==
   * The engine serves concurrent callers (the reference schedules up to
-  * 500 parallel jobs, job/job_scheduler.py:14):
-  *  - '''Queries never block''': `query()`, `sql`/`explain`/`get`/
-  *    search commands and `artifact verify` take no engine lock and
-  *    may run fully in parallel (Spark schedules their jobs FAIR
-  *    across threads).
-  *  - '''Writers serialize''': REST PUT's reserve-append-fold section,
-  *    every artifact-mutating command (create/attach/refresh/sync/
-  *    delete/drop, `drop partition`, `sync all`, `pipeline clean`,
-  *    `set ...`) and the streaming view-fold sink all hold one
-  *    engine-wide [[writeLock]] — the parquet append commit protocol
-  *    is not safe for two concurrent jobs on one directory, and a
-  *    standing artifact's read-fold-commit cycle must not interleave
-  *    (two folds reading version N would both commit N+1; one fold
-  *    silently lost). One writer at a time, readers unblocked.
+  * 500 parallel jobs, job/job_scheduler.py:14). Every command runs
+  * under the lock named by the required `lock` field of its entry in
+  * [[commands]] — the one place a command's class is decided:
+  *  - '''Queries never block''': [[Engine.Read]] commands (`sql`,
+  *    `explain`, `get`, search/serve commands, `artifact verify`) take
+  *    no engine lock, only the retention gate's read side, and may run
+  *    fully in parallel (Spark schedules their jobs FAIR across
+  *    threads). The lazy `query()` surface takes nothing.
+  *  - '''Writers serialize''': [[Engine.Write]] commands, REST PUT's
+  *    reserve-append-fold section and the streaming view-fold sink all
+  *    hold one engine-wide [[writeLock]] — the parquet append commit
+  *    protocol is not safe for two concurrent jobs on one directory,
+  *    and a standing artifact's read-fold-commit cycle must not
+  *    interleave (two folds reading version N would both commit N+1;
+  *    one fold silently lost). Every command that commits an artifact
+  *    version or rewrites a directory is therefore a Write entry. One
+  *    writer at a time, readers unblocked. A few Write entries are
+  *    broader than they need to be (`layout scan` only reads;
+  *    `set query log` and `reset ... log` touch monitor-synchronized
+  *    state) and stay so until a follow-up narrows them.
   *    The [[writeLock]] is PER-PROCESS: with several engine processes
   *    over one root, `sharedLedger = true` extends only the LEDGER's
   *    guarantees (duplicate-PUT refusal, tsd_id uniqueness) across
@@ -69,6 +75,9 @@ import graft.ingest.SchemaInference
   *    while artifact folds remain single-node-owned — run each
   *    standing artifact's folds from one process (the reference's
   *    operator/aggregator split has the same ownership shape).
+  *  - [[Engine.Unguarded]] commands hold neither lock: they join
+  *    worker threads whose work may need the write lock (the
+  *    lock-order reasons sit beside their entries).
   *  - '''Read visibility''': a query racing an append may observe a
   *    partially committed batch (parquet part-files become visible
   *    per-file). `committed=true` / `nodes=main` bound reads to the
@@ -77,7 +86,7 @@ import graft.ingest.SchemaInference
   *    a completed PUT is visible to all subsequent queries.
   *  - '''Retention never breaks a command read''': the physical
   *    file-removal moments (`drop partition`'s directory delete, the
-  *    compact/merge directory swap) drain in-flight non-mutating
+  *    compact/merge directory swap) drain in-flight Read
   *    `execute()` calls through a fair read-write gate
   *    ([[retentionGate]]) before touching the filesystem, so a
   *    command-surface query can never fail with file-not-found from
@@ -103,6 +112,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       * object-store caveat). Requires a root-backed catalog; rootless
       * engines ignore it. */
     val sharedLedger: Boolean = false) {
+  import Engine.{Command, Lock, Read, Unguarded, Write}
 
   /** Transport for `dest=kafka@host:port` output
     * (api/al_kafka.py get_producer/send_data; dest registry
@@ -632,8 +642,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       s"${java.time.Instant.ofEpochMilli(ts)} $line"
     }.mkString("\n")
 
-  /** Execute any command; returns rendered text output. Every command
-    * lands in the event log; failures land in the error log too. */
   /** Serializes every state-mutating operation — artifact create/
     * refresh/sync/delete/drop, partition/retention, ingest's
     * append+fold section, streaming view folds — engine-wide. One
@@ -646,20 +654,19 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private val writeLock = new Object
 
   /** Retention gate: the ONLY lock the read path ever touches. A
-    * non-mutating command execution holds the READ side for its whole
-    * run (reads still run fully parallel with each other and with
-    * every writer except a physical delete); the two physical
-    * file-removal moments — `drop partition`'s directory delete and
-    * the compact/merge [[swapDirs]] promotion — hold the WRITE side.
-    * So a command-surface query can never observe a file-not-found
-    * from retention: the delete drains in-flight command reads first,
-    * and reads planned after it list the surviving files. FAIR mode so
-    * a continuous reader stream cannot starve retention. Deadlock-
-    * free by construction: the write side is reachable only from
-    * mutating commands, which never hold the read side (no
-    * read→write upgrade exists). `query()` hands back a lazy
-    * DataFrame executed outside the engine, so it stays on the
-    * documented retry contract. */
+    * [[Read]] command holds the READ side for its whole run (reads
+    * still run fully parallel with each other and with every writer
+    * except a physical delete); the two physical file-removal moments
+    * — `drop partition`'s directory delete and the compact/merge
+    * [[swapDirs]] promotion — hold the WRITE side. So a
+    * command-surface query can never observe a file-not-found from
+    * retention: the delete drains in-flight command reads first, and
+    * reads planned after it list the surviving files. FAIR mode so a
+    * continuous reader stream cannot starve retention. Deadlock-free
+    * by construction: the write side is reachable only from [[Write]]
+    * commands, which never hold the read side (no read→write upgrade
+    * exists). `query()` hands back a lazy DataFrame executed outside
+    * the engine, so it stays on the documented retry contract. */
   private val retentionGate =
     new java.util.concurrent.locks.ReentrantReadWriteLock(true)
 
@@ -673,157 +680,132 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     try body finally l.unlock()
   }
 
-  /** Commands that mutate engine or artifact state (everything the
-    * [[writeLock]] contract covers). `sql`, `explain`, `get`,
-    * search/serve commands and `artifact verify` (a read-only
-    * rebuild-diff) run lock-free. */
-  private def isMutating(low: String): Boolean = {
-    val familyVerb = ("^(rollup|vindex|tindex|sindex|matview|" +
-      "join matview|dedup index|monitor|index) " +
-      "(create|sync|refresh|delete|attach|drop|retention|fold)").r
-    low.startsWith("create view ") || low.startsWith("connect dbms") ||
-      low.startsWith("partition ") ||
-      low.startsWith("drop partition ") ||
-      low.startsWith("pipeline clean") || low.startsWith("sync all") ||
-      low.startsWith("layout ") || low.startsWith("set ") ||
-      low.startsWith("reset ") ||
-      // attach all re-registers the whole artifact fleet (and its
-      // inner attaches take the write lock); classifying it mutating
-      // also keeps the retention-gate lock order acyclic — a reader
-      // must never block on [[writeLock]] while holding the read gate
-      low.startsWith("attach all") ||
-      // directory-rewriting commands (swapDirs): were never safe to
-      // run concurrently with each other on one table, and they END
-      // in a physical delete — both facts require the write side
-      low.startsWith("compact ") || low.startsWith("merge into") ||
-      low.startsWith("merge scd2 into") ||
-      // scheduler-family commands are classified mutating even though
-      // they only touch the (internally synchronized) task registry:
-      // `task run` re-enters execute() with the TASK's command, and a
-      // mutating task reached from the read-gated path would be a
-      // read→write upgrade on the retention gate — the one deadlock
-      // the lock order forbids. Entering on the write side keeps the
-      // nested acquisition order writeLock → gate, same as every
-      // other mutating command.
-      low.startsWith("schedule ") || low.startsWith("task ") ||
-      low.startsWith("run scheduler") || low.startsWith("exit scheduler") ||
-      // ha sync ingests (nested writeLock) and delete archive removes
-      // files — both enter on the write side like the scheduler family
-      low.startsWith("run ha sync") || low.startsWith("delete archive") ||
-      low.startsWith("run streamer") ||
-      low.startsWith("run kafka consumer") ||
-      // msg client start/exit: the duplicate-subscription check and
-      // the registry insert bracket a network handshake — write-side
-      // serialization is what makes check-then-insert atomic (two
-      // concurrent declarations of the same topics must collapse to
-      // ONE subscription, not deliver every message twice). stop()
-      // joins no thread that needs the write lock, so the exit is
-      // safe on this side too.
-      low.startsWith("run msg client") ||
-      low.startsWith("exit msg client") ||
-      // plc client start: check-then-insert brackets a TCP connect —
-      // write-side serialization keeps duplicate declarations atomic,
-      // same reasoning as run msg client / run kafka consumer
-      low.startsWith("run plc client") ||
-      familyVerb.findFirstIn(low).isDefined
+  /** The value of option `key = <value>` in a command: the first
+    * whitespace-delimited token after the `=` (the key matches
+    * case-insensitively, as a whole word). */
+  private def arg(text: String, key: String): Option[String] =
+    s"(?i)\\b$key\\s*=\\s*(\\S+)".r.findFirstMatchIn(text).map(_.group(1))
+
+  /** [[arg]] for a required option: missing, it fails with
+    * `<cmd> requires <key> =`. */
+  private def reqArg(text: String, key: String, cmd: String): String =
+    arg(text, key).getOrElse(
+      throw new IllegalArgumentException(s"$cmd requires $key ="))
+
+  /** [[arg]] whose value may be quoted (`"..."` or `'...'`), so it can
+    * carry spaces; an unquoted value is the bare token. */
+  private def quotedArg(text: String, key: String): Option[String] =
+    (s"(?i)\\b$key\\s*=\\s*" + "\"([^\"]+)\"").r
+      .findFirstMatchIn(text).map(_.group(1))
+      .orElse((s"(?i)\\b$key\\s*=\\s*'([^']+)'").r
+        .findFirstMatchIn(text).map(_.group(1)))
+      .orElse(arg(text, key))
+
+  /** Split `<cmd> [where] ... spec = <json>` at its JSON spec, which
+    * must be the LAST clause (JSON has no bare `=`, so the options
+    * before it parse unambiguously): (those options, the JSON text).
+    * The clause is matched as a WORD (`table = inspection` must not
+    * trip the substring "spec"); a command without one fails with
+    * `missing`. */
+  private def specClause(t: String, cmd: String,
+      missing: String): (String, String) = {
+    val body = t.substring(cmd.length).trim.stripPrefix("where").trim
+    val m = "(?i)\\bspec\\s*=".r.findFirstMatchIn(body).getOrElse(
+      throw new IllegalArgumentException(missing))
+    (body.substring(0, m.start), body.substring(m.end).trim)
   }
 
-  /** Commands that must hold NEITHER the write lock NOR the retention
-    * read gate: `exit streamer` / `exit kafka consumer` only touch
-    * internally-synchronized registries, and both JOIN worker threads.
-    * `exit streamer` (StreamingQuery.stop()) waits on a micro-batch
-    * whose fold needs [[writeLock]] — so it cannot run as mutating
-    * (2-party deadlock: stop() waits the batch, the batch waits the
-    * monitor we hold). It also cannot run READ-GATED: with FAIR mode,
-    * a retention writer (`drop partition` holds writeLock, then wants
-    * the gate's write side) bridges a 3-way cycle — exit holds gate
-    * read and waits the batch, the batch waits writeLock held by the
-    * retention command, the retention command waits the gate write
-    * side blocked behind exit's read hold. Unguarded execution
-    * touches no files and no foldable state, so neither lock is
-    * needed. Regressions: StreamerExitSpec (both shapes). */
-  private def isUnguarded(low: String): Boolean =
-    low.startsWith("exit streamer") ||
-      low.startsWith("exit kafka consumer") ||
-      // exit plc joins its poll thread, which takes no engine locks —
-      // holding none here keeps the join free of lock-order hazards
-      low.startsWith("exit plc")
+  /** A registered table or view by name, else a parquet path. */
+  private def tableOrPath(src: String): DataFrame =
+    if (catalog.tableNames.contains(src) ||
+        catalog.viewNames.contains(src)) catalog.table(src)
+    else spark.read.parquet(src)
 
-  def execute(command: String): String = {
-    val entry = (System.currentTimeMillis, command.trim)
-    logRing(eventLog, entry)
-    try {
-      val low = command.trim.toLowerCase
-      if (isUnguarded(low)) executeImpl(command, entry)
-      else if (isMutating(low))
-        writeLock.synchronized(executeImpl(command, entry))
-      else readGated(executeImpl(command, entry))
-    }
-    catch { case e: Throwable =>
-      logRing(errorLog,
-        (System.currentTimeMillis, command.trim,
-          Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
-      throw e
-    }
+  /** A result frame rendered as JSON, or as a text table when the
+    * command carries `format = table`. */
+  private def rendered(text: String, df: DataFrame): String =
+    if (arg(text, "format").contains("table")) Render.table(df)
+    else Render.json(df)
+
+  /** `get <family>s`: one line per registered table, sorted by name. */
+  private def listing[M](families: String, reg: Map[String, M])(
+      line: (String, M) => String): String =
+    if (reg.isEmpty) s"no $families registered"
+    else reg.toSeq.sortBy(_._1).map(line.tupled).mkString("\n")
+
+  /** `<family> drop where table = <t>`: unregister only; the artifact
+    * stays on disk. */
+  private def unregister(family: String, t: String,
+      reg: Map[String, _])(remove: String => Unit): String = {
+    val table = reqArg(t, "table", s"$family drop")
+    require(reg.contains(table), s"no $family registered for $table")
+    remove(table)
+    s"$family for $table dropped"
   }
 
-  private def executeImpl(command: String,
-      selfEntry: (Long, String) = null): String = {
-    val t = command.trim
-    val low = t.toLowerCase
-    if (low.startsWith("sql ")) {
+  private def cmd(prefix: String, lock: Lock)(run: String => String) =
+    new Command(prefix, lock, exact = false, run)
+  private def exact(text: String, lock: Lock)(run: String => String) =
+    new Command(text, lock, exact = true, run)
+
+  /** Every command the engine serves, with the lock it runs under — the
+    * one place a command's lock class is decided (see the class doc's
+    * thread-safety contract). A command resolves to the entry with the
+    * LONGEST matching prefix (exact entries match the whole lowercased
+    * command), so `set view auto refresh` beats `set ` whatever the
+    * order below. Handlers receive the trimmed command text. */
+  private[engine] val commands: Seq[Command] = Seq(
+    cmd("sql ", Read) { t =>
       // every sql execution feeds the QueryMonitor histogram and (when
       // enabled) the slow-query log — member_cmd.py "get queries time" /
       // "set query log profile [n] seconds"
       val t0 = System.nanoTime()
       try renderSql(t)
       finally recordQueryTime(t, (System.nanoTime() - t0) / 1e9)
-    }
-    else if (low.startsWith("get queries time")) {
-      val json = "(?i)where\\s+format\\s*=\\s*json".r
-        .findFirstIn(low).isDefined
-      queriesTimeReport(json)
-    }
-    else if (low == "get query log") synchronized {
+    },
+    cmd("explain sql ", Read)(explainSql),
+    cmd("get queries time", Read)(t => queriesTimeReport(
+      "(?i)where\\s+format\\s*=\\s*json".r.findFirstIn(t).isDefined)),
+    exact("get query log", Read)(_ => synchronized {
       if (queryLogTime < 0) "query log is off"
       else if (queryLog.isEmpty) "query log is empty"
       else queryLog.map { case (ts, secs, cmd) =>
         f"${java.time.Instant.ofEpochMilli(ts)} ${secs}%.3f sec: $cmd"
       }.mkString("\n")
-    }
-    else if (low == "get event log") synchronized {
+    }),
+    exact("get event log", Read)(_ => synchronized {
       // recently executed commands (member_cmd.py "get event log") —
       // excluding THIS command by entry identity (a concurrent execute()
       // may have logged after ours, so dropping the tail would drop the
       // wrong entry and leave ours in the output)
+      val self = runningEvent.value
       renderLog(eventLog.toSeq.filter(_.asInstanceOf[AnyRef] ne
-        selfEntry.asInstanceOf[AnyRef]))
-    }
-    else if (low == "get error log") synchronized {
+        self.asInstanceOf[AnyRef]))
+    }),
+    exact("get error log", Read)(_ => synchronized {
       // recently failed commands with their error text
       if (errorLog.isEmpty) "log is empty"
       else errorLog.map { case (ts, cmd, err) =>
         s"${java.time.Instant.ofEpochMilli(ts)} $cmd -> $err"
       }.mkString("\n")
-    }
-    else if (low == "reset event log") synchronized {
+    }),
+    exact("reset event log", Write)(_ => synchronized {
       eventLog.clear(); "event log reset"
-    }
-    else if (low == "reset error log") synchronized {
+    }),
+    exact("reset error log", Write)(_ => synchronized {
       errorLog.clear(); "error log reset"
-    }
-    else if (low == "reset query log") synchronized {
-      queryLog.clear()
-      "query log reset"
-    }
-    else if (low == "reset queries time") synchronized {
+    }),
+    exact("reset query log", Write)(_ => synchronized {
+      queryLog.clear(); "query log reset"
+    }),
+    exact("reset queries time", Write)(_ => synchronized {
       // QueryMonitor.reset (job_instance.py:44-48)
       java.util.Arrays.fill(queryBuckets, 0L)
       queryMonitorStart = System.currentTimeMillis
       "queries time reset"
-    }
-    else if (low.startsWith("set query log")) synchronized {
-      val rest = low.substring("set query log".length).trim
+    }),
+    cmd("set query log", Write)(t => synchronized {
+      val rest = t.toLowerCase.substring("set query log".length).trim
       val profileRx = "profile\\s+(\\d+)\\s+seconds?".r
       rest match {
         case "on" => queryLogTime = 0; "query log on"
@@ -834,8 +816,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         case other => throw new IllegalArgumentException(
           s"set query log: expected on|off|profile [n] seconds, got '$other'")
       }
-    }
-    else if (low.startsWith("get streaming")) {
+    }),
+    cmd("get streaming", Read) { _ =>
       // the reference's per-table streaming buffer stats (member_cmd.py
       // get_streaming_info / streaming_data.show_info) mapped onto
       // Structured Streaming's live query registry + progress
@@ -848,32 +830,28 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           p.fold(" (no batch yet)")(pr =>
             s" batch=${pr.batchId} lastBatchRows=${pr.numInputRows}")
       }.mkString("\n")
-    }
-    else if (low.startsWith("explain sql ")) explainSql(t)
-    else if (low == "get status")
+    },
+    exact("get status", Read)(_ =>
       // member_cmd.py `get status` leads with "'<node>' is running" —
       // the liveness shape monitors poll — then the local detail
       s"'${dict.getOrElse("node_name", "graft")}@${nodeAddress._1}:" +
         s"${nodeAddress._2}' is running; " +
         s"tables: ${catalog.tableNames.size}; " +
-        s"views: ${catalog.viewNames.size}; spark: ${spark.version}"
-    else if (low.startsWith("create view ")) createView(t)
-    else if (low.startsWith("partition ")) partition(t)
-    else if (low.startsWith("drop partition ")) dropPartition(t)
-    else if (low.startsWith("rollup create")) rollupCreate(t)
-    else if (low.startsWith("rollup sync")) indexFamilySync(t, "rollup")
-    else if (low.startsWith("rollup refresh")) rollupRefresh(t)
-    else if (low.startsWith("rollup delete")) rollupDelete(t)
-    else if (low.startsWith("rollup attach")) {
+        s"views: ${catalog.viewNames.size}; spark: ${spark.version}"),
+    cmd("create view ", Write)(createView),
+    cmd("partition ", Write)(partition),
+    cmd("drop partition ", Write)(dropPartition),
+
+    cmd("rollup create", Write)(rollupCreate),
+    cmd("rollup sync", Write)(indexFamilySync(_, "rollup")),
+    cmd("rollup refresh", Write)(rollupRefresh),
+    cmd("rollup delete", Write)(rollupDelete),
+    cmd("rollup attach", Write) { t =>
       // re-register an existing artifact after an engine restart — the
       // rollup records its own metadata (grain, ts_col, measures, dims),
       // so the files alone are enough
-      def kv(k: String): Option[String] =
-        s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-      val table = kv("table").getOrElse(throw new IllegalArgumentException(
-        "rollup attach requires table ="))
-      val path = kv("path").getOrElse(throw new IllegalArgumentException(
-        "rollup attach requires path ="))
+      val table = reqArg(t, "table", "rollup attach")
+      val path = reqArg(t, "path", "rollup attach")
       val stored = graft.ops.IndexStore.read(spark, path).getOrElse(
         throw new IllegalArgumentException(s"no rollup artifact at $path"))
       val (tsCol, grain, dims, measures) = graft.ops.Rollup.metaOf(stored)
@@ -882,175 +860,139 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       s"rollup for $table attached from $path " +
         s"(grain=$grain dims=${dims.mkString(",")} " +
         s"measures=${measures.mkString(",")})"
-    }
-    else if (low.startsWith("rollup drop")) {
-      val table = "(?i)\\btable\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-        .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-          "rollup drop requires table ="))
-      require(rollups.contains(table), s"no rollup registered for $table")
-      rollups -= table // unregister only; the artifact stays on disk
-      s"rollup for $table dropped"
-    }
-    else if (low == "get rollups") {
-      if (rollups.isEmpty) "no rollups registered"
-      else rollups.toSeq.sortBy(_._1).map { case (tbl, m) =>
-        s"$tbl: grain=${m.grain} time=${m.tsCol} " +
-          s"value=${m.valueCols.mkString(",")} " +
-          s"dims=${m.dims.mkString(",")} path=${m.path}"
-      }.mkString("\n")
-    }
-    else if (low.startsWith("vindex create")) vindexCreate(t)
-    else if (low.startsWith("vindex sync")) indexFamilySync(t, "vindex")
-    else if (low.startsWith("vindex refresh")) vindexRefresh(t)
-    else if (low.startsWith("vindex delete")) vindexDelete(t)
-    else if (low.startsWith("vindex search")) vindexSearch(t)
-    else if (low.startsWith("vindex negatives")) vindexNegatives(t)
-    else if (low.startsWith("vindex attach")) vindexAttach(t)
-    else if (low.startsWith("vindex drop")) {
-      val table = "(?i)\\btable\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-        .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-          "vindex drop requires table ="))
-      require(vindexes.contains(table), s"no vindex registered for $table")
-      vindexes -= table // unregister only; the artifact stays on disk
-      s"vindex for $table dropped"
-    }
-    else if (low == "get vindexes") {
-      if (vindexes.isEmpty) "no vindexes registered"
-      else vindexes.toSeq.sortBy(_._1).map { case (tbl, m) =>
-        s"$tbl: type=${m.kind} id=${m.idCol} vector=${m.vecCol}" +
-          (if (m.kind == "pq") s" numsub=${m.numSub}" else "") +
-          s" path=${m.path}"
-      }.mkString("\n")
-    }
-    else if (low.startsWith("tindex create")) tindexCreate(t)
-    else if (low.startsWith("tindex sync")) indexFamilySync(t, "tindex")
-    else if (low.startsWith("tindex refresh")) tindexRefresh(t)
-    else if (low.startsWith("tindex delete")) tindexDelete(t)
-    else if (low.startsWith("tindex search")) tindexSearch(t)
-    else if (low.startsWith("tindex phrase")) tindexPhrase(t)
-    else if (low.startsWith("tindex near")) tindexNear(t)
-    else if (low.startsWith("tindex snippet")) tindexSnippet(t)
-    else if (low.startsWith("tindex like")) tindexLike(t)
-    else if (low.startsWith("tindex attach")) tindexAttach(t)
-    else if (low.startsWith("hybrid search")) hybridSearch(t)
-    else if (low.startsWith("tindex drop")) {
-      val table = "(?i)\\btable\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-        .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-          "tindex drop requires table ="))
-      require(tindexes.contains(table), s"no tindex registered for $table")
-      tindexes -= table // unregister only; the artifact stays on disk
-      s"tindex for $table dropped"
-    }
-    else if (low == "get tindexes") {
-      if (tindexes.isEmpty) "no tindexes registered"
-      else tindexes.toSeq.sortBy(_._1).map { case (tbl, m) =>
-        s"$tbl: id=${m.idCol} text=${m.textCol} path=${m.path}" +
-          (if (m.grams) " grams=true" else "")
-      }.mkString("\n")
-    }
-    else if (low.startsWith("sindex create")) sindexCreate(t)
-    else if (low.startsWith("sindex sync")) indexFamilySync(t, "sindex")
-    else if (low.startsWith("sindex refresh")) sindexRefresh(t)
-    else if (low.startsWith("sindex estimate")) sindexEstimate(t)
-    else if (low.startsWith("sindex overlap")) sindexOverlap(t)
-    else if (low.startsWith("sindex attach")) sindexAttach(t)
-    else if (low.startsWith("sindex drop")) {
-      val table = "(?i)\\btable\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-        .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-          "sindex drop requires table ="))
-      require(sindexes.contains(table), s"no sindex registered for $table")
-      sindexes -= table // unregister only; the artifact stays on disk
-      s"sindex for $table dropped"
-    }
-    else if (low == "get sindexes") {
-      if (sindexes.isEmpty) "no sindexes registered"
-      else sindexes.toSeq.sortBy(_._1).map { case (tbl, m) =>
+    },
+    cmd("rollup drop", Write)(t =>
+      unregister("rollup", t, rollups)(rollups -= _)),
+    exact("get rollups", Read)(_ => listing("rollups", rollups) {
+      (tbl, m) => s"$tbl: grain=${m.grain} time=${m.tsCol} " +
+        s"value=${m.valueCols.mkString(",")} " +
+        s"dims=${m.dims.mkString(",")} path=${m.path}"
+    }),
+
+    cmd("vindex create", Write)(vindexCreate),
+    cmd("vindex sync", Write)(indexFamilySync(_, "vindex")),
+    cmd("vindex refresh", Write)(vindexRefresh),
+    cmd("vindex delete", Write)(vindexDelete),
+    cmd("vindex search", Read)(vindexSearch),
+    cmd("vindex negatives", Read)(vindexNegatives),
+    cmd("vindex attach", Write)(vindexAttach),
+    cmd("vindex drop", Write)(t =>
+      unregister("vindex", t, vindexes)(vindexes -= _)),
+    exact("get vindexes", Read)(_ => listing("vindexes", vindexes) {
+      (tbl, m) => s"$tbl: type=${m.kind} id=${m.idCol} vector=${m.vecCol}" +
+        (if (m.kind == "pq") s" numsub=${m.numSub}" else "") +
+        s" path=${m.path}"
+    }),
+
+    cmd("tindex create", Write)(tindexCreate),
+    cmd("tindex sync", Write)(indexFamilySync(_, "tindex")),
+    cmd("tindex refresh", Write)(tindexRefresh),
+    cmd("tindex delete", Write)(tindexDelete),
+    cmd("tindex search", Read)(tindexSearch),
+    cmd("tindex phrase", Read)(tindexPhrase),
+    cmd("tindex near", Read)(tindexNear),
+    cmd("tindex snippet", Read)(tindexSnippet),
+    cmd("tindex like", Read)(tindexLike),
+    cmd("tindex attach", Write)(tindexAttach),
+    cmd("tindex drop", Write)(t =>
+      unregister("tindex", t, tindexes)(tindexes -= _)),
+    exact("get tindexes", Read)(_ => listing("tindexes", tindexes) {
+      (tbl, m) => s"$tbl: id=${m.idCol} text=${m.textCol} path=${m.path}" +
+        (if (m.grams) " grams=true" else "")
+    }),
+    cmd("hybrid search", Read)(hybridSearch),
+
+    cmd("sindex create", Write)(sindexCreate),
+    cmd("sindex sync", Write)(indexFamilySync(_, "sindex")),
+    cmd("sindex refresh", Write)(sindexRefresh),
+    cmd("sindex estimate", Read)(sindexEstimate),
+    cmd("sindex overlap", Read)(sindexOverlap),
+    cmd("sindex attach", Write)(sindexAttach),
+    cmd("sindex drop", Write)(t =>
+      unregister("sindex", t, sindexes)(sindexes -= _)),
+    exact("get sindexes", Read)(_ => listing("sindexes", sindexes) {
+      (tbl, m) =>
         s"$tbl: key=${m.keyCol} text=${m.textCol} k=${m.k} path=${m.path}"
-      }.mkString("\n")
-    }
-    else if (low.startsWith("graph tricount create")) triCreate(t)
-    else if (low.startsWith("graph tricount refresh")) triRefresh(t)
-    else if (low.startsWith("graph tricount get")) triGet(t)
-    else if (low.startsWith("graph ")) graphCmd(t)
-    else if (low.startsWith("compact where")) compactCmd(t)
-    else if (low.startsWith("merge scd2 into")) mergeScd2(t)
-    else if (low.startsWith("merge into")) mergeCmd(t)
-    else if (low.startsWith("monitor psi create")) monitorPsiCreate(t)
-    else if (low.startsWith("monitor psi check")) monitorPsiCheck(t)
-    else if (low.startsWith("monitor attach")) monitorAttach(t)
-    else if (low.startsWith("monitor create")) monitorCreate(t)
-    else if (low.startsWith("monitor refresh")) monitorRefresh(t)
-    else if (low.startsWith("monitor level")) monitorLevel(t)
-    else if (low.startsWith("monitor drop")) {
-      val table = "(?i)\\btable\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-        .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-          "monitor drop requires table ="))
-      require(monitors.contains(table),
-        s"no monitor registered for $table")
-      monitors -= table
-      s"monitor for $table dropped"
-    }
-    else if (low == "get monitors") {
-      if (monitors.isEmpty) "no monitors registered"
-      else monitors.toSeq.sortBy(_._1).map { case (tbl, m) =>
-        s"$tbl: key=${m.keyCol} ts=${m.tsCol} path=${m.path}"
-      }.mkString("\n")
-    }
-    else if (low.startsWith("layout attach")) layoutAttach(t)
-    else if (low.startsWith("layout zorder")) layoutZorder(t)
-    else if (low.startsWith("layout refresh")) layoutRefresh(t)
-    else if (low.startsWith("layout scan")) layoutScan(t)
-    else if (low.startsWith("layout drop")) {
-      val table = "(?i)\\btable\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-        .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-          "layout drop requires table ="))
-      require(layouts.contains(table), s"no layout registered for $table")
-      layouts -= table // unregister only; the files stay on disk
-      s"layout for $table dropped"
-    }
-    else if (low == "get layouts") {
-      if (layouts.isEmpty) "no layouts registered"
-      else layouts.toSeq.sortBy(_._1).map { case (tbl, m) =>
-        s"$tbl: x=${m.xCol} y=${m.yCol} bits=${m.bits} " +
-          s"buckets=${m.buckets} path=${m.path}"
-      }.mkString("\n")
-    }
-    else if (low.startsWith("suggest create ")) suggestCreate(t)
-    else if (low.startsWith("get columns ")) {
+    }),
+
+    // create and refresh commit an IndexStore version, a single-writer
+    // protocol (list versions, write max+1, prune): two refreshes under
+    // the read gate alone would both read version N, and the later
+    // commit would drop the other's edges (TriCountRefreshRaceSpec)
+    cmd("graph tricount create", Write)(triCreate),
+    cmd("graph tricount refresh", Write)(triRefresh),
+    cmd("graph tricount get", Read)(triGet),
+    cmd("graph ", Read)(graphCmd),
+
+    // directory-rewriting commands (swapDirs): were never safe to run
+    // concurrently with each other on one table, and they END in a
+    // physical delete — both facts require the write side
+    cmd("compact where", Write)(compactCmd),
+    cmd("merge scd2 into", Write)(mergeScd2),
+    cmd("merge into", Write)(mergeCmd),
+
+    // psi create commits an IndexStore version (single-writer, as the
+    // tricount entries above)
+    cmd("monitor psi create", Write)(monitorPsiCreate),
+    cmd("monitor psi check", Read)(monitorPsiCheck),
+    cmd("monitor attach", Write)(monitorAttach),
+    cmd("monitor create", Write)(monitorCreate),
+    cmd("monitor refresh", Write)(monitorRefresh),
+    cmd("monitor level", Read)(monitorLevel),
+    cmd("monitor drop", Write)(t =>
+      unregister("monitor", t, monitors)(monitors -= _)),
+    exact("get monitors", Read)(_ => listing("monitors", monitors) {
+      (tbl, m) => s"$tbl: key=${m.keyCol} ts=${m.tsCol} path=${m.path}"
+    }),
+
+    cmd("layout attach", Write)(layoutAttach),
+    cmd("layout zorder", Write)(layoutZorder),
+    cmd("layout refresh", Write)(layoutRefresh),
+    cmd("layout scan", Write)(layoutScan),
+    cmd("layout drop", Write)(t =>
+      unregister("layout", t, layouts)(layouts -= _)),
+    exact("get layouts", Read)(_ => listing("layouts", layouts) {
+      (tbl, m) => s"$tbl: x=${m.xCol} y=${m.yCol} bits=${m.bits} " +
+        s"buckets=${m.buckets} path=${m.path}"
+    }),
+
+    cmd("suggest create ", Read)(suggestCreate),
+    cmd("get columns ", Read) { t =>
       val name = t.substring("get columns ".length).trim
       catalog.table(name).schema.fields
         .map(f => s"${f.name} ${f.dataType.simpleString}").mkString("\n")
-    }
-    else if (low.startsWith("policy add ")) {
+    },
+    cmd("policy add ", Read) { t =>
       // metadata-policy CRUD (the ledger surface, blockchain/metadata.py)
       val rest = t.substring("policy add ".length).trim
       val sp = rest.indexWhere(_.isWhitespace)
       require(sp > 0, "policy add <id> <json>")
       catalog.addPolicy(rest.substring(0, sp), rest.substring(sp).trim)
       s"policy ${rest.substring(0, sp)} stored"
-    }
-    else if (low.startsWith("policy get "))
+    },
+    cmd("policy get ", Read)(t =>
       catalog.policy(t.substring("policy get ".length).trim)
-        .getOrElse(throw new IllegalArgumentException("unknown policy"))
-    else if (low.startsWith("blockchain insert") ||
-        low.startsWith("blockchain get ")) blockchainCmd(t)
-    else if (low.startsWith("set view auto refresh")) {
+        .getOrElse(throw new IllegalArgumentException("unknown policy"))),
+    cmd("blockchain insert", Read)(blockchainInsert),
+    cmd("blockchain get ", Read)(blockchainGet),
+    cmd("set view auto refresh", Write) { t =>
       val v = t.substring(t.indexOf('=') + 1).trim.toLowerCase
       require(v == "on" || v == "off",
         "set view auto refresh = on|off")
       autoRefreshViews = v == "on"
       s"view auto refresh $v"
-    }
-    else if (low.startsWith("set ") && t.contains("=")) {
+    },
+    cmd("set ", Write) { t =>
       // dictionary assignment (the reference's params dict; scripts use
       // `name = value`, surfaced here as `set name = value`)
       val eq = t.indexOf('=')
+      if (eq < 0) throw unknownCommand(t)
       val name = t.substring(4, eq).trim
       val value = t.substring(eq + 1).trim
       setVar(name, value)
       s"$name = $value"
-    }
-    else if (low.startsWith("get partitions")) {
+    },
+    cmd("get partitions", Read) { t =>
       // `get partitions [table]` — the reference's partition listing
       // (cmd/member_cmd.py `get partitions`; naming partitions.py:17-23)
       val arg = t.substring("get partitions".length).trim
@@ -1065,63 +1007,98 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         case Nil => "no partitioned tables"
         case xs => xs.mkString("\n")
       }
-    }
-    else if (low.startsWith("get rows count")) {
+    },
+    cmd("get rows count", Read) { t =>
       // `get rows count [where dbms = d and table = t]`
       // (cmd/member_cmd.py:13970) — per-table row counts; no filter ->
       // every registered table
-      val tableRx = "(?i)table\\s*=\\s*(\\S+)".r
-      val wanted = tableRx.findFirstMatchIn(t).map(_.group(1)
+      val wanted = arg(t, "table").map(_
         .stripPrefix("\"").stripSuffix("\"")
         .stripPrefix("'").stripSuffix("'"))
-      val names = wanted.map(Seq(_)).getOrElse(catalog.tableNames)
-      names.map { n =>
-        s"$n: ${catalog.table(n).count()}"
-      }.mkString("\n")
-    }
-    else if (low.startsWith("get tsd list")) {
+      wanted.map(Seq(_)).getOrElse(catalog.tableNames)
+        .map(n => s"$n: ${catalog.table(n).count()}").mkString("\n")
+    },
+    cmd("get tsd list", Read) { t =>
       // the tsd_info SELECT surface (ha.py get_recent_tsd_info reads the
       // same table to answer peers)
-      val tbl = t.substring("get tsd list".length).trim match {
-        case "" => None
-        case s => Some(s)
-      }
+      val tbl = Some(t.substring("get tsd list".length).trim)
+        .filter(_.nonEmpty)
       Render.table(tsdLedger.df(spark).transform(d =>
         tbl.fold(d)(x => d.filter(col("table_name") === x)))
         .orderBy(col("file_id")))
-    }
-    else if (low.startsWith("get tsd diff")) {
+    },
+    cmd("get tsd diff", Read) { t =>
       // HA sync decision (ha.py:19-35): diff this node's ledger against
       // a peer's exported ledger (a registered table or a parquet path
       // fetched from the peer's `get tsd list` surface) — renders the
       // pull/push plan; REST PUT is the transport that then moves files
-      val peerRef = "(?i)\\bpeer\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-        .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
+      val peerRef = arg(t, "peer").getOrElse(
+        throw new IllegalArgumentException(
           "get tsd diff where peer = <table|parquet path>"))
       val peer =
         if (catalog.tableNames.contains(peerRef)) catalog.table(peerRef)
         else Tables.loadPath(spark, peerRef)
       Render.table(graft.ingest.TsdLedger.diff(tsdLedger.df(spark), peer)
         .orderBy(col("action"), col("file_hash")))
-    }
-    else if (low.startsWith("pipeline clean")) pipelineClean(t)
-    else if (low.startsWith("quality check")) qualityCheck(t)
-    else if (low.startsWith("profile table")) profileTable(t)
-    else if (low.startsWith("join matview create")) joinMatviewCreate(t)
-    else if (low.startsWith("join matview refresh")) joinMatviewRefresh(t)
-    else if (low.startsWith("join matview delete")) joinMatviewDelete(t)
-    else if (low.startsWith("join matview sync")) joinMatviewSync(t)
-    else if (low.startsWith("join matview get")) joinMatviewGet(t)
-    else if (low.startsWith("join matview attach")) joinMatviewAttach(t)
-    else if (low.startsWith("matview sync")) matviewSync(t)
-    else if (low.startsWith("sync all")) syncAll(t)
-    else if (low.startsWith("artifact verify")) artifactVerify(t)
-    else if (low == "get artifacts") {
+    },
+    cmd("get tsd export", Read)(_ => tsdExport()),
+    cmd("pipeline clean", Write)(pipelineClean),
+    cmd("quality check", Read)(qualityCheck),
+    cmd("profile table", Read)(profileTable),
+
+    cmd("join matview create", Write)(joinMatviewCreate),
+    cmd("join matview refresh", Write)(joinMatviewRefresh),
+    cmd("join matview delete", Write)(joinMatviewDelete),
+    cmd("join matview sync", Write)(joinMatviewSync),
+    cmd("join matview get", Read)(joinMatviewGet),
+    cmd("join matview attach", Write)(joinMatviewAttach),
+    cmd("matview create", Write)(matviewCreate),
+    cmd("matview refresh", Write)(matviewRefresh),
+    cmd("matview delete", Write)(matviewDelete),
+    cmd("matview sync", Write)(matviewSync),
+    cmd("matview get", Read)(matviewGet),
+    cmd("matview attach", Write)(matviewAttach),
+    exact("get matviews", Read)(_ => listing("matviews", matviews) {
+      (tbl, m) => s"$tbl: keys=${m.keys.mkString(",")} " +
+        s"aggs=${m.aggs.map(a => s"${a.fn}:${a.alias}").mkString(",")} " +
+        s"path=${m.path}"
+    }),
+
+    cmd("dedup index create", Write)(dedupIndexCreate),
+    cmd("dedup index attach", Write)(dedupIndexAttach),
+    cmd("dedup index sync", Write)(indexFamilySync(_, "dedup index")),
+    cmd("dedup index refresh", Write) { t =>
+      val table = reqArg(t, "table", "dedup index refresh")
+      val meta = dindexes.getOrElse(table,
+        throw new IllegalArgumentException(
+          s"no dedup index registered for $table"))
+      val src = tableOrPath(reqArg(t, "source", "dedup index refresh"))
+      val rows = foldDindex(meta, src, None)
+      s"dedup index for $table refreshed (version $rows)"
+    },
+    cmd("dedup index delete", Write)(dedupIndexDelete),
+    cmd("dedup index drop", Write)(t =>
+      unregister("dedup index", t, dindexes)(dindexes -= _)),
+    exact("get dedup indexes", Read)(_ =>
+      listing("dedup indexes", dindexes) { (tbl, m) =>
+        val colKey = if (m.kind == "embedding") "vector" else "text"
+        s"$tbl: type=${m.kind} id=${m.idCol} $colKey=${m.contentCol}" +
+          (if (m.kind == "shingle") s" n=${m.shingleN}" else "") +
+          s" path=${m.path}"
+      }),
+
+    cmd("sync all", Write)(syncAll),
+    cmd("artifact verify", Read)(artifactVerify),
+    exact("get artifacts", Read) { _ =>
       val recs = catalog.artifactList
       if (recs.isEmpty) "no artifacts recorded"
       else recs.map { case (k, cmd) => s"$k -> $cmd" }.mkString("\n")
-    }
-    else if (low == "attach all") {
+    },
+    // attach all re-registers the whole artifact fleet (and its inner
+    // attaches take the write lock); classifying it Write also keeps
+    // the retention-gate lock order acyclic — a reader must never
+    // block on [[writeLock]] while holding the read gate
+    exact("attach all", Write) { _ =>
       // restart recovery: replay every attach command the catalog's
       // metadata root recorded at create time (the reference loads its
       // policy fleet from the blockchain at startup — blockchain/
@@ -1133,143 +1110,170 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         try s"attached $key: ${execute(cmd)}"
         catch { case e: Exception => s"FAILED $key: ${e.getMessage}" }
       }.mkString("\n")
-    }
-    else if (low.startsWith("index versions") ||
-        low.startsWith("index retain") ||
-        low.startsWith("index get")) indexCmd(t)
-    else if (low == "get view auto refresh") {
-      val st = if (autoRefreshViews) "on" else "off"
-      // the auto-fold target inventory: every registered artifact a
-      // PUT into its table will fold
-      val targets =
-        matviews.toSeq.map { case (tb, m) => s"$tb: matview ${m.path}" } ++
-        rollups.toSeq.map { case (tb, m) => s"$tb: rollup ${m.path}" } ++
-        joinMatviews.toSeq.flatMap { case (p, sp) =>
-          Seq(s"${sp.left}: join matview $p",
-            s"${sp.right}: join matview $p") } ++
-        vindexes.toSeq.map { case (tb, m) => s"$tb: vindex ${m.path}" } ++
-        tindexes.toSeq.map { case (tb, m) => s"$tb: tindex ${m.path}" } ++
-        sindexes.toSeq.map { case (tb, m) => s"$tb: sindex ${m.path}" } ++
-        dindexes.toSeq.map { case (tb, m) =>
-          s"$tb: dedup index ${m.path}" }
-      val inv = if (targets.isEmpty) "no auto-fold targets"
-        else s"auto-fold targets:\n${targets.sorted.mkString("\n")}"
-      if (autoFoldErrors.isEmpty)
-        s"view auto refresh $st; no fold errors\n$inv"
-      else s"view auto refresh $st; ${autoFoldErrors.size} fold " +
-        s"error(s):\n${autoFoldErrors.mkString("\n")}\n$inv"
-    }
-    else if (low.startsWith("matview create")) matviewCreate(t)
-    else if (low.startsWith("matview refresh")) matviewRefresh(t)
-    else if (low.startsWith("matview delete")) matviewDelete(t)
-    else if (low.startsWith("matview get")) matviewGet(t)
-    else if (low.startsWith("matview attach")) matviewAttach(t)
-    else if (low.startsWith("dedup index create")) dedupIndexCreate(t)
-    else if (low.startsWith("dedup index attach")) dedupIndexAttach(t)
-    else if (low.startsWith("dedup index sync"))
-      indexFamilySync(t, "dedup index")
-    else if (low.startsWith("dedup index refresh")) {
-      def kv(k: String): Option[String] =
-        s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-      val table = kv("table").getOrElse(
-        throw new IllegalArgumentException(
-          "dedup index refresh requires table ="))
-      val meta = dindexes.getOrElse(table,
-        throw new IllegalArgumentException(
-          s"no dedup index registered for $table"))
-      val src = kv("source").getOrElse(
-        throw new IllegalArgumentException(
-          "dedup index refresh requires source ="))
-      val rows = foldDindex(meta, mvFrame(src), None)
-      s"dedup index for $table refreshed (version $rows)"
-    }
-    else if (low.startsWith("dedup index drop")) {
-      val table = "(?i)\\btable\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-        .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-          "dedup index drop requires table ="))
-      require(dindexes.contains(table),
-        s"no dedup index registered for $table")
-      dindexes -= table // unregister only; the artifact stays on disk
-      s"dedup index for $table dropped"
-    }
-    else if (low == "get dedup indexes") {
-      if (dindexes.isEmpty) "no dedup indexes registered"
-      else dindexes.toSeq.sortBy(_._1).map { case (tbl, m) =>
-        val colKey = if (m.kind == "embedding") "vector" else "text"
-        s"$tbl: type=${m.kind} id=${m.idCol} $colKey=${m.contentCol}" +
-          (if (m.kind == "shingle") s" n=${m.shingleN}" else "") +
-          s" path=${m.path}"
-      }.mkString("\n")
-    }
-    else if (low.startsWith("dedup index delete")) dedupIndexDelete(t)
-    else if (low.startsWith("connect dbms")) connectDbms(t)
-    else if (low.startsWith("run msg client")) runMsgClient(t)
-    else if (low.startsWith("exit msg client")) exitMsgClient()
-    else if (low.startsWith("run scheduler")) {
-      val id = "(?i)^run scheduler\\s+(\\d+)".r
-        .findFirstMatchIn(t).map(_.group(1).toInt).getOrElse(1)
-      // optional per-wake task timeout (see TaskScheduler.tick) —
-      // `run scheduler [id] [where timeout = N seconds]`
-      "(?i)\\btimeout\\s*=\\s*(\\d+)\\s*(second|minute)s?\\b".r
-        .findFirstMatchIn(t).foreach { m =>
-          val unit = if (m.group(2).equalsIgnoreCase("minute")) 60000L
-            else 1000L
-          taskScheduler.setTaskTimeout(m.group(1).toLong * unit, id)
-        }
-      val reply = taskScheduler.start(id)
-      catalog.recordArtifact(s"scheduler:$id", t.trim)
-      reply
-    }
-    else if (low.startsWith("exit scheduler")) {
+    },
+    cmd("index versions", Read)(indexVersions),
+    cmd("index retain", Read)(indexRetain),
+    cmd("index get", Read)(indexGet),
+    exact("get view auto refresh", Read)(_ => autoRefreshReport()),
+
+    cmd("connect dbms", Write)(connectDbms),
+    // msg client start/exit: the duplicate-subscription check and the
+    // registry insert bracket a network handshake — write-side
+    // serialization is what makes check-then-insert atomic (two
+    // concurrent declarations of the same topics must collapse to ONE
+    // subscription, not deliver every message twice). stop() joins no
+    // thread that needs the write lock, so the exit is safe on this
+    // side too.
+    cmd("run msg client", Write)(runMsgClient),
+    cmd("exit msg client", Write)(_ => exitMsgClient()),
+    // scheduler-family commands are Write even though they only touch
+    // the (internally synchronized) task registry: `task run` re-enters
+    // execute() with the TASK's command, and a Write task reached from
+    // the read-gated path would be a read→write upgrade on the
+    // retention gate — the one deadlock the lock order forbids.
+    // Entering on the write side keeps the nested acquisition order
+    // writeLock → gate, same as every other Write command.
+    cmd("run scheduler", Write)(runScheduler),
+    cmd("exit scheduler", Write) { t =>
       val id = "(?i)^exit scheduler\\s+(\\d+)".r
         .findFirstMatchIn(t).map(_.group(1).toInt).getOrElse(1)
       val reply = taskScheduler.stop(id)
       catalog.removeArtifact(s"scheduler:$id")
       reply
-    }
-    else if (low.startsWith("schedule ")) scheduleCmd(t)
-    else if (low.startsWith("task ")) taskModeCmd(t)
-    else if (low.startsWith("test table ")) testTable(t)
-    else if (low.startsWith("get tsd export")) tsdExport()
-    else if (low.startsWith("get archive file")) archiveFile(t)
-    else if (low.startsWith("delete archive")) deleteArchive(t)
-    else if (low.startsWith("run ha sync")) haSync(t)
-    else if (low.startsWith("run streamer")) runStreamer(t)
-    else if (low.startsWith("exit streamer")) exitStreamer(t)
-    else if (low.startsWith("run kafka consumer")) runKafkaConsumer(t)
-    else if (low.startsWith("exit kafka consumer")) exitKafkaConsumer()
-    else if (low.startsWith("run plc client")) runPlcClient(t)
-    else if (low.startsWith("get plc clients")) getPlcClients()
-    else if (low.startsWith("get plc values")) getPlcValues(t)
-    else if (low.startsWith("get plc struct")) getPlcStruct(t)
-    else if (low.startsWith("exit plc")) exitPlc(t)
-    else if (low.startsWith("get processes")) {
-      val json = "(?i)where\\s+format\\s*=\\s*json".r
-        .findFirstIn(low).isDefined
-      processesReport(json)
-    }
-    else if (low.startsWith("get scheduler")) {
-      val id = "(?i)^get scheduler\\s+(\\d+)".r
-        .findFirstMatchIn(t).map(_.group(1).toInt)
-      id.map(taskScheduler.report) getOrElse {
-        val ids = taskScheduler.ids
-        if (ids.isEmpty) "No schedulers declared"
-        else ids.map(taskScheduler.report).mkString("\n\n")
+    },
+    cmd("schedule ", Write)(scheduleCmd),
+    cmd("task ", Write)(taskModeCmd),
+    cmd("get scheduler", Read) { t =>
+      "(?i)^get scheduler\\s+(\\d+)".r.findFirstMatchIn(t)
+        .map(m => taskScheduler.report(m.group(1).toInt)).getOrElse {
+          val ids = taskScheduler.ids
+          if (ids.isEmpty) "No schedulers declared"
+          else ids.map(taskScheduler.report).mkString("\n\n")
+        }
+    },
+    cmd("test table ", Read)(testTable),
+    cmd("get archive file", Read)(archiveFile),
+    // ha sync ingests (nested writeLock) and delete archive removes
+    // files — both enter on the write side like the scheduler family
+    cmd("delete archive", Write)(deleteArchive),
+    cmd("run ha sync", Write)(haSync),
+    cmd("run streamer", Write)(runStreamer),
+    // `exit streamer` / `exit kafka consumer` hold NEITHER the write
+    // lock NOR the retention read gate: they only touch internally-
+    // synchronized registries, and both JOIN worker threads. `exit
+    // streamer` (StreamingQuery.stop()) waits on a micro-batch whose
+    // fold needs [[writeLock]] — so it cannot run as Write (2-party
+    // deadlock: stop() waits the batch, the batch waits the monitor we
+    // hold). It also cannot run READ-GATED: with FAIR mode, a retention
+    // writer (`drop partition` holds writeLock, then wants the gate's
+    // write side) bridges a 3-way cycle — exit holds gate read and
+    // waits the batch, the batch waits writeLock held by the retention
+    // command, the retention command waits the gate write side blocked
+    // behind exit's read hold. Unguarded execution touches no files
+    // and no foldable state, so neither lock is needed. Regressions:
+    // StreamerExitSpec (both shapes).
+    cmd("exit streamer", Unguarded)(exitStreamer),
+    // kafka consumer start: check-then-insert brackets the offset
+    // claims and a broker probe (same reasoning as run msg client)
+    cmd("run kafka consumer", Write)(runKafkaConsumer),
+    cmd("exit kafka consumer", Unguarded)(_ => exitKafkaConsumer()),
+    // plc client start: check-then-insert brackets a TCP connect —
+    // write-side serialization keeps duplicate declarations atomic,
+    // same reasoning as run msg client / run kafka consumer
+    cmd("run plc client", Write)(runPlcClient),
+    cmd("get plc clients", Read)(_ => getPlcClients()),
+    cmd("get plc values", Read)(getPlcValues),
+    cmd("get plc struct", Read)(getPlcStruct),
+    // exit plc joins its poll thread, which takes no engine locks —
+    // holding none here keeps the join free of lock-order hazards
+    cmd("exit plc", Unguarded)(exitPlc),
+    cmd("get processes", Read)(t => processesReport(
+      "(?i)where\\s+format\\s*=\\s*json".r.findFirstIn(t).isDefined)),
+    exact("get dictionary", Read)(_ =>
+      dict.toSeq.sortBy(_._1).map { case (k, v) => s"$k = $v" }
+        .mkString("\n")),
+    exact("get tables", Read)(_ => catalog.tableNames.mkString("\n")),
+    exact("get views", Read)(_ => catalog.viewNames.mkString("\n")))
+
+  private val byLength = commands.sortBy(-_.prefix.length)
+
+  /** The table entry a command runs as: the longest matching prefix. */
+  private[engine] def entryOf(command: String): Option[Command] = {
+    val low = command.trim.toLowerCase
+    byLength.find(_.matches(low))
+  }
+
+  private def unknownCommand(command: String) =
+    new IllegalArgumentException(s"unknown command: $command")
+
+  /** The event-log entry of the command running on this thread, so
+    * `get event log` can leave itself out. */
+  private val runningEvent =
+    new scala.util.DynamicVariable[(Long, String)](null)
+
+  /** Execute any command; returns rendered text output. Every command
+    * lands in the event log; failures land in the error log too. */
+  def execute(command: String): String = {
+    val t = command.trim
+    val entry = (System.currentTimeMillis, t)
+    logRing(eventLog, entry)
+    try {
+      val c = entryOf(t).getOrElse(throw unknownCommand(command))
+      runningEvent.withValue(entry) {
+        c.lock match {
+          case Unguarded => c.run(t)
+          case Write => writeLock.synchronized(c.run(t))
+          case Read => readGated(c.run(t))
+        }
       }
     }
-    else if (low == "get matviews") {
-      if (matviews.isEmpty) "no matviews registered"
-      else matviews.toSeq.sortBy(_._1).map { case (tbl, m) =>
-        s"$tbl: keys=${m.keys.mkString(",")} " +
-          s"aggs=${m.aggs.map(a => s"${a.fn}:${a.alias}").mkString(",")} " +
-          s"path=${m.path}"
-      }.mkString("\n")
+    catch { case e: Throwable =>
+      logRing(errorLog,
+        (System.currentTimeMillis, t,
+          Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
+      throw e
     }
-    else if (low == "get dictionary")
-      dict.toSeq.sortBy(_._1).map { case (k, v) => s"$k = $v" }.mkString("\n")
-    else if (low == "get tables") catalog.tableNames.mkString("\n")
-    else if (low == "get views") catalog.viewNames.mkString("\n")
-    else throw new IllegalArgumentException(s"unknown command: $command")
+  }
+
+  /** `get view auto refresh`: the auto-fold switch, recorded fold
+    * errors, and the inventory of every registered artifact a PUT into
+    * its table will fold. */
+  private def autoRefreshReport(): String = {
+    val st = if (autoRefreshViews) "on" else "off"
+    val targets =
+      matviews.toSeq.map { case (tb, m) => s"$tb: matview ${m.path}" } ++
+      rollups.toSeq.map { case (tb, m) => s"$tb: rollup ${m.path}" } ++
+      joinMatviews.toSeq.flatMap { case (p, sp) =>
+        Seq(s"${sp.left}: join matview $p",
+          s"${sp.right}: join matview $p") } ++
+      vindexes.toSeq.map { case (tb, m) => s"$tb: vindex ${m.path}" } ++
+      tindexes.toSeq.map { case (tb, m) => s"$tb: tindex ${m.path}" } ++
+      sindexes.toSeq.map { case (tb, m) => s"$tb: sindex ${m.path}" } ++
+      dindexes.toSeq.map { case (tb, m) =>
+        s"$tb: dedup index ${m.path}" }
+    val inv = if (targets.isEmpty) "no auto-fold targets"
+      else s"auto-fold targets:\n${targets.sorted.mkString("\n")}"
+    if (autoFoldErrors.isEmpty)
+      s"view auto refresh $st; no fold errors\n$inv"
+    else s"view auto refresh $st; ${autoFoldErrors.size} fold " +
+      s"error(s):\n${autoFoldErrors.mkString("\n")}\n$inv"
+  }
+
+  /** `run scheduler [id] [where timeout = N seconds|minutes]` — start a
+    * task scheduler, optionally with a per-wake task timeout (see
+    * [[TaskScheduler.tick]]). */
+  private def runScheduler(t: String): String = {
+    val id = "(?i)^run scheduler\\s+(\\d+)".r
+      .findFirstMatchIn(t).map(_.group(1).toInt).getOrElse(1)
+    "(?i)\\btimeout\\s*=\\s*(\\d+)\\s*(second|minute)s?\\b".r
+      .findFirstMatchIn(t).foreach { m =>
+        val unit = if (m.group(2).equalsIgnoreCase("minute")) 60000L
+          else 1000L
+        taskScheduler.setTaskTimeout(m.group(1).toLong * unit, id)
+      }
+    val reply = taskScheduler.start(id)
+    catalog.recordArtifact(s"scheduler:$id", t.trim)
+    reply
   }
 
   /** `profile table where table = <t> [and exact = false] [and format
@@ -1278,23 +1282,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * `exact = false` swaps distinct counts for HLL sketches — the
     * 100 TB mode (nothing shuffles by value). */
   private def profileTable(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("profile table requires table ="))
-    val exact = !kv("exact").exists(_.equalsIgnoreCase("false"))
+    val table = reqArg(t, "table", "profile table")
+    val exact = !arg(t, "exact").exists(_.equalsIgnoreCase("false"))
     import org.apache.spark.sql.functions.col
     val out = graft.ops.Profile.profile(catalog.table(table), exact)
       .orderBy(col("col_name"))
-    if (kv("format").contains("table")) Render.table(out)
-    else Render.json(out)
+    rendered(t, out)
   }
 
   private def mvSpecDir(path: String) = path.stripSuffix("/") + "-spec"
-  private def mvFrame(src: String) =
-    if (catalog.tableNames.contains(src) ||
-        catalog.viewNames.contains(src)) catalog.table(src)
-    else spark.read.parquet(src)
   private def mvRecordedSpec(path: String) = {
     val row = graft.ops.IndexStore.read(spark, mvSpecDir(path)).getOrElse(
       throw new IllegalArgumentException(s"no matview at $path")).head()
@@ -1395,18 +1391,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * {"keys": [...], "aggs": [{"fn": "sum|count|min|max",
     * "expr": "...", "alias": "..."}]}. */
   private def matviewCreate(t: String): String = {
-    val body = t.substring("matview create".length).trim
-      .stripPrefix("where").trim
-    val specM = "(?i)\\bspec\\s*=".r.findFirstMatchIn(body).getOrElse(
-      throw new IllegalArgumentException("matview create requires spec ="))
-    val specJson = body.substring(specM.end).trim
-    val head = body.substring(0, specM.start)
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(head).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("matview create requires table ="))
-    val path = kv("path").getOrElse(
-      throw new IllegalArgumentException("matview create requires path ="))
+    val (head, specJson) = specClause(t, "matview create",
+      "matview create requires spec =")
+    val table = reqArg(head, "table", "matview create")
+    val path = reqArg(head, "path", "matview create")
     val (keys, aggs) = graft.ops.MatView.specFromJson(specJson)
     val base = catalog.table(table)
     // lineage watermark: the highest tsd_id snapshot the create saw —
@@ -1435,11 +1423,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * recovered from the recorded sidecar — attach needs no knowledge
     * of the original create). */
   private def matviewAttach(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"matview attach requires $k ="))
-    val (table, path) = (req("table"), req("path"))
+    val table = reqArg(t, "table", "matview attach")
+    val path = reqArg(t, "path", "matview attach")
     val (keys, aggs) = mvRecordedSpec(path)
     matviews += table -> graft.dialect.MatViewServe.Meta(path, keys, aggs)
     s"matview attached for $table at $path (keys ${keys.mkString(",")})"
@@ -1450,16 +1435,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * lattice-join) under the RECORDED spec. Batch-sized work; base
     * history never rescanned. */
   private def matviewRefresh(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"matview refresh requires $k ="))
-    val path = req("path")
+    val path = reqArg(t, "path", "matview refresh")
     val (keys, aggs) = mvRecordedSpec(path)
     val state = graft.ops.IndexStore.read(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no matview at $path"))
     val wm = mvWmOf(path, state)
-    val src = mvFrame(req("source"))
+    val src = tableOrPath(reqArg(t, "source", "matview refresh"))
     val batch = graft.ops.MatView.partials(src, keys, aggs)
     // a lineage-stamped batch advances the watermark (so a manual
     // refresh of a crash-missed batch keeps sync exact); an unstamped
@@ -1492,12 +1473,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         else raw.map(_.stripPrefix("'").stripSuffix("'")).toSeq
           .toDF("id")
       case None =>
-        val src = "(?i)\\bsource\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-          .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
+        val src = arg(t, "source").getOrElse(throw new IllegalArgumentException(
             "delete requires ids = (…) or source = <table|path>"))
-        val f = mvFrame(src)
-        val idc = "(?i)\\bid\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-          .map(_.group(1))
+        val f = tableOrPath(src)
+        val idc = arg(t, "id")
           .orElse(defaultIdCol.filter(f.columns.contains))
           .getOrElse(f.columns.head)
         f.select(col(idc))
@@ -1515,11 +1494,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * detected (negative count) and aborted with the original state
     * intact. */
   private def matviewDelete(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"matview delete requires $k ="))
-    val path = req("path")
+    val path = reqArg(t, "path", "matview delete")
     val (keys, aggs) = mvRecordedSpec(path)
     val state = graft.ops.IndexStore.read(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no matview at $path"))
@@ -1529,7 +1504,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // partials — subtracting an unfolded row would silently
     // under-count (the drop-partition/jmv-delete as-of discipline);
     // lineage-less frames fall through unfiltered
-    val dels0 = mvFrame(req("source"))
+    val dels0 = tableOrPath(reqArg(t, "source", "matview delete"))
     val dels =
       if (wm >= 0 && dels0.columns.contains("tsd_id"))
         dels0.filter(col("tsd_id").cast("long") <= wm)
@@ -1563,13 +1538,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private def jmvDeltaArgs(t: String, cmd: String)
       : (graft.ops.JoinMatView.Spec, String, org.apache.spark.sql.DataFrame,
          org.apache.spark.sql.DataFrame, String) = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"join matview $cmd requires $k ="))
-    val path = req("path")
+    val path = reqArg(t, "path", s"join matview $cmd")
     val spec = jmvRecordedSpec(path)
-    val side = req("side").toLowerCase
+    val side = reqArg(t, "side", s"join matview $cmd").toLowerCase
     require(side == "left" || side == "right",
       s"side must be left|right (got $side)")
     val otherName = if (side == "left") spec.right else spec.left
@@ -1577,7 +1548,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       "recorded spec lacks the other side's table name")
     // delta returned RAW (system columns intact) — the caller reads
     // the tsd lineage for the watermark advance, then strips
-    (spec, path, mvFrame(req("source")),
+    (spec, path, tableOrPath(reqArg(t, "source", s"join matview $cmd")),
       catalog.table(otherName), side)
   }
 
@@ -1588,16 +1559,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * pass at create, #groups-row artifact, spec recorded beside it;
     * every later fold joins only the DELTA against the other side. */
   private def joinMatviewCreate(t: String): String = {
-    val body = t.substring("join matview create".length).trim
-      .stripPrefix("where").trim
-    val specM = "(?i)\\bspec\\s*=".r.findFirstMatchIn(body).getOrElse(
-      throw new IllegalArgumentException(
-        "join matview create requires spec ="))
-    val specJson = body.substring(specM.end).trim
-    val head = body.substring(0, specM.start)
-    val path = "(?i)\\bpath\\s*=\\s*(\\S+)".r.findFirstMatchIn(head)
-      .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-        "join matview create requires path ="))
+    val (head, specJson) = specClause(t, "join matview create",
+      "join matview create requires spec =")
+    val path = reqArg(head, "path", "join matview create")
     val spec = graft.ops.JoinMatView.specFromJson(specJson)
     require(spec.left.nonEmpty && spec.right.nonEmpty,
       "join matview spec requires left and right table names")
@@ -1629,9 +1593,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * existing join matview (spec recovered from the sidecar) so the
     * ingest auto-fold sees it after a restart. */
   private def joinMatviewAttach(t: String): String = {
-    val path = "(?i)\\bpath\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-      .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-        "join matview attach requires path ="))
+    val path = reqArg(t, "path", "join matview attach")
     val spec = jmvRecordedSpec(path)
     joinMatviews += path -> spec
     s"join matview attached at $path (${spec.left} ⋈ ${spec.right})"
@@ -1708,9 +1670,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * once. Idempotent: a second sync finds nothing above either
     * watermark. */
   private def joinMatviewSync(t: String): String = {
-    val path = "(?i)\\bpath\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-      .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-        "join matview sync requires path ="))
+    val path = reqArg(t, "path", "join matview sync")
     val spec = joinMatviews.getOrElse(path, jmvRecordedSpec(path))
     jmvSyncFold(path, spec, None)
   }
@@ -2014,10 +1974,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * artifact, or a state emptied by deletes) — rebuild with `matview
     * create` instead; and refuses a table without a `tsd_id` column. */
   private def matviewSync(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("matview sync requires table ="))
+    val table = reqArg(t, "table", "matview sync")
     val m = matviews.getOrElse(table, throw new IllegalArgumentException(
       s"no matview registered for $table — matview create/attach first"))
     val state = graft.ops.IndexStore.read(spark, m.path).getOrElse(
@@ -2064,9 +2021,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * base pass per artifact — an operator-invoked audit, not a serving
     * path. */
   private def artifactVerify(t: String): String = {
-    val table = "(?i)\\btable\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-      .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-        "artifact verify requires table ="))
+    val table = reqArg(t, "table", "artifact verify")
     import org.apache.spark.sql.functions.col
     val out = Seq.newBuilder[String]
     def diff(label: String, state: org.apache.spark.sql.DataFrame,
@@ -2161,9 +2116,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * of `attach all`: restart recovery re-registers the fleet, sync
     * all catches it up). */
   private def syncAll(t: String): String = {
-    val table = "(?i)\\btable\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-      .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-        "sync all requires table ="))
+    val table = reqArg(t, "table", "sync all")
     val out = Seq.newBuilder[String]
     def attempt(label: String)(body: => String): Unit =
       out += (try body
@@ -2204,8 +2157,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * advancing the tag in the same IndexStore commit. Idempotent;
     * refuses loudly without lineage. */
   private def indexFamilySync(t: String, kind: String): String = {
-    val table = "(?i)\\btable\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-      .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
+    val table = arg(t, "table").getOrElse(throw new IllegalArgumentException(
         s"$kind sync requires table ="))
     val (path, fold): (String,
         (org.apache.spark.sql.DataFrame, Option[String]) => Long) =
@@ -2272,61 +2224,53 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     *    retained version committed (right-to-be-forgotten audits:
     *    "what did this artifact serve before batch N folded / after
     *    the delete landed"). A pruned version refuses loudly. */
-  private def indexCmd(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val path = kv("path").getOrElse(
-      throw new IllegalArgumentException("index command requires path ="))
-    val low = t.trim.toLowerCase
-    if (low.startsWith("index versions")) {
-      val vs = graft.ops.IndexStore.committedVersions(spark, path)
-      if (vs.isEmpty) s"no committed versions at $path"
-      else {
-        val cur = vs.max
-        vs.map { v =>
-          val tags = graft.ops.IndexStore.tagsOf(spark, path, v)
-          val tagStr = if (tags.isEmpty) "" else
-            s" tags=${tags.sorted.mkString(",")}"
-          s"v=$v${if (v == cur) " (current)" else ""}$tagStr"
-        }.mkString("\n") +
-          s"\nretention ${graft.ops.IndexStore.retention(spark, path)}"
-      }
-    } else if (low.startsWith("index retain")) {
-      val keep = kv("keep").getOrElse(throw new IllegalArgumentException(
-        "index retain requires keep =")).toInt
-      graft.ops.IndexStore.setRetention(spark, path, keep)
-      s"retention at $path set to $keep committed versions"
-    } else if (low.startsWith("index get")) {
-      val df = kv("version") match {
-        case Some(v) =>
-          graft.ops.IndexStore.readVersion(spark, path, v.toLong)
-        case None => graft.ops.IndexStore.read(spark, path).getOrElse(
-          throw new IllegalArgumentException(s"no artifact at $path"))
-      }
-      // no spec knowledge here (any artifact kind): deterministic
-      // render order by every column left-to-right
-      import org.apache.spark.sql.functions.col
-      val out = stripWm(df)
-      val ordered = out.orderBy(out.columns.map(col).toSeq: _*)
-      if (kv("format").contains("table")) Render.table(ordered)
-      else Render.json(ordered)
-    } else throw new IllegalArgumentException(
-      s"unknown index command: ${t.take(40)}")
+  private def indexVersions(t: String): String = {
+    val path = reqArg(t, "path", "index command")
+    val vs = graft.ops.IndexStore.committedVersions(spark, path)
+    if (vs.isEmpty) s"no committed versions at $path"
+    else {
+      val cur = vs.max
+      vs.map { v =>
+        val tags = graft.ops.IndexStore.tagsOf(spark, path, v)
+        val tagStr = if (tags.isEmpty) "" else
+          s" tags=${tags.sorted.mkString(",")}"
+        s"v=$v${if (v == cur) " (current)" else ""}$tagStr"
+      }.mkString("\n") +
+        s"\nretention ${graft.ops.IndexStore.retention(spark, path)}"
+    }
+  }
+
+  private def indexRetain(t: String): String = {
+    val path = reqArg(t, "path", "index command")
+    val keep = reqArg(t, "keep", "index retain").toInt
+    graft.ops.IndexStore.setRetention(spark, path, keep)
+    s"retention at $path set to $keep committed versions"
+  }
+
+  private def indexGet(t: String): String = {
+    val path = reqArg(t, "path", "index command")
+    val df = arg(t, "version") match {
+      case Some(v) =>
+        graft.ops.IndexStore.readVersion(spark, path, v.toLong)
+      case None => graft.ops.IndexStore.read(spark, path).getOrElse(
+        throw new IllegalArgumentException(s"no artifact at $path"))
+    }
+    // no spec knowledge here (any artifact kind): deterministic
+    // render order by every column left-to-right
+    import org.apache.spark.sql.functions.col
+    val out = stripWm(df)
+    rendered(t, out.orderBy(out.columns.map(col).toSeq: _*))
   }
 
   /** `join matview get where path = <dir> [and format = table]`. */
   private def joinMatviewGet(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val path = kv("path").getOrElse(
-      throw new IllegalArgumentException("join matview get requires path ="))
+    val path = reqArg(t, "path", "join matview get")
     val spec = jmvRecordedSpec(path)
     val df = stripWm(graft.ops.IndexStore.read(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no join matview at $path")))
     import org.apache.spark.sql.functions.col
     val out = df.orderBy(spec.keys.map(col): _*)
-    if (kv("format").contains("table")) Render.table(out)
-    else Render.json(out)
+    rendered(t, out)
   }
 
   /** Background-service board for `get processes`
@@ -2442,22 +2386,20 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * purely a which-transport choice (the reference routes both
     * through the same mapping machinery). */
   private def runKafkaConsumer(t: String): String = {
-    def kv(k: String): Option[String] =
-      (s"(?i)\\b$k\\s*=\\s*(\\S+)").r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"run kafka consumer requires $k ="))
-    val (host, port) = (req("ip"), req("port").toInt)
-    val topics = req("topic").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val dir = java.nio.file.Paths.get(req("dir"))
+    val host = reqArg(t, "ip", "run kafka consumer")
+    val port = reqArg(t, "port", "run kafka consumer").toInt
+    val topics = reqArg(t, "topic", "run kafka consumer").split(",")
+      .map(_.trim).filter(_.nonEmpty).toSeq
+    val dir = java.nio.file.Paths.get(reqArg(t, "dir", "run kafka consumer"))
     java.nio.file.Files.createDirectories(dir)
     val earliest =
-      kv("reset").map(_.toLowerCase).getOrElse("latest") match {
+      arg(t, "reset").map(_.toLowerCase).getOrElse("latest") match {
         case "earliest" => true
         case "latest" => false
         case other => throw new IllegalArgumentException(
           s"reset must be earliest|latest, got $other")
       }
-    val pollMs = kv("poll").map(_.toLong).getOrElse(500L)
+    val pollMs = arg(t, "poll").map(_.toLong).getOrElse(500L)
     // one live consumer per topic per OFFSET JOURNAL: the journal is
     // keyed (topic, partition) under the catalog root, so a second
     // consumer of the same topic — from this engine OR another engine
@@ -2808,24 +2750,20 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * scope (SURVEY §2.1) — only `type = modbus` is accepted. */
   private def runPlcClient(t: String): String = {
     import graft.streaming.{ModbusMap, ModbusTcpClient}
-    def kv(k: String): Option[String] =
-      (s"(?i)\\b$k\\s*=\\s*(\\S+)").r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"run plc client requires $k ="))
-    val ptype = req("type").toLowerCase
+    val ptype = reqArg(t, "type", "run plc client").toLowerCase
     require(ptype == "modbus",
       s"run plc client: type $ptype is out of parity scope " +
         "(SURVEY §2.1) — only type = modbus is supported")
-    val host = req("hostname")
-    val port = req("port").toInt
-    val name = req("name")
-    val unit = kv("device_id").map(_.toInt).getOrElse(1)
-    val freq = req("frequency").toDouble
+    val host = reqArg(t, "hostname", "run plc client")
+    val port = reqArg(t, "port", "run plc client").toInt
+    val name = reqArg(t, "name", "run plc client")
+    val unit = arg(t, "device_id").map(_.toInt).getOrElse(1)
+    val freq = reqArg(t, "frequency", "run plc client").toDouble
     require(freq > 0, "frequency must be > 0 seconds")
-    val dir = java.nio.file.Paths.get(req("dir"))
+    val dir = java.nio.file.Paths.get(reqArg(t, "dir", "run plc client"))
     java.nio.file.Files.createDirectories(dir)
-    val dynamic = kv("dynamic").exists(_.equalsIgnoreCase("true"))
-    val table = kv("table")
+    val dynamic = arg(t, "dynamic").exists(_.equalsIgnoreCase("true"))
+    val table = arg(t, "table")
     require(!(dynamic && table.isDefined),
       "run plc client: dynamic = true cannot be combined with " +
         "table = ... (omit table =)")
@@ -2848,7 +2786,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       }
     }
     val client = new ModbusTcpClient(host, port,
-      timeoutMs = kv("timeout").map(_.toInt).getOrElse(5000))
+      timeoutMs = arg(t, "timeout").map(_.toInt).getOrElse(5000))
     client.connect() // fail fast on an unreachable server
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val handle = new PlcClientHandle(name, ptype, freq, stop,
@@ -2975,18 +2913,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * client` — same map grammar, same decode, no landing. */
   private def getPlcValues(t: String): String = {
     import graft.streaming.{ModbusMap, ModbusTcpClient}
-    def kv(k: String): Option[String] =
-      (s"(?i)\\b$k\\s*=\\s*(\\S+)").r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"get plc values requires $k ="))
-    val ptype = req("type").toLowerCase
+    val ptype = reqArg(t, "type", "get plc values").toLowerCase
     require(ptype == "modbus",
       s"get plc values: type $ptype is out of parity scope " +
         "(SURVEY §2.1) — only type = modbus is supported")
     val points = ModbusMap.parse(modbusMapJson(t))
-    val unit = kv("device_id").map(_.toInt).getOrElse(1)
-    val client = new ModbusTcpClient(req("hostname"), req("port").toInt,
-      timeoutMs = kv("timeout").map(_.toInt).getOrElse(5000))
+    val unit = arg(t, "device_id").map(_.toInt).getOrElse(1)
+    val client = new ModbusTcpClient(reqArg(t, "hostname", "get plc values"),
+      reqArg(t, "port", "get plc values").toInt,
+      timeoutMs = arg(t, "timeout").map(_.toInt).getOrElse(5000))
     try {
       client.connect()
       import org.json4s._
@@ -3014,30 +2949,26 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * scan moves on. */
   private def getPlcStruct(t: String): String = {
     import graft.streaming.{ModbusError, ModbusTcp, ModbusTcpClient}
-    def kv(k: String): Option[String] =
-      (s"(?i)\\b$k\\s*=\\s*(\\S+)").r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"get plc struct requires $k ="))
-    val ptype = req("type").toLowerCase
+    val ptype = reqArg(t, "type", "get plc struct").toLowerCase
     require(ptype == "modbus",
       s"get plc struct: type $ptype is out of parity scope " +
         "(SURVEY §2.1) — only type = modbus is supported")
-    val host = req("hostname")
-    val port = req("port").toInt
-    val unit = kv("device_id").map(_.toInt).getOrElse(1)
+    val host = reqArg(t, "hostname", "get plc struct")
+    val port = reqArg(t, "port", "get plc struct").toInt
+    val unit = arg(t, "device_id").map(_.toInt).getOrElse(1)
     // reference defaults: 50 addresses probed in chunks of 10
     val maxAddr = math.max(1, math.min(
-      kv("max_registers").map(_.toInt).getOrElse(50), 65536))
+      arg(t, "max_registers").map(_.toInt).getOrElse(50), 65536))
     val chunk = math.max(1, math.min(
-      kv("scan_chunk").map(_.toInt).getOrElse(10),
+      arg(t, "scan_chunk").map(_.toInt).getOrElse(10),
       ModbusTcp.MaxRegistersPerRead))
-    val format = kv("format").map(_.toLowerCase).getOrElse("map")
+    val format = arg(t, "format").map(_.toLowerCase).getOrElse("map")
     require(Seq("nodes", "map", "get_value", "run_client")
       .contains(format),
       s"get plc struct: format $format (expected nodes, map, " +
         "get_value, or run_client)")
     val client = new ModbusTcpClient(host, port,
-      timeoutMs = kv("timeout").map(_.toInt).getOrElse(5000))
+      timeoutMs = arg(t, "timeout").map(_.toInt).getOrElse(5000))
     // ILLEGAL DATA ADDRESS is per-chunk information (the device
     // answered: nothing there) — a TRANSPORT failure is not. An
     // accepting-but-unresponsive endpoint would otherwise cost a
@@ -3100,10 +3031,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         s"get plc values where type = modbus and hostname = $host " +
           s"and port = $port and device_id = $unit and map = $mapJson"
       case _ =>
-        val name = kv("name").getOrElse("modbus_client")
-        val freq = kv("frequency").getOrElse("1")
-        val table = kv("table").getOrElse("modbus_readings")
-        val dir = kv("dir").getOrElse("plc_land")
+        val name = arg(t, "name").getOrElse("modbus_client")
+        val freq = arg(t, "frequency").getOrElse("1")
+        val table = arg(t, "table").getOrElse("modbus_readings")
+        val dir = arg(t, "dir").getOrElse("plc_land")
         s"run plc client where type = modbus and hostname = $host " +
           s"and port = $port and device_id = $unit and " +
           s"frequency = $freq and name = $name and table = $table " +
@@ -3164,29 +3095,20 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * name then behaves like any table: `sql edge "select ... from
     * <name> ..."`, joins, matview sources. */
   private def connectDbms(t: String): String = {
-    val url = "(?i)\\burl\\s*=\\s*(\\S+)".r.findFirstMatchIn(t)
-      .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-        "connect dbms requires url ="))
+    val url = reqArg(t, "url", "connect dbms")
     // a JDBC URL's own query string can carry key=value pairs
     // (?user=x&password=y) — mask it before parsing command options,
     // or those pairs would be misread as command-level options
     val masked = t.replace(url, "<url>")
-    // quoted values first (a password may contain spaces), bare last
-    def kv(k: String): Option[String] =
-      (s"(?i)\\b$k\\s*=\\s*" + "\"([^\"]+)\"").r
-        .findFirstMatchIn(masked).map(_.group(1))
-        .orElse((s"(?i)\\b$k\\s*=\\s*'([^']+)'").r
-          .findFirstMatchIn(masked).map(_.group(1)))
-        .orElse((s"(?i)\\b$k\\s*=\\s*(\\S+)").r
-          .findFirstMatchIn(masked).map(_.group(1)))
     val name = "(?i)^connect dbms\\s+(\\S+)".r.findFirstMatchIn(t.trim)
       .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
         "connect dbms <name> where type = jdbc and url = ..."))
-    val tpe = kv("type").map(_.toLowerCase).getOrElse("jdbc")
+    // quoted values (a password may contain spaces) or bare tokens
+    val tpe = quotedArg(masked, "type").map(_.toLowerCase).getOrElse("jdbc")
     require(tpe == "jdbc",
       s"connect dbms: only type = jdbc is supported here (got $tpe); " +
         "parquet-backed tables register through the data-dir/PUT path")
-    val dbtable = kv("dbtable").getOrElse(
+    val dbtable = quotedArg(masked, "dbtable").getOrElse(
       throw new IllegalArgumentException("connect dbms requires dbtable ="))
     // option pass-through, command-style keys -> Spark JDBC keys
     val optKeys = Seq(
@@ -3196,7 +3118,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       "lower_bound" -> "lowerBound", "upper_bound" -> "upperBound",
       "num_partitions" -> "numPartitions")
     val opts = optKeys.flatMap { case (cmdKey, sparkKey) =>
-      kv(cmdKey).map(sparkKey -> _) }.toMap
+      quotedArg(masked, cmdKey).map(sparkKey -> _) }.toMap
     val partKeys = Seq("partitionColumn", "lowerBound", "upperBound",
       "numPartitions").count(opts.contains)
     require(partKeys == 0 || partKeys == 4,
@@ -3315,12 +3237,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * checkpoint replay duplicates neither. Shows on `get processes`
     * as Streamer and in `get streaming` as `streamer_<table>`. */
   private def runStreamer(t: String): String = {
-    def kv(k: String): Option[String] =
-      (s"(?i)\\b$k\\s*=\\s*(\\S+)").r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"run streamer requires $k ="))
-    val (dir, table) = (req("dir"), req("table"))
-    val flush = kv("flush").map(_.toLong).getOrElse(60L)
+    val dir = reqArg(t, "dir", "run streamer")
+    val table = reqArg(t, "table", "run streamer")
+    val flush = arg(t, "flush").map(_.toLong).getOrElse(60L)
     // idempotent on an IDENTICAL re-declaration (the attach-all
     // replay path); a conflicting one (same table, different
     // dir/policy/flush) is refused loudly
@@ -3335,8 +3254,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       }
     }
     val raw = graft.streaming.StreamIngest.watchDir(spark, dir,
-      archiveDir = kv("archive"))
-    val rows = kv("policy") match {
+      archiveDir = arg(t, "archive"))
+    val rows = arg(t, "policy") match {
       case Some(id) =>
         val pj = catalog.policy(id).getOrElse(
           throw new IllegalArgumentException(s"unknown mapping policy: $id"))
@@ -3457,11 +3376,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * so its hash re-keys the duplicate-PUT refusal; a second round
     * pulls and pushes nothing. */
   private def haSync(t: String): String = {
-    def kv(k: String): Option[String] =
-      (s"(?i)\\b$k\\s*=\\s*(\\S+)").r.findFirstMatchIn(t).map(_.group(1))
-    val peer = kv("peer").getOrElse(throw new IllegalArgumentException(
+    val peer = arg(t, "peer").getOrElse(throw new IllegalArgumentException(
       "run ha sync requires peer = <host:port>"))
-    val tableFilter = kv("table")
+    val tableFilter = arg(t, "table")
     // request timeouts make a simultaneous MUTUAL sync fail loudly
     // instead of deadlocking: this node holds its write lock across
     // the round, so if the peer is mid-sync against us (holding ITS
@@ -3696,7 +3613,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     require(command.nonEmpty, "schedule: empty task command")
     val repeatMs = timeOptMs(opts).getOrElse(
       throw new IllegalArgumentException("schedule requires time ="))
-    val name = strOpt(opts, "name").getOrElse(
+    val name = quotedArg(opts, "name").getOrElse(
       // unnamed tasks get a stable autogenerated name, like the
       // reference's task-id-only registration
       s"task-${low.hashCode.toHexString}")
@@ -3732,7 +3649,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         throw new IllegalArgumentException(
           "task [stop|resume|run|remove|init] where name = ..."))
     val (op, opts) = (m.group(1).toLowerCase, m.group(2))
-    val name = strOpt(opts, "name").getOrElse(
+    val name = quotedArg(opts, "name").getOrElse(
       throw new IllegalArgumentException("task: name = required"))
     val schedId = intOpt(opts, "scheduler").getOrElse(1)
     val reply = taskScheduler.taskCmd(op, name, schedId, startOpt(opts))
@@ -3765,14 +3682,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           case "day"    => n * 86400000L
         }
       }
-
-  private def strOpt(opts: String, key: String): Option[String] =
-    (s"(?i)\\b$key\\s*=\\s*" + "\"([^\"]+)\"").r
-      .findFirstMatchIn(opts).map(_.group(1))
-      .orElse((s"(?i)\\b$key\\s*=\\s*'([^']+)'").r
-        .findFirstMatchIn(opts).map(_.group(1)))
-      .orElse((s"(?i)\\b$key\\s*=\\s*(\\S+)").r
-        .findFirstMatchIn(opts).map(_.group(1)))
 
   private def intOpt(opts: String, key: String): Option[Int] =
     (s"(?i)\\b$key\\s*=\\s*(\\d+)").r
@@ -3812,15 +3721,13 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * QoS 1 by default: the client PUBACKs AFTER the file lands, and
     * duplicate redeliveries are absorbed by the ingest gates. */
   private def runMsgClient(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"run msg client requires $k ="))
-    val (host, port) = (req("broker"), req("port").toInt)
-    val topics = req("topic").split(",").map(_.trim).filter(_.nonEmpty)
-    val dir = java.nio.file.Paths.get(req("dir"))
+    val host = reqArg(t, "broker", "run msg client")
+    val port = reqArg(t, "port", "run msg client").toInt
+    val topics = reqArg(t, "topic", "run msg client").split(",")
+      .map(_.trim).filter(_.nonEmpty)
+    val dir = java.nio.file.Paths.get(reqArg(t, "dir", "run msg client"))
     java.nio.file.Files.createDirectories(dir)
-    val qos = kv("qos").map(_.toInt).getOrElse(1)
+    val qos = arg(t, "qos").map(_.toInt).getOrElse(1)
     require(qos >= 0 && qos <= 1,
       s"run msg client: qos $qos unsupported — this client implements " +
         "QoS 0/1 only (QoS 2 receiver flow is not implemented)")
@@ -3889,17 +3796,13 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** `matview get where path = <dir> [and format = table]` — serve the
     * #groups-row artifact. */
   private def matviewGet(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val path = kv("path").getOrElse(
-      throw new IllegalArgumentException("matview get requires path ="))
+    val path = reqArg(t, "path", "matview get")
     val (keys, _) = mvRecordedSpec(path)
     val df = stripWm(graft.ops.IndexStore.read(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no matview at $path")))
     import org.apache.spark.sql.functions.col
     val out = df.orderBy(keys.map(col): _*)
-    if (kv("format").contains("table")) Render.table(out)
-    else Render.json(out)
+    rendered(t, out)
   }
 
   /** `quality check where table = <t> and spec = <json> [and format =
@@ -3909,22 +3812,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * spec must be the LAST clause (same contract as `pipeline clean`);
     * `ref` checks resolve their `ref_table` through this catalog. */
   private def qualityCheck(t: String): String = {
-    val body = t.substring("quality check".length).trim
-      .stripPrefix("where").trim
-    val specM = "(?i)\\bspec\\s*=".r.findFirstMatchIn(body).getOrElse(
-      throw new IllegalArgumentException(
-        "quality check requires spec = <json>"))
-    val specJson = body.substring(specM.end).trim
-    val head = body.substring(0, specM.start)
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(head)
-        .map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("quality check requires table ="))
+    val (head, specJson) = specClause(t, "quality check",
+      "quality check requires spec = <json>")
+    val table = reqArg(head, "table", "quality check")
     val checks = graft.ops.Quality.fromJson(specJson, catalog.table)
     val receipt = graft.ops.Quality.verify(catalog.table(table), checks)
-    if (kv("format").contains("table")) Render.table(receipt)
-    else Render.json(receipt)
+    rendered(head, receipt)
   }
 
   /** `pipeline clean where table = <src> and dest = <new> and spec = <json>`
@@ -3937,23 +3830,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * clause (JSON contains no bare `=`, so the earlier k=v parses stay
     * unambiguous). */
   private def pipelineClean(t: String): String = {
-    val body = t.substring("pipeline clean".length).trim
-      .stripPrefix("where").trim
-    // the spec clause is matched as a WORD ('table = inspection' must
-    // not trip the substring "spec"), and everything after its '=' is
-    // the JSON verbatim
-    val specM = "(?i)\\bspec\\s*=".r.findFirstMatchIn(body).getOrElse(
-      throw new IllegalArgumentException(
-        "pipeline clean requires spec = <json>"))
-    val specJson = body.substring(specM.end).trim
-    val head = body.substring(0, specM.start)
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(head)
-        .map(_.group(1))
-    val src = kv("table").getOrElse(
-      throw new IllegalArgumentException("pipeline clean requires table ="))
-    val dest = kv("dest").getOrElse(
-      throw new IllegalArgumentException("pipeline clean requires dest ="))
+    val (head, specJson) = specClause(t, "pipeline clean",
+      "pipeline clean requires spec = <json>")
+    val src = reqArg(head, "table", "pipeline clean")
+    val dest = reqArg(head, "dest", "pipeline clean")
     require(dest.matches("[A-Za-z_][A-Za-z0-9_]*"), s"bad dest name: $dest")
     val srcPath = catalog.tablePath(src).getOrElse(
       throw new IllegalArgumentException(
@@ -3970,7 +3850,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // unregistered siblings (e.g. another table's parquet in the same
     // dir) must not be silently clobbered either: an existing dest path
     // requires an explicit overwrite = true clause
-    val overwrite = kv("overwrite").exists(_.equalsIgnoreCase("true"))
+    val overwrite = arg(head, "overwrite").exists(_.equalsIgnoreCase("true"))
     require(overwrite || !java.nio.file.Files.exists(
         java.nio.file.Paths.get(destPath)),
       s"dest path $destPath already exists; add overwrite = true to replace")
@@ -3988,103 +3868,104 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     *     [bring [path]... ["lit"]... [separator = <s>]]
     * A policy is `{"<type>": {...}}`; `get` filters by type + attribute
     * equality; `bring` projects paths out of each match. */
-  private def blockchainCmd(t: String): String = {
+  private def blockchainInsert(t: String): String = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val low = t.toLowerCase
-    if (low.startsWith("blockchain insert")) {
-      val idx = t.indexOf("policy =")
-      require(idx > 0, "blockchain insert where policy = <json>")
-      val json = t.substring(idx + "policy =".length).trim
-      val root = JsonMethods.parse(json)
-      val (ptype, inner) = root match {
-        case JObject((k, v) :: _) => (k, v)
-        case _ => throw new IllegalArgumentException("policy must be an object")
-      }
-      val id = (inner \ "id") match {
-        case JString(s) => s
-        case _ =>
-          // content-addressed id, like the ledger's hash key
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(json.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      }
-      catalog.addPolicy(id, json)
-      s"policy $ptype $id stored"
-    } else {
-      val rest = t.substring("blockchain get ".length).trim
-      // split off bring / where clauses
-      val bringIdx = rest.toLowerCase.indexOf(" bring ")
-      val (head, bringSpec) =
-        if (bringIdx >= 0) (rest.substring(0, bringIdx).trim,
-          Some(rest.substring(bringIdx + 7).trim))
-        else (rest, None)
-      val whereIdx = head.toLowerCase.indexOf(" where ")
-      val (ptype, conds) =
-        if (whereIdx >= 0) {
-          val w = head.substring(whereIdx + 7)
-          val kvs = w.split("(?i)\\s+and\\s+").toSeq.map { kv =>
-            kv.split("=", 2).map(_.trim
-              .stripPrefix("\"").stripSuffix("\"")
-              .stripPrefix("'").stripSuffix("'")) match {
-              case Array(k, v) => (k, v)
-              case _ => throw new IllegalArgumentException(
-                s"blockchain get: condition '$kv' is not <key> = <value>")
-            }
+    val idx = t.indexOf("policy =")
+    require(idx > 0, "blockchain insert where policy = <json>")
+    val json = t.substring(idx + "policy =".length).trim
+    val root = JsonMethods.parse(json)
+    val (ptype, inner) = root match {
+      case JObject((k, v) :: _) => (k, v)
+      case _ => throw new IllegalArgumentException("policy must be an object")
+    }
+    val id = (inner \ "id") match {
+      case JString(s) => s
+      case _ =>
+        // content-addressed id, like the ledger's hash key
+        java.security.MessageDigest.getInstance("MD5")
+          .digest(json.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    }
+    catalog.addPolicy(id, json)
+    s"policy $ptype $id stored"
+  }
+
+  private def blockchainGet(t: String): String = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val rest = t.substring("blockchain get ".length).trim
+    // split off bring / where clauses
+    val bringIdx = rest.toLowerCase.indexOf(" bring ")
+    val (head, bringSpec) =
+      if (bringIdx >= 0) (rest.substring(0, bringIdx).trim,
+        Some(rest.substring(bringIdx + 7).trim))
+      else (rest, None)
+    val whereIdx = head.toLowerCase.indexOf(" where ")
+    val (ptype, conds) =
+      if (whereIdx >= 0) {
+        val w = head.substring(whereIdx + 7)
+        val kvs = w.split("(?i)\\s+and\\s+").toSeq.map { kv =>
+          kv.split("=", 2).map(_.trim
+            .stripPrefix("\"").stripSuffix("\"")
+            .stripPrefix("'").stripSuffix("'")) match {
+            case Array(k, v) => (k, v)
+            case _ => throw new IllegalArgumentException(
+              s"blockchain get: condition '$kv' is not <key> = <value>")
           }
-          (head.substring(0, whereIdx).trim, kvs)
-        } else (head.trim, Nil)
-      def str(v: JValue): String = v match {
-        case JString(s) => s
-        case JInt(i) => i.toString
-        case JDouble(d) => d.toString
-        case JBool(b) => b.toString
-        case other => JsonMethods.compact(JsonMethods.render(other))
-      }
-      val matches = catalog.policyList.flatMap { case (_, json) =>
-        scala.util.Try(JsonMethods.parse(json)).toOption.collect {
-          case JObject((k, inner) :: _)
-              if (ptype == "*" || k == ptype) &&
-                conds.forall { case (ck, cv) => str(inner \ ck) == cv } =>
-            (k, inner, json)
         }
+        (head.substring(0, whereIdx).trim, kvs)
+      } else (head.trim, Nil)
+    def str(v: JValue): String = v match {
+      case JString(s) => s
+      case JInt(i) => i.toString
+      case JDouble(d) => d.toString
+      case JBool(b) => b.toString
+      case other => JsonMethods.compact(JsonMethods.render(other))
+    }
+    val matches = catalog.policyList.flatMap { case (_, json) =>
+      scala.util.Try(JsonMethods.parse(json)).toOption.collect {
+        case JObject((k, inner) :: _)
+            if (ptype == "*" || k == ptype) &&
+              conds.forall { case (ck, cv) => str(inner \ ck) == cv } =>
+          (k, inner, json)
       }
-      bringSpec match {
-        case None => matches.map(_._3).mkString("[", ",", "]")
-        case Some(spec) =>
-          // bring items: [a][b] paths and quoted literals; trailing
-          // `separator = <s>` joins per-policy outputs
-          val sepRx = "(?i)\\s+separator\\s*=\\s*(\\S+)\\s*$".r
-          val (items, sep) = sepRx.findFirstMatchIn(spec) match {
-            case Some(m) => (spec.substring(0, m.start).trim,
-              m.group(1).stripPrefix("\"").stripSuffix("\"")
-                .replace("\\n", "\n"))
-            case None => (spec, "")
-          }
-          val tokRx = "(\\[[^\\]]+\\])+|\"[^\"]*\"|'[^']*'".r
-          val toks = tokRx.findAllIn(items).toSeq
-          matches.map { case (key, inner, _) =>
-            toks.map { tok =>
-              if (tok.startsWith("\"") || tok.startsWith("'"))
-                tok.substring(1, tok.length - 1)
-              else {
-                val segs = tok.stripPrefix("[").stripSuffix("]")
-                  .split("\\]\\[").toSeq
-                // the FIRST segment may be the policy-type key itself
-                // ([operator][ip]) or a field inside the body ([ip]);
-                // the rest resolve strictly — a wrong path yields
-                // nothing, never a re-rooted lookup at the body
-                val root =
-                  if (segs.head == key) inner
-                  else inner \ segs.head
-                val v = segs.tail.foldLeft(root)(_ \ _)
-                v match {
-                  case JNothing => ""
-                  case other => str(other)
-                }
+    }
+    bringSpec match {
+      case None => matches.map(_._3).mkString("[", ",", "]")
+      case Some(spec) =>
+        // bring items: [a][b] paths and quoted literals; trailing
+        // `separator = <s>` joins per-policy outputs
+        val sepRx = "(?i)\\s+separator\\s*=\\s*(\\S+)\\s*$".r
+        val (items, sep) = sepRx.findFirstMatchIn(spec) match {
+          case Some(m) => (spec.substring(0, m.start).trim,
+            m.group(1).stripPrefix("\"").stripSuffix("\"")
+              .replace("\\n", "\n"))
+          case None => (spec, "")
+        }
+        val tokRx = "(\\[[^\\]]+\\])+|\"[^\"]*\"|'[^']*'".r
+        val toks = tokRx.findAllIn(items).toSeq
+        matches.map { case (key, inner, _) =>
+          toks.map { tok =>
+            if (tok.startsWith("\"") || tok.startsWith("'"))
+              tok.substring(1, tok.length - 1)
+            else {
+              val segs = tok.stripPrefix("[").stripSuffix("]")
+                .split("\\]\\[").toSeq
+              // the FIRST segment may be the policy-type key itself
+              // ([operator][ip]) or a field inside the body ([ip]);
+              // the rest resolve strictly — a wrong path yields
+              // nothing, never a re-rooted lookup at the body
+              val root =
+                if (segs.head == key) inner
+                else inner \ segs.head
+              val v = segs.tail.foldLeft(root)(_ \ _)
+              v match {
+                case JNothing => ""
+                case other => str(other)
               }
-            }.mkString
-          }.mkString(sep)
-      }
+            }
+          }.mkString
+        }.mkString(sep)
     }
   }
 
@@ -4271,19 +4152,19 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private def rollupCreate(t: String): String = {
     val body = t.substring("rollup create".length).trim
       .stripPrefix("where").trim
-    def kv(k: String): Option[String] =
+    // dims/value take a parenthesised list with spaces: `(a, b)`
+    def list(k: String): Option[Seq[String]] =
       s"(?i)\\b$k\\s*=\\s*(\\([^)]*\\)|\\S+)".r.findFirstMatchIn(body)
-        .map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"rollup create requires $k ="))
-    val table = req("table")
-    def list(v: String): Seq[String] = v.stripPrefix("(").stripSuffix(")")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        .map(_.group(1).stripPrefix("(").stripSuffix(")")
+          .split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val table = reqArg(body, "table", "rollup create")
     val meta = graft.dialect.RollupServe.Meta(
-      path = req("path"), tsCol = req("time"),
-      grain = req("grain"),
-      dims = kv("dims").toSeq.flatMap(list),
-      valueCols = list(req("value")))
+      path = reqArg(body, "path", "rollup create"),
+      tsCol = reqArg(body, "time", "rollup create"),
+      grain = reqArg(body, "grain", "rollup create"),
+      dims = list("dims").getOrElse(Nil),
+      valueCols = list("value").getOrElse(throw new IllegalArgumentException(
+        "rollup create requires value =")))
     val rolled = graft.ops.Rollup.build(catalog.table(table), meta.tsCol,
       meta.grain, meta.dims, meta.valueCols).localCheckpoint()
     // lineage watermark seeded in the same commit (`rollup sync`)
@@ -4302,18 +4183,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private def rollupRefresh(t: String): String = {
     val body = t.substring("rollup refresh".length).trim
       .stripPrefix("where").trim
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(body).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("rollup refresh requires table ="))
+    val table = reqArg(body, "table", "rollup refresh")
     val meta = rollups.getOrElse(table,
       throw new IllegalArgumentException(s"no rollup registered for $table"))
-    val src = kv("source").getOrElse(
-      throw new IllegalArgumentException("rollup refresh requires source ="))
-    val delta =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val delta = tableOrPath(reqArg(body, "source", "rollup refresh"))
     val n = foldRollup(meta, delta, None)
     s"rollup for $table refreshed ($n ${meta.grain} buckets)"
   }
@@ -4329,15 +4202,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * targeted re-aggregation repair for min/max, reading only the
     * touched (partition-prunable) buckets. */
   private def rollupDelete(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("rollup delete requires table ="))
+    val table = reqArg(t, "table", "rollup delete")
     val meta = rollups.getOrElse(table,
       throw new IllegalArgumentException(s"no rollup registered for $table"))
     val cur = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no rollup artifact at ${meta.path}"))
-    val next = (kv("before"), kv("source")) match {
+    val next = (arg(t, "before"), arg(t, "source")) match {
       case (Some(cutoff), None) =>
         // the \S+ capture stops at whitespace; accept quoted full
         // timestamps too
@@ -4345,12 +4215,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           .map(_.group(1)).getOrElse(cutoff)
         graft.ops.Rollup.deleteBefore(cur, c)
       case (None, Some(src)) =>
-        val baseName = kv("base").getOrElse(
+        val baseName = arg(t, "base").getOrElse(
           throw new IllegalArgumentException(
             "rollup delete with source = needs base = <table> (the " +
               "table AFTER the rows were removed) to recompute " +
               "touched buckets"))
-        graft.ops.Rollup.deleteRows(cur, mvFrame(src),
+        graft.ops.Rollup.deleteRows(cur, tableOrPath(src),
           catalog.table(baseName), meta.dims, meta.valueCols)
       case _ => throw new IllegalArgumentException(
         "rollup delete takes EITHER before = <ts> OR source = <rows> " +
@@ -4375,30 +4245,28 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private def vindexCreate(t: String): String = {
     val body = t.substring("vindex create".length).trim
       .stripPrefix("where").trim
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(body).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"vindex create requires $k ="))
-    val (table, path) = (req("table"), req("path"))
-    val (idCol, vecCol) = (req("id"), req("vector"))
-    val kind = req("type").toLowerCase
+    val table = reqArg(body, "table", "vindex create")
+    val path = reqArg(body, "path", "vindex create")
+    val idCol = reqArg(body, "id", "vindex create")
+    val vecCol = reqArg(body, "vector", "vindex create")
+    val kind = reqArg(body, "type", "vindex create").toLowerCase
     val src = catalog.table(table)
     val (built, numSub) = kind match {
       case "pq" =>
-        val m = req("numsub").toInt
+        val m = reqArg(body, "numsub", "vindex create").toInt
         (graft.ops.Similarity.pqIndex(src, vecCol, idCol, numSub = m,
-          ksub = req("ksub").toInt,
-          iters = kv("iters").map(_.toInt).getOrElse(1)), m)
+          ksub = reqArg(body, "ksub", "vindex create").toInt,
+          iters = arg(body, "iters").map(_.toInt).getOrElse(1)), m)
       case "ivf" =>
         (graft.ops.Similarity.ivfIndex(src, vecCol, idCol,
-          numCentroids = kv("cells").map(_.toInt).getOrElse(0),
-          kmeansIters = kv("iters").map(_.toInt).getOrElse(0)), 0)
+          numCentroids = arg(body, "cells").map(_.toInt).getOrElse(0),
+          kmeansIters = arg(body, "iters").map(_.toInt).getOrElse(0)), 0)
       case "rpq" =>
-        val m = req("numsub").toInt
+        val m = reqArg(body, "numsub", "vindex create").toInt
         (graft.ops.Similarity.residualIvfIndex(src, vecCol, idCol,
-          ncells = kv("cells").map(_.toInt).getOrElse(16), numSub = m,
-          ksub = req("ksub").toInt,
-          iters = kv("iters").map(_.toInt).getOrElse(1)), m)
+          ncells = arg(body, "cells").map(_.toInt).getOrElse(16), numSub = m,
+          ksub = reqArg(body, "ksub", "vindex create").toInt,
+          iters = arg(body, "iters").map(_.toInt).getOrElse(1)), m)
       case "sq8" =>
         (graft.ops.Similarity.sq8Index(src, vecCol, idCol), 0)
       case other => throw new IllegalArgumentException(
@@ -4421,18 +4289,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * centroids). The corpus is never re-read and the artifact commits
     * as a fresh IndexStore version. */
   private def vindexRefresh(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("vindex refresh requires table ="))
+    val table = reqArg(t, "table", "vindex refresh")
     val meta = vindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no vindex registered for $table"))
-    val src = kv("source").getOrElse(
-      throw new IllegalArgumentException("vindex refresh requires source ="))
-    val delta =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val delta = tableOrPath(reqArg(t, "source", "vindex refresh"))
     val rows = foldVindex(meta, delta, None)
     s"vindex for $table refreshed ($rows index rows)"
   }
@@ -4486,10 +4346,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * the artifact commits as a fresh crash-atomic IndexStore version.
     * Serve-after-delete == serve-over-survivors exactly (q175). */
   private def vindexDelete(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("vindex delete requires table ="))
+    val table = reqArg(t, "table", "vindex delete")
     val meta = vindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no vindex registered for $table"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
@@ -4513,35 +4370,26 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * touch the corpus floats (PQ) / never scan outside routed cells
     * (IVF). */
   private def vindexSearch(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"vindex search requires $k ="))
-    val table = req("table")
+    val table = reqArg(t, "table", "vindex search")
     val meta = vindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no vindex registered for $table"))
-    val src = req("probes")
-    val probes =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val probes = tableOrPath(reqArg(t, "probes", "vindex search"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no vindex artifact at ${meta.path}"))
-    val k = req("k").toInt
+    val k = reqArg(t, "k", "vindex search").toInt
     val result = meta.kind match {
       case "pq" => graft.ops.Similarity.pqSearchIndex(stored, probes,
         meta.vecCol, meta.idCol, k, meta.numSub)
       case "rpq" => graft.ops.Similarity.searchResidualIndex(stored,
         probes, meta.vecCol, meta.idCol, k,
-        kv("nprobe").map(_.toInt).getOrElse(1), meta.numSub)
+        arg(t, "nprobe").map(_.toInt).getOrElse(1), meta.numSub)
       case "sq8" => graft.ops.Similarity.sq8SearchIndex(stored, probes,
         meta.vecCol, meta.idCol, k)
       case _ => graft.ops.Similarity.ivfSearchIndex(stored, probes,
         meta.vecCol, meta.idCol, k,
-        kv("nprobe").map(_.toInt).getOrElse(1))
+        arg(t, "nprobe").map(_.toInt).getOrElse(1))
     }
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+    rendered(t, result)
   }
 
   /** `vindex negatives where table = <t> and probes = <table|path> and
@@ -4559,23 +4407,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * intrinsic, not a bug). Probe rows must carry id, vector AND the
     * label column. */
   private def vindexNegatives(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"vindex negatives requires $k ="))
-    val table = req("table")
+    val table = reqArg(t, "table", "vindex negatives")
     val meta = vindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no vindex registered for $table"))
-    val src = req("probes")
-    val probes =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val probes = tableOrPath(reqArg(t, "probes", "vindex negatives"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no vindex artifact at ${meta.path}"))
-    val k = req("k").toInt
-    val labelCol = req("label")
-    val oversample = kv("oversample").map(_.toInt).getOrElse(4)
+    val k = reqArg(t, "k", "vindex negatives").toInt
+    val labelCol = reqArg(t, "label", "vindex negatives")
+    val oversample = arg(t, "oversample").map(_.toInt).getOrElse(4)
     require(k >= 1 && oversample >= 1)
     val kBig = k * oversample
     import org.apache.spark.sql.functions.{broadcast, col, row_number}
@@ -4584,12 +4424,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         meta.vecCol, meta.idCol, kBig, meta.numSub)
       case "rpq" => graft.ops.Similarity.searchResidualIndex(stored,
         probes, meta.vecCol, meta.idCol, kBig,
-        kv("nprobe").map(_.toInt).getOrElse(1), meta.numSub)
+        arg(t, "nprobe").map(_.toInt).getOrElse(1), meta.numSub)
       case "sq8" => graft.ops.Similarity.sq8SearchIndex(stored, probes,
         meta.vecCol, meta.idCol, kBig)
       case _ => graft.ops.Similarity.ivfSearchIndex(stored, probes,
         meta.vecCol, meta.idCol, kBig,
-        kv("nprobe").map(_.toInt).getOrElse(1))
+        arg(t, "nprobe").map(_.toInt).getOrElse(1))
     }
     val candLabels = catalog.table(table)
       .select(col(meta.idCol).as("id"), col(labelCol).as("neg_label"))
@@ -4605,8 +4445,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       .filter(col("neg_rank") <= k)
       .drop("rank", "q_label")
       .orderBy(col("q_id"), col("neg_rank"))
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+    rendered(t, result)
   }
 
   /** `vindex attach where table = <t> and path = <dir> and type = pq|ivf
@@ -4614,12 +4453,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * artifact after an engine restart; PQ geometry (numsub) is read
     * back from the recorded books. */
   private def vindexAttach(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"vindex attach requires $k ="))
-    val (table, path, kind) = (req("table"), req("path"),
-      req("type").toLowerCase)
+    val table = reqArg(t, "table", "vindex attach")
+    val path = reqArg(t, "path", "vindex attach")
+    val kind = reqArg(t, "type", "vindex attach").toLowerCase
     val stored = graft.ops.IndexStore.read(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no vindex artifact at $path"))
     val numSub = kind match {
@@ -4632,7 +4468,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           .getInt(0) + 1
       case _ => 0 // ivf and sq8 carry their geometry in the artifact
     }
-    vindexes += table -> VIndexMeta(path, kind, req("id"), req("vector"),
+    vindexes += table -> VIndexMeta(path, kind,
+      reqArg(t, "id", "vindex attach"), reqArg(t, "vector", "vindex attach"),
       numSub)
     s"vindex for $table attached from $path (type=$kind" +
       (if (kind == "pq" || kind == "rpq") s", numsub=$numSub" else "") +
@@ -4646,13 +4483,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * `grams = true` a char-trigram SIDECAR artifact (`<path>-grams`)
     * is also built, enabling `tindex like` substring search. */
   private def tindexCreate(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"tindex create requires $k ="))
-    val (table, path) = (req("table"), req("path"))
-    val (idCol, textCol) = (req("id"), req("text"))
-    val grams = kv("grams").exists(_.equalsIgnoreCase("true"))
+    val table = reqArg(t, "table", "tindex create")
+    val path = reqArg(t, "path", "tindex create")
+    val idCol = reqArg(t, "id", "tindex create")
+    val textCol = reqArg(t, "text", "tindex create")
+    val grams = arg(t, "grams").exists(_.equalsIgnoreCase("true"))
     val src = catalog.table(table)
     val built = graft.ops.Retrieval.postingsIndex(src, textCol, idCol)
     // lineage watermark seeded on the same commit (`tindex sync` reads
@@ -4675,18 +4510,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * state only, so fold == rebuild; existing batch ids are replaced).
     * Commits as a fresh IndexStore version. */
   private def tindexRefresh(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("tindex refresh requires table ="))
+    val table = reqArg(t, "table", "tindex refresh")
     val meta = tindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no tindex registered for $table"))
-    val src = kv("source").getOrElse(
-      throw new IllegalArgumentException("tindex refresh requires source ="))
-    val delta =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val delta = tableOrPath(reqArg(t, "source", "tindex refresh"))
     val rows = foldTindex(meta, delta, None)
     s"tindex for $table refreshed ($rows index rows)"
   }
@@ -4732,10 +4559,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * at query time, so delete == rebuild-over-survivors exactly
     * (q176). Commits as fresh crash-atomic IndexStore versions. */
   private def tindexDelete(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("tindex delete requires table ="))
+    val table = reqArg(t, "table", "tindex delete")
     val meta = tindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no tindex registered for $table"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
@@ -4770,19 +4594,17 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * [[graft.ops.Dedup.simhashIndex]]) is unchanged — this is the
     * registration front door the pipeline-owned paths lacked. */
   private def dedupIndexCreate(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"dedup index create requires $k ="))
-    val (table, path) = (req("table"), req("path"))
-    val kind = req("type").toLowerCase
+    val table = reqArg(t, "table", "dedup index create")
+    val path = reqArg(t, "path", "dedup index create")
+    val kind = reqArg(t, "type", "dedup index create").toLowerCase
     require(kind == "shingle" || kind == "simhash" ||
       kind == "embedding" || kind == "exact",
       s"dedup index type must be shingle|simhash|embedding|exact " +
         s"(got $kind)")
-    val idCol = req("id")
-    val contentCol = if (kind == "embedding") req("vector") else req("text")
-    val n = kv("n").map(_.toInt).getOrElse(3)
+    val idCol = reqArg(t, "id", "dedup index create")
+    val contentCol = reqArg(t, if (kind == "embedding") "vector" else "text",
+      "dedup index create")
+    val n = arg(t, "n").map(_.toInt).getOrElse(3)
     val src = catalog.table(table)
     val built = kind match {
       case "shingle" =>
@@ -4795,8 +4617,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         // embedding: pinned or corpus-derived LSH geometry, RECORDED
         // on the rows (refresh reads it back — no meta to remember)
         graft.ops.Dedup.embeddingIndex(src, contentCol, idCol,
-          bits = kv("bits").map(_.toInt).getOrElse(0),
-          tables = kv("tables").map(_.toInt).getOrElse(0))
+          bits = arg(t, "bits").map(_.toInt).getOrElse(0),
+          tables = arg(t, "tables").map(_.toInt).getOrElse(0))
     }
     val rows = graft.ops.IndexStore.write(built.localCheckpoint(), path,
       wmTag(mvTableWm(src)))
@@ -4813,17 +4635,16 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** `dedup index attach where table/path/type/id/text [n]` — restart
     * re-registration. */
   private def dedupIndexAttach(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"dedup index attach requires $k ="))
-    val (table, path) = (req("table"), req("path"))
+    val table = reqArg(t, "table", "dedup index attach")
+    val path = reqArg(t, "path", "dedup index attach")
     require(graft.ops.IndexStore.read(spark, path).isDefined,
       s"no dedup index artifact at $path")
-    val kind = req("type").toLowerCase
-    dindexes += table -> DIndexMeta(path, kind, req("id"),
-      if (kind == "embedding") req("vector") else req("text"),
-      kv("n").map(_.toInt).getOrElse(3))
+    val kind = reqArg(t, "type", "dedup index attach").toLowerCase
+    dindexes += table -> DIndexMeta(path, kind,
+      reqArg(t, "id", "dedup index attach"),
+      reqArg(t, if (kind == "embedding") "vector" else "text",
+        "dedup index attach"),
+      arg(t, "n").map(_.toInt).getOrElse(3))
     s"dedup index for $table attached from $path"
   }
 
@@ -4889,11 +4710,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * invariants and delete == rebuild-over-survivors (q174). Commits
     * as a fresh crash-atomic IndexStore version. */
   private def dedupIndexDelete(t: String): String = {
-    def req(k: String): String =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-        .getOrElse(throw new IllegalArgumentException(
-          s"dedup index delete requires $k ="))
-    val path = req("path")
+    val path = reqArg(t, "path", "dedup index delete")
     val stored = graft.ops.IndexStore.read(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no dedup index at $path"))
     import org.apache.spark.sql.functions.countDistinct
@@ -4931,62 +4748,51 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * [and w = <n>] [and format = table]` — unordered proximity
     * (NEAR/w) with per-doc pair count and closest distance. */
   private def tindexNear(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"tindex near requires $k ="))
-    val meta = tindexes.getOrElse(req("table"),
+    val meta = tindexes.getOrElse(reqArg(t, "table", "tindex near"),
       throw new IllegalArgumentException(
-        s"no tindex registered for ${req("table")}"))
+        s"no tindex registered for ${reqArg(t, "table", "tindex near")}"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
     import org.apache.spark.sql.functions.lit
-    val pairs = spark.range(1).select(lit(req("w1")).as("w1"),
-      lit(req("w2")).as("w2"))
+    val pairs = spark.range(1).select(
+      lit(reqArg(t, "w1", "tindex near")).as("w1"),
+      lit(reqArg(t, "w2", "tindex near")).as("w2"))
     val result = graft.ops.Retrieval.proximityMatch(stored, pairs,
-      kv("w").map(_.toInt).getOrElse(5))
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+      arg(t, "w").map(_.toInt).getOrElse(5))
+    rendered(t, result)
   }
 
   /** `tindex snippet where table = <t> and w1 = <term> and w2 = <term>
     * [and window = <n>] [and format = table]` — KWIC context windows
     * around each matched doc's first phrase occurrence. */
   private def tindexSnippet(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"tindex snippet requires $k ="))
-    val table = req("table")
+    val table = reqArg(t, "table", "tindex snippet")
     val meta = tindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no tindex registered for $table"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
     import org.apache.spark.sql.functions.lit
-    val pairs = spark.range(1).select(lit(req("w1")).as("w1"),
-      lit(req("w2")).as("w2"))
+    val pairs = spark.range(1).select(
+      lit(reqArg(t, "w1", "tindex snippet")).as("w1"),
+      lit(reqArg(t, "w2", "tindex snippet")).as("w2"))
     val result = graft.ops.Retrieval.snippets(stored,
       catalog.table(table), pairs, meta.textCol, meta.idCol,
-      kv("window").map(_.toInt).getOrElse(3))
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+      arg(t, "window").map(_.toInt).getOrElse(3))
+    rendered(t, result)
   }
 
   /** `tindex like where table = <t> and pattern = "<substring>"
     * [and format = table]` — trigram-accelerated substring search
     * (requires the `grams = true` sidecar from `tindex create`). */
   private def tindexLike(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("tindex like requires table ="))
+    val table = reqArg(t, "table", "tindex like")
     val meta = tindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no tindex registered for $table"))
     require(meta.grams, s"tindex for $table was created without " +
       "grams = true; rebuild with the trigram sidecar to use LIKE")
     val pattern = "(?i)\\bpattern\\s*=\\s*\"([^\"]+)\"".r
       .findFirstMatchIn(t).map(_.group(1))
-      .orElse(kv("pattern"))
+      .orElse(arg(t, "pattern"))
       .getOrElse(throw new IllegalArgumentException(
         "tindex like requires pattern = \"...\""))
     val grams = graft.ops.IndexStore.read(spark, s"${meta.path}-grams")
@@ -4996,69 +4802,53 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val result = graft.ops.Retrieval.likeSearch(grams,
       catalog.table(table), spark.range(1).select(lit(pattern).as("pat")),
       meta.textCol, meta.idCol)
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+    rendered(t, result)
   }
 
   /** `tindex search where table = <t> and probes = <table|path> and
     * k = <n> [and format = table]` — BM25 top-k from the standing
     * artifact (k1=1.2, b=0.75). */
   private def tindexSearch(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"tindex search requires $k ="))
-    val table = req("table")
+    val table = reqArg(t, "table", "tindex search")
     val meta = tindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no tindex registered for $table"))
-    val src = req("probes")
-    val probes =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val probes = tableOrPath(reqArg(t, "probes", "tindex search"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
     val result = graft.ops.Retrieval.bm25TopK(stored, probes,
-      meta.textCol, meta.idCol, req("k").toInt)
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+      meta.textCol, meta.idCol, reqArg(t, "k", "tindex search").toInt)
+    rendered(t, result)
   }
 
   /** `tindex phrase where table = <t> and w1 = <term> and w2 = <term>
     * [and format = table]` — exact-adjacency phrase match with per-doc
     * phrase frequency, from position lists alone. */
   private def tindexPhrase(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"tindex phrase requires $k ="))
-    val table = req("table")
+    val table = reqArg(t, "table", "tindex phrase")
     val meta = tindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no tindex registered for $table"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
     import org.apache.spark.sql.functions.lit
-    val phrases = spark.range(1).select(lit(req("w1")).as("w1"),
-      lit(req("w2")).as("w2"))
+    val phrases = spark.range(1).select(
+      lit(reqArg(t, "w1", "tindex phrase")).as("w1"),
+      lit(reqArg(t, "w2", "tindex phrase")).as("w2"))
     val result = graft.ops.Retrieval.phraseMatch(stored, phrases)
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+    rendered(t, result)
   }
 
   /** `tindex attach where table = <t> and path = <dir> and id = <col>
     * and text = <col>` — re-register an existing artifact after an
     * engine restart. */
   private def tindexAttach(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"tindex attach requires $k ="))
-    val (table, path) = (req("table"), req("path"))
+    val table = reqArg(t, "table", "tindex attach")
+    val path = reqArg(t, "path", "tindex attach")
     require(graft.ops.IndexStore.read(spark, path).isDefined,
       s"no tindex artifact at $path")
     // the trigram sidecar's presence on disk IS the grams flag
     val grams = graft.ops.IndexStore.read(spark, s"$path-grams").isDefined
-    tindexes += table -> TIndexMeta(path, req("id"), req("text"), grams)
+    tindexes += table -> TIndexMeta(path, reqArg(t, "id", "tindex attach"),
+      reqArg(t, "text", "tindex attach"), grams)
     s"tindex for $table attached from $path" +
       (if (grams) " (+trigram sidecar)" else "")
   }
@@ -5082,12 +4872,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * and k = <n> and path = <dir>` — build a standing per-key KMV
     * sketch index (bounded state: k longs per key). */
   private def sindexCreate(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"sindex create requires $k ="))
-    val (table, path) = (req("table"), req("path"))
-    val (keyCol, textCol, k) = (req("key"), req("text"), req("k").toInt)
+    val table = reqArg(t, "table", "sindex create")
+    val path = reqArg(t, "path", "sindex create")
+    val keyCol = reqArg(t, "key", "sindex create")
+    val textCol = reqArg(t, "text", "sindex create")
+    val k = reqArg(t, "k", "sindex create").toInt
     val built = sindexBuild(catalog.table(table), keyCol, textCol, k)
     val rows = graft.ops.IndexStore.write(built.localCheckpoint(), path,
       wmTag(mvTableWm(catalog.table(table))))
@@ -5103,18 +4892,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * (idempotent lattice join: fold == rebuild under any batch order).
     * Commits as a fresh IndexStore version. */
   private def sindexRefresh(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("sindex refresh requires table ="))
+    val table = reqArg(t, "table", "sindex refresh")
     val meta = sindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no sindex registered for $table"))
-    val src = kv("source").getOrElse(
-      throw new IllegalArgumentException("sindex refresh requires source ="))
-    val delta =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val delta = tableOrPath(reqArg(t, "source", "sindex refresh"))
     val rows = foldSindex(meta, delta, None)
     s"sindex for $table refreshed ($rows keys)"
   }
@@ -5139,10 +4920,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** `sindex estimate where table = <t> [and format = table]` — per-key
     * distinct-cardinality estimates from the artifact alone. */
   private def sindexEstimate(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("sindex estimate requires table ="))
+    val table = reqArg(t, "table", "sindex estimate")
     val meta = sindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no sindex registered for $table"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
@@ -5153,8 +4931,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         graft.ops.Sketches.kmvDistinctEst(col("sk"), meta.k)
           .as("kmv_est"))
       .orderBy(col("key"))
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+    rendered(t, result)
   }
 
   /** `sindex overlap where table = <t> and k = <pairs> [and format =
@@ -5162,12 +4939,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * cardinality estimates, computed from the #keys-row artifact alone
     * (the q134 algebra on the command surface). */
   private def sindexOverlap(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"sindex overlap requires $k ="))
-    val table = req("table")
-    val topPairs = req("k").toInt
+    val table = reqArg(t, "table", "sindex overlap")
+    val topPairs = reqArg(t, "k", "sindex overlap").toInt
     val meta = sindexes.getOrElse(table,
       throw new IllegalArgumentException(s"no sindex registered for $table"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
@@ -5183,23 +4956,20 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           meta.k).as("union_est"))
       .orderBy(col("jacc_ppm").desc, col("key_a"), col("key_b"))
       .limit(topPairs)
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+    rendered(t, result)
   }
 
   /** `sindex attach where table = <t> and path = <dir> and key = <col>
     * and text = <col> and k = <n>` — re-register an existing artifact
     * after an engine restart. */
   private def sindexAttach(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"sindex attach requires $k ="))
-    val (table, path) = (req("table"), req("path"))
+    val table = reqArg(t, "table", "sindex attach")
+    val path = reqArg(t, "path", "sindex attach")
     require(graft.ops.IndexStore.read(spark, path).isDefined,
       s"no sindex artifact at $path")
-    sindexes += table -> SIndexMeta(path, req("key"), req("text"),
-      req("k").toInt)
+    sindexes += table -> SIndexMeta(path, reqArg(t, "key", "sindex attach"),
+      reqArg(t, "text", "sindex attach"),
+      reqArg(t, "k", "sindex attach").toInt)
     s"sindex for $table attached from $path"
   }
 
@@ -5210,12 +4980,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * and footer reads dominate). Row-identical rewrite (count-checked),
     * atomic swap via rename, old files dropped. */
   private def compactCmd(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"compact requires $k ="))
-    val table = req("table")
-    val targetMb = req("target_mb").toLong
+    val table = reqArg(t, "table", "compact")
+    val targetMb = reqArg(t, "target_mb", "compact").toLong
     require(targetMb >= 1, "target_mb must be >= 1")
     val path = catalog.tablePath(table).getOrElse(
       throw new IllegalArgumentException(s"unknown table $table"))
@@ -5237,7 +5003,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // everything a selective predicate misses. The 1-D sibling of
     // `layout zorder` (which buys the same skipping on TWO correlated
     // dims); measured in PERF.md ("sorted compaction").
-    val sortCols = kv("sort").toSeq.flatMap(_.stripPrefix("(")
+    val sortCols = arg(t, "sort").toSeq.flatMap(_.stripPrefix("(")
       .stripSuffix(")").split(",").map(_.trim).filter(_.nonEmpty))
     val writer =
       if (sortCols.isEmpty) df.repartition(nOut)
@@ -5316,10 +5082,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         .withColumn("valid_to",
           lit(null).cast(org.apache.spark.sql.types.TimestampType))
         .withColumn("is_current", lit(true))
-    val batch =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val batch = tableOrPath(src)
     require(batch.columns.contains(ts), s"source lacks ts column $ts")
     // determinism gate: a duplicate (key, ts) pair has no defined
     // chain order — the lead() below would pick a nondeterministic
@@ -5379,10 +5142,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         "merge into <target> using <source> on <key>"))
     val (target, src, key) = (m.group(1), m.group(2), m.group(3))
     val tgt = catalog.table(target)
-    val batch =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val batch = tableOrPath(src)
     import org.apache.spark.sql.functions.col
     val merged = batch.unionByName(
       tgt.join(batch.select(col(key)), Seq(key), "left_anti"))
@@ -5439,12 +5199,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * score needs — re-deriving it from drifted data would hide the
     * drift being measured. */
   private def monitorPsiCreate(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"monitor psi create requires $k ="))
-    val (table, path) = (req("table"), req("path"))
-    val h = psiHist(catalog.table(table), req("key"), req("value"))
+    val table = reqArg(t, "table", "monitor psi create")
+    val path = reqArg(t, "path", "monitor psi create")
+    val h = psiHist(catalog.table(table),
+      reqArg(t, "key", "monitor psi create"),
+      reqArg(t, "value", "monitor psi create"))
     val rows = graft.ops.IndexStore.write(h.localCheckpoint(), path)
     s"psi baseline for $table created at $path (version $rows)"
   }
@@ -5456,23 +5215,16 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * PSI > 0.2). Arithmetic over <= #buckets rows per key; the batch
     * is scanned once, map-side combined. */
   private def monitorPsiCheck(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"monitor psi check requires $k ="))
-    val baseline = graft.ops.IndexStore.read(spark, req("path")).getOrElse(
-      throw new IllegalArgumentException(s"no psi baseline at ${kv("path").get}"))
-    val src = req("source")
-    val batch =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val path = reqArg(t, "path", "monitor psi check")
+    val baseline = graft.ops.IndexStore.read(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"no psi baseline at $path"))
+    val batch = tableOrPath(reqArg(t, "source", "monitor psi check"))
     import org.apache.spark.sql.functions.col
     val out = graft.ops.Sketches.psi(baseline,
-        psiHist(batch, req("key"), req("value")))
+        psiHist(batch, reqArg(t, "key", "monitor psi check"),
+          reqArg(t, "value", "monitor psi check")))
       .orderBy(col("key"))
-    if (kv("format").contains("table")) Render.table(out)
-    else Render.json(out)
+    rendered(t, out)
   }
 
   /** `monitor create where table = <t> and key = <col> and ts = <col>
@@ -5480,12 +5232,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * per-key per-minute counts, baseline k frozen from this history
     * ([[graft.streaming.StreamOps.cusumInit]]). */
   private def monitorCreate(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"monitor create requires $k ="))
-    val (table, path) = (req("table"), req("path"))
-    val (keyCol, tsCol) = (req("key"), req("ts"))
+    val table = reqArg(t, "table", "monitor create")
+    val path = reqArg(t, "path", "monitor create")
+    val keyCol = reqArg(t, "key", "monitor create")
+    val tsCol = reqArg(t, "ts", "monitor create")
     val state = graft.streaming.StreamOps.cusumInit(
       monitorMinutes(catalog.table(table), keyCol, tsCol))
     val rows = graft.ops.IndexStore.write(state.localCheckpoint(), path)
@@ -5500,14 +5250,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * <col> and ts = <col>` — re-register an existing CUSUM monitor
     * after an engine restart. */
   private def monitorAttach(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"monitor attach requires $k ="))
-    val (table, path) = (req("table"), req("path"))
+    val table = reqArg(t, "table", "monitor attach")
+    val path = reqArg(t, "path", "monitor attach")
     require(graft.ops.IndexStore.read(spark, path).isDefined,
       s"no monitor state at $path")
-    monitors += table -> MonitorMeta(path, req("key"), req("ts"))
+    monitors += table -> MonitorMeta(path, reqArg(t, "key", "monitor attach"),
+      reqArg(t, "ts", "monitor attach"))
     s"monitor for $table attached from $path"
   }
 
@@ -5515,18 +5263,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * fold strictly-later events into the standing state (exact
     * recursion composition; out-of-order batches throw). */
   private def monitorRefresh(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("monitor refresh requires table ="))
+    val table = reqArg(t, "table", "monitor refresh")
     val meta = monitors.getOrElse(table,
       throw new IllegalArgumentException(s"no monitor registered for $table"))
-    val src = kv("source").getOrElse(
-      throw new IllegalArgumentException("monitor refresh requires source ="))
-    val delta =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val delta = tableOrPath(reqArg(t, "source", "monitor refresh"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no monitor state at ${meta.path}"))
     val folded = graft.streaming.StreamOps.cusumFold(stored,
@@ -5538,10 +5278,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** `monitor level where table = <t> [and format = table]` — current
     * per-key alarm level from the artifact alone. */
   private def monitorLevel(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("monitor level requires table ="))
+    val table = reqArg(t, "table", "monitor level")
     val meta = monitors.getOrElse(table,
       throw new IllegalArgumentException(s"no monitor registered for $table"))
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
@@ -5549,8 +5286,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     import org.apache.spark.sql.functions.col
     val result = graft.streaming.StreamOps.cusumLevel(stored)
       .orderBy(col("etype"))
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+    rendered(t, result)
   }
 
   /** `graph <op> where edges = <table|path> and src = <col> and dst =
@@ -5563,32 +5299,25 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * internally), `pagerank`/`ppr`/`kcore` expect both directions
     * present — pass `symmetrize = true` to add them. */
   private def graphCmd(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"graph command requires $k ="))
     import org.apache.spark.sql.functions.{col, greatest, least}
-    def frame(src: String) =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
     val op = t.trim.split("\\s+")(1).toLowerCase
-    val e0 = frame(req("edges"))
-      .select(col(req("src")).as("src"), col(req("dst")).as("dst"))
+    val e0 = tableOrPath(reqArg(t, "edges", "graph command"))
+      .select(col(reqArg(t, "src", "graph command")).as("src"),
+        col(reqArg(t, "dst", "graph command")).as("dst"))
     val edges =
-      if (kv("symmetrize").exists(_.equalsIgnoreCase("true")))
+      if (arg(t, "symmetrize").exists(_.equalsIgnoreCase("true")))
         e0.unionByName(e0.select(col("dst").as("src"),
           col("src").as("dst")))
       else e0
-    val top = kv("top").map(_.toInt).getOrElse(50)
-    val iters = kv("iters").map(_.toInt).getOrElse(3)
+    val top = arg(t, "top").map(_.toInt).getOrElse(50)
+    val iters = arg(t, "iters").map(_.toInt).getOrElse(3)
     val result = op match {
       case "pagerank" =>
         graft.ops.Graph.pageRank(edges, iters)
           .orderBy(col("rank_q").desc, col("node")).limit(top)
       case "ppr" =>
-        val seeds = frame(req("seeds"))
-          .select(col(req("seedcol")).as("node"))
+        val seeds = tableOrPath(reqArg(t, "seeds", "graph command"))
+          .select(col(reqArg(t, "seedcol", "graph command")).as("node"))
         graft.ops.Graph.personalizedPageRank(edges, seeds, iters)
           .orderBy(col("rank_q").desc, col("node")).limit(top)
       case "components" =>
@@ -5602,25 +5331,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
               .filter(col("a") =!= col("b")).distinct())
           .orderBy(col("x"), col("y"), col("z")).limit(top)
       case "kcore" =>
-        graft.ops.Graph.kcore(edges, req("k").toInt)
+        graft.ops.Graph.kcore(edges, reqArg(t, "k", "graph command").toInt)
           .orderBy(col("node")).limit(top)
       case other => throw new IllegalArgumentException(
         s"unknown graph op '$other' (pagerank|ppr|components|" +
           "triangles|kcore)")
     }
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+    rendered(t, result)
   }
 
-  private def triKv(t: String, k: String): Option[String] =
-    s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-  private def triReq(t: String, k: String): String =
-    triKv(t, k).getOrElse(throw new IllegalArgumentException(
-      s"graph tricount requires $k ="))
-  private def triFrame(src: String) =
-    if (catalog.tableNames.contains(src) ||
-        catalog.viewNames.contains(src)) catalog.table(src)
-    else spark.read.parquet(src)
   private def triNormalize(df: org.apache.spark.sql.DataFrame,
       srcCol: String, dstCol: String) = {
     import org.apache.spark.sql.functions.{col, greatest, least}
@@ -5660,9 +5379,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       }
 
   private def triCreate(t: String): String = {
-    val path = triReq(t, "path")
-    val e = triNormalize(triFrame(triReq(t, "edges")),
-      triReq(t, "src"), triReq(t, "dst")).localCheckpoint(true)
+    val path = reqArg(t, "path", "graph tricount")
+    val e = triNormalize(tableOrPath(reqArg(t, "edges", "graph tricount")),
+      reqArg(t, "src", "graph tricount"), reqArg(t, "dst", "graph tricount"))
+      .localCheckpoint(true)
     val nTri = graft.ops.Graph.triangles(e).count()
     val nEdges = e.count()
     graft.ops.IndexStore.write(e, path,
@@ -5678,13 +5398,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * proves fold == rebuild; this serve path never pays the proof's
     * census half, gated by TriCountServeSpec on Graph.censusRuns). */
   private def triRefresh(t: String): String = {
-    val path = triReq(t, "path")
+    val path = reqArg(t, "path", "graph tricount")
     val old = graft.ops.IndexStore.read(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no tricount at $path"))
       .localCheckpoint(true)
     val (prevTri, _) = triStats(path)
-    val fresh = triNormalize(triFrame(triReq(t, "source")),
-        triReq(t, "src"), triReq(t, "dst"))
+    val fresh = triNormalize(
+        tableOrPath(reqArg(t, "source", "graph tricount")),
+        reqArg(t, "src", "graph tricount"),
+        reqArg(t, "dst", "graph tricount"))
       .join(old, Seq("a", "b"), "left_anti").localCheckpoint(true)
     val nNew = fresh.count()
     val delta =
@@ -5703,13 +5425,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** `graph tricount get where path = <dir>` — serve the standing
     * count: reads the ONE-row artifact, no graph access at all. */
   private def triGet(t: String): String = {
-    val path = triReq(t, "path")
+    val path = reqArg(t, "path", "graph tricount")
     val (nTri, nEdges) = triStats(path)
     import org.apache.spark.sql.functions.lit
     val df = spark.range(1).select(lit(nTri).as("n_triangles"),
       lit(nEdges).as("n_edges"))
-    if (triKv(t, "format").contains("table")) Render.table(df)
-    else Render.json(df)
+    rendered(t, df)
   }
 
   /** `layout zorder where table = <t> and x = <col> and y = <col> and
@@ -5718,14 +5439,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * columns must be int64-castable; timestamps cast to epoch micros
     * first via a view). */
   private def layoutZorder(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"layout zorder requires $k ="))
-    val (table, path) = (req("table"), req("path"))
-    val (xc, yc) = (req("x"), req("y"))
-    val bits = kv("bits").map(_.toInt).getOrElse(10)
-    val buckets = kv("buckets").map(_.toInt).getOrElse(64)
+    val table = reqArg(t, "table", "layout zorder")
+    val path = reqArg(t, "path", "layout zorder")
+    val xc = reqArg(t, "x", "layout zorder")
+    val yc = reqArg(t, "y", "layout zorder")
+    val bits = arg(t, "bits").map(_.toInt).getOrElse(10)
+    val buckets = arg(t, "buckets").map(_.toInt).getOrElse(64)
     graft.ops.Layout.zorderWrite(catalog.table(table), xc, yc, path,
       bits, buckets)
     layouts += table -> LayoutMeta(path, xc, yc, bits, buckets)
@@ -5740,13 +5459,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * and y = <col> and bits = <n> and buckets = <n>` — re-register an
     * existing Z-order layout after an engine restart. */
   private def layoutAttach(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"layout attach requires $k ="))
-    val (table, path) = (req("table"), req("path"))
-    layouts += table -> LayoutMeta(path, req("x"), req("y"),
-      req("bits").toInt, req("buckets").toInt)
+    val table = reqArg(t, "table", "layout attach")
+    val path = reqArg(t, "path", "layout attach")
+    layouts += table -> LayoutMeta(path, reqArg(t, "x", "layout attach"),
+      reqArg(t, "y", "layout attach"), reqArg(t, "bits", "layout attach").toInt,
+      reqArg(t, "buckets", "layout attach").toInt)
     s"layout for $table attached from $path"
   }
 
@@ -5755,18 +5472,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * the RECORDED quantization grid (out-of-range values clamp to the
     * edge quads; the grid is never re-derived from drifted data). */
   private def layoutRefresh(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    val table = kv("table").getOrElse(
-      throw new IllegalArgumentException("layout refresh requires table ="))
+    val table = reqArg(t, "table", "layout refresh")
     val meta = layouts.getOrElse(table,
       throw new IllegalArgumentException(s"no layout registered for $table"))
-    val src = kv("source").getOrElse(
-      throw new IllegalArgumentException("layout refresh requires source ="))
-    val delta =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
+    val delta = tableOrPath(reqArg(t, "source", "layout refresh"))
     val n = delta.count()
     graft.ops.Layout.zorderAppend(delta, meta.xCol, meta.yCol, meta.path,
       meta.bits, meta.buckets)
@@ -5780,15 +5489,13 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * .candidateBuckets]] — no data access), then a partition-pruned
     * read. Returns the pruning receipt + matching row count. */
   private def layoutScan(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(-?\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"layout scan requires $k ="))
-    val table = req("table")
+    val table = reqArg(t, "table", "layout scan")
     val meta = layouts.getOrElse(table,
       throw new IllegalArgumentException(s"no layout registered for $table"))
-    val (x0, x1) = (req("x0").toLong, req("x1").toLong)
-    val (y0, y1) = (req("y0").toLong, req("y1").toLong)
+    val x0 = reqArg(t, "x0", "layout scan").toLong
+    val x1 = reqArg(t, "x1", "layout scan").toLong
+    val y0 = reqArg(t, "y0", "layout scan").toLong
+    val y1 = reqArg(t, "y1", "layout scan").toLong
     val cands = graft.ops.Layout.candidateBuckets(x0, x1, y0, y1,
       meta.bits, meta.buckets)
     import org.apache.spark.sql.functions.{col, lit}
@@ -5803,8 +5510,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       lit(meta.buckets).as("buckets_total"),
       lit(cands.length).as("buckets_scanned"),
       lit(rows).as("rows_matching"))
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+    rendered(t, result)
   }
 
   /** `hybrid search where table = <t> and probes = <table|path> and
@@ -5816,24 +5522,16 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * each leg ranks its top `k_leg` (default 2k), the fusion re-ranks
     * top k ([[graft.ops.Retrieval.rrfFuse]]). */
   private def hybridSearch(t: String): String = {
-    def kv(k: String): Option[String] =
-      s"(?i)\\b$k\\s*=\\s*(\\S+)".r.findFirstMatchIn(t).map(_.group(1))
-    def req(k: String): String = kv(k).getOrElse(
-      throw new IllegalArgumentException(s"hybrid search requires $k ="))
-    val table = req("table")
+    val table = reqArg(t, "table", "hybrid search")
     val tmeta = tindexes.getOrElse(table,
       throw new IllegalArgumentException(
         s"hybrid search needs a tindex registered for $table"))
     val vmeta = vindexes.getOrElse(table,
       throw new IllegalArgumentException(
         s"hybrid search needs a vindex registered for $table"))
-    val src = req("probes")
-    val probes =
-      if (catalog.tableNames.contains(src) ||
-          catalog.viewNames.contains(src)) catalog.table(src)
-      else spark.read.parquet(src)
-    val k = req("k").toInt
-    val kLeg = kv("k_leg").map(_.toInt).getOrElse(2 * k)
+    val probes = tableOrPath(reqArg(t, "probes", "hybrid search"))
+    val k = reqArg(t, "k", "hybrid search").toInt
+    val kLeg = arg(t, "k_leg").map(_.toInt).getOrElse(2 * k)
     val tstored = graft.ops.IndexStore.read(spark, tmeta.path).getOrElse(
       throw new IllegalStateException(s"no tindex artifact at ${tmeta.path}"))
     val vstored = graft.ops.IndexStore.read(spark, vmeta.path).getOrElse(
@@ -5842,7 +5540,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val textLeg = graft.ops.Retrieval.bm25TopK(tstored, probes,
         tmeta.textCol, tmeta.idCol, kLeg)
       .select(col("q_id"), col("rank"), col("id"))
-    val nprobe = kv("nprobe").map(_.toInt).getOrElse(1)
+    val nprobe = arg(t, "nprobe").map(_.toInt).getOrElse(1)
     val vecLeg = (vmeta.kind match {
       case "pq" => graft.ops.Similarity.pqSearchIndex(vstored, probes,
         vmeta.vecCol, vmeta.idCol, kLeg, vmeta.numSub)
@@ -5854,8 +5552,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         vmeta.vecCol, vmeta.idCol, kLeg, nprobe)
     }).select(col("q_id"), col("rank"), col("id"))
     val result = graft.ops.Retrieval.rrfFuse(textLeg, vecLeg, k)
-    if (kv("format").contains("table")) Render.table(result)
-    else Render.json(result)
+    rendered(t, result)
   }
 
   /** `drop partition <table|path> before <bucket>` /
@@ -6210,6 +5907,22 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
 }
 
 object Engine {
+  /** The lock a command runs under (see the class doc's thread-safety
+    * contract): [[Read]] holds the retention gate's read side,
+    * [[Write]] the engine write lock, [[Unguarded]] neither. */
+  private[engine] sealed trait Lock
+  private[engine] case object Read extends Lock
+  private[engine] case object Write extends Lock
+  private[engine] case object Unguarded extends Lock
+
+  /** One command-table entry: commands whose lowercased text starts
+    * with `prefix` (or equals it, when `exact`) run `run` under `lock`. */
+  private[engine] final class Command(val prefix: String, val lock: Lock,
+      val exact: Boolean, val run: String => String) {
+    def matches(low: String): Boolean =
+      if (exact) low == prefix else low.startsWith(prefix)
+  }
+
   /** JVM-wide live-consumer topic claims, keyed by the catalog
     * metadata root the offset journal lives under. The per-engine
     * duplicate-topic guard alone is not enough: two Engine instances
