@@ -420,7 +420,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * dropped, values cast). Appends to the table's storage path and
     * returns the appended row count.
     *
-    * The parse + align + append is one small Spark job per PUT — the
+    * A PUT runs about three small Spark jobs of its own (JSON schema
+    * inference and the append) plus its auto-folds: a table with a
+    * rollup and a matview takes about a dozen jobs per PUT in all. The
     * batching for high-frequency small PUTs is the watch-dir/stream
     * path (StreamIngest), exactly the reference's streaming mode. */
   def ingest(table: String, body: String,
@@ -1441,18 +1443,26 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       throw new IllegalArgumentException(s"no matview at $path"))
     val wm = mvWmOf(path, state)
     val src = tableOrPath(reqArg(t, "source", "matview refresh"))
-    val batch = graft.ops.MatView.partials(src, keys, aggs)
     // a lineage-stamped batch advances the watermark (so a manual
     // refresh of a crash-missed batch keeps sync exact); an unstamped
     // batch leaves it alone
     val newWm = if (wm >= 0) math.max(wm, mvTableWm(src)) else wm
-    import org.apache.spark.sql.functions.lit
-    val folded = graft.ops.MatView.fold(stripWm(state), batch, keys, aggs)
-      .withColumn(graft.ops.MatView.WatermarkCol, lit(newWm))
-      .localCheckpoint()
-    graft.ops.IndexStore.write(folded, path, wmTag(newWm))
-    s"matview refreshed at $path: ${folded.count()} groups"
+    foldMatview(graft.dialect.MatViewServe.Meta(path, keys, aggs), state,
+      src, newWm)
+    val n = graft.ops.IndexStore.read(spark, path).get.count()
+    s"matview refreshed at $path: $n groups"
   }
+
+  /** Fold `delta` into matview `m`'s `state` and commit it with `tags`,
+    * carrying `newWm` as the rider column and the `wm_` tag. The commit
+    * is the fold's one action, so nothing is checkpointed. */
+  private def foldMatview(m: graft.dialect.MatViewServe.Meta,
+      state: DataFrame, delta: DataFrame, newWm: Long,
+      tags: Seq[String] = Nil): Long =
+    graft.ops.IndexStore.write(graft.ops.MatView.fold(stripWm(state),
+        graft.ops.MatView.partials(delta, m.keys, m.aggs), m.keys, m.aggs)
+      .withColumn(graft.ops.MatView.WatermarkCol, lit(newWm)),
+      m.path, tags ++ wmTag(newWm))
 
   /** Parse the delete set of a `… delete` command: either an inline
     * `ids = (v1, v2, …)` literal list (longs, else strings) or
@@ -1818,14 +1828,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     import org.apache.spark.sql.functions.lit
     def tagged(path: String): Boolean = batchTag.exists(t =>
       graft.ops.IndexStore.hasTag(spark, path, t))
+    // the tsd_id ingest stamped on every batch row; -1: no lineage
+    val batchWm =
+      if (tsdId >= 0 && batch.columns.contains("tsd_id")) tsdId.toLong
+      else -1L
     matviews.get(table).foreach { m =>
       try if (!tagged(m.path)) {
         val state = graft.ops.IndexStore.read(spark, m.path).getOrElse(
           throw new IllegalStateException(s"no matview state at ${m.path}"))
         val wm = mvWmOf(m.path, state)
-        val batchWm =
-          if (tsdId >= 0 && batch.columns.contains("tsd_id")) tsdId.toLong
-          else -1L
         // LINEAGE GAP CHECK: a ledger entry for this table strictly
         // between the view's watermark and this batch means a batch
         // was appended but never folded (auto refresh was off, or its
@@ -1846,13 +1857,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
             (base.filter(col("tsd_id").cast("long") > wm),
               mvTableWm(base))
           } else (batch, if (wm >= 0) math.max(wm, batchWm) else wm)
-        val folded = graft.ops.MatView.fold(stripWm(state),
-          graft.ops.MatView.partials(deltaRows, m.keys, m.aggs),
-          m.keys, m.aggs)
-          .withColumn(graft.ops.MatView.WatermarkCol, lit(newWm))
-          .localCheckpoint()
-        graft.ops.IndexStore.write(folded, m.path,
-          batchTag.toSeq ++ wmTag(newWm))
+        foldMatview(m, state, deltaRows, newWm, batchTag.toSeq)
       } catch { case e: Exception =>
         autoFoldErrors += s"matview $table (${m.path}): ${e.getMessage}"
       }
@@ -1869,9 +1874,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           val (wmSide, wmOther) = if (sd == "left") (wmL, wmR) else (wmR, wmL)
           val otherName = if (sd == "left") spec.right else spec.left
           val otherT = catalog.table(otherName)
-          val batchWm =
-            if (tsdId >= 0 && batch.columns.contains("tsd_id")) tsdId.toLong
-            else -1L
           // two lineage anomalies route to the sync decomposition
           // instead of the batch-vs-other-current fold: (a) a gap on
           // THIS side (same orphaned-batch hazard as the matview
@@ -1893,7 +1895,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
                 noSysCols(batch), noSysCols(otherT), spec, sd)
               .withColumn(WmLeftCol, lit(newL))
               .withColumn(WmRightCol, lit(newR))
-              .localCheckpoint()
             graft.ops.IndexStore.write(folded, path,
               batchTag.toSeq ++ jmvWmTags(newL, newR))
           }
@@ -1916,9 +1917,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     def indexDelta(artifactPath: String)
         : org.apache.spark.sql.DataFrame = {
       val wm = indexWmOf(artifactPath)
-      val batchWm =
-        if (tsdId >= 0 && batch.columns.contains("tsd_id")) tsdId.toLong
-        else -1L
       val gapped = wm >= 0 && batchWm > wm &&
         tsdLedger.list(Some(table))
           .exists(e => e.fileId > wm && e.fileId < batchWm)
@@ -1927,9 +1925,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       else batch
     }
     rollups.get(table).foreach { meta =>
-      try if (!tagged(meta.path))
-        foldRollup(meta, indexDelta(meta.path), batchTag)
-      catch { case e: Exception =>
+      try if (!tagged(meta.path)) {
+        // a contiguous batch's watermark is batchWm: no scan to find it
+        val delta = indexDelta(meta.path)
+        foldRollup(meta, delta, batchTag,
+          Some(batchWm).filter(_ >= 0 && (delta eq batch)))
+      } catch { case e: Exception =>
         autoFoldErrors += s"rollup $table (${meta.path}): ${e.getMessage}"
       }
     }
@@ -1989,18 +1990,13 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     require(base.columns.contains("tsd_id"),
       s"table $table carries no tsd_id column — sync cannot identify " +
         "missed batches")
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val missed = base.filter(col("tsd_id").cast("long") > wm)
     val nMissed = missed.count()
     if (nMissed == 0L) s"matview for $table in sync (watermark $wm)"
     else {
       val newWm = mvTableWm(base)
-      val folded = graft.ops.MatView.fold(stripWm(state),
-        graft.ops.MatView.partials(missed, m.keys, m.aggs),
-        m.keys, m.aggs)
-        .withColumn(graft.ops.MatView.WatermarkCol, lit(newWm))
-        .localCheckpoint()
-      graft.ops.IndexStore.write(folded, m.path, wmTag(newWm))
+      foldMatview(m, state, missed, newWm)
       s"matview for $table synced: $nMissed missed row(s) folded, " +
         s"watermark $wm -> $newWm"
     }
@@ -2160,7 +2156,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val table = arg(t, "table").getOrElse(throw new IllegalArgumentException(
         s"$kind sync requires table ="))
     val (path, fold): (String,
-        (org.apache.spark.sql.DataFrame, Option[String]) => Long) =
+        (org.apache.spark.sql.DataFrame, Option[String]) => Any) =
       kind match {
         case "vindex" =>
           val m = vindexes.getOrElse(table,
@@ -4187,7 +4183,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val meta = rollups.getOrElse(table,
       throw new IllegalArgumentException(s"no rollup registered for $table"))
     val delta = tableOrPath(reqArg(body, "source", "rollup refresh"))
-    val n = foldRollup(meta, delta, None)
+    val n = foldRollup(meta, delta, None).count()
     s"rollup for $table refreshed ($n ${meta.grain} buckets)"
   }
 
@@ -4301,15 +4297,17 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * auto-fold, and `rollup sync`: fold the delta and advance the
     * `wm_` lineage tag in the same commit (the rollup joins the
     * watermark family — a batch missed during an auto-refresh-off
-    * window is now reconcilable instead of stale-forever). */
+    * window is now reconcilable instead of stale-forever). `deltaWm`
+    * is the delta's highest tsd_id when the caller knows it; otherwise
+    * it is scanned. Returns the committed state. */
   private def foldRollup(meta: graft.dialect.RollupServe.Meta,
-      delta: org.apache.spark.sql.DataFrame,
-      tag: Option[String]): Long = {
+      delta: org.apache.spark.sql.DataFrame, tag: Option[String],
+      deltaWm: Option[Long] = None): org.apache.spark.sql.DataFrame = {
     val wm = indexWmOf(meta.path)
-    val newWm = if (wm >= 0) math.max(wm, mvTableWm(delta)) else wm
+    val newWm =
+      if (wm >= 0) math.max(wm, deltaWm.getOrElse(mvTableWm(delta))) else wm
     graft.ops.Rollup.refreshStore(spark, meta.path, delta, meta.tsCol,
-      meta.grain, meta.dims, meta.valueCols,
-      tag.toSeq ++ wmTag(newWm)).count()
+      meta.grain, meta.dims, meta.valueCols, tag.toSeq ++ wmTag(newWm))
   }
 
   /** The vindex fold body (encode/assign a batch against the RECORDED

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Crash-atomic persistence for STANDING index tables (the shingle /
   * embedding indexes a dedup pipeline carries across batches — the most
@@ -33,11 +34,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reference keeps in its DBMS layer survives process crashes
   * (edge_lake/dbms — tables, not files); this store gives the parquet
   * index the same durability.
+  *
+  * Schema memo: [[write]] keeps each version's schema in process, keyed
+  * by version dir and commit-marker mtime (a drop and re-create at the
+  * same path never hits a stale entry), so reads skip Spark's schema
+  * inference job. Pruning a version drops its entry; a version another
+  * process wrote is read with inference.
   */
 object IndexStore {
   private val Marker = "_GRAFT_COMMIT"
   private val RetainFile = "_GRAFT_RETAIN"
   private val VersionRx = "^v=(\\d+)$".r
+
+  /** (qualified version dir, commit marker mtime) -> schema. */
+  private[graft] val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), StructType]()
+
+  private def memoKey(spark: SparkSession, vDir: String): (String, Long) = {
+    val (fs, p) = fsOf(spark, vDir)
+    val q = fs.makeQualified(p)
+    (q.toString, fs.getFileStatus(new Path(q, Marker)).getModificationTime)
+  }
+
+  /** Read committed version `n`, with the memoized schema if any. */
+  private def load(spark: SparkSession, dir: String, n: Long): DataFrame = {
+    val vDir = s"$dir/v=$n"
+    Option(schemas.get(memoKey(spark, vDir)))
+      .fold(spark.read.parquet(vDir))(spark.read.schema(_).parquet(vDir))
+  }
 
   private def fsOf(spark: SparkSession, dir: String) = {
     val p = new Path(dir)
@@ -114,7 +138,7 @@ object IndexStore {
         (if (committed.isEmpty) "(none)" else committed.mkString(", ")) +
         " (pruned history is unrecoverable; set retention before the " +
         "writes you need to audit)")
-    spark.read.parquet(s"$dir/v=$v")
+    load(spark, dir, v)
   }
 
   /** Tags stamped on a specific committed version (the per-version
@@ -143,7 +167,7 @@ object IndexStore {
     * dirs are never read. */
   def read(spark: SparkSession, dir: String): Option[DataFrame] =
     currentVersion(spark, dir) match {
-      case Some(n) => Some(spark.read.parquet(s"$dir/v=$n"))
+      case Some(n) => Some(load(spark, dir, n))
       case None =>
         val (fs, p) = fsOf(spark, dir)
         // legacy root-level files are read BY EXPLICIT PATH, never via
@@ -214,6 +238,7 @@ object IndexStore {
     }
     // the commit point: one atomically-visible file create
     fs.create(new Path(vDir, Marker), false).close()
+    schemas.put(memoKey(spark, vDir), df.schema)
     // prune: keep the newest `retention` committed versions (default
     // 2 = this one + the immediately previous, the concurrent-reader
     // lookback; a recorded _GRAFT_RETAIN deepens the AS-OF history),
@@ -222,8 +247,11 @@ object IndexStore {
     val keptCommitted = (before.collect { case (n, true) => n } :+ next)
       .sorted.takeRight(keep).toSet
     before.foreach { case (n, committed) =>
-      if (n < next && (!committed || !keptCommitted.contains(n)))
-        fs.delete(new Path(s"$dir/v=$n"), true)
+      if (n < next && (!committed || !keptCommitted.contains(n))) {
+        val old = fs.makeQualified(new Path(s"$dir/v=$n"))
+        fs.delete(old, true)
+        schemas.keySet.removeIf(_._1 == old.toString)
+      }
     }
     fs.listStatus(p).foreach { st =>
       if (st.isFile && st.getPath.getName != RetainFile)
@@ -239,16 +267,8 @@ object IndexStore {
     * artifact uses to commit a derived scalar (e.g. the triangle
     * census total) in the SAME commit as its data, with no window
     * where one landed and the other didn't. */
-  def currentTags(spark: SparkSession, dir: String): Seq[String] = {
-    val (fs, _) = fsOf(spark, dir)
-    currentVersion(spark, dir).toSeq.flatMap { n =>
-      fs.listStatus(new Path(s"$dir/v=$n")).toSeq.collect {
-        case st if st.isFile &&
-            st.getPath.getName.startsWith("_GRAFT_TAG_") =>
-          st.getPath.getName.stripPrefix("_GRAFT_TAG_")
-      }
-    }
-  }
+  def currentTags(spark: SparkSession, dir: String): Seq[String] =
+    currentVersion(spark, dir).toSeq.flatMap(tagsOf(spark, dir, _))
 
   /** True iff any LIVE committed version (current or the retained
     * previous) carries `tag`. Pruned versions take their tags with
@@ -271,6 +291,6 @@ object IndexStore {
     committed.find(n =>
         fs.exists(new Path(s"$dir/v=$n", s"_GRAFT_TAG_$tag")))
       .flatMap(t => committed.filter(_ < t).maxOption)
-      .map(n => spark.read.parquet(s"$dir/v=$n"))
+      .map(load(spark, dir, _))
   }
 }

@@ -121,13 +121,26 @@ object Rollup {
     * unionByName. */
   def merge(a: DataFrame, b: DataFrame, dims: Seq[String]): DataFrame = {
     val u = a.unionByName(b)
-    // ONE validation job for both identity columns (each distinct probe
-    // recomputes the whole union lineage on in-memory fold chains)
-    val meta = u.select(col("grain"), col("ts_col")).distinct().take(2)
-    require(meta.length == 1, "mixed-identity rollup union: " +
-      meta.map(r => s"(grain=${r.getString(0)}, ts_col=${r.getString(1)})")
-        .sorted.mkString(", "))
-    val aggs = sum(col("n")).as("n") +: measuresOf(a).flatMap { m =>
+    val ids = identityOf(u)
+    require(ids.length == 1, mixedIdentity(ids))
+    combine(u, dims, ids.head._1, ids.head._2)
+  }
+
+  /** Up to two distinct (grain, ts_col) pairs of a rollup: ONE job
+    * probes emptiness and both identity columns (each distinct probe
+    * recomputes the whole lineage on in-memory fold chains). */
+  private def identityOf(df: DataFrame): Seq[(String, String)] =
+    df.select(col("grain"), col("ts_col")).distinct().take(2).toSeq
+      .map(r => (r.getString(0), r.getString(1)))
+
+  private def mixedIdentity(ids: Seq[(String, String)]): String =
+    "mixed-identity rollup union: " + ids.map { case (g, t) =>
+      s"(grain=$g, ts_col=$t)" }.sorted.mkString(", ")
+
+  /** Re-aggregate a union of same-identity rollups onto its buckets. */
+  private def combine(u: DataFrame, dims: Seq[String], grain: String,
+      tsCol: String): DataFrame = {
+    val aggs = sum(col("n")).as("n") +: measuresOf(u).flatMap { m =>
       Seq(sum(col(s"nv_$m")).as(s"nv_$m"),
         sum(col(s"sum_dec_$m")).cast(DecimalType(28, 2)).as(s"sum_dec_$m"),
         min(col(s"min_$m")).as(s"min_$m"),
@@ -135,8 +148,8 @@ object Rollup {
     }
     u.groupBy(col("grain_ts") +: dims.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-      .withColumn("grain", lit(meta.head.getString(0)))
-      .withColumn("ts_col", lit(meta.head.getString(1)))
+      .withColumn("grain", lit(grain))
+      .withColumn("ts_col", lit(tsCol))
   }
 
   /** Fold a raw delta into a standing rollup — the delta is the ONLY
@@ -183,8 +196,8 @@ object Rollup {
 
   /** Crash-atomic standing-rollup refresh: read the live version from
     * `dir`, fold `delta` in (or [[build]] at `grain` when none exists),
-    * commit the result, return it. The 100 TB ingest loop calls this
-    * per batch; event history is never re-read. */
+    * commit the result, return the committed version. The 100 TB
+    * ingest loop calls this per batch; event history is never re-read. */
   def refreshStore(spark: SparkSession, dir: String, delta: DataFrame,
       tsCol: String, grain: String, dims: Seq[String],
       measures: Seq[String], tag: Option[String] = None): DataFrame =
@@ -196,17 +209,25 @@ object Rollup {
   def refreshStore(spark: SparkSession, dir: String, delta: DataFrame,
       tsCol: String, grain: String, dims: Seq[String],
       measures: Seq[String], tags: Seq[String]): DataFrame = {
-    val next = IndexStore.read(spark, dir) match {
+    val cur = IndexStore.read(spark, dir)
+    // the stored state's identity, refused as grainOf and merge refuse it
+    val ids = cur.toSeq.flatMap(identityOf)
+    val gs = ids.map(_._1).distinct.sorted
+    require(gs.length <= 1, "mixed-grain rollup: " + gs.mkString(", "))
+    val next = gs.headOption match {
       // an EMPTIED state (every bucket retired by deletes/drops) keeps
       // its schema but not its identity rows — fold at the CALLER'S
       // registered grain, never grainOf's guess (see grainOf)
-      case Some(cur) if cur.take(1).nonEmpty =>
-        refresh(cur, delta, tsCol, dims, measures)
-      case _ => build(delta, tsCol, grain, dims, measures)
+      case None => build(delta, tsCol, grain, dims, measures)
+      case Some(g) =>
+        val union = (ids :+ (g -> tsCol)).distinct
+        require(union.length == 1, mixedIdentity(union))
+        combine(cur.get.unionByName(build(delta, tsCol, g, dims, measures)),
+          dims, g, tsCol)
     }
-    val out = next.localCheckpoint()
-    IndexStore.write(out, dir, tags)
-    out
+    // one action reads `next`, so no checkpoint before the commit
+    IndexStore.write(next, dir, tags)
+    IndexStore.read(spark, dir).get
   }
 
   def refreshStore(spark: SparkSession, dir: String, delta: DataFrame,
