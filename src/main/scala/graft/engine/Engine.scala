@@ -1913,51 +1913,51 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // on a lineage gap (a batch appended but never folded — the same
     // ledger check as the matview branch) the fold takes the sync
     // slice instead of the batch alone, so the artifact's wm_ tag
-    // never advances past an unfolded batch
+    // never advances past an unfolded batch. Beside the delta it
+    // returns the delta's watermark where it is known without a scan:
+    // a contiguous batch's is the tsd_id ingest just stamped
     def indexDelta(artifactPath: String)
-        : org.apache.spark.sql.DataFrame = {
+        : (org.apache.spark.sql.DataFrame, Option[Long]) = {
       val wm = indexWmOf(artifactPath)
       val gapped = wm >= 0 && batchWm > wm &&
         tsdLedger.list(Some(table))
           .exists(e => e.fileId > wm && e.fileId < batchWm)
       if (gapped)
-        catalog.table(table).filter(col("tsd_id").cast("long") > wm)
-      else batch
+        (catalog.table(table).filter(col("tsd_id").cast("long") > wm), None)
+      else (batch, Some(batchWm).filter(_ >= 0))
     }
     rollups.get(table).foreach { meta =>
       try if (!tagged(meta.path)) {
-        // a contiguous batch's watermark is batchWm: no scan to find it
-        val delta = indexDelta(meta.path)
-        foldRollup(meta, delta, batchTag,
-          Some(batchWm).filter(_ >= 0 && (delta eq batch)))
+        val (delta, deltaWm) = indexDelta(meta.path)
+        foldRollup(meta, delta, batchTag, deltaWm)
       } catch { case e: Exception =>
         autoFoldErrors += s"rollup $table (${meta.path}): ${e.getMessage}"
       }
     }
     vindexes.get(table).foreach { meta =>
       try if (!tagged(meta.path))
-        foldVindex(meta, indexDelta(meta.path), batchTag)
+        foldVindex(meta, indexDelta(meta.path)._1, batchTag)
       catch { case e: Exception =>
         autoFoldErrors += s"vindex $table (${meta.path}): ${e.getMessage}"
       }
     }
     tindexes.get(table).foreach { meta =>
       try if (!tagged(meta.path))
-        foldTindex(meta, indexDelta(meta.path), batchTag)
+        foldTindex(meta, indexDelta(meta.path)._1, batchTag)
       catch { case e: Exception =>
         autoFoldErrors += s"tindex $table (${meta.path}): ${e.getMessage}"
       }
     }
     sindexes.get(table).foreach { meta =>
       try if (!tagged(meta.path))
-        foldSindex(meta, indexDelta(meta.path), batchTag)
+        foldSindex(meta, indexDelta(meta.path)._1, batchTag)
       catch { case e: Exception =>
         autoFoldErrors += s"sindex $table (${meta.path}): ${e.getMessage}"
       }
     }
     dindexes.get(table).foreach { meta =>
       try if (!tagged(meta.path))
-        foldDindex(meta, indexDelta(meta.path), batchTag)
+        foldDindex(meta, indexDelta(meta.path)._1, batchTag)
       catch { case e: Exception =>
         autoFoldErrors +=
           s"dedup index $table (${meta.path}): ${e.getMessage}"

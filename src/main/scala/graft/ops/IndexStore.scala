@@ -36,10 +36,9 @@ import org.apache.spark.sql.types.StructType
   * index the same durability.
   *
   * Schema memo: [[write]] keeps each version's schema in process, keyed
-  * by version dir and commit-marker mtime (a drop and re-create at the
-  * same path never hits a stale entry), so reads skip Spark's schema
-  * inference job. Pruning a version drops its entry; a version another
-  * process wrote is read with inference.
+  * by version dir and commit-marker mtime (a re-create at the same path
+  * never hits a stale entry), so reads skip Spark's schema inference
+  * job. Pruning drops the entry; another process's versions infer.
   */
 object IndexStore {
   private val Marker = "_GRAFT_COMMIT"

@@ -107,11 +107,12 @@ object Rollup {
     val gs = rollup.select(col("grain")).distinct().take(2)
     require(gs.length <= 1, "mixed-grain rollup: " +
       gs.map(_.getString(0)).sorted.mkString(", "))
-    gs.headOption.map(_.getString(0)).getOrElse(throw
-      new IllegalStateException("empty rollup state carries no grain " +
-        "rows — supply the registered grain (refreshStore does) or " +
-        "rebuild with rollup create"))
+    gs.headOption.map(_.getString(0)).getOrElse(throw emptyState)
   }
+
+  private def emptyState = new IllegalStateException("empty rollup " +
+    "state carries no grain rows — supply the registered grain " +
+    "(refreshStore does) or rebuild with rollup create")
 
   /** Merge two rollups of the same grain, dims, and measures: counts and
     * exact sums add, min/max fold — decomposability is the whole design.
@@ -126,15 +127,14 @@ object Rollup {
     combine(u, dims, ids.head._1, ids.head._2)
   }
 
-  /** Up to two distinct (grain, ts_col) pairs of a rollup: ONE job
-    * probes emptiness and both identity columns (each distinct probe
-    * recomputes the whole lineage on in-memory fold chains). */
+  /** Up to two distinct (grain, ts_col) pairs: ONE job for emptiness and
+    * both columns (each probe recomputes an in-memory fold chain). */
   private def identityOf(df: DataFrame): Seq[(String, String)] =
     df.select(col("grain"), col("ts_col")).distinct().take(2).toSeq
       .map(r => (r.getString(0), r.getString(1)))
 
   private def mixedIdentity(ids: Seq[(String, String)]): String =
-    "mixed-identity rollup union: " + ids.map { case (g, t) =>
+    "mixed-identity rollup union: " + ids.distinct.map { case (g, t) =>
       s"(grain=$g, ts_col=$t)" }.sorted.mkString(", ")
 
   /** Re-aggregate a union of same-identity rollups onto its buckets. */
@@ -155,9 +155,22 @@ object Rollup {
   /** Fold a raw delta into a standing rollup — the delta is the ONLY
     * event data scanned. */
   def refresh(rollup: DataFrame, delta: DataFrame, tsCol: String,
-      dims: Seq[String], measures: Seq[String]): DataFrame = {
-    val g = grainOf(rollup)
-    merge(rollup, build(delta, tsCol, g, dims, measures), dims)
+      dims: Seq[String], measures: Seq[String]): DataFrame =
+    foldAt(rollup, delta, tsCol, dims, measures).getOrElse(throw emptyState)
+
+  /** Fold `delta` into `cur` at its recorded grain (None: `cur` has no
+    * identity rows). ONE probe reads (grain, ts_col) and refuses what
+    * [[grainOf]] and [[merge]] refuse: mixed grains, a foreign ts_col. */
+  private def foldAt(cur: DataFrame, delta: DataFrame, tsCol: String,
+      dims: Seq[String], measures: Seq[String]): Option[DataFrame] = {
+    val ids = identityOf(cur)
+    val gs = ids.map(_._1).distinct.sorted
+    require(gs.length <= 1, "mixed-grain rollup: " + gs.mkString(", "))
+    gs.headOption.map { g =>
+      require(ids.forall(_._2 == tsCol), mixedIdentity(ids :+ (g -> tsCol)))
+      combine(cur.unionByName(build(delta, tsCol, g, dims, measures)),
+        dims, g, tsCol)
+    }
   }
 
   def refresh(rollup: DataFrame, delta: DataFrame, tsCol: String,
@@ -209,25 +222,14 @@ object Rollup {
   def refreshStore(spark: SparkSession, dir: String, delta: DataFrame,
       tsCol: String, grain: String, dims: Seq[String],
       measures: Seq[String], tags: Seq[String]): DataFrame = {
-    val cur = IndexStore.read(spark, dir)
-    // the stored state's identity, refused as grainOf and merge refuse it
-    val ids = cur.toSeq.flatMap(identityOf)
-    val gs = ids.map(_._1).distinct.sorted
-    require(gs.length <= 1, "mixed-grain rollup: " + gs.mkString(", "))
-    val next = gs.headOption match {
-      // an EMPTIED state (every bucket retired by deletes/drops) keeps
-      // its schema but not its identity rows — fold at the CALLER'S
-      // registered grain, never grainOf's guess (see grainOf)
-      case None => build(delta, tsCol, grain, dims, measures)
-      case Some(g) =>
-        val union = (ids :+ (g -> tsCol)).distinct
-        require(union.length == 1, mixedIdentity(union))
-        combine(cur.get.unionByName(build(delta, tsCol, g, dims, measures)),
-          dims, g, tsCol)
-    }
+    // an EMPTIED state (every bucket retired by deletes/drops) keeps
+    // its schema but not its identity rows — fold at the CALLER'S
+    // registered grain, never grainOf's guess (see grainOf)
+    val next = IndexStore.read(spark, dir)
+      .flatMap(foldAt(_, delta, tsCol, dims, measures))
+      .getOrElse(build(delta, tsCol, grain, dims, measures))
     // one action reads `next`, so no checkpoint before the commit
-    IndexStore.write(next, dir, tags)
-    IndexStore.read(spark, dir).get
+    IndexStore.readVersion(spark, dir, IndexStore.write(next, dir, tags))
   }
 
   def refreshStore(spark: SparkSession, dir: String, delta: DataFrame,

@@ -39,4 +39,15 @@ class RollupIdentitySpec extends SparkSpec {
     assert(refused(at("minute").unionByName(at("hour")))
       .contains("mixed-grain rollup: hour, minute"))
   }
+
+  test("Rollup.refresh refuses a foreign ts_col and an empty state") {
+    val other = Rollup.build(events, "ts2", "minute", Seq("event_type"),
+      Seq("value"))
+    def fold(r: org.apache.spark.sql.DataFrame) =
+      Rollup.refresh(r, events, "ts", Seq("event_type"), Seq("value"))
+    assert(intercept[IllegalArgumentException](fold(other)).getMessage
+      .contains("mixed-identity rollup union"))
+    assert(intercept[IllegalStateException](fold(other.limit(0)))
+      .getMessage.contains("empty rollup state carries no grain rows"))
+  }
 }
