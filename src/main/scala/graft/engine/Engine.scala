@@ -54,19 +54,30 @@ import graft.ingest.SchemaInference
   *    no engine lock, only the retention gate's read side, and may run
   *    fully in parallel (Spark schedules their jobs FAIR across
   *    threads). The lazy `query()` surface takes nothing.
-  *  - '''Writers serialize''': [[Engine.Write]] commands, REST PUT's
-  *    reserve-append-fold section and the streaming view-fold sink all
-  *    hold one engine-wide [[writeLock]] — the parquet append commit
-  *    protocol is not safe for two concurrent jobs on one directory,
-  *    and a standing artifact's read-fold-commit cycle must not
-  *    interleave (two folds reading version N would both commit N+1;
-  *    one fold silently lost). Every command that commits an artifact
-  *    version or rewrites a directory is therefore a Write entry. One
-  *    writer at a time, readers unblocked. A few Write entries are
-  *    broader than they need to be (`layout scan` only reads;
-  *    `set query log` and `reset ... log` touch monitor-synchronized
-  *    state) and stay so until a follow-up narrows them.
-  *    The [[writeLock]] is PER-PROCESS: with several engine processes
+  *  - '''Writers serialize per table''': two writers must never
+  *    overlap on one directory or one artifact — the parquet append
+  *    commit protocol is not safe for two concurrent jobs on one
+  *    directory, and a standing artifact's read-fold-commit cycle must
+  *    not interleave (two folds reading version N would both commit
+  *    N+1; one fold silently lost). Two locks keep that:
+  *     - the [[writeGate]], a read-write lock over the whole engine.
+  *       [[Engine.Write]] commands hold its exclusive side, so DDL,
+  *       sync, retention and HA still run one at a time and alone.
+  *       Every command that commits an artifact version or rewrites a
+  *       directory is therefore a Write entry. A few Write entries are
+  *       broader than they need to be (`layout scan` only reads;
+  *       `set query log` and `reset ... log` touch
+  *       monitor-synchronized state) and stay so until a follow-up
+  *       narrows them;
+  *     - per-table locks ([[tableLocked]]). REST PUT's
+  *       reserve-append-fold section and the streaming view-fold sinks
+  *       hold the gate's shared side plus the locks of the table and
+  *       of the other side of every join matview over it, so writes
+  *       into different tables (and their folds) run at the same time,
+  *       while two writes into one table, or into the two sides of one
+  *       join matview, still take turns.
+  *    Readers are never blocked by either.
+  *    Both locks are PER-PROCESS: with several engine processes
   *    over one root, `sharedLedger = true` extends only the LEDGER's
   *    guarantees (duplicate-PUT refusal, tsd_id uniqueness) across
   *    processes via an OS file lock; concurrent cross-process appends
@@ -75,9 +86,13 @@ import graft.ingest.SchemaInference
   *    while artifact folds remain single-node-owned — run each
   *    standing artifact's folds from one process (the reference's
   *    operator/aggregator split has the same ownership shape).
-  *  - [[Engine.Unguarded]] commands hold neither lock: they join
-  *    worker threads whose work may need the write lock (the
-  *    lock-order reasons sit beside their entries).
+  *  - [[Engine.Unguarded]] commands hold no lock: they join worker
+  *    threads whose work may need the write gate (the lock-order
+  *    reasons sit beside their entries).
+  *  - '''Lock order''': write gate, then table locks in name order,
+  *    then the retention gate. A Write command may ingest (it takes
+  *    the shared side and the table locks reentrantly); nothing
+  *    holding the shared side ever runs a Write command.
   *  - '''Read visibility''': a query racing an append may observe a
   *    partially committed batch (parquet part-files become visible
   *    per-file). `committed=true` / `nodes=main` bound reads to the
@@ -160,7 +175,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** Tables whose stored tsd lineage has seeded the ledger this
     * engine lifetime (see the restart seed in [[ingest]]). */
   private val ledgerSeeded =
-    scala.collection.mutable.Set.empty[String]
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Query execution-time histogram (the reference's QueryMonitor,
     * job/job_instance.py:34-104: 10 one-second buckets + overflow,
@@ -213,7 +228,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** Per-table high-watermark of fully-replicated rows (the reference's
     * HA "committed" boundary, dbms/ha.py:225 safe ids). */
   @volatile private var safeTsdIds = Map.empty[String, Int]
-  def setSafeTsdId(table: String, id: Int): Unit = writeLock.synchronized {
+  def setSafeTsdId(table: String, id: Int): Unit = exclusive {
     safeTsdIds += table -> id
   }
 
@@ -236,8 +251,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * [[autoFoldErrors]] and reconciled exactly by `matview sync`
     * (watermark-driven) or a manual refresh of the missed batch. */
   @volatile private var autoRefreshViews = true
+  /** Appended by folds on any table at once: guarded by its own
+    * monitor ([[foldError]]; reports read a snapshot). */
   private val autoFoldErrors =
     scala.collection.mutable.ArrayBuffer.empty[String]
+  private def foldError(msg: String): Unit =
+    autoFoldErrors.synchronized { autoFoldErrors += msg }
 
   /** Registered standing vector indexes by table (`vindex create`):
     * PQ (codes + recorded books) or IVF (assignment rows + recorded
@@ -496,7 +515,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         if (existing.columns.contains("tsd_id"))
           tsdLedger.ensureAbove(mvTableWm(existing))
       } catch { case _: Exception => () } // empty/unreadable: no seed
-      ledgerSeeded += table
+      ledgerSeeded.add(table)
     }
     // a mapping policy may drop/reshape rows, so its row count needs a
     // Spark count; the plain path aligns 1:1 with the validated JSON
@@ -541,10 +560,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     spark.sparkContext.setJobDescription(s"rest_put $table")
     try {
     val n = alignedCount.getOrElse(aligned.count())
-    // reserve-append-fold under the engine write lock: concurrent PUTs
-    // (same table or not) serialize here — see the thread-safety
-    // contract in the class doc. Parsing/alignment above ran unlocked.
-    writeLock.synchronized {
+    // reserve-append-fold under this table's lock: PUTs into one table
+    // (or into the two sides of a join matview) serialize here, PUTs
+    // into other tables run alongside — see the thread-safety contract
+    // in the class doc. Parsing/alignment above ran unlocked.
+    tableLocked(table) {
     tsdLedger.record("edge", table, "rest_put", hash,
       instructions.getOrElse("0"), n) match {
       case None => 0L // duplicate payload — already ingested
@@ -644,16 +664,45 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       s"${java.time.Instant.ofEpochMilli(ts)} $line"
     }.mkString("\n")
 
-  /** Serializes every state-mutating operation — artifact create/
-    * refresh/sync/delete/drop, partition/retention, ingest's
-    * append+fold section, streaming view folds — engine-wide. One
-    * writer at a time is the documented contract (see the class doc):
-    * the parquet append commit protocol is not safe for two concurrent
-    * jobs on one directory, and a standing artifact's read-fold-commit
-    * cycle must not interleave with another fold of the same artifact
-    * (two folds both reading version N would commit N+1 twice — one
-    * fold lost). Reads never take this lock. */
-  private val writeLock = new Object
+  /** Engine-wide write gate (see the class doc). Its exclusive side
+    * ([[exclusive]]) runs one [[Write]] command — artifact create/
+    * refresh/sync/delete/drop, partition/retention, HA — with no other
+    * writer anywhere. Its shared side is held by table writes
+    * ([[tableLocked]]): ingest's append+fold section and streaming
+    * view folds. Fair, so a stream of PUTs cannot starve a Write
+    * command. Reads never take it. */
+  private val writeGate =
+    new java.util.concurrent.locks.ReentrantReadWriteLock(true)
+
+  private def exclusive[A](body: => A): A = {
+    val l = writeGate.writeLock(); l.lock()
+    try body finally l.unlock()
+  }
+
+  private val tableLocks = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.locks.ReentrantLock]()
+
+  /** Run a write into `table` (an append, its folds) under the write
+    * gate's shared side and the locks of `table` and of the other side
+    * of every join matview over it, taken in name order. A write into
+    * either side of a join matview folds that artifact, so the two
+    * sides share a lock: two folds of one artifact never interleave,
+    * and a fold never reads the other side mid-append. Registrations
+    * are Write commands, so the set cannot change while the shared
+    * side is held. Reentrant: ingest's folds take the same set. */
+  private def tableLocked[A](table: String)(body: => A): A = {
+    val gate = writeGate.readLock(); gate.lock()
+    try {
+      val tables = (joinMatviews.values.toSeq.collect {
+        case s if s.left == table => s.right
+        case s if s.right == table => s.left
+      } :+ table).distinct.sorted
+      val locks = tables.map(tableLocks.computeIfAbsent(_,
+        _ => new java.util.concurrent.locks.ReentrantLock()))
+      locks.foreach(_.lock())
+      try body finally locks.reverse.foreach(_.unlock())
+    } finally gate.unlock()
+  }
 
   /** Retention gate: the ONLY lock the read path ever touches. A
     * [[Read]] command holds the READ side for its whole run (reads
@@ -1097,9 +1146,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       else recs.map { case (k, cmd) => s"$k -> $cmd" }.mkString("\n")
     },
     // attach all re-registers the whole artifact fleet (and its inner
-    // attaches take the write lock); classifying it Write also keeps
+    // attaches take the write gate); classifying it Write also keeps
     // the retention-gate lock order acyclic — a reader must never
-    // block on [[writeLock]] while holding the read gate
+    // block on the [[writeGate]] while holding the read gate
     exact("attach all", Write) { _ =>
       // restart recovery: replay every attach command the catalog's
       // metadata root recorded at create time (the reference loads its
@@ -1124,7 +1173,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // serialization is what makes check-then-insert atomic (two
     // concurrent declarations of the same topics must collapse to ONE
     // subscription, not deliver every message twice). stop() joins no
-    // thread that needs the write lock, so the exit is safe on this
+    // thread that needs the write gate, so the exit is safe on this
     // side too.
     cmd("run msg client", Write)(runMsgClient),
     cmd("exit msg client", Write)(_ => exitMsgClient()),
@@ -1134,7 +1183,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // the read-gated path would be a read→write upgrade on the
     // retention gate — the one deadlock the lock order forbids.
     // Entering on the write side keeps the nested acquisition order
-    // writeLock → gate, same as every other Write command.
+    // write gate → retention gate, same as every other Write command.
     cmd("run scheduler", Write)(runScheduler),
     cmd("exit scheduler", Write) { t =>
       val id = "(?i)^exit scheduler\\s+(\\d+)".r
@@ -1155,23 +1204,26 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     },
     cmd("test table ", Read)(testTable),
     cmd("get archive file", Read)(archiveFile),
-    // ha sync ingests (nested writeLock) and delete archive removes
-    // files — both enter on the write side like the scheduler family
+    // ha sync ingests (nested: the write gate's shared side and the
+    // table locks, reentrant under its exclusive hold) and delete
+    // archive removes files — both enter on the write side like the
+    // scheduler family
     cmd("delete archive", Write)(deleteArchive),
     cmd("run ha sync", Write)(haSync),
     cmd("run streamer", Write)(runStreamer),
     // `exit streamer` / `exit kafka consumer` hold NEITHER the write
-    // lock NOR the retention read gate: they only touch internally-
+    // gate NOR the retention read gate: they only touch internally-
     // synchronized registries, and both JOIN worker threads. `exit
     // streamer` (StreamingQuery.stop()) waits on a micro-batch whose
-    // fold needs [[writeLock]] — so it cannot run as Write (2-party
-    // deadlock: stop() waits the batch, the batch waits the monitor we
-    // hold). It also cannot run READ-GATED: with FAIR mode, a retention
-    // writer (`drop partition` holds writeLock, then wants the gate's
-    // write side) bridges a 3-way cycle — exit holds gate read and
-    // waits the batch, the batch waits writeLock held by the retention
-    // command, the retention command waits the gate write side blocked
-    // behind exit's read hold. Unguarded execution touches no files
+    // fold needs the [[writeGate]]'s shared side — so it cannot run as
+    // Write (2-party deadlock: stop() waits the batch, the batch waits
+    // the exclusive side we hold). It also cannot run READ-GATED: with
+    // FAIR mode, a retention writer (`drop partition` holds the write
+    // gate, then wants the retention gate's write side) bridges a
+    // 3-way cycle — exit holds retention read and waits the batch, the
+    // batch waits the write gate held by the retention command, the
+    // retention command waits the retention write side blocked behind
+    // exit's read hold. Unguarded execution touches no files
     // and no foldable state, so neither lock is needed. Regressions:
     // StreamerExitSpec (both shapes).
     cmd("exit streamer", Unguarded)(exitStreamer),
@@ -1224,7 +1276,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       runningEvent.withValue(entry) {
         c.lock match {
           case Unguarded => c.run(t)
-          case Write => writeLock.synchronized(c.run(t))
+          case Write => exclusive(c.run(t))
           case Read => readGated(c.run(t))
         }
       }
@@ -1255,10 +1307,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         s"$tb: dedup index ${m.path}" }
     val inv = if (targets.isEmpty) "no auto-fold targets"
       else s"auto-fold targets:\n${targets.sorted.mkString("\n")}"
-    if (autoFoldErrors.isEmpty)
+    val errs = autoFoldErrors.synchronized(autoFoldErrors.toList)
+    if (errs.isEmpty)
       s"view auto refresh $st; no fold errors\n$inv"
-    else s"view auto refresh $st; ${autoFoldErrors.size} fold " +
-      s"error(s):\n${autoFoldErrors.mkString("\n")}\n$inv"
+    else s"view auto refresh $st; ${errs.size} fold " +
+      s"error(s):\n${errs.mkString("\n")}\n$inv"
   }
 
   /** `run scheduler [id] [where timeout = N seconds|minutes]` — start a
@@ -1342,6 +1395,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
 
   private def wmTag(n: Long): Seq[String] =
     if (n >= 0) Seq(s"wm_$n") else Nil
+
+  /** The `wm_` watermark an index-family fold of `delta` commits: the
+    * artifact's, advanced to the delta's highest tsd_id — `deltaWm`
+    * when the caller knows it, else scanned. -1 stays -1. */
+  private def foldedWm(path: String, delta: org.apache.spark.sql.DataFrame,
+      deltaWm: Option[Long]): Long = {
+    val wm = indexWmOf(path)
+    if (wm >= 0) math.max(wm, deltaWm.getOrElse(mvTableWm(delta))) else wm
+  }
 
   /** The jmv per-side watermark pair as IndexStore version tags —
     * committed atomically WITH every fold, like the index families'
@@ -1821,10 +1883,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * lineage; `matview sync` stays scoped to the PUT path). */
   def foldStandingViews(table: String,
       batch: org.apache.spark.sql.DataFrame, tsdId: Int = -1,
-      batchTag: Option[String] = None): Unit = writeLock.synchronized {
+      batchTag: Option[String] = None): Unit = tableLocked(table) {
     // streaming sinks call this from Spark's micro-batch thread while
     // users PUT/sync on others — the read-fold-commit cycles below
-    // must not interleave per artifact (reentrant from ingest's lock)
+    // must not interleave per artifact (reentrant from ingest's locks)
     import org.apache.spark.sql.functions.lit
     def tagged(path: String): Boolean = batchTag.exists(t =>
       graft.ops.IndexStore.hasTag(spark, path, t))
@@ -1859,7 +1921,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           } else (batch, if (wm >= 0) math.max(wm, batchWm) else wm)
         foldMatview(m, state, deltaRows, newWm, batchTag.toSeq)
       } catch { case e: Exception =>
-        autoFoldErrors += s"matview $table (${m.path}): ${e.getMessage}"
+        foldError(s"matview $table (${m.path}): ${e.getMessage}")
       }
     }
     joinMatviews.foreach { case (path, spec) =>
@@ -1899,7 +1961,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
               batchTag.toSeq ++ jmvWmTags(newL, newR))
           }
         } catch { case e: Exception =>
-          autoFoldErrors += s"join matview $table ($path): ${e.getMessage}"
+          foldError(s"join matview $table ($path): ${e.getMessage}")
         }
       }
     }
@@ -1926,43 +1988,24 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         (catalog.table(table).filter(col("tsd_id").cast("long") > wm), None)
       else (batch, Some(batchWm).filter(_ >= 0))
     }
-    rollups.get(table).foreach { meta =>
-      try if (!tagged(meta.path)) {
-        val (delta, deltaWm) = indexDelta(meta.path)
-        foldRollup(meta, delta, batchTag, deltaWm)
+    def indexFold(kind: String, path: String)(
+        run: (org.apache.spark.sql.DataFrame, Option[Long]) => Any): Unit =
+      try if (!tagged(path)) {
+        val (delta, deltaWm) = indexDelta(path)
+        run(delta, deltaWm)
       } catch { case e: Exception =>
-        autoFoldErrors += s"rollup $table (${meta.path}): ${e.getMessage}"
+        foldError(s"$kind $table ($path): ${e.getMessage}")
       }
-    }
-    vindexes.get(table).foreach { meta =>
-      try if (!tagged(meta.path))
-        foldVindex(meta, indexDelta(meta.path)._1, batchTag)
-      catch { case e: Exception =>
-        autoFoldErrors += s"vindex $table (${meta.path}): ${e.getMessage}"
-      }
-    }
-    tindexes.get(table).foreach { meta =>
-      try if (!tagged(meta.path))
-        foldTindex(meta, indexDelta(meta.path)._1, batchTag)
-      catch { case e: Exception =>
-        autoFoldErrors += s"tindex $table (${meta.path}): ${e.getMessage}"
-      }
-    }
-    sindexes.get(table).foreach { meta =>
-      try if (!tagged(meta.path))
-        foldSindex(meta, indexDelta(meta.path)._1, batchTag)
-      catch { case e: Exception =>
-        autoFoldErrors += s"sindex $table (${meta.path}): ${e.getMessage}"
-      }
-    }
-    dindexes.get(table).foreach { meta =>
-      try if (!tagged(meta.path))
-        foldDindex(meta, indexDelta(meta.path)._1, batchTag)
-      catch { case e: Exception =>
-        autoFoldErrors +=
-          s"dedup index $table (${meta.path}): ${e.getMessage}"
-      }
-    }
+    rollups.get(table).foreach(m =>
+      indexFold("rollup", m.path)(foldRollup(m, _, batchTag, _)))
+    vindexes.get(table).foreach(m =>
+      indexFold("vindex", m.path)(foldVindex(m, _, batchTag, _)))
+    tindexes.get(table).foreach(m =>
+      indexFold("tindex", m.path)(foldTindex(m, _, batchTag, _)))
+    sindexes.get(table).foreach(m =>
+      indexFold("sindex", m.path)(foldSindex(m, _, batchTag, _)))
+    dindexes.get(table).foreach(m =>
+      indexFold("dedup index", m.path)(foldDindex(m, _, batchTag, _)))
   }
 
   /** `matview sync where table = <t>` — the crash-exact reconcile:
@@ -3376,9 +3419,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       "run ha sync requires peer = <host:port>"))
     val tableFilter = arg(t, "table")
     // request timeouts make a simultaneous MUTUAL sync fail loudly
-    // instead of deadlocking: this node holds its write lock across
+    // instead of deadlocking: this node holds its write gate across
     // the round, so if the peer is mid-sync against us (holding ITS
-    // lock, waiting on OUR handler, which needs our lock), both
+    // gate, waiting on OUR handler, which needs our gate), both
     // rounds time out, record Failed, and the scheduler retries on a
     // later wake — the standard resolution for symmetric distributed
     // loops without a coordinator
@@ -4303,9 +4346,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private def foldRollup(meta: graft.dialect.RollupServe.Meta,
       delta: org.apache.spark.sql.DataFrame, tag: Option[String],
       deltaWm: Option[Long] = None): org.apache.spark.sql.DataFrame = {
-    val wm = indexWmOf(meta.path)
-    val newWm =
-      if (wm >= 0) math.max(wm, deltaWm.getOrElse(mvTableWm(delta))) else wm
+    val newWm = foldedWm(meta.path, delta, deltaWm)
     graft.ops.Rollup.refreshStore(spark, meta.path, delta, meta.tsCol,
       meta.grain, meta.dims, meta.valueCols, tag.toSeq ++ wmTag(newWm))
   }
@@ -4315,14 +4356,13 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * and the ingest auto-fold (which passes the exactly-once batch
     * tag). */
   private def foldVindex(meta: VIndexMeta,
-      delta: org.apache.spark.sql.DataFrame,
-      tag: Option[String]): Long = {
+      delta: org.apache.spark.sql.DataFrame, tag: Option[String],
+      deltaWm: Option[Long] = None): Long = {
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no vindex artifact at ${meta.path}"))
     // a lineage-stamped delta advances the artifact's wm_ tag in the
     // SAME commit as the fold (mirrors the matview watermark rider)
-    val wm = indexWmOf(meta.path)
-    val newWm = if (wm >= 0) math.max(wm, mvTableWm(delta)) else wm
+    val newWm = foldedWm(meta.path, delta, deltaWm)
     val folded = (meta.kind match {
       case "pq" => graft.ops.Similarity.refreshPqIndex(stored, delta,
         meta.vecCol, meta.idCol, meta.numSub)
@@ -4521,12 +4561,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * the ingest auto-fold. Per-doc state makes the fold idempotent;
     * the tag additionally skips replayed batches outright. */
   private def foldTindex(meta: TIndexMeta,
-      delta: org.apache.spark.sql.DataFrame,
-      tag: Option[String]): Long = {
+      delta: org.apache.spark.sql.DataFrame, tag: Option[String],
+      deltaWm: Option[Long] = None): Long = {
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
-    val wm = indexWmOf(meta.path)
-    val newWm = if (wm >= 0) math.max(wm, mvTableWm(delta)) else wm
+    val newWm = foldedWm(meta.path, delta, deltaWm)
     val folded = graft.ops.Retrieval.refreshPostingsIndex(stored, delta,
       meta.textCol, meta.idCol).localCheckpoint()
     val rows = graft.ops.IndexStore.write(folded, meta.path,
@@ -4651,14 +4690,13 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * (df / rank / size) re-derived over the union so fold == rebuild;
     * the wm_ lineage tag advances in the same commit. */
   private def foldDindex(meta: DIndexMeta,
-      delta: org.apache.spark.sql.DataFrame,
-      tag: Option[String]): Long = {
+      delta: org.apache.spark.sql.DataFrame, tag: Option[String],
+      deltaWm: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions.col
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(
         s"no dedup index artifact at ${meta.path}"))
-    val wm = indexWmOf(meta.path)
-    val newWm = if (wm >= 0) math.max(wm, mvTableWm(delta)) else wm
+    val newWm = foldedWm(meta.path, delta, deltaWm)
     val batchIds = delta.select(col(meta.idCol).as("__bid")).distinct()
     val survivors = stored.join(batchIds,
       col("id") === col("__bid"), "left_anti")
@@ -4902,12 +4940,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * lattice join, fold == rebuild under any batch order) — shared by
     * `sindex refresh` and the ingest auto-fold. */
   private def foldSindex(meta: SIndexMeta,
-      delta: org.apache.spark.sql.DataFrame,
-      tag: Option[String]): Long = {
+      delta: org.apache.spark.sql.DataFrame, tag: Option[String],
+      deltaWm: Option[Long] = None): Long = {
     val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
       throw new IllegalStateException(s"no sindex artifact at ${meta.path}"))
-    val wm = indexWmOf(meta.path)
-    val newWm = if (wm >= 0) math.max(wm, mvTableWm(delta)) else wm
+    val newWm = foldedWm(meta.path, delta, deltaWm)
     val folded = graft.ops.Sketches.kmvMergeKeyed(stored,
       sindexBuild(delta, meta.keyCol, meta.textCol, meta.k), meta.k)
       .localCheckpoint()
@@ -5651,7 +5688,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         "true` to drop anyway (they will be recorded stale in the " +
         "auto-fold error log)")
     refused.foreach(r =>
-      autoFoldErrors += s"drop partition $table: STALE $r")
+      foldError(s"drop partition $table: STALE $r"))
     // ---- the tombstone batch (checkpointed BEFORE any delete) ----
     val droppedRows = base.filter(col("__par") < lit(keepFrom))
       .localCheckpoint()
@@ -5907,7 +5944,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
 object Engine {
   /** The lock a command runs under (see the class doc's thread-safety
     * contract): [[Read]] holds the retention gate's read side,
-    * [[Write]] the engine write lock, [[Unguarded]] neither. */
+    * [[Write]] the write gate's exclusive side, [[Unguarded]]
+    * neither. */
   private[engine] sealed trait Lock
   private[engine] case object Read extends Lock
   private[engine] case object Write extends Lock

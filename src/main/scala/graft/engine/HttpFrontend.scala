@@ -14,14 +14,28 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   *   GET /?command=<urlencoded command>   -> Engine.execute output
   *   POST / with the command as the body  -> same
   *
-  * The Spark driver owns the engine; each request runs on the server's
-  * dispatch thread against the shared SparkSession (Spark sessions are
-  * thread-safe for concurrent actions — the reference's REST worker
-  * thread does the same, member_cmd.py:5070-5079).
+  * The Spark driver owns the engine; requests run on a fixed pool of
+  * daemon threads, one per core and at least 4, against the shared
+  * SparkSession (Spark sessions are thread-safe for concurrent actions
+  * — the reference's REST workers do the same, member_cmd.py:5070-5079).
+  * So a PUT waiting on its table's lock holds one pool thread, not the
+  * whole server: queries and PUTs into other tables are still served
+  * (the engine's thread-safety contract decides what waits for what).
   */
 final class HttpFrontend(engine: Engine, port: Int = 0) {
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+
+  private val pool = {
+    val seq = new java.util.concurrent.atomic.AtomicInteger
+    java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(4, Runtime.getRuntime.availableProcessors), { r =>
+        val t = new Thread(r, s"graft-http-${seq.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+  server.setExecutor(pool)
 
   /** Read a request body up to `cap` bytes; one byte beyond throws
     * (caller answers 413). readAllBytes on an unbounded client body
@@ -166,7 +180,7 @@ final class HttpFrontend(engine: Engine, port: Int = 0) {
     port
   }
 
-  def stop(): Unit = { live = false; server.stop(0) }
+  def stop(): Unit = { live = false; server.stop(0); pool.shutdown() }
 }
 
 object HttpFrontend {

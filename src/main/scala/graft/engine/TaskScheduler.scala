@@ -30,7 +30,7 @@ import scala.collection.mutable
   * deterministically through the injected `clock` instead of sleeping.
   * Task commands execute through the engine's own `execute` — a
   * mutating task (sync/refresh/drop) therefore serializes on the
-  * engine write lock exactly like an interactive caller, and its
+  * engine write gate exactly like an interactive caller, and its
   * result lands in the engine event/error rings like any command.
   *
   * Thread safety: all registry state is guarded by `this`; a tick

@@ -43,6 +43,9 @@ import org.apache.spark.sql.types.StructType
 object IndexStore {
   private val Marker = "_GRAFT_COMMIT"
   private val RetainFile = "_GRAFT_RETAIN"
+  /** Name prefix of [[setRetention]]'s temp files (hidden: a leading
+    * dot, which readers and [[write]]'s root-file prune skip). */
+  private val RetainTmp = s".$RetainFile."
   private val VersionRx = "^v=(\\d+)$".r
 
   /** (qualified version dir, commit marker mtime) -> schema. */
@@ -66,6 +69,17 @@ object IndexStore {
     val p = new Path(dir)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
+
+  /** [[fsOf]] below the checksum layer, for the retention file: a local
+    * fs keeps a `.crc` beside each file, and replacing a file and its
+    * `.crc` takes two renames that a concurrent reader can fall
+    * between. */
+  private def rawFsOf(spark: SparkSession, dir: String) =
+    fsOf(spark, dir) match {
+      case (c: org.apache.hadoop.fs.ChecksumFileSystem, p) =>
+        (c.getRawFileSystem, p)
+      case other => other
+    }
 
   /** All `v=N` children (committed or dirty). */
   private def versions(spark: SparkSession, dir: String): Seq[(Long, Boolean)] = {
@@ -95,7 +109,7 @@ object IndexStore {
     * (current + immediately previous — the concurrent-reader
     * lookback every store needs). */
   def retention(spark: SparkSession, dir: String): Int = {
-    val (fs, p) = fsOf(spark, dir)
+    val (fs, p) = rawFsOf(spark, dir)
     val f = new Path(p, RetainFile)
     if (!fs.exists(f)) 2
     else {
@@ -112,17 +126,29 @@ object IndexStore {
     * [[readVersion]]). Floor 2 — anything lower would break the
     * concurrent-reader lookback and the exactly-once tag protocol's
     * two-version window. Raising retention never deletes anything;
-    * lowering it takes effect at the next write's prune. */
+    * lowering it takes effect at the next write's prune. The file is
+    * written whole under a temp name and renamed over the old one,
+    * never truncated in place: a concurrent fold's [[write]] reads it
+    * and must see the old setting or the new one. */
   def setRetention(spark: SparkSession, dir: String, keep: Int): Unit = {
     require(keep >= 2,
       s"retention $keep < 2 would break the concurrent-reader / " +
         "exactly-once-tag two-version lookback")
-    val (fs, p) = fsOf(spark, dir)
+    val (fs, p) = rawFsOf(spark, dir)
     fs.mkdirs(p)
-    val out = fs.create(new Path(p, RetainFile), true)
+    val tmp = new Path(p, RetainTmp + java.util.UUID.randomUUID())
+    val out = fs.create(tmp, false)
     try out.write(keep.toString.getBytes(
       java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    val dst = new Path(p, RetainFile)
+    // a store whose rename never replaces (HDFS) drops the old record
+    // first; a fold in that gap prunes at the default depth
+    if (!fs.rename(tmp, dst) &&
+        !(fs.delete(dst, false) && fs.rename(tmp, dst))) {
+      fs.delete(tmp, false)
+      throw new java.io.IOException(s"could not record retention at $dst")
+    }
   }
 
   /** AS-OF read: the exact state committed as version `v`. Loud error
@@ -157,8 +183,9 @@ object IndexStore {
   def exists(spark: SparkSession, dir: String): Boolean =
     currentVersion(spark, dir).isDefined || {
       val (fs, p) = fsOf(spark, dir)
-      fs.exists(p) && fs.listStatus(p)
-        .exists(st => st.isFile && !st.getPath.getName.startsWith("_"))
+      fs.exists(p) && fs.listStatus(p).exists(st => st.isFile &&
+        !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
     }
 
   /** Load the live index: the highest committed `v=N`, else the legacy
@@ -253,7 +280,8 @@ object IndexStore {
       }
     }
     fs.listStatus(p).foreach { st =>
-      if (st.isFile && st.getPath.getName != RetainFile)
+      val name = st.getPath.getName
+      if (st.isFile && name != RetainFile && !name.startsWith(RetainTmp))
         fs.delete(st.getPath, false)
     }
     next
