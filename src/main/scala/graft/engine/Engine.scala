@@ -32,7 +32,10 @@ import graft.ingest.SchemaInference
   *     delete (as the boundary map allows)/drop/get:
   *     matview, join matview, rollup, vindex, tindex, sindex,
   *     dedup index (shingle|simhash|embedding|exact), monitor, layout,
-  *     graph tricount; plus `sync all where table =`,
+  *     graph tricount. The five whose lineage rides a `wm_` version
+  *     tag (rollup, vindex, tindex, sindex, dedup index) are each
+  *     declared once, in the family table [[families]]: the one place
+  *     to add such a family. Plus `sync all where table =`,
   *     `artifact verify where table =`, `attach all`,
   *     `index versions|retain|get` (AS-OF audit),
   *     `get view auto refresh` / `set view auto refresh = on|off`
@@ -232,8 +235,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     safeTsdIds += table -> id
   }
 
-  /** Registered standing rollups by table name (`rollup create`). */
-  @volatile private var rollups = Map.empty[String, graft.dialect.RollupServe.Meta]
   @volatile private var matviews = Map.empty[String, graft.dialect.MatViewServe.Meta]
 
   /** Registered standing JOIN matviews by artifact path (`join matview
@@ -264,14 +265,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * (0 for IVF). */
   private case class VIndexMeta(path: String, kind: String,
       idCol: String, vecCol: String, numSub: Int)
-  @volatile private var vindexes = Map.empty[String, VIndexMeta]
 
   /** Registered standing full-text postings indexes by table
     * (`tindex create`): BM25 top-k + positional phrase serving over a
     * [[graft.ops.Retrieval]] artifact — the text twin of `vindex`. */
   private case class TIndexMeta(path: String, idCol: String,
       textCol: String, grams: Boolean)
-  @volatile private var tindexes = Map.empty[String, TIndexMeta]
 
   /** Registered standing KMV sketch indexes by table (`sindex create`):
     * per-key bottom-k sketches of the text column's shingle space —
@@ -279,7 +278,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * artifact alone ([[graft.ops.Sketches]] KMV algebra). */
   private case class SIndexMeta(path: String, keyCol: String,
       textCol: String, k: Int)
-  @volatile private var sindexes = Map.empty[String, SIndexMeta]
 
   /** Registered standing DEDUP indexes by table (`dedup index
     * create/attach`): the near-dup ingest gate's artifact — shingle
@@ -292,7 +290,149 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * simhash) or the vector column (embedding). */
   private case class DIndexMeta(path: String, kind: String,
       idCol: String, contentCol: String, shingleN: Int)
-  @volatile private var dindexes = Map.empty[String, DIndexMeta]
+
+  /** A standing-index family whose lineage rides a `wm_` version tag
+    * (the [[graft.ops.IndexStore]] tag protocol). Each is declared once,
+    * in [[families]]; the PUT auto-fold, `<family> sync|refresh|drop`,
+    * `get <family>s`, `sync all`, `artifact verify`, `drop partition`'s
+    * retention fold and `get view auto refresh` loop over that table.
+    * Registrations are Write commands; the registry is volatile, so a
+    * completed one is visible to every later reader. */
+  private final class Family[M](
+      /** The command word, also the family's name in replies and errors. */
+      val word: String,
+      pathOf: M => String,
+      /** Stores a fold commits after the main one, with the same tag. */
+      sidecarsOf: M => Seq[String] = (_: M) => Nil,
+      /** Fold a delta (meta, delta, batch tag, the delta's watermark when
+        * known) and return the main store's committed version. */
+      foldOf: (M, DataFrame, Option[String], Option[Long]) => Long,
+      /** `<family> refresh`'s reply detail, from the committed version. */
+      refreshedOf: (M, Long) => String = (_: M, v: Long) => s"version $v",
+      /** The `artifact verify` rebuild from the current base, or why the
+        * family refuses one. */
+      rebuildOf: M => Either[String, DataFrame => DataFrame],
+      /** The reconcile `artifact verify` names for a diverged artifact. */
+      verifyFix: Option[String] = None,
+      /** `drop partition`'s fold of the dropped rows ((dropped rows,
+        * survivors, drop tag) -> receipt), or why the family refuses. */
+      retainOf: M => Either[String, (DataFrame, DataFrame, String) => String],
+      /** One `get <family>s` line. */
+      lineOf: (String, M) => String) {
+    @volatile private var reg = Map.empty[String, M]
+    val plural = if (word.endsWith("x")) s"${word}es" else s"${word}s"
+
+    def register(table: String, m: M): Unit = reg += table -> m
+    def metas: Iterable[M] = reg.values
+    def get(table: String): Option[Artifact] = reg.get(table).map(new Artifact(_))
+    def apply(table: String): Artifact = get(table).getOrElse(
+      throw new IllegalArgumentException(s"no $word registered for $table"))
+    def targets: Seq[String] =
+      reg.toSeq.map { case (tb, m) => s"$tb: $word ${pathOf(m)}" }
+    def listing: String = Engine.this.listing(plural, reg)(lineOf)
+    def unregister(t: String): String =
+      Engine.this.unregister(word, t, reg)(reg -= _)
+
+    /** The family's artifact over one table. */
+    final class Artifact(val meta: M) {
+      def word: String = Family.this.word
+      val path: String = pathOf(meta)
+      /** The main store and its sidecars: each is checked against its
+        * own tag, so a replay redoes only the stores a crash left
+        * without it. */
+      val stores: Seq[String] = path +: sidecarsOf(meta)
+      def state: DataFrame = stateAt(path, s"$word artifact")
+      def fold(delta: DataFrame, tag: Option[String],
+          deltaWm: Option[Long] = None): Long =
+        foldOf(meta, delta, tag, deltaWm)
+      def refreshed(v: Long): String = refreshedOf(meta, v)
+      def rebuild: Either[String, DataFrame => DataFrame] = rebuildOf(meta)
+      def fix: String = verifyFix.getOrElse(
+        s"run `$word sync` or rebuild with `$word create`")
+      def retain: Either[String, (DataFrame, DataFrame, String) => String] =
+        retainOf(meta)
+    }
+  }
+
+  /** Registered standing rollups by table name (`rollup create`). */
+  private val rollups = new Family[graft.dialect.RollupServe.Meta](
+    "rollup", _.path,
+    foldOf = foldRollup,
+    refreshedOf = (m, v) =>
+      s"${graft.ops.IndexStore.readVersion(spark, m.path, v).count()} " +
+        s"${m.grain} buckets",
+    rebuildOf = m => Right(graft.ops.Rollup.build(_, m.tsCol, m.grain,
+      m.dims, m.valueCols)),
+    verifyFix = Some("rebuild with `rollup create`"),
+    retainOf = m => Right(retainRollup(m, _, _, _)),
+    lineOf = (tbl, m) => s"$tbl: grain=${m.grain} time=${m.tsCol} " +
+      s"value=${m.valueCols.mkString(",")} " +
+      s"dims=${m.dims.mkString(",")} path=${m.path}")
+
+  private val vindexes = new Family[VIndexMeta]("vindex", _.path,
+    foldOf = foldVindex,
+    rebuildOf = m => Left(s"${m.kind} geometry is create-time-frozen; a " +
+      "rebuild would retrain it — recall probes are this family's audit"),
+    retainOf = m => Right { (dropped, _, tag) =>
+      rewrite(m.path, "vindex artifact", Some(tag))(
+        graft.ops.Similarity.deleteFromIndex(_,
+          dropped.select(col(m.idCol))))
+      "dropped ids tombstoned"
+    },
+    lineOf = (tbl, m) =>
+      s"$tbl: type=${m.kind} id=${m.idCol} vector=${m.vecCol}" +
+        (if (m.kind == "pq") s" numsub=${m.numSub}" else "") +
+        s" path=${m.path}")
+
+  private val tindexes = new Family[TIndexMeta]("tindex", _.path,
+    sidecarsOf = m => if (m.grams) Seq(s"${m.path}-grams") else Nil,
+    foldOf = foldTindex,
+    rebuildOf = m =>
+      Right(graft.ops.Retrieval.postingsIndex(_, m.textCol, m.idCol)),
+    retainOf = m => Right { (dropped, _, tag) =>
+      tombstoneTindex(m, dropped.select(col(m.idCol)).localCheckpoint(),
+        Some(tag))
+      "dropped ids tombstoned" + (if (m.grams) " (+trigram sidecar)" else "")
+    },
+    lineOf = (tbl, m) =>
+      s"$tbl: id=${m.idCol} text=${m.textCol} path=${m.path}" +
+        (if (m.grams) " grams=true" else ""))
+
+  private val sindexes = new Family[SIndexMeta]("sindex", _.path,
+    foldOf = foldSindex,
+    rebuildOf = m => Right(sindexBuild(_, m.keyCol, m.textCol, m.k)),
+    retainOf = _ => Left("is a one-way KMV sketch (deletes refused by " +
+      "construction — rebuild with sindex create)"),
+    lineOf = (tbl, m) =>
+      s"$tbl: key=${m.keyCol} text=${m.textCol} k=${m.k} path=${m.path}")
+
+  private val dindexes = new Family[DIndexMeta]("dedup index", _.path,
+    sidecarsOf = m => if (m.kind == "exact") Seq(s"${m.path}-bloom") else Nil,
+    foldOf = foldDindex,
+    rebuildOf = m => Right(dedupBuild(m.kind, _, m.contentCol, m.idCol,
+      m.shingleN, {
+        // an embedding index rebuilds with its RECORDED geometry — sigs
+        // are deterministic given (bits, tables)
+        val h = stateAt(m.path, "artifact")
+          .select(col("bits"), col("tables")).head()
+        (h.getInt(0), h.getInt(1))
+      })),
+    retainOf = m => Right { (dropped, _, tag) =>
+      tombstoneDindex(m.path, m.kind,
+        dropped.select(col(m.idCol)).localCheckpoint(), Some(tag))
+      "dropped ids tombstoned"
+    },
+    lineOf = { (tbl, m) =>
+      val colKey = if (m.kind == "embedding") "vector" else "text"
+      s"$tbl: type=${m.kind} id=${m.idCol} $colKey=${m.contentCol}" +
+        (if (m.kind == "shingle") s" n=${m.shingleN}" else "") +
+        s" path=${m.path}"
+    })
+
+  /** The `wm_`-tagged standing-index families, in fold order: the one
+    * place such a family is declared. */
+  private val families: Seq[Family[_]] =
+    Seq(rollups, vindexes, tindexes, sindexes, dindexes)
 
   /** Registered Z-order layouts by table (`layout zorder`): a
     * Morton-clustered directory-partitioned copy whose quads a 2-D box
@@ -309,35 +449,42 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       tsCol: String)
   @volatile private var monitors = Map.empty[String, MonitorMeta]
 
-  /** Run a `sql` command, returning the DataFrame (pre-rendering).
-    * A table with a registered rollup first offers the command to
-    * [[graft.dialect.RollupServe]] — a qualified increments() query is
-    * answered from the standing rollup (bucket rows, never event
-    * history); anything the matcher cannot prove serves exactly falls
-    * back to the base plan. */
-  def query(command: String): DataFrame = {
-    val cmd = EdgeSql.parseCommand(command)
-    val served = try {
+  /** The standing artifact that answers a `sql` command, if one
+    * qualifies: its label and the frame it serves. A JOIN select can
+    * only be served by a registered join matview whose recorded
+    * (tables, on-pairs) match the FROM; a single-table select is offered
+    * to the table's rollup ([[graft.dialect.RollupServe]] answers a
+    * qualified increments() query from bucket rows, never event
+    * history), then to its matview. Anything no matcher can prove
+    * serves exactly falls back to the base plan (None). */
+  private def served(cmd: EdgeSql.Command): Option[(String, DataFrame)] =
+    try {
       val sel = EdgeSql.parseSelect(cmd.select)
       if (sel.join.nonEmpty)
-        // a JOIN select can only be served by a registered join
-        // matview whose recorded (tables, on-pairs) match the FROM
         joinMatviews.to(Seq).sortBy(_._1)
           .collectFirst(Function.unlift { case (path, spec) =>
-            graft.dialect.JoinMatViewServe.tryServe(spark, path, spec,
-              cmd)
+            graft.dialect.JoinMatViewServe.tryServe(spark, path, spec, cmd)
+              .map(df => (s"join matview at $path", df))
           })
       else {
         val t0 = sel.table
         val table = if (t0.contains('.'))
           t0.substring(t0.lastIndexOf('.') + 1) else t0
-        rollups.get(table).flatMap(m =>
-            graft.dialect.RollupServe.tryServe(spark, m, cmd))
+        rollups.get(table).flatMap(a =>
+            graft.dialect.RollupServe.tryServe(spark, a.meta, cmd)
+              .map(df => (s"standing rollup at ${a.path}", df)))
           .orElse(matviews.get(table).flatMap(m =>
-            graft.dialect.MatViewServe.tryServe(spark, m, cmd)))
+            graft.dialect.MatViewServe.tryServe(spark, m, cmd)
+              .map(df => (s"matview at ${m.path}", df))))
       }
     } catch { case _: Exception => None }
-    served.getOrElse(
+
+  /** Run a `sql` command, returning the DataFrame (pre-rendering):
+    * served from a standing artifact when one qualifies ([[served]]),
+    * else the base plan. */
+  def query(command: String): DataFrame = {
+    val cmd = EdgeSql.parseCommand(command)
+    served(cmd).map(_._2).getOrElse(
       EdgeSql.query(spark, loadWithOptions(cmd), command,
         vars = dict, nodeAddress = nodeAddress))
   }
@@ -346,35 +493,14 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * the transparent serving layer: reports WHICH plan would answer
     * this exact command (standing rollup / matview / base scan, with
     * the artifact path) and prints the formatted Catalyst plan. The
-    * decision replays [[query]]'s own tryServe calls — this command
-    * asks, it never executes the query. Beyond-parity: the reference
-    * has no serving layer to observe; its nearest surface is the sql
+    * decision is [[query]]'s own ([[served]]) — this command asks, it
+    * never executes the query. Beyond-parity: the reference has no
+    * serving layer to observe; its nearest surface is the sql
     * command's test/render mode (member_cmd.py:124-127). */
   private def explainSql(t: String): String = {
     val command = t.substring("explain".length).trim
     val cmd = EdgeSql.parseCommand(command)
-    val servedSrc: Option[(String, DataFrame)] = try {
-      val sel = EdgeSql.parseSelect(cmd.select)
-      if (sel.join.nonEmpty)
-        joinMatviews.to(Seq).sortBy(_._1)
-          .collectFirst(Function.unlift { case (path, spec) =>
-            graft.dialect.JoinMatViewServe.tryServe(spark, path, spec,
-                cmd)
-              .map(df => (s"join matview at $path", df))
-          })
-      else {
-        val t0 = sel.table
-        val table = if (t0.contains('.'))
-          t0.substring(t0.lastIndexOf('.') + 1) else t0
-        rollups.get(table).flatMap(m =>
-            graft.dialect.RollupServe.tryServe(spark, m, cmd)
-              .map(df => (s"standing rollup at ${m.path}", df)))
-          .orElse(matviews.get(table).flatMap(m =>
-            graft.dialect.MatViewServe.tryServe(spark, m, cmd)
-              .map(df => (s"matview at ${m.path}", df))))
-      }
-    } catch { case _: Exception => None }
-    val (src, df) = servedSrc.getOrElse(
+    val (src, df) = served(cmd).getOrElse(
       ("base table scan (no standing artifact qualifies)",
         EdgeSql.query(spark, loadWithOptions(cmd), command,
           vars = dict, nodeAddress = nodeAddress)))
@@ -894,8 +1020,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     cmd("drop partition ", Write)(dropPartition),
 
     cmd("rollup create", Write)(rollupCreate),
-    cmd("rollup sync", Write)(indexFamilySync(_, "rollup")),
-    cmd("rollup refresh", Write)(rollupRefresh),
     cmd("rollup delete", Write)(rollupDelete),
     cmd("rollup attach", Write) { t =>
       // re-register an existing artifact after an engine restart — the
@@ -906,38 +1030,20 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       val stored = graft.ops.IndexStore.read(spark, path).getOrElse(
         throw new IllegalArgumentException(s"no rollup artifact at $path"))
       val (tsCol, grain, dims, measures) = graft.ops.Rollup.metaOf(stored)
-      rollups += table -> graft.dialect.RollupServe.Meta(
-        path, tsCol, grain, dims, measures)
+      rollups.register(table, graft.dialect.RollupServe.Meta(
+        path, tsCol, grain, dims, measures))
       s"rollup for $table attached from $path " +
         s"(grain=$grain dims=${dims.mkString(",")} " +
         s"measures=${measures.mkString(",")})"
     },
-    cmd("rollup drop", Write)(t =>
-      unregister("rollup", t, rollups)(rollups -= _)),
-    exact("get rollups", Read)(_ => listing("rollups", rollups) {
-      (tbl, m) => s"$tbl: grain=${m.grain} time=${m.tsCol} " +
-        s"value=${m.valueCols.mkString(",")} " +
-        s"dims=${m.dims.mkString(",")} path=${m.path}"
-    }),
 
     cmd("vindex create", Write)(vindexCreate),
-    cmd("vindex sync", Write)(indexFamilySync(_, "vindex")),
-    cmd("vindex refresh", Write)(vindexRefresh),
     cmd("vindex delete", Write)(vindexDelete),
     cmd("vindex search", Read)(vindexSearch),
     cmd("vindex negatives", Read)(vindexNegatives),
     cmd("vindex attach", Write)(vindexAttach),
-    cmd("vindex drop", Write)(t =>
-      unregister("vindex", t, vindexes)(vindexes -= _)),
-    exact("get vindexes", Read)(_ => listing("vindexes", vindexes) {
-      (tbl, m) => s"$tbl: type=${m.kind} id=${m.idCol} vector=${m.vecCol}" +
-        (if (m.kind == "pq") s" numsub=${m.numSub}" else "") +
-        s" path=${m.path}"
-    }),
 
     cmd("tindex create", Write)(tindexCreate),
-    cmd("tindex sync", Write)(indexFamilySync(_, "tindex")),
-    cmd("tindex refresh", Write)(tindexRefresh),
     cmd("tindex delete", Write)(tindexDelete),
     cmd("tindex search", Read)(tindexSearch),
     cmd("tindex phrase", Read)(tindexPhrase),
@@ -945,26 +1051,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     cmd("tindex snippet", Read)(tindexSnippet),
     cmd("tindex like", Read)(tindexLike),
     cmd("tindex attach", Write)(tindexAttach),
-    cmd("tindex drop", Write)(t =>
-      unregister("tindex", t, tindexes)(tindexes -= _)),
-    exact("get tindexes", Read)(_ => listing("tindexes", tindexes) {
-      (tbl, m) => s"$tbl: id=${m.idCol} text=${m.textCol} path=${m.path}" +
-        (if (m.grams) " grams=true" else "")
-    }),
     cmd("hybrid search", Read)(hybridSearch),
 
     cmd("sindex create", Write)(sindexCreate),
-    cmd("sindex sync", Write)(indexFamilySync(_, "sindex")),
-    cmd("sindex refresh", Write)(sindexRefresh),
     cmd("sindex estimate", Read)(sindexEstimate),
     cmd("sindex overlap", Read)(sindexOverlap),
     cmd("sindex attach", Write)(sindexAttach),
-    cmd("sindex drop", Write)(t =>
-      unregister("sindex", t, sindexes)(sindexes -= _)),
-    exact("get sindexes", Read)(_ => listing("sindexes", sindexes) {
-      (tbl, m) =>
-        s"$tbl: key=${m.keyCol} text=${m.textCol} k=${m.k} path=${m.path}"
-    }),
 
     // create and refresh commit an IndexStore version, a single-writer
     // protocol (list versions, write max+1, prune): two refreshes under
@@ -1117,26 +1209,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
 
     cmd("dedup index create", Write)(dedupIndexCreate),
     cmd("dedup index attach", Write)(dedupIndexAttach),
-    cmd("dedup index sync", Write)(indexFamilySync(_, "dedup index")),
-    cmd("dedup index refresh", Write) { t =>
-      val table = reqArg(t, "table", "dedup index refresh")
-      val meta = dindexes.getOrElse(table,
-        throw new IllegalArgumentException(
-          s"no dedup index registered for $table"))
-      val src = tableOrPath(reqArg(t, "source", "dedup index refresh"))
-      val rows = foldDindex(meta, src, None)
-      s"dedup index for $table refreshed (version $rows)"
-    },
     cmd("dedup index delete", Write)(dedupIndexDelete),
-    cmd("dedup index drop", Write)(t =>
-      unregister("dedup index", t, dindexes)(dindexes -= _)),
-    exact("get dedup indexes", Read)(_ =>
-      listing("dedup indexes", dindexes) { (tbl, m) =>
-        val colKey = if (m.kind == "embedding") "vector" else "text"
-        s"$tbl: type=${m.kind} id=${m.idCol} $colKey=${m.contentCol}" +
-          (if (m.kind == "shingle") s" n=${m.shingleN}" else "") +
-          s" path=${m.path}"
-      }),
 
     cmd("sync all", Write)(syncAll),
     cmd("artifact verify", Read)(artifactVerify),
@@ -1247,7 +1320,24 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       dict.toSeq.sortBy(_._1).map { case (k, v) => s"$k = $v" }
         .mkString("\n")),
     exact("get tables", Read)(_ => catalog.tableNames.mkString("\n")),
-    exact("get views", Read)(_ => catalog.viewNames.mkString("\n")))
+    exact("get views", Read)(_ => catalog.viewNames.mkString("\n"))) ++
+    families.flatMap(familyCommands)
+
+  /** The entries every standing-index family shares: `<family> sync`,
+    * `<family> refresh where table = <t> and source = <table|path>`
+    * (fold a delta into the standing artifact, committing a fresh
+    * version; history is never rescanned), `<family> drop` and
+    * `get <family>s`. */
+  private def familyCommands(f: Family[_]): Seq[Command] = Seq(
+    cmd(s"${f.word} sync", Write)(familySync(f, _)),
+    cmd(s"${f.word} refresh", Write) { t =>
+      val table = reqArg(t, "table", s"${f.word} refresh")
+      val a = f(table)
+      val delta = tableOrPath(reqArg(t, "source", s"${f.word} refresh"))
+      s"${f.word} for $table refreshed (${a.refreshed(a.fold(delta, None))})"
+    },
+    cmd(s"${f.word} drop", Write)(f.unregister),
+    exact(s"get ${f.plural}", Read)(_ => f.listing))
 
   private val byLength = commands.sortBy(-_.prefix.length)
 
@@ -1296,15 +1386,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val st = if (autoRefreshViews) "on" else "off"
     val targets =
       matviews.toSeq.map { case (tb, m) => s"$tb: matview ${m.path}" } ++
-      rollups.toSeq.map { case (tb, m) => s"$tb: rollup ${m.path}" } ++
       joinMatviews.toSeq.flatMap { case (p, sp) =>
         Seq(s"${sp.left}: join matview $p",
           s"${sp.right}: join matview $p") } ++
-      vindexes.toSeq.map { case (tb, m) => s"$tb: vindex ${m.path}" } ++
-      tindexes.toSeq.map { case (tb, m) => s"$tb: tindex ${m.path}" } ++
-      sindexes.toSeq.map { case (tb, m) => s"$tb: sindex ${m.path}" } ++
-      dindexes.toSeq.map { case (tb, m) =>
-        s"$tb: dedup index ${m.path}" }
+      families.flatMap(_.targets)
     val inv = if (targets.isEmpty) "no auto-fold targets"
       else s"auto-fold targets:\n${targets.sorted.mkString("\n")}"
     val errs = autoFoldErrors.synchronized(autoFoldErrors.toList)
@@ -1404,6 +1489,48 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val wm = indexWmOf(path)
     if (wm >= 0) math.max(wm, deltaWm.getOrElse(mvTableWm(delta))) else wm
   }
+
+  /** The current committed state of the store at `path`; `what` names
+    * the store in the error when it has none. */
+  private def stateAt(path: String, what: String): DataFrame =
+    graft.ops.IndexStore.read(spark, path).getOrElse(
+      throw new IllegalStateException(s"no $what at $path"))
+
+  /** Commit one store of a family unless `tag` is already on it. A
+    * family with sidecars commits its main store first and each sidecar
+    * after it, so a crash between two commits leaves the main store
+    * tagged and a sidecar not; the replay (a streaming batch retry, a
+    * re-run `drop partition`) must redo that sidecar alone. Returns the
+    * store's committed version. */
+  private def commitOnce(path: String, tag: Option[String])(
+      commit: => Long): Long =
+    if (tag.exists(graft.ops.IndexStore.hasTag(spark, path, _)))
+      graft.ops.IndexStore.currentVersion(spark, path).getOrElse(0L)
+    else commit
+
+  /** Fold `delta` into the main store at `path` (`what` names it when
+    * it has none), once per `tag`: `f` maps the current state to the
+    * next, and a lineage-stamped delta advances the store's `wm_` tag
+    * in the SAME commit as the fold (mirrors the matview watermark
+    * rider). Returns the store's committed version. */
+  private def foldInto(path: String, what: String, delta: DataFrame,
+      tag: Option[String], deltaWm: Option[Long])(
+      f: DataFrame => DataFrame): Long =
+    commitOnce(path, tag) {
+      val newWm = foldedWm(path, delta, deltaWm)
+      graft.ops.IndexStore.write(f(stateAt(path, what)).localCheckpoint(),
+        path, tag.toSeq ++ wmTag(newWm))
+    }
+
+  /** Rewrite the store at `path` from its current state (`what` names
+    * it when it has none), once per `tag`. Its `wm_` tag rides onto the
+    * new version unchanged: deletes and retention never advance
+    * lineage, and a version without the tag would lose it. */
+  private def rewrite(path: String, what: String, tag: Option[String])(
+      f: DataFrame => DataFrame): Long =
+    commitOnce(path, tag)(graft.ops.IndexStore.write(
+      f(stateAt(path, what)).localCheckpoint(), path,
+      tag.toSeq ++ wmTag(indexWmOf(path))))
 
   /** The jmv per-side watermark pair as IndexStore version tags —
     * committed atomically WITH every fold, like the index families'
@@ -1896,8 +2023,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       else -1L
     matviews.get(table).foreach { m =>
       try if (!tagged(m.path)) {
-        val state = graft.ops.IndexStore.read(spark, m.path).getOrElse(
-          throw new IllegalStateException(s"no matview state at ${m.path}"))
+        val state = stateAt(m.path, "matview state")
         val wm = mvWmOf(m.path, state)
         // LINEAGE GAP CHECK: a ledger entry for this table strictly
         // between the view's watermark and this batch means a batch
@@ -1930,8 +2056,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       side.foreach { sd =>
         try if (!tagged(path)) {
           import graft.ops.JoinMatView.{WmLeftCol, WmRightCol}
-          val state = graft.ops.IndexStore.read(spark, path).getOrElse(
-            throw new IllegalStateException(s"no join matview at $path"))
+          val state = stateAt(path, "join matview")
           val (wmL, wmR) = jmvWmsOf(path, state)
           val (wmSide, wmOther) = if (sd == "left") (wmL, wmR) else (wmR, wmL)
           val otherName = if (sd == "left") spec.right else spec.left
@@ -1988,24 +2113,16 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         (catalog.table(table).filter(col("tsd_id").cast("long") > wm), None)
       else (batch, Some(batchWm).filter(_ >= 0))
     }
-    def indexFold(kind: String, path: String)(
-        run: (org.apache.spark.sql.DataFrame, Option[Long]) => Any): Unit =
-      try if (!tagged(path)) {
-        val (delta, deltaWm) = indexDelta(path)
-        run(delta, deltaWm)
+    // a replay skips an artifact only when every one of its stores
+    // carries the tag (a fold commits its sidecars after the main store)
+    families.flatMap(_.get(table)).foreach { a =>
+      try if (!a.stores.forall(tagged)) {
+        val (delta, deltaWm) = indexDelta(a.path)
+        a.fold(delta, batchTag, deltaWm)
       } catch { case e: Exception =>
-        foldError(s"$kind $table ($path): ${e.getMessage}")
+        foldError(s"${a.word} $table (${a.path}): ${e.getMessage}")
       }
-    rollups.get(table).foreach(m =>
-      indexFold("rollup", m.path)(foldRollup(m, _, batchTag, _)))
-    vindexes.get(table).foreach(m =>
-      indexFold("vindex", m.path)(foldVindex(m, _, batchTag, _)))
-    tindexes.get(table).foreach(m =>
-      indexFold("tindex", m.path)(foldTindex(m, _, batchTag, _)))
-    sindexes.get(table).foreach(m =>
-      indexFold("sindex", m.path)(foldSindex(m, _, batchTag, _)))
-    dindexes.get(table).foreach(m =>
-      indexFold("dedup index", m.path)(foldDindex(m, _, batchTag, _)))
+    }
   }
 
   /** `matview sync where table = <t>` — the crash-exact reconcile:
@@ -2076,9 +2193,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       else out += s"$label: DIVERGED — $extra state-only row(s), " +
         s"$missing rebuild-only row(s); $fix"
     }
-    def stored(path: String) =
-      graft.ops.IndexStore.read(spark, path).getOrElse(
-        throw new IllegalStateException(s"no artifact at $path"))
+    def stored(path: String) = stateAt(path, "artifact")
     def attempt(label: String)(body: => Unit): Unit =
       try body
       catch { case e: Exception =>
@@ -2088,12 +2203,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       diff(s"matview ${m.path}", stripWm(stored(m.path)),
         graft.ops.MatView.partials(base, m.keys, m.aggs),
         "run `matview sync` (missed adds) or rebuild with `matview create`")
-    })
-    rollups.get(table).foreach(m => attempt(s"rollup ${m.path}") {
-      diff(s"rollup ${m.path}", stored(m.path),
-        graft.ops.Rollup.build(base, m.tsCol, m.grain, m.dims,
-          m.valueCols),
-        "rebuild with `rollup create`")
     })
     joinMatviews.foreach { case (p, spec) =>
       if (spec.left == table || spec.right == table)
@@ -2105,39 +2214,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
             "run `join matview sync` or rebuild with `join matview create`")
         }
     }
-    tindexes.get(table).foreach(m => attempt(s"tindex ${m.path}") {
-      diff(s"tindex ${m.path}", stored(m.path),
-        graft.ops.Retrieval.postingsIndex(base, m.textCol, m.idCol),
-        "run `tindex sync` or rebuild with `tindex create`")
-    })
-    sindexes.get(table).foreach(m => attempt(s"sindex ${m.path}") {
-      diff(s"sindex ${m.path}", stored(m.path),
-        sindexBuild(base, m.keyCol, m.textCol, m.k),
-        "run `sindex sync` or rebuild with `sindex create`")
-    })
-    dindexes.get(table).foreach(m => attempt(s"dedup index ${m.path}") {
-      val rebuilt = m.kind match {
-        case "shingle" => graft.ops.Dedup.shingleIndex(base,
-          m.contentCol, m.idCol, m.shingleN)
-        case "simhash" => graft.ops.Dedup.simhashIndex(base,
-          m.contentCol, m.idCol)
-        case "exact" => graft.ops.Dedup.exactHashIndex(base,
-          m.contentCol, m.idCol)
-        case _ =>
-          // rebuild with the artifact's own RECORDED geometry — sigs
-          // are deterministic given (bits, tables)
-          val st = stored(m.path)
-          val head = st.select(col("bits"), col("tables")).head()
-          graft.ops.Dedup.embeddingIndex(base, m.contentCol, m.idCol,
-            bits = head.getInt(0), tables = head.getInt(1))
+    families.flatMap(_.get(table)).foreach { a =>
+      val label = s"${a.word} ${a.path}"
+      a.rebuild match {
+        case Right(build) => attempt(label)(
+          diff(label, stored(a.path), build(base), a.fix))
+        case Left(why) =>
+          out += s"$label: verify REFUSED by construction ($why)"
       }
-      diff(s"dedup index ${m.path}", stored(m.path), rebuilt,
-        "run `dedup index sync` or rebuild with `dedup index create`")
-    })
-    vindexes.get(table).foreach(m => out +=
-      s"vindex ${m.path}: verify REFUSED by construction (${m.kind} " +
-        "geometry is create-time-frozen; a rebuild would retrain it — " +
-        "recall probes are this family's audit)")
+    }
     monitors.get(table).foreach(m => out +=
       s"monitor ${m.path}: verify REFUSED by construction (tail state " +
         "is arrival-order-sensitive)")
@@ -2149,7 +2234,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** `sync all where table = <t>` — one command reconciling EVERY
     * registered standing artifact over a table after a crash or an
     * auto-refresh-off window: matview sync, join matview sync (each
-    * jmv the table participates in), and the three index-family syncs.
+    * jmv the table participates in), and every standing-index family's
+    * sync ([[families]]).
     * Per-artifact tolerant — one artifact without lineage reports its
     * refusal while the rest still reconcile (the operational pairing
     * of `attach all`: restart recovery re-registers the fleet, sync
@@ -2163,20 +2249,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     if (matviews.contains(table))
       attempt(s"matview $table")(
         matviewSync(s"matview sync where table = $table"))
-    if (rollups.contains(table))
-      attempt(s"rollup $table")(indexFamilySync(t, "rollup"))
     joinMatviews.foreach { case (p, spec) =>
       if (spec.left == table || spec.right == table)
         attempt(s"join matview $p")(jmvSyncFold(p, spec, None))
     }
-    if (vindexes.contains(table))
-      attempt(s"vindex $table")(indexFamilySync(t, "vindex"))
-    if (tindexes.contains(table))
-      attempt(s"tindex $table")(indexFamilySync(t, "tindex"))
-    if (sindexes.contains(table))
-      attempt(s"sindex $table")(indexFamilySync(t, "sindex"))
-    if (dindexes.contains(table))
-      attempt(s"dedup index $table")(indexFamilySync(t, "dedup index"))
+    families.filter(_.get(table).isDefined).foreach(f =>
+      attempt(s"${f.word} $table")(familySync(f, t)))
     // honest refusal, not a silent skip: CUSUM tail state is
     // order-sensitive — replaying missed rows out of arrival order
     // would change the monitor's level (the documented boundary)
@@ -2189,45 +2267,17 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     else lines.mkString("\n")
   }
 
-  /** `vindex|tindex|sindex sync where table = <t>` — the index-family
-    * twin of `matview sync`: fold exactly the table rows whose tsd_id
-    * lies above the artifact's `wm_` lineage tag (batches appended
-    * while auto refresh was off, or lost between append and fold),
-    * advancing the tag in the same IndexStore commit. Idempotent;
-    * refuses loudly without lineage. */
-  private def indexFamilySync(t: String, kind: String): String = {
-    val table = arg(t, "table").getOrElse(throw new IllegalArgumentException(
-        s"$kind sync requires table ="))
-    val (path, fold): (String,
-        (org.apache.spark.sql.DataFrame, Option[String]) => Any) =
-      kind match {
-        case "vindex" =>
-          val m = vindexes.getOrElse(table,
-            throw new IllegalArgumentException(
-              s"no vindex registered for $table"))
-          (m.path, (d, tg) => foldVindex(m, d, tg))
-        case "tindex" =>
-          val m = tindexes.getOrElse(table,
-            throw new IllegalArgumentException(
-              s"no tindex registered for $table"))
-          (m.path, (d, tg) => foldTindex(m, d, tg))
-        case "dedup index" =>
-          val m = dindexes.getOrElse(table,
-            throw new IllegalArgumentException(
-              s"no dedup index registered for $table"))
-          (m.path, (d, tg) => foldDindex(m, d, tg))
-        case "rollup" =>
-          val m = rollups.getOrElse(table,
-            throw new IllegalArgumentException(
-              s"no rollup registered for $table"))
-          (m.path, (d, tg) => foldRollup(m, d, tg))
-        case _ =>
-          val m = sindexes.getOrElse(table,
-            throw new IllegalArgumentException(
-              s"no sindex registered for $table"))
-          (m.path, (d, tg) => foldSindex(m, d, tg))
-      }
-    val wm = indexWmOf(path)
+  /** `<family> sync where table = <t>` for a standing-index family —
+    * the twin of `matview sync`: fold exactly the table rows whose
+    * tsd_id lies above the artifact's `wm_` lineage tag (batches
+    * appended while auto refresh was off, or lost between append and
+    * fold), advancing the tag in the same IndexStore commit.
+    * Idempotent; refuses loudly without lineage. */
+  private def familySync(f: Family[_], t: String): String = {
+    val kind = f.word
+    val table = reqArg(t, "table", s"$kind sync")
+    val a = f(table)
+    val wm = indexWmOf(a.path)
     require(wm >= 0,
       s"$kind for $table carries no lineage watermark (created over a " +
         "table without tsd_id system columns, or a pre-watermark " +
@@ -2237,14 +2287,13 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     require(base.columns.contains("tsd_id"),
       s"table $table carries no tsd_id column — sync cannot identify " +
         "missed batches")
-    import org.apache.spark.sql.functions.col
     val missed = base.filter(col("tsd_id").cast("long") > wm)
     val n = missed.count()
     if (n == 0L) s"$kind for $table in sync (watermark $wm)"
     else {
-      fold(missed.localCheckpoint(), None)
+      a.fold(missed.localCheckpoint(), None)
       s"$kind for $table synced: $n missed row(s) folded, " +
-        s"watermark $wm -> ${indexWmOf(path)}"
+        s"watermark $wm -> ${indexWmOf(a.path)}"
     }
   }
 
@@ -4209,25 +4258,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // lineage watermark seeded in the same commit (`rollup sync`)
     graft.ops.IndexStore.write(rolled, meta.path,
       wmTag(mvTableWm(catalog.table(table))))
-    rollups += table -> meta
+    rollups.register(table, meta)
     catalog.recordArtifact(s"rollup:${meta.path}",
       s"rollup attach where table = $table and path = ${meta.path}")
     s"rollup for $table created at ${meta.path} " +
       s"(${rolled.count()} ${meta.grain} buckets)"
-  }
-
-  /** `rollup refresh where table = <t> and source = <table|path>` — fold
-    * a DELTA (a registered table/view or a parquet path) into the
-    * standing rollup; event history is never rescanned. */
-  private def rollupRefresh(t: String): String = {
-    val body = t.substring("rollup refresh".length).trim
-      .stripPrefix("where").trim
-    val table = reqArg(body, "table", "rollup refresh")
-    val meta = rollups.getOrElse(table,
-      throw new IllegalArgumentException(s"no rollup registered for $table"))
-    val delta = tableOrPath(reqArg(body, "source", "rollup refresh"))
-    val n = foldRollup(meta, delta, None).count()
-    s"rollup for $table refreshed ($n ${meta.grain} buckets)"
   }
 
   /** `rollup delete where table = <t> and (before = <ts> | source =
@@ -4242,35 +4277,32 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * touched (partition-prunable) buckets. */
   private def rollupDelete(t: String): String = {
     val table = reqArg(t, "table", "rollup delete")
-    val meta = rollups.getOrElse(table,
-      throw new IllegalArgumentException(s"no rollup registered for $table"))
-    val cur = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no rollup artifact at ${meta.path}"))
-    val next = (arg(t, "before"), arg(t, "source")) match {
-      case (Some(cutoff), None) =>
-        // the \S+ capture stops at whitespace; accept quoted full
-        // timestamps too
-        val c = "(?i)\\bbefore\\s*=\\s*'([^']+)'".r.findFirstMatchIn(t)
-          .map(_.group(1)).getOrElse(cutoff)
-        graft.ops.Rollup.deleteBefore(cur, c)
-      case (None, Some(src)) =>
-        val baseName = arg(t, "base").getOrElse(
-          throw new IllegalArgumentException(
-            "rollup delete with source = needs base = <table> (the " +
-              "table AFTER the rows were removed) to recompute " +
-              "touched buckets"))
-        graft.ops.Rollup.deleteRows(cur, tableOrPath(src),
-          catalog.table(baseName), meta.dims, meta.valueCols)
-      case _ => throw new IllegalArgumentException(
-        "rollup delete takes EITHER before = <ts> OR source = <rows> " +
-          "and base = <table>")
+    val meta = rollups(table).meta
+    // retention/row deletes don't advance lineage ([[rewrite]])
+    val v = rewrite(meta.path, "rollup artifact", None) { cur =>
+      (arg(t, "before"), arg(t, "source")) match {
+        case (Some(cutoff), None) =>
+          // the \S+ capture stops at whitespace; accept quoted full
+          // timestamps too
+          val c = "(?i)\\bbefore\\s*=\\s*'([^']+)'".r.findFirstMatchIn(t)
+            .map(_.group(1)).getOrElse(cutoff)
+          graft.ops.Rollup.deleteBefore(cur, c)
+        case (None, Some(src)) =>
+          val baseName = arg(t, "base").getOrElse(
+            throw new IllegalArgumentException(
+              "rollup delete with source = needs base = <table> (the " +
+                "table AFTER the rows were removed) to recompute " +
+                "touched buckets"))
+          graft.ops.Rollup.deleteRows(cur, tableOrPath(src),
+            catalog.table(baseName), meta.dims, meta.valueCols)
+        case _ => throw new IllegalArgumentException(
+          "rollup delete takes EITHER before = <ts> OR source = <rows> " +
+            "and base = <table>")
+      }
     }
-    val out = next.localCheckpoint()
-    // retention/row deletes don't advance lineage — the wm_ tag rides
-    // onto the new version unchanged
-    graft.ops.IndexStore.write(out, meta.path,
-      wmTag(indexWmOf(meta.path)))
-    s"rollup for $table: ${out.count()} ${meta.grain} buckets remain"
+    s"rollup for $table: " +
+      s"${graft.ops.IndexStore.readVersion(spark, meta.path, v).count()} " +
+      s"${meta.grain} buckets remain"
   }
 
   /** `vindex create where table = <t> and path = <dir> and id = <col>
@@ -4313,27 +4345,13 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     }
     // seed the lineage watermark (a wm_ tag on the same commit) so
     // `vindex sync` can replay crash-missed batches exactly
-    val rows = graft.ops.IndexStore.write(built.localCheckpoint(), path,
+    val v = graft.ops.IndexStore.write(built.localCheckpoint(), path,
       wmTag(mvTableWm(src)))
-    vindexes += table -> VIndexMeta(path, kind, idCol, vecCol, numSub)
+    vindexes.register(table, VIndexMeta(path, kind, idCol, vecCol, numSub))
     catalog.recordArtifact(s"vindex:$path",
       s"vindex attach where table = $table and path = $path and " +
         s"type = $kind and id = $idCol and vector = $vecCol")
-    s"vindex for $table created at $path (type=$kind, $rows index rows)"
-  }
-
-  /** `vindex refresh where table = <t> and source = <table|path>` —
-    * fold a batch of NEW vectors into the standing index (PQ: encode
-    * against the RECORDED books; IVF: assign to the recorded
-    * centroids). The corpus is never re-read and the artifact commits
-    * as a fresh IndexStore version. */
-  private def vindexRefresh(t: String): String = {
-    val table = reqArg(t, "table", "vindex refresh")
-    val meta = vindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no vindex registered for $table"))
-    val delta = tableOrPath(reqArg(t, "source", "vindex refresh"))
-    val rows = foldVindex(meta, delta, None)
-    s"vindex for $table refreshed ($rows index rows)"
+    s"vindex for $table created at $path (type=$kind, version $v)"
   }
 
   /** The rollup fold body — shared by `rollup refresh`, the ingest
@@ -4342,39 +4360,53 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * watermark family — a batch missed during an auto-refresh-off
     * window is now reconcilable instead of stale-forever). `deltaWm`
     * is the delta's highest tsd_id when the caller knows it; otherwise
-    * it is scanned. Returns the committed state. */
+    * it is scanned. Returns the committed version. */
   private def foldRollup(meta: graft.dialect.RollupServe.Meta,
-      delta: org.apache.spark.sql.DataFrame, tag: Option[String],
-      deltaWm: Option[Long] = None): org.apache.spark.sql.DataFrame = {
+      delta: DataFrame, tag: Option[String], deltaWm: Option[Long]): Long = {
     val newWm = foldedWm(meta.path, delta, deltaWm)
-    graft.ops.Rollup.refreshStore(spark, meta.path, delta, meta.tsCol,
+    graft.ops.Rollup.foldStore(spark, meta.path, delta, meta.tsCol,
       meta.grain, meta.dims, meta.valueCols, tag.toSeq ++ wmTag(newWm))
+  }
+
+  /** `drop partition`'s rollup fold: targeted re-aggregation over the
+    * SURVIVOR frame AS OF the rollup's lineage watermark. Dropped
+    * buckets recompute to empty and retire, and a rollup bucket COARSER
+    * than the partition unit (it then spans surviving days) recomputes
+    * from exactly the rows the rollup had folded — recomputing from the
+    * full current survivors would ABSORB pending unfolded rows, which a
+    * later `rollup sync` (tsd_id > wm) would then fold AGAIN (double
+    * count). */
+  private def retainRollup(meta: graft.dialect.RollupServe.Meta,
+      dropped: DataFrame, survivors: DataFrame, tag: String): String = {
+    val rwm = indexWmOf(meta.path)
+    val recomputeBase =
+      if (rwm >= 0 && survivors.columns.contains("tsd_id"))
+        survivors.filter(col("tsd_id").cast("long") <= rwm)
+      else survivors
+    rewrite(meta.path, "rollup artifact", Some(tag))(
+      graft.ops.Rollup.deleteRows(_, dropped, recomputeBase.drop("__par"),
+        meta.dims, meta.valueCols))
+    "recomputed over survivors"
   }
 
   /** The vindex fold body (encode/assign a batch against the RECORDED
     * geometry, commit a fresh version) — shared by `vindex refresh`
     * and the ingest auto-fold (which passes the exactly-once batch
     * tag). */
-  private def foldVindex(meta: VIndexMeta,
-      delta: org.apache.spark.sql.DataFrame, tag: Option[String],
-      deltaWm: Option[Long] = None): Long = {
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no vindex artifact at ${meta.path}"))
-    // a lineage-stamped delta advances the artifact's wm_ tag in the
-    // SAME commit as the fold (mirrors the matview watermark rider)
-    val newWm = foldedWm(meta.path, delta, deltaWm)
-    val folded = (meta.kind match {
-      case "pq" => graft.ops.Similarity.refreshPqIndex(stored, delta,
-        meta.vecCol, meta.idCol, meta.numSub)
-      case "rpq" => graft.ops.Similarity.refreshResidualIvfIndex(stored,
-        delta, meta.vecCol, meta.idCol, meta.numSub)
-      case "sq8" => graft.ops.Similarity.refreshSq8Index(stored, delta,
-        meta.vecCol, meta.idCol)
-      case _ => graft.ops.Similarity.refreshIvfIndex(stored, delta,
-        meta.vecCol, meta.idCol)
-    }).localCheckpoint()
-    graft.ops.IndexStore.write(folded, meta.path, tag.toSeq ++ wmTag(newWm))
-  }
+  private def foldVindex(meta: VIndexMeta, delta: DataFrame,
+      tag: Option[String], deltaWm: Option[Long]): Long =
+    foldInto(meta.path, "vindex artifact", delta, tag, deltaWm) { stored =>
+      meta.kind match {
+        case "pq" => graft.ops.Similarity.refreshPqIndex(stored, delta,
+          meta.vecCol, meta.idCol, meta.numSub)
+        case "rpq" => graft.ops.Similarity.refreshResidualIvfIndex(stored,
+          delta, meta.vecCol, meta.idCol, meta.numSub)
+        case "sq8" => graft.ops.Similarity.refreshSq8Index(stored, delta,
+          meta.vecCol, meta.idCol)
+        case _ => graft.ops.Similarity.refreshIvfIndex(stored, delta,
+          meta.vecCol, meta.idCol)
+      }
+    }
 
   /** `vindex delete where table = <t> and (ids = (1, 2, 3) | source =
     * <table|path> [and id = <col>])` — tombstone a set of vector ids
@@ -4385,18 +4417,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * Serve-after-delete == serve-over-survivors exactly (q175). */
   private def vindexDelete(t: String): String = {
     val table = reqArg(t, "table", "vindex delete")
-    val meta = vindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no vindex registered for $table"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no vindex artifact at ${meta.path}"))
+    val vindex = vindexes(table)
+    val (meta, stored) = (vindex.meta, vindex.state)
     val before = stored.count()
-    val folded = graft.ops.Similarity.deleteFromIndex(stored,
-      deleteIdsFrame(t, Some(meta.idCol))).localCheckpoint()
-    val removed = before - folded.count()
-    // deletes don't advance lineage, but the wm_ tag must ride onto
-    // the new version or the artifact would LOSE its watermark
-    graft.ops.IndexStore.write(folded, meta.path,
-      wmTag(indexWmOf(meta.path)))
+    // deletes don't advance lineage ([[rewrite]] carries the wm_ tag)
+    val v = rewrite(meta.path, "vindex artifact", None)(
+      graft.ops.Similarity.deleteFromIndex(_,
+        deleteIdsFrame(t, Some(meta.idCol))))
+    val removed = before -
+      graft.ops.IndexStore.readVersion(spark, meta.path, v).count()
     s"vindex for $table: $removed coded row(s) deleted " +
       s"(geometry retained)"
   }
@@ -4408,26 +4437,29 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * touch the corpus floats (PQ) / never scan outside routed cells
     * (IVF). */
   private def vindexSearch(t: String): String = {
-    val table = reqArg(t, "table", "vindex search")
-    val meta = vindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no vindex registered for $table"))
+    val vindex = vindexes(reqArg(t, "table", "vindex search"))
     val probes = tableOrPath(reqArg(t, "probes", "vindex search"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no vindex artifact at ${meta.path}"))
-    val k = reqArg(t, "k", "vindex search").toInt
-    val result = meta.kind match {
+    rendered(t, vindexTopK(vindex, probes,
+      reqArg(t, "k", "vindex search").toInt, t))
+  }
+
+  /** ANN top-k of `probes` over a vindex's stored state: ADC over PQ
+    * codes, or cell-local search over the `nprobe` (an option of the
+    * command `t`, default 1) cells each probe routes to. */
+  private def vindexTopK(vindex: vindexes.Artifact, probes: DataFrame,
+      k: Int, t: String): DataFrame = {
+    val (meta, stored) = (vindex.meta, vindex.state)
+    val nprobe = arg(t, "nprobe").map(_.toInt).getOrElse(1)
+    meta.kind match {
       case "pq" => graft.ops.Similarity.pqSearchIndex(stored, probes,
         meta.vecCol, meta.idCol, k, meta.numSub)
       case "rpq" => graft.ops.Similarity.searchResidualIndex(stored,
-        probes, meta.vecCol, meta.idCol, k,
-        arg(t, "nprobe").map(_.toInt).getOrElse(1), meta.numSub)
+        probes, meta.vecCol, meta.idCol, k, nprobe, meta.numSub)
       case "sq8" => graft.ops.Similarity.sq8SearchIndex(stored, probes,
         meta.vecCol, meta.idCol, k)
       case _ => graft.ops.Similarity.ivfSearchIndex(stored, probes,
-        meta.vecCol, meta.idCol, k,
-        arg(t, "nprobe").map(_.toInt).getOrElse(1))
+        meta.vecCol, meta.idCol, k, nprobe)
     }
-    rendered(t, result)
   }
 
   /** `vindex negatives where table = <t> and probes = <table|path> and
@@ -4446,29 +4478,16 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * label column. */
   private def vindexNegatives(t: String): String = {
     val table = reqArg(t, "table", "vindex negatives")
-    val meta = vindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no vindex registered for $table"))
+    val vindex = vindexes(table)
+    val meta = vindex.meta
     val probes = tableOrPath(reqArg(t, "probes", "vindex negatives"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no vindex artifact at ${meta.path}"))
     val k = reqArg(t, "k", "vindex negatives").toInt
     val labelCol = reqArg(t, "label", "vindex negatives")
     val oversample = arg(t, "oversample").map(_.toInt).getOrElse(4)
     require(k >= 1 && oversample >= 1)
     val kBig = k * oversample
     import org.apache.spark.sql.functions.{broadcast, col, row_number}
-    val raw = meta.kind match {
-      case "pq" => graft.ops.Similarity.pqSearchIndex(stored, probes,
-        meta.vecCol, meta.idCol, kBig, meta.numSub)
-      case "rpq" => graft.ops.Similarity.searchResidualIndex(stored,
-        probes, meta.vecCol, meta.idCol, kBig,
-        arg(t, "nprobe").map(_.toInt).getOrElse(1), meta.numSub)
-      case "sq8" => graft.ops.Similarity.sq8SearchIndex(stored, probes,
-        meta.vecCol, meta.idCol, kBig)
-      case _ => graft.ops.Similarity.ivfSearchIndex(stored, probes,
-        meta.vecCol, meta.idCol, kBig,
-        arg(t, "nprobe").map(_.toInt).getOrElse(1))
-    }
+    val raw = vindexTopK(vindex, probes, kBig, t)
     val candLabels = catalog.table(table)
       .select(col(meta.idCol).as("id"), col(labelCol).as("neg_label"))
     val probeLabels = probes
@@ -4506,9 +4525,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           .getInt(0) + 1
       case _ => 0 // ivf and sq8 carry their geometry in the artifact
     }
-    vindexes += table -> VIndexMeta(path, kind,
+    vindexes.register(table, VIndexMeta(path, kind,
       reqArg(t, "id", "vindex attach"), reqArg(t, "vector", "vindex attach"),
-      numSub)
+      numSub))
     s"vindex for $table attached from $path (type=$kind" +
       (if (kind == "pq" || kind == "rpq") s", numsub=$numSub" else "") +
       ")"
@@ -4530,62 +4549,38 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val built = graft.ops.Retrieval.postingsIndex(src, textCol, idCol)
     // lineage watermark seeded on the same commit (`tindex sync` reads
     // it; the grams sidecar follows the main artifact)
-    val rows = graft.ops.IndexStore.write(built.localCheckpoint(), path,
+    val v = graft.ops.IndexStore.write(built.localCheckpoint(), path,
       wmTag(mvTableWm(src)))
     if (grams) graft.ops.IndexStore.write(
       graft.ops.Retrieval.trigramIndex(src, textCol, idCol)
         .localCheckpoint(), s"$path-grams")
-    tindexes += table -> TIndexMeta(path, idCol, textCol, grams)
+    tindexes.register(table, TIndexMeta(path, idCol, textCol, grams))
     catalog.recordArtifact(s"tindex:$path",
       s"tindex attach where table = $table and path = $path and " +
         s"id = $idCol and text = $textCol")
-    s"tindex for $table created at $path ($rows index rows" +
+    s"tindex for $table created at $path (version $v" +
       (if (grams) ", +trigram sidecar" else "") + ")"
-  }
-
-  /** `tindex refresh where table = <t> and source = <table|path>` —
-    * fold a batch of docs into the standing postings index (per-doc
-    * state only, so fold == rebuild; existing batch ids are replaced).
-    * Commits as a fresh IndexStore version. */
-  private def tindexRefresh(t: String): String = {
-    val table = reqArg(t, "table", "tindex refresh")
-    val meta = tindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no tindex registered for $table"))
-    val delta = tableOrPath(reqArg(t, "source", "tindex refresh"))
-    val rows = foldTindex(meta, delta, None)
-    s"tindex for $table refreshed ($rows index rows)"
   }
 
   /** The tindex fold body (per-doc replace-on-refold postings + the
     * trigram sidecar when present) — shared by `tindex refresh` and
     * the ingest auto-fold. Per-doc state makes the fold idempotent;
     * the tag additionally skips replayed batches outright. */
-  private def foldTindex(meta: TIndexMeta,
-      delta: org.apache.spark.sql.DataFrame, tag: Option[String],
-      deltaWm: Option[Long] = None): Long = {
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
-    val newWm = foldedWm(meta.path, delta, deltaWm)
-    val folded = graft.ops.Retrieval.refreshPostingsIndex(stored, delta,
-      meta.textCol, meta.idCol).localCheckpoint()
-    val rows = graft.ops.IndexStore.write(folded, meta.path,
-      tag.toSeq ++ wmTag(newWm))
+  private def foldTindex(meta: TIndexMeta, delta: DataFrame,
+      tag: Option[String], deltaWm: Option[Long]): Long = {
+    val v = foldInto(meta.path, "tindex artifact", delta, tag, deltaWm)(
+      graft.ops.Retrieval.refreshPostingsIndex(_, delta, meta.textCol,
+        meta.idCol))
     if (meta.grams) {
-      import org.apache.spark.sql.functions.col
-      val prev = graft.ops.IndexStore
-        .read(spark, s"${meta.path}-grams").getOrElse(
-          throw new IllegalStateException(
-            s"no trigram sidecar at ${meta.path}-grams"))
       val fresh = graft.ops.Retrieval.trigramIndex(delta, meta.textCol,
         meta.idCol)
       // same replace-on-refold contract as the postings fold
-      val foldedG = prev
+      rewrite(s"${meta.path}-grams", "trigram sidecar", tag)(_
         .join(fresh.select(col("id").as("__bid")).distinct(),
           col("id") === col("__bid"), "left_anti")
-        .unionByName(fresh).localCheckpoint()
-      graft.ops.IndexStore.write(foldedG, s"${meta.path}-grams", tag)
+        .unionByName(fresh))
     }
-    rows
+    v
   }
 
   /** `tindex delete where table = <t> and (ids = (1, 2, 3) | source =
@@ -4597,29 +4592,26 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * (q176). Commits as fresh crash-atomic IndexStore versions. */
   private def tindexDelete(t: String): String = {
     val table = reqArg(t, "table", "tindex delete")
-    val meta = tindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no tindex registered for $table"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
+    val tindex = tindexes(table)
+    val (meta, stored) = (tindex.meta, tindex.state)
     val del = deleteIdsFrame(t, Some(meta.idCol)).localCheckpoint()
     val before = stored.count()
-    val folded = graft.ops.Retrieval.deleteFromPostingsIndex(stored, del)
-      .localCheckpoint()
-    val removed = before - folded.count()
-    // the wm_ tag rides onto the new version (deletes don't advance it)
-    graft.ops.IndexStore.write(folded, meta.path,
-      wmTag(indexWmOf(meta.path)))
-    if (meta.grams) {
-      val prev = graft.ops.IndexStore
-        .read(spark, s"${meta.path}-grams").getOrElse(
-          throw new IllegalStateException(
-            s"no trigram sidecar at ${meta.path}-grams"))
-      graft.ops.IndexStore.write(
-        graft.ops.Retrieval.deleteFromPostingsIndex(prev, del)
-          .localCheckpoint(), s"${meta.path}-grams")
-    }
+    val v = tombstoneTindex(meta, del, None)
+    val removed = before -
+      graft.ops.IndexStore.readVersion(spark, meta.path, v).count()
     s"tindex for $table: $removed index row(s) deleted" +
       (if (meta.grams) " (+trigram sidecar)" else "")
+  }
+
+  /** Tombstone doc ids out of a tindex and its trigram sidecar, once
+    * per `tag`; returns the postings' committed version. */
+  private def tombstoneTindex(meta: TIndexMeta, del: DataFrame,
+      tag: Option[String]): Long = {
+    val v = rewrite(meta.path, "tindex artifact", tag)(
+      graft.ops.Retrieval.deleteFromPostingsIndex(_, del))
+    if (meta.grams) rewrite(s"${meta.path}-grams", "trigram sidecar", tag)(
+      graft.ops.Retrieval.deleteFromPostingsIndex(_, del))
+    v
   }
 
   /** `dedup index create where table = <t> and path = <dir> and
@@ -4643,31 +4635,35 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       "dedup index create")
     val n = arg(t, "n").map(_.toInt).getOrElse(3)
     val src = catalog.table(table)
-    val built = kind match {
-      case "shingle" =>
-        graft.ops.Dedup.shingleIndex(src, contentCol, idCol, n)
-      case "simhash" =>
-        graft.ops.Dedup.simhashIndex(src, contentCol, idCol)
-      case "exact" =>
-        graft.ops.Dedup.exactHashIndex(src, contentCol, idCol)
-      case _ =>
-        // embedding: pinned or corpus-derived LSH geometry, RECORDED
-        // on the rows (refresh reads it back — no meta to remember)
-        graft.ops.Dedup.embeddingIndex(src, contentCol, idCol,
-          bits = arg(t, "bits").map(_.toInt).getOrElse(0),
-          tables = arg(t, "tables").map(_.toInt).getOrElse(0))
-    }
-    val rows = graft.ops.IndexStore.write(built.localCheckpoint(), path,
+    // embedding: pinned or corpus-derived LSH geometry, RECORDED on the
+    // rows (refresh reads it back — no meta to remember)
+    val built = dedupBuild(kind, src, contentCol, idCol, n,
+      (arg(t, "bits").map(_.toInt).getOrElse(0),
+        arg(t, "tables").map(_.toInt).getOrElse(0)))
+    val v = graft.ops.IndexStore.write(built.localCheckpoint(), path,
       wmTag(mvTableWm(src)))
     if (kind == "exact") rebuildBloomSidecar(path, None)
-    dindexes += table -> DIndexMeta(path, kind, idCol, contentCol, n)
+    dindexes.register(table, DIndexMeta(path, kind, idCol, contentCol, n))
     val colKey = if (kind == "embedding") "vector" else "text"
     catalog.recordArtifact(s"dedup index:$path",
       s"dedup index attach where table = $table and path = $path and " +
         s"type = $kind and id = $idCol and $colKey = $contentCol and n = $n")
-    s"dedup index for $table created at $path (type=$kind, " +
-      s"version $rows)"
+    s"dedup index for $table created at $path (type=$kind, version $v)"
   }
+
+  /** A dedup index of `kind` over `src`; an embedding index takes its
+    * LSH geometry (bits, tables) from `geometry`. */
+  private def dedupBuild(kind: String, src: DataFrame, contentCol: String,
+      idCol: String, n: Int, geometry: => (Int, Int)): DataFrame =
+    kind match {
+      case "shingle" => graft.ops.Dedup.shingleIndex(src, contentCol, idCol, n)
+      case "simhash" => graft.ops.Dedup.simhashIndex(src, contentCol, idCol)
+      case "exact" => graft.ops.Dedup.exactHashIndex(src, contentCol, idCol)
+      case _ =>
+        val (bits, tables) = geometry
+        graft.ops.Dedup.embeddingIndex(src, contentCol, idCol,
+          bits = bits, tables = tables)
+    }
 
   /** `dedup index attach where table/path/type/id/text [n]` — restart
     * re-registration. */
@@ -4677,11 +4673,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     require(graft.ops.IndexStore.read(spark, path).isDefined,
       s"no dedup index artifact at $path")
     val kind = reqArg(t, "type", "dedup index attach").toLowerCase
-    dindexes += table -> DIndexMeta(path, kind,
+    dindexes.register(table, DIndexMeta(path, kind,
       reqArg(t, "id", "dedup index attach"),
       reqArg(t, if (kind == "embedding") "vector" else "text",
         "dedup index attach"),
-      arg(t, "n").map(_.toInt).getOrElse(3))
+      arg(t, "n").map(_.toInt).getOrElse(3)))
     s"dedup index for $table attached from $path"
   }
 
@@ -4689,52 +4685,67 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * simhash/tindex contract — replay-idempotent), shingle enrichment
     * (df / rank / size) re-derived over the union so fold == rebuild;
     * the wm_ lineage tag advances in the same commit. */
-  private def foldDindex(meta: DIndexMeta,
-      delta: org.apache.spark.sql.DataFrame, tag: Option[String],
-      deltaWm: Option[Long] = None): Long = {
-    import org.apache.spark.sql.functions.col
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(
-        s"no dedup index artifact at ${meta.path}"))
-    val newWm = foldedWm(meta.path, delta, deltaWm)
+  private def foldDindex(meta: DIndexMeta, delta: DataFrame,
+      tag: Option[String], deltaWm: Option[Long]): Long = {
     val batchIds = delta.select(col(meta.idCol).as("__bid")).distinct()
-    val survivors = stored.join(batchIds,
-      col("id") === col("__bid"), "left_anti")
-    val folded = (meta.kind match {
-      case "shingle" =>
-        graft.ops.Dedup.refreshShingleIndex(survivors, delta,
-          meta.contentCol, meta.idCol, meta.shingleN)
-      case "simhash" =>
-        graft.ops.Dedup.refreshSimhashIndex(survivors, delta,
-          meta.contentCol, meta.idCol)
-      case "exact" =>
-        survivors.unionByName(graft.ops.Dedup.exactHashIndex(delta,
-          meta.contentCol, meta.idCol))
-      case _ =>
-        graft.ops.Dedup.refreshEmbeddingIndex(survivors, delta,
-          meta.contentCol, meta.idCol)
-    }).localCheckpoint()
-    val v = graft.ops.IndexStore.write(folded, meta.path,
-      tag.toSeq ++ wmTag(newWm))
+    val v = foldInto(meta.path, "dedup index artifact", delta, tag,
+        deltaWm) { stored =>
+      val survivors =
+        stored.join(batchIds, col("id") === col("__bid"), "left_anti")
+      meta.kind match {
+        case "shingle" =>
+          graft.ops.Dedup.refreshShingleIndex(survivors, delta,
+            meta.contentCol, meta.idCol, meta.shingleN)
+        case "simhash" =>
+          graft.ops.Dedup.refreshSimhashIndex(survivors, delta,
+            meta.contentCol, meta.idCol)
+        case "exact" =>
+          survivors.unionByName(graft.ops.Dedup.exactHashIndex(delta,
+            meta.contentCol, meta.idCol))
+        case _ =>
+          graft.ops.Dedup.refreshEmbeddingIndex(survivors, delta,
+            meta.contentCol, meta.idCol)
+      }
+    }
     if (meta.kind == "exact") rebuildBloomSidecar(meta.path, tag)
     v
   }
 
   /** Re-derive the exact-index Bloom PREFILTER sidecar
-    * (`<path>-bloom`) from the hashes artifact's CURRENT version.
-    * Rebuilt — never OR-folded — so deletes and partition drops shed
-    * their bits: correctness never depends on it (the gate's exact
-    * join follows every hit), but a one-way-only sidecar would creep
-    * toward all-hits as retention churns. One aggregate over
-    * corpus-count hash rows; geometry re-derives from the live count
-    * so the fp rate stays designed as the corpus grows or shrinks. */
-  private def rebuildBloomSidecar(path: String,
-      tag: Option[String]): Unit = {
-    val hashes = graft.ops.IndexStore.read(spark, path).getOrElse(
-      throw new IllegalStateException(s"no exact-hash artifact at $path"))
-    graft.ops.IndexStore.write(
-      graft.ops.Dedup.bloomIndex(hashes, "h", shards = 2, bitsPerKey = 8)
-        .localCheckpoint(), s"$path-bloom", tag.toSeq)
+    * (`<path>-bloom`) from the hashes artifact's CURRENT version, once
+    * per `tag`. Rebuilt — never OR-folded — so deletes and partition
+    * drops shed their bits: a one-way-only sidecar would creep toward
+    * all-hits as retention churns. Extra bits only cost false-positive
+    * probes (the gate's exact join follows every hit), but MISSING bits
+    * change the answer: a Bloom miss is "definitely new", so the gate
+    * admits duplicates of whatever the sidecar has not folded. One
+    * aggregate over corpus-count hash rows; geometry re-derives from
+    * the live count so the fp rate stays designed as the corpus grows
+    * or shrinks. */
+  private def rebuildBloomSidecar(path: String, tag: Option[String]): Unit =
+    commitOnce(s"$path-bloom", tag)(graft.ops.IndexStore.write(
+      graft.ops.Dedup.bloomIndex(stateAt(path, "exact-hash artifact"), "h",
+        shards = 2, bitsPerKey = 8).localCheckpoint(), s"$path-bloom",
+      tag.toSeq))
+
+  /** Tombstone doc ids out of the dedup index of `kind` at `path` and
+    * its Bloom sidecar, once per `tag`; returns the index's committed
+    * version. Deleted content becomes re-INGESTABLE: the prefilter sheds
+    * its bits with the rebuild (a one-way sidecar would keep "maybe"-ing
+    * hashes the exact join no longer holds). */
+  private def tombstoneDindex(path: String, kind: String, ids: DataFrame,
+      tag: Option[String]): Long = {
+    val v = rewrite(path, "dedup index artifact", tag) { stored =>
+      kind match {
+        case "simhash" => graft.ops.Dedup.deleteFromSimhashIndex(stored, ids)
+        case "embedding" =>
+          graft.ops.Dedup.deleteFromEmbeddingIndex(stored, ids)
+        case "exact" => graft.ops.Dedup.deleteFromExactIndex(stored, ids)
+        case _ => graft.ops.Dedup.deleteFromShingleIndex(stored, ids)
+      }
+    }
+    if (kind == "exact") rebuildBloomSidecar(path, tag)
+    v
   }
 
   /** `dedup index delete where path = <dir> and (ids = (1, 2, 3) |
@@ -4749,33 +4760,16 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val path = reqArg(t, "path", "dedup index delete")
     val stored = graft.ops.IndexStore.read(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no dedup index at $path"))
-    import org.apache.spark.sql.functions.countDistinct
-    val before = stored.select(countDistinct(
-      org.apache.spark.sql.functions.col("id"))).head().getLong(0)
+    def docs(df: DataFrame) =
+      df.select(countDistinct(col("id"))).head().getLong(0)
+    val before = docs(stored)
     // a REGISTERED simhash/embedding artifact at this path deletes by
     // pure anti-join; shingle (the default — historical behavior for
     // unregistered paths) re-enriches df/rank/size over survivors
-    val kind = dindexes.values.find(_.path == path).map(_.kind)
+    val kind = dindexes.metas.find(_.path == path).map(_.kind)
       .getOrElse("shingle")
-    val folded = (kind match {
-      case "simhash" =>
-        graft.ops.Dedup.deleteFromSimhashIndex(stored, deleteIdsFrame(t))
-      case "embedding" =>
-        graft.ops.Dedup.deleteFromEmbeddingIndex(stored,
-          deleteIdsFrame(t))
-      case "exact" =>
-        graft.ops.Dedup.deleteFromExactIndex(stored, deleteIdsFrame(t))
-      case _ =>
-        graft.ops.Dedup.deleteFromShingleIndex(stored, deleteIdsFrame(t))
-    }).localCheckpoint()
-    val after = folded.select(countDistinct(
-      org.apache.spark.sql.functions.col("id"))).head().getLong(0)
-    // the wm_ lineage tag (when present) rides onto the new version
-    graft.ops.IndexStore.write(folded, path, wmTag(indexWmOf(path)))
-    // deleted content becomes re-INGESTABLE: the prefilter sheds its
-    // bits with the rebuild (a one-way sidecar would keep "maybe"-ing
-    // hashes the exact join no longer holds)
-    if (kind == "exact") rebuildBloomSidecar(path, None)
+    val v = tombstoneDindex(path, kind, deleteIdsFrame(t), None)
+    val after = docs(graft.ops.IndexStore.readVersion(spark, path, v))
     s"dedup index at $path: ${before - after} doc(s) deleted, " +
       s"$after remain"
   }
@@ -4784,35 +4778,27 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * [and w = <n>] [and format = table]` — unordered proximity
     * (NEAR/w) with per-doc pair count and closest distance. */
   private def tindexNear(t: String): String = {
-    val meta = tindexes.getOrElse(reqArg(t, "table", "tindex near"),
-      throw new IllegalArgumentException(
-        s"no tindex registered for ${reqArg(t, "table", "tindex near")}"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
-    import org.apache.spark.sql.functions.lit
-    val pairs = spark.range(1).select(
-      lit(reqArg(t, "w1", "tindex near")).as("w1"),
-      lit(reqArg(t, "w2", "tindex near")).as("w2"))
-    val result = graft.ops.Retrieval.proximityMatch(stored, pairs,
-      arg(t, "w").map(_.toInt).getOrElse(5))
+    val stored = tindexes(reqArg(t, "table", "tindex near")).state
+    val result = graft.ops.Retrieval.proximityMatch(stored,
+      termPair(t, "tindex near"), arg(t, "w").map(_.toInt).getOrElse(5))
     rendered(t, result)
   }
+
+  /** The one-row (w1, w2) term-pair frame of a tindex near / snippet /
+    * phrase command `t`. */
+  private def termPair(t: String, cmd: String): DataFrame =
+    spark.range(1).select(lit(reqArg(t, "w1", cmd)).as("w1"),
+      lit(reqArg(t, "w2", cmd)).as("w2"))
 
   /** `tindex snippet where table = <t> and w1 = <term> and w2 = <term>
     * [and window = <n>] [and format = table]` — KWIC context windows
     * around each matched doc's first phrase occurrence. */
   private def tindexSnippet(t: String): String = {
     val table = reqArg(t, "table", "tindex snippet")
-    val meta = tindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no tindex registered for $table"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
-    import org.apache.spark.sql.functions.lit
-    val pairs = spark.range(1).select(
-      lit(reqArg(t, "w1", "tindex snippet")).as("w1"),
-      lit(reqArg(t, "w2", "tindex snippet")).as("w2"))
-    val result = graft.ops.Retrieval.snippets(stored,
-      catalog.table(table), pairs, meta.textCol, meta.idCol,
+    val tindex = tindexes(table)
+    val (meta, stored) = (tindex.meta, tindex.state)
+    val result = graft.ops.Retrieval.snippets(stored, catalog.table(table),
+      termPair(t, "tindex snippet"), meta.textCol, meta.idCol,
       arg(t, "window").map(_.toInt).getOrElse(3))
     rendered(t, result)
   }
@@ -4822,8 +4808,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * (requires the `grams = true` sidecar from `tindex create`). */
   private def tindexLike(t: String): String = {
     val table = reqArg(t, "table", "tindex like")
-    val meta = tindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no tindex registered for $table"))
+    val meta = tindexes(table).meta
     require(meta.grams, s"tindex for $table was created without " +
       "grams = true; rebuild with the trigram sidecar to use LIKE")
     val pattern = "(?i)\\bpattern\\s*=\\s*\"([^\"]+)\"".r
@@ -4831,10 +4816,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       .orElse(arg(t, "pattern"))
       .getOrElse(throw new IllegalArgumentException(
         "tindex like requires pattern = \"...\""))
-    val grams = graft.ops.IndexStore.read(spark, s"${meta.path}-grams")
-      .getOrElse(throw new IllegalStateException(
-        s"no trigram sidecar at ${meta.path}-grams"))
-    import org.apache.spark.sql.functions.lit
+    val grams = stateAt(s"${meta.path}-grams", "trigram sidecar")
     val result = graft.ops.Retrieval.likeSearch(grams,
       catalog.table(table), spark.range(1).select(lit(pattern).as("pat")),
       meta.textCol, meta.idCol)
@@ -4845,14 +4827,11 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * k = <n> [and format = table]` — BM25 top-k from the standing
     * artifact (k1=1.2, b=0.75). */
   private def tindexSearch(t: String): String = {
-    val table = reqArg(t, "table", "tindex search")
-    val meta = tindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no tindex registered for $table"))
+    val tindex = tindexes(reqArg(t, "table", "tindex search"))
     val probes = tableOrPath(reqArg(t, "probes", "tindex search"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
-    val result = graft.ops.Retrieval.bm25TopK(stored, probes,
-      meta.textCol, meta.idCol, reqArg(t, "k", "tindex search").toInt)
+    val result = graft.ops.Retrieval.bm25TopK(tindex.state, probes,
+      tindex.meta.textCol, tindex.meta.idCol,
+      reqArg(t, "k", "tindex search").toInt)
     rendered(t, result)
   }
 
@@ -4860,16 +4839,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * [and format = table]` — exact-adjacency phrase match with per-doc
     * phrase frequency, from position lists alone. */
   private def tindexPhrase(t: String): String = {
-    val table = reqArg(t, "table", "tindex phrase")
-    val meta = tindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no tindex registered for $table"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no tindex artifact at ${meta.path}"))
-    import org.apache.spark.sql.functions.lit
-    val phrases = spark.range(1).select(
-      lit(reqArg(t, "w1", "tindex phrase")).as("w1"),
-      lit(reqArg(t, "w2", "tindex phrase")).as("w2"))
-    val result = graft.ops.Retrieval.phraseMatch(stored, phrases)
+    val stored = tindexes(reqArg(t, "table", "tindex phrase")).state
+    val result = graft.ops.Retrieval.phraseMatch(stored,
+      termPair(t, "tindex phrase"))
     rendered(t, result)
   }
 
@@ -4883,8 +4855,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       s"no tindex artifact at $path")
     // the trigram sidecar's presence on disk IS the grams flag
     val grams = graft.ops.IndexStore.read(spark, s"$path-grams").isDefined
-    tindexes += table -> TIndexMeta(path, reqArg(t, "id", "tindex attach"),
-      reqArg(t, "text", "tindex attach"), grams)
+    tindexes.register(table, TIndexMeta(path,
+      reqArg(t, "id", "tindex attach"), reqArg(t, "text", "tindex attach"),
+      grams))
     s"tindex for $table attached from $path" +
       (if (grams) " (+trigram sidecar)" else "")
   }
@@ -4914,52 +4887,29 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val textCol = reqArg(t, "text", "sindex create")
     val k = reqArg(t, "k", "sindex create").toInt
     val built = sindexBuild(catalog.table(table), keyCol, textCol, k)
-    val rows = graft.ops.IndexStore.write(built.localCheckpoint(), path,
+    val v = graft.ops.IndexStore.write(built.localCheckpoint(), path,
       wmTag(mvTableWm(catalog.table(table))))
-    sindexes += table -> SIndexMeta(path, keyCol, textCol, k)
+    sindexes.register(table, SIndexMeta(path, keyCol, textCol, k))
     catalog.recordArtifact(s"sindex:$path",
       s"sindex attach where table = $table and path = $path and " +
         s"key = $keyCol and text = $textCol and k = $k")
-    s"sindex for $table created at $path ($rows keys)"
-  }
-
-  /** `sindex refresh where table = <t> and source = <table|path>` —
-    * fold a batch into the standing sketches by per-key bottom-k union
-    * (idempotent lattice join: fold == rebuild under any batch order).
-    * Commits as a fresh IndexStore version. */
-  private def sindexRefresh(t: String): String = {
-    val table = reqArg(t, "table", "sindex refresh")
-    val meta = sindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no sindex registered for $table"))
-    val delta = tableOrPath(reqArg(t, "source", "sindex refresh"))
-    val rows = foldSindex(meta, delta, None)
-    s"sindex for $table refreshed ($rows keys)"
+    s"sindex for $table created at $path (version $v)"
   }
 
   /** The sindex fold body (per-key bottom-k KMV union — an idempotent
     * lattice join, fold == rebuild under any batch order) — shared by
     * `sindex refresh` and the ingest auto-fold. */
-  private def foldSindex(meta: SIndexMeta,
-      delta: org.apache.spark.sql.DataFrame, tag: Option[String],
-      deltaWm: Option[Long] = None): Long = {
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no sindex artifact at ${meta.path}"))
-    val newWm = foldedWm(meta.path, delta, deltaWm)
-    val folded = graft.ops.Sketches.kmvMergeKeyed(stored,
-      sindexBuild(delta, meta.keyCol, meta.textCol, meta.k), meta.k)
-      .localCheckpoint()
-    graft.ops.IndexStore.write(folded, meta.path,
-      tag.toSeq ++ wmTag(newWm))
-  }
+  private def foldSindex(meta: SIndexMeta, delta: DataFrame,
+      tag: Option[String], deltaWm: Option[Long]): Long =
+    foldInto(meta.path, "sindex artifact", delta, tag, deltaWm)(
+      graft.ops.Sketches.kmvMergeKeyed(_,
+        sindexBuild(delta, meta.keyCol, meta.textCol, meta.k), meta.k))
 
   /** `sindex estimate where table = <t> [and format = table]` — per-key
     * distinct-cardinality estimates from the artifact alone. */
   private def sindexEstimate(t: String): String = {
-    val table = reqArg(t, "table", "sindex estimate")
-    val meta = sindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no sindex registered for $table"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no sindex artifact at ${meta.path}"))
+    val sindex = sindexes(reqArg(t, "table", "sindex estimate"))
+    val (meta, stored) = (sindex.meta, sindex.state)
     import org.apache.spark.sql.functions.{col, size}
     val result = stored.select(col("key"),
         size(col("sk")).cast("long").as("kmv_size"),
@@ -4976,10 +4926,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private def sindexOverlap(t: String): String = {
     val table = reqArg(t, "table", "sindex overlap")
     val topPairs = reqArg(t, "k", "sindex overlap").toInt
-    val meta = sindexes.getOrElse(table,
-      throw new IllegalArgumentException(s"no sindex registered for $table"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no sindex artifact at ${meta.path}"))
+    val sindex = sindexes(table)
+    val (meta, stored) = (sindex.meta, sindex.state)
     import org.apache.spark.sql.functions.col
     val result = stored.as("a").join(stored.as("b"),
         col("a.key") < col("b.key"))
@@ -5002,9 +4950,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val path = reqArg(t, "path", "sindex attach")
     require(graft.ops.IndexStore.read(spark, path).isDefined,
       s"no sindex artifact at $path")
-    sindexes += table -> SIndexMeta(path, reqArg(t, "key", "sindex attach"),
-      reqArg(t, "text", "sindex attach"),
-      reqArg(t, "k", "sindex attach").toInt)
+    sindexes.register(table, SIndexMeta(path,
+      reqArg(t, "key", "sindex attach"), reqArg(t, "text", "sindex attach"),
+      reqArg(t, "k", "sindex attach").toInt))
     s"sindex for $table attached from $path"
   }
 
@@ -5302,8 +5250,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val meta = monitors.getOrElse(table,
       throw new IllegalArgumentException(s"no monitor registered for $table"))
     val delta = tableOrPath(reqArg(t, "source", "monitor refresh"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no monitor state at ${meta.path}"))
+    val stored = stateAt(meta.path, "monitor state")
     val folded = graft.streaming.StreamOps.cusumFold(stored,
       monitorMinutes(delta, meta.keyCol, meta.tsCol)).localCheckpoint()
     val rows = graft.ops.IndexStore.write(folded, meta.path)
@@ -5316,8 +5263,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val table = reqArg(t, "table", "monitor level")
     val meta = monitors.getOrElse(table,
       throw new IllegalArgumentException(s"no monitor registered for $table"))
-    val stored = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-      throw new IllegalStateException(s"no monitor state at ${meta.path}"))
+    val stored = stateAt(meta.path, "monitor state")
     import org.apache.spark.sql.functions.col
     val result = graft.streaming.StreamOps.cusumLevel(stored)
       .orderBy(col("etype"))
@@ -5558,34 +5504,19 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * top k ([[graft.ops.Retrieval.rrfFuse]]). */
   private def hybridSearch(t: String): String = {
     val table = reqArg(t, "table", "hybrid search")
-    val tmeta = tindexes.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"hybrid search needs a tindex registered for $table"))
-    val vmeta = vindexes.getOrElse(table,
-      throw new IllegalArgumentException(
-        s"hybrid search needs a vindex registered for $table"))
+    def needs(word: String) = new IllegalArgumentException(
+      s"hybrid search needs a $word registered for $table")
+    val tindex = tindexes.get(table).getOrElse(throw needs("tindex"))
+    val vindex = vindexes.get(table).getOrElse(throw needs("vindex"))
+    val tmeta = tindex.meta
     val probes = tableOrPath(reqArg(t, "probes", "hybrid search"))
     val k = reqArg(t, "k", "hybrid search").toInt
     val kLeg = arg(t, "k_leg").map(_.toInt).getOrElse(2 * k)
-    val tstored = graft.ops.IndexStore.read(spark, tmeta.path).getOrElse(
-      throw new IllegalStateException(s"no tindex artifact at ${tmeta.path}"))
-    val vstored = graft.ops.IndexStore.read(spark, vmeta.path).getOrElse(
-      throw new IllegalStateException(s"no vindex artifact at ${vmeta.path}"))
-    import org.apache.spark.sql.functions.col
-    val textLeg = graft.ops.Retrieval.bm25TopK(tstored, probes,
+    val textLeg = graft.ops.Retrieval.bm25TopK(tindex.state, probes,
         tmeta.textCol, tmeta.idCol, kLeg)
       .select(col("q_id"), col("rank"), col("id"))
-    val nprobe = arg(t, "nprobe").map(_.toInt).getOrElse(1)
-    val vecLeg = (vmeta.kind match {
-      case "pq" => graft.ops.Similarity.pqSearchIndex(vstored, probes,
-        vmeta.vecCol, vmeta.idCol, kLeg, vmeta.numSub)
-      case "rpq" => graft.ops.Similarity.searchResidualIndex(vstored,
-        probes, vmeta.vecCol, vmeta.idCol, kLeg, nprobe, vmeta.numSub)
-      case "sq8" => graft.ops.Similarity.sq8SearchIndex(vstored, probes,
-        vmeta.vecCol, vmeta.idCol, kLeg)
-      case _ => graft.ops.Similarity.ivfSearchIndex(vstored, probes,
-        vmeta.vecCol, vmeta.idCol, kLeg, nprobe)
-    }).select(col("q_id"), col("rank"), col("id"))
+    val vecLeg = vindexTopK(vindex, probes, kLeg, t)
+      .select(col("q_id"), col("rank"), col("id"))
     val result = graft.ops.Retrieval.rrfFuse(textLeg, vecLeg, k)
     rendered(t, result)
   }
@@ -5674,9 +5605,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           s"join matview at $p records no count"
       }
     }
-    sindexes.get(table).foreach(m => refusals +=
-      s"sindex at ${m.path} is a one-way KMV sketch (deletes refused " +
-        "by construction — rebuild with sindex create)")
+    families.flatMap(_.get(table)).foreach(a =>
+      a.retain.left.foreach(why => refusals += s"${a.word} at ${a.path} $why"))
     monitors.get(table).foreach(m => refusals +=
       s"monitor at ${m.path} carries one-way tail state")
     val refused = refusals.result()
@@ -5717,9 +5647,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         if (tagged(m.path))
           receipts += s"matview at ${m.path}: already folded (drop tag)"
         else {
-          val state = graft.ops.IndexStore.read(spark, m.path).getOrElse(
-            throw new IllegalStateException(
-              s"no matview state at ${m.path}"))
+          val state = stateAt(m.path, "matview state")
           val wm = mvWmOf(m.path, state) // retention doesn't advance lineage
           // subtract ONLY rows the view has folded (tsd_id <= wm) —
           // rows above the lineage watermark (appended while auto
@@ -5749,34 +5677,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           receipts += s"matview at ${m.path}: $nDrop tombstones folded"
         }
       }
-    rollups.get(table).foreach { meta =>
-      if (tagged(meta.path))
-        receipts += s"rollup at ${meta.path}: already folded (drop tag)"
-      else {
-        val cur = graft.ops.IndexStore.read(spark, meta.path).getOrElse(
-          throw new IllegalStateException(
-            s"no rollup artifact at ${meta.path}"))
-        // targeted re-aggregation over the SURVIVOR frame AS OF the
-        // rollup's lineage watermark: dropped buckets recompute to
-        // empty and retire, and a rollup bucket COARSER than the
-        // partition unit (it then spans surviving days) recomputes
-        // from exactly the rows the rollup had folded — recomputing
-        // from the full current survivors would ABSORB pending
-        // unfolded rows, which a later `rollup sync` (tsd_id > wm)
-        // would then fold AGAIN (double count)
-        val rwm = indexWmOf(meta.path)
-        val recomputeBase =
-          if (rwm >= 0 && survivors.columns.contains("tsd_id"))
-            survivors.filter(col("tsd_id").cast("long") <= rwm)
-          else survivors
-        val folded = graft.ops.Rollup.deleteRows(cur, droppedRows,
-          noPar(recomputeBase), meta.dims, meta.valueCols)
-          .localCheckpoint()
-        graft.ops.IndexStore.write(folded, meta.path,
-          Seq(tag) ++ wmTag(rwm))
-        receipts += s"rollup at ${meta.path}: recomputed over survivors"
-      }
-    }
     joinMatviews.foreach { case (p, spec) =>
       val side = if (spec.left == table) Some("left")
         else if (spec.right == table) Some("right") else None
@@ -5786,8 +5686,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
             receipts += s"join matview at $p: already folded (drop tag)"
           else {
             import graft.ops.JoinMatView.{WmLeftCol, WmRightCol}
-            val state = graft.ops.IndexStore.read(spark, p).getOrElse(
-              throw new IllegalStateException(s"no join matview at $p"))
+            val state = stateAt(p, "join matview")
             val (wmL, wmR) = jmvWmsOf(p, state)
             val (wmSide, wmOther) =
               if (sd == "left") (wmL, wmR) else (wmR, wmL)
@@ -5829,73 +5728,13 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           }
         }
     }
-    vindexes.get(table).foreach { meta =>
-      if (tagged(meta.path))
-        receipts += s"vindex at ${meta.path}: already folded (drop tag)"
-      else {
-        val stored = graft.ops.IndexStore.read(spark, meta.path)
-          .getOrElse(throw new IllegalStateException(
-            s"no vindex artifact at ${meta.path}"))
-        val folded = graft.ops.Similarity.deleteFromIndex(stored,
-          droppedRows.select(col(meta.idCol))).localCheckpoint()
-        graft.ops.IndexStore.write(folded, meta.path,
-          Seq(tag) ++ wmTag(indexWmOf(meta.path)))
-        receipts += s"vindex at ${meta.path}: dropped ids tombstoned"
-      }
-    }
-    dindexes.get(table).foreach { meta =>
-      if (tagged(meta.path))
-        receipts +=
-          s"dedup index at ${meta.path}: already folded (drop tag)"
-      else {
-        val stored = graft.ops.IndexStore.read(spark, meta.path)
-          .getOrElse(throw new IllegalStateException(
-            s"no dedup index artifact at ${meta.path}"))
-        val del = droppedRows.select(col(meta.idCol)).localCheckpoint()
-        val folded = (meta.kind match {
-          case "simhash" =>
-            graft.ops.Dedup.deleteFromSimhashIndex(stored, del)
-          case "embedding" =>
-            graft.ops.Dedup.deleteFromEmbeddingIndex(stored, del)
-          case "exact" =>
-            graft.ops.Dedup.deleteFromExactIndex(stored, del)
-          case _ =>
-            graft.ops.Dedup.deleteFromShingleIndex(stored, del)
-        }).localCheckpoint()
-        graft.ops.IndexStore.write(folded, meta.path,
-          Seq(tag) ++ wmTag(indexWmOf(meta.path)))
-        // RETENTION SYMMETRY for the ingest gate: dropped docs' text
-        // must become re-ingestable, so the Bloom sidecar rebuilds
-        // from the surviving hashes (it never OR-folds)
-        if (meta.kind == "exact") rebuildBloomSidecar(meta.path, Some(tag))
-        receipts += s"dedup index at ${meta.path}: dropped ids tombstoned"
-      }
-    }
-    tindexes.get(table).foreach { meta =>
-      if (tagged(meta.path))
-        receipts += s"tindex at ${meta.path}: already folded (drop tag)"
-      else {
-        val stored = graft.ops.IndexStore.read(spark, meta.path)
-          .getOrElse(throw new IllegalStateException(
-            s"no tindex artifact at ${meta.path}"))
-        val del = droppedRows.select(col(meta.idCol)).localCheckpoint()
-        graft.ops.IndexStore.write(
-          graft.ops.Retrieval.deleteFromPostingsIndex(stored, del)
-            .localCheckpoint(), meta.path,
-          Seq(tag) ++ wmTag(indexWmOf(meta.path)))
-        if (meta.grams) {
-          val prev = graft.ops.IndexStore
-            .read(spark, s"${meta.path}-grams").getOrElse(
-              throw new IllegalStateException(
-                s"no trigram sidecar at ${meta.path}-grams"))
-          graft.ops.IndexStore.write(
-            graft.ops.Retrieval.deleteFromPostingsIndex(prev, del)
-              .localCheckpoint(), s"${meta.path}-grams", Some(tag))
-        }
-        receipts += s"tindex at ${meta.path}: dropped ids tombstoned" +
-          (if (meta.grams) " (+trigram sidecar)" else "")
-      }
-    }
+    // a re-run skips an artifact only when every one of its stores
+    // carries the drop tag (sidecars commit after the main store)
+    families.flatMap(_.get(table)).foreach(a => a.retain.foreach { fold =>
+      receipts += s"${a.word} at ${a.path}: " +
+        (if (a.stores.forall(tagged)) "already folded (drop tag)"
+        else fold(droppedRows, survivors, tag))
+    })
     receipts.result()
   }
 

@@ -1172,9 +1172,10 @@ object Dedup {
     * fleet: ingest auto-fold appends, delete/drop-partition tombstone
     * (so RETENTION can forget content — a dropped doc's text becomes
     * re-ingestable instead of being refused forever by a corpse hash),
-    * and the Bloom PREFILTER rides as a rebuilt sidecar (stale bits
-    * would only cost false-positive probes, never correctness, but the
-    * rebuild keeps the fp rate honest as the corpus shrinks/grows). */
+    * and the Bloom PREFILTER rides as a rebuilt sidecar (extra bits
+    * only cost false-positive probes and the rebuild keeps the fp rate
+    * honest as the corpus shrinks/grows; MISSING bits would let
+    * duplicates through, since a Bloom miss skips the exact join). */
   def exactHashIndex(corpus: DataFrame, textCol: String,
       idCol: String): DataFrame =
     corpus.select(col(idCol).as("id"),
@@ -1188,8 +1189,9 @@ object Dedup {
     * the batch text's hash exists in the index under a DIFFERENT id).
     * `bloom`: optional prefilter sidecar ([[bloomIndex]] over the same
     * hashes) — misses skip the index join entirely (the 100 TB fast
-    * path); hits fall through to the exact join, so a stale or absent
-    * sidecar never changes the answer. */
+    * path); hits fall through to the exact join, so an absent sidecar
+    * or one with extra bits never changes the answer. One that lacks
+    * the bits of some indexed hashes does: a miss is taken as "new". */
   def exactGate(batch: DataFrame, index: DataFrame,
       bloom: Option[DataFrame], textCol: String, idCol: String)
       : DataFrame = {

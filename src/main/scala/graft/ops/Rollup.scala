@@ -221,7 +221,15 @@ object Rollup {
     * + the engine's lineage watermark riding one commit). */
   def refreshStore(spark: SparkSession, dir: String, delta: DataFrame,
       tsCol: String, grain: String, dims: Seq[String],
-      measures: Seq[String], tags: Seq[String]): DataFrame = {
+      measures: Seq[String], tags: Seq[String]): DataFrame =
+    IndexStore.readVersion(spark, dir,
+      foldStore(spark, dir, delta, tsCol, grain, dims, measures, tags))
+
+  /** [[refreshStore]]'s fold and commit, returning the number of the
+    * version it committed. */
+  def foldStore(spark: SparkSession, dir: String, delta: DataFrame,
+      tsCol: String, grain: String, dims: Seq[String],
+      measures: Seq[String], tags: Seq[String]): Long = {
     // an EMPTIED state (every bucket retired by deletes/drops) keeps
     // its schema but not its identity rows — fold at the CALLER'S
     // registered grain, never grainOf's guess (see grainOf)
@@ -229,7 +237,7 @@ object Rollup {
       .flatMap(foldAt(_, delta, tsCol, dims, measures))
       .getOrElse(build(delta, tsCol, grain, dims, measures))
     // one action reads `next`, so no checkpoint before the commit
-    IndexStore.readVersion(spark, dir, IndexStore.write(next, dir, tags))
+    IndexStore.write(next, dir, tags)
   }
 
   def refreshStore(spark: SparkSession, dir: String, delta: DataFrame,
