@@ -81,13 +81,21 @@ object Sessions {
     * `$SPARK_GRAFT_CPUS` (driver contract — the driver re-runs the bench
     * at a lower core count to measure scaling), engine [[defaults]], UI
     * off, and the audited WindowExec warning demotion (every
-    * unpartitioned window in the repo is bounded — see Verify). */
+    * unpartitioned window in the repo is bounded — see Verify). File
+    * listing always runs on the driver: in local mode a listing job's
+    * tasks are threads of this JVM reading the same filesystem, so the
+    * job only adds scheduling cost (at Spark's default threshold of 32
+    * paths, a streamer batch's file list is listed by a job with one
+    * task per file). [[defaults]] leaves it alone: embedders may run a
+    * cluster. */
   def local(app: String, defaultCpus: String = "32"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     val spark = defaults(SparkSession.builder()
         .master(s"local[$cpus]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+          Int.MaxValue.toString)
         .config("spark.ui.enabled", "false"),
         cpus.toInt)
       .getOrCreate()

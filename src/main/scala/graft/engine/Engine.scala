@@ -2633,7 +2633,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
               if (lines.nonEmpty) {
                 val f = dir.resolve(s"k${epoch}_${n.incrementAndGet()}_" +
                   s"${tp.replaceAll("[^A-Za-z0-9]", "_")}_$p.json")
-                java.nio.file.Files.writeString(f, lines.mkString("\n"))
+                graft.streaming.Landing.write(f, lines.mkString("\n"))
               }
               offsets((tp, p)) = msgs.last._1 + 1
               // journal AFTER the landing: a crash between the two
@@ -2736,7 +2736,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       raw: String, who: String, where: String): Unit = {
     val ed = dir.resolveSibling(dir.getFileName.toString + ".err")
     java.nio.file.Files.createDirectories(ed)
-    java.nio.file.Files.writeString(ed.resolve(name), raw)
+    graft.streaming.Landing.write(ed.resolve(name), raw)
     logRing(errorLog, (System.currentTimeMillis, who,
       s"non-JSON payload at $where routed to $ed"))
   }
@@ -2917,7 +2917,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
           val sub = dir.resolve(ModbusMap.dynamicTableName(name, field))
           java.nio.file.Files.createDirectories(sub)
           val row = JObject(List("timestamp" -> ts, "value" -> v))
-          java.nio.file.Files.writeString(
+          graft.streaming.Landing.write(
             sub.resolve(s"p${epoch}_${n.incrementAndGet()}.json"),
             org.json4s.jackson.JsonMethods.compact(row))
         }
@@ -2925,7 +2925,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         val row = JObject(
           ("timestamp" -> ts) :: ("duration" -> JLong(t1 - t0)) ::
             decoded.toList)
-        java.nio.file.Files.writeString(
+        graft.streaming.Landing.write(
           dir.resolve(s"p${epoch}_${n.incrementAndGet()}.json"),
           org.json4s.jackson.JsonMethods.compact(row))
       }
@@ -3838,10 +3838,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     }
     // file names must be unique ACROSS client restarts and across two
     // clients sharing a dir/topic: a bare per-client counter restarts
-    // at 1 and Files.writeString TRUNCATES, overwriting an unprocessed
-    // landing (and Spark's file source tracks seen paths — a re-used
-    // name is silently skipped). A per-client nano-epoch prefix + the
-    // counter makes every landing a fresh path.
+    // at 1 and a landing REPLACES an existing name, overwriting an
+    // unprocessed landing (and Spark's file source tracks seen paths —
+    // a re-used name is silently skipped). A per-client nano-epoch
+    // prefix + the counter makes every landing a fresh path.
     val n = new java.util.concurrent.atomic.AtomicInteger
     val clientEpoch = java.lang.Long.toHexString(System.nanoTime())
     val client = new graft.streaming.MqttClient(host, port,
@@ -3852,8 +3852,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         // same landing contract as the Kafka consumer: one-line JSON
         // per file; pretty-printed folds compact, garbage quarantines
         normalizeNdjsonPayload(payload) match {
-          case Some(line) => java.nio.file.Files.writeString(
-            dir.resolve(stem + ".json"), line)
+          case Some(line) =>
+            graft.streaming.Landing.write(dir.resolve(stem + ".json"), line)
           case None => quarantinePayload(dir, stem + ".bad", payload,
             s"msg client $topic", "mqtt delivery")
         }

@@ -18,8 +18,10 @@ import graft.ingest.MappingPolicy
   *    (native archiving via `cleanSource`/`sourceArchiveDir`).
   *  - flush thresholds 60 s / 10,000 B (`streaming_data.py:29-30`) ->
   *    micro-batch `Trigger.ProcessingTime`; `write_immediate` (:32) ->
-  *    a short trigger. Volume thresholds have no direct trigger analog;
-  *    `maxFilesPerTrigger` bounds batch size instead.
+  *    a short trigger. Like the reference's flush of its whole buffer,
+  *    one trigger takes everything that has landed: admission is
+  *    bounded by bytes (one wave of full-size read tasks, see
+  *    [[watchDir]]), not by a file count.
   *  - time partitioning `dbms/partitions.py` -> `partitionBy` on a
   *    derived date column; partition pruning replaces the reference's
   *    partition-name matching at query time.
@@ -27,19 +29,32 @@ import graft.ingest.MappingPolicy
 object StreamIngest {
 
   /** Build the file-watch source (one JSON document per line).
+    * A trigger admits every landed file up to [[triggerBytes]], so a
+    * backlog of small landings drains as one micro-batch. Memory
+    * follows bytes, not file count: the file source already lists the
+    * whole dir and remembers every seen path on each trigger. Names
+    * starting with `.` or `_` are skipped; transports publish each
+    * landing whole through [[Landing]].
     * `archiveDir` moves processed files out of the watch dir via the
     * file source's native `cleanSource` archiving — the reference's
     * watch-dir → archive flow (§2.1 row 10). */
   def watchDir(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 100,
       archiveDir: Option[String] = None): DataFrame = {
     val r0 = spark.readStream
       .format("text")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxBytesPerTrigger", triggerBytes(spark))
     archiveDir.map(a => r0.option("cleanSource", "archive")
       .option("sourceArchiveDir", a)).getOrElse(r0)
       .load(dir)
   }
+
+  /** A trigger's admission bound: one wave of full-size read tasks,
+    * `spark.sql.files.maxPartitionBytes` × default parallelism (512 MB
+    * at the 128 MB default on 4 cores). Derived, not a setting. */
+  private def triggerBytes(spark: SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.filesMaxPartitionBytes *
+      spark.sparkContext.defaultParallelism
 
   /** Compile the full ingest flow on any streaming (or batch) frame of
     * raw JSON documents. Returns (rows, alerts). */
@@ -199,6 +214,13 @@ object StreamIngest {
     * never learn about, or vice versa. Fold errors record in the
     * engine's auto-fold log, never kill the stream.
     *
+    * The batch is coalesced to at most `defaultParallelism` partitions
+    * before the checkpoint both legs consume: the file source packs
+    * tiny landings by `openCostInBytes`, so a 1000-file backlog reads
+    * as ~32 partitions and would append ~32 parquet files. Replay
+    * stays deterministic: the file list comes from the source log and
+    * the packing and coalesce depend only on it.
+    *
     * `outDir` should be the engine table's registered storage path, so
     * folds and queries see the appended rows immediately. With
     * `partition` set ((tsCol, unit, n) — the TimePartitions layout),
@@ -211,7 +233,8 @@ object StreamIngest {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val w0 = rows.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
-        val batch = b.localCheckpoint() // consumed by both legs
+        val batch = b.coalesce(b.sparkSession.sparkContext.defaultParallelism)
+          .localCheckpoint() // consumed by both legs
         partition match {
           case Some((tsCol, unit, n)) =>
             appendBatchIdempotentPartitioned(batch, outDir, id,
