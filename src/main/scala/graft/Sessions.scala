@@ -4,10 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE construction site for the engine's session defaults.
   *
-  * Every main in this repo (Bench, Verify, OpProf, QProf, PlanDump,
-  * Plans, KcoreLadder, EditJoinProbe) builds its session here, so the
-  * plans the bench times, the plans the oracle verifies, and the plans
-  * the diagnostic tools dump are produced under IDENTICAL engine conf.
+  * Every main in this repo (Bench, Verify, Diag) builds its session
+  * here, so the plans the bench times, the plans the oracle verifies,
+  * and the plans the diagnostic main prints are produced under
+  * IDENTICAL engine conf.
   *
   * Embedders: an application that constructs its own SparkSession for
   * `graft.SparkEntry` / `graft.engine.Engine` must route its builder

@@ -1996,14 +1996,14 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** Fold a batch into every registered standing aggregate artifact
     * over `table` — the PUT auto-fold's body, public so a STREAMING
     * ingest chain can keep views fresh too. With `batchTag` set
-    * (e.g. `stream_<table>_<foreachBatch id>`) every fold is
+    * (e.g. `txn_<table>_<foreachBatch id>`) every fold is
     * EXACTLY-ONCE under at-least-once replay: the tag commits inside
     * the artifact's new version BEFORE its commit marker (the
     * [[graft.ops.IndexStore]] tag protocol — no state where the fold
     * landed but the tag didn't), and a batch whose tag is visible on
     * a live version is skipped. The two-version lookback covers
     * checkpointed Structured Streaming's retry-the-last-batch
-    * discipline; see [[graft.streaming.StreamIngest.startViewFoldSink]]
+    * discipline; see [[graft.streaming.StreamIngest.startTransactionalSink]]
     * for the sink wrapper. Fold errors are recorded, never thrown
     * (see [[autoFoldViews]] rationale). `tsdId` < 0 leaves matview
     * lineage watermarks untouched (a stream batch carries no tsd

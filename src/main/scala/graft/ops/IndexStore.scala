@@ -320,4 +320,23 @@ object IndexStore {
       .flatMap(t => committed.filter(_ < t).maxOption)
       .map(load(spark, dir, _))
   }
+
+  /** The exactly-once fold of a tagged batch (e.g. a foreachBatch id)
+    * into the store at `dir`. When no live version carries `tag`, the
+    * next state `next(current)` commits WITH the tag; when one does,
+    * the batch already folded and nothing is written. Returns the
+    * state the fold started from — on a replay the retained version
+    * before the tagged one ([[readBefore]]), the same pre-fold state
+    * the first attempt saw — and the next state when this call wrote
+    * it. */
+  def foldOnce(spark: SparkSession, dir: String, tag: String)(
+      next: Option[DataFrame] => DataFrame)
+      : (Option[DataFrame], Option[DataFrame]) =
+    if (hasTag(spark, dir, tag)) (readBefore(spark, dir, tag), None)
+    else {
+      val prev = read(spark, dir)
+      val out = next(prev)
+      write(out, dir, Some(tag))
+      (prev, Some(out))
+    }
 }

@@ -1319,7 +1319,7 @@ object PipelineQueries {
       // scan-level predicate — tokens are space-split, so zero tokens
       // iff the text is all spaces. Filtering on n_tokens AFTER the
       // stats projection would be pushed below the exchange and re-run
-      // the full tokenize pass per row (seen in PLANS.md).
+      // the full tokenize pass per row (seen in the query's plan).
       .filter(expr("trim(BOTH ' ' FROM text) != ''"))
       .select(col("doc_id"),
         F.ngramRepeatStats(col("text"), 1).as("ts"),

@@ -128,10 +128,14 @@ final class MqttClient(host: String, port: Int, clientId: String,
     // drops a silent connection after 1.5x that (MQTT 3.1.1
     // 3.1.2-24) — ping at half the interval or a quiet topic's
     // subscription silently dies on a real broker
+    // stop() clears `running` before it interrupts, so an interrupted
+    // sleep falls through to the loop test and the thread ends. (A
+    // `return` here would be a non-local return out of the lambda:
+    // the thread would die with an uncaught NonLocalReturnControl.)
     pinger = new Thread(() => {
       while (running) {
         try Thread.sleep(30000L)
-        catch { case _: InterruptedException => return }
+        catch { case _: InterruptedException => () }
         if (running && connected)
           try send(0xc0, Array.emptyByteArray) // PINGREQ
           catch { case scala.util.control.NonFatal(_) => () }
@@ -140,6 +144,7 @@ final class MqttClient(host: String, port: Int, clientId: String,
         // must survive to serve the NEXT session
       }
     })
+    pinger.setName(s"mqtt-pinger-$clientId")
     pinger.setDaemon(true)
     pinger.start()
   }

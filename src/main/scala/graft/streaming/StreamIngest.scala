@@ -82,42 +82,6 @@ object StreamIngest {
     partitionCol.map(c => w.partitionBy(c)).getOrElse(w).start()
   }
 
-  /** The STREAMING twin of the PUT auto-fold: keep every registered
-    * standing aggregate artifact (matview / rollup / join matview)
-    * fresh as a stream lands in `table`. Pair it with
-    * [[startParquetSink]] on the SAME rows frame:
-    *
-    *   - the parquet file sink owns the TABLE append (Spark's file-sink
-    *     commit log makes that leg exactly-once on its own checkpoint);
-    *   - this sink owns the VIEW folds, exactly-once through the
-    *     IndexStore batch-tag protocol
-    *     ([[graft.engine.Engine.foldStandingViews]] with
-    *     `stream_<table>_<batchId>` — a replayed batch whose tag is
-    *     live skips; the two-version lookback covers checkpointed
-    *     retry-the-last-batch).
-    *
-    * Each leg is exactly-once; the two run on separate checkpoints, so
-    * a view may LEAD or LAG the table by up to one micro-batch — the
-    * documented eventual-consistency window (the alternative, one
-    * foreachBatch doing both, would make the table append at-least-once
-    * under replay and double-ingest rows: lagging views reconcile,
-    * duplicated rows never do). Fold errors never kill the stream —
-    * they record in the engine's auto-fold error log (`get view auto
-    * refresh`). */
-  def startViewFoldSink(engine: graft.engine.Engine, table: String,
-      rows: DataFrame, checkpoint: String, flushSeconds: Long = 60,
-      name: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w0 = rows.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        engine.foldStandingViews(table, b,
-          batchTag = Some(s"stream_${table}_$id"))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(flushSeconds, TimeUnit.SECONDS))
-    name.map(w0.queryName).getOrElse(w0).start()
-  }
-
   /** Idempotent per-batch parquet append — the table leg of
     * [[startTransactionalSink]]: materialize the micro-batch under a
     * hidden scratch dir (`_txn_b<id>`, invisible to parquet readers),
@@ -198,10 +162,10 @@ object StreamIngest {
 
   /** The SINGLE transactional sink: one foreachBatch owns BOTH the
     * table append and the standing-view folds, keyed to the same
-    * checkpointed batch id — retiring the documented one-micro-batch
-    * lead/lag window of the [[startParquetSink]] + [[startViewFoldSink]]
-    * pairing (two sinks on separate checkpoints could each be one
-    * batch ahead of the other after a crash).
+    * checkpointed batch id, so the table and its views never lead or
+    * lag each other by a micro-batch (two sinks on separate
+    * checkpoints could each be one batch ahead of the other after a
+    * crash).
     *
     * Exactly-once under at-least-once foreachBatch replay, leg by leg:
     *  - table append: [[appendBatchIdempotent]] — deterministic

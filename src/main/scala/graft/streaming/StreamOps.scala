@@ -504,32 +504,23 @@ object StreamOps {
       indexDir: String, textCol: String, idCol: String, isTarget: Column,
       numBuckets: Int = 512, minWeightQ: Long = 0L): DataFrame = {
     import graft.ops.{Curation, IndexStore}
-    val spark = batch.sparkSession
-    val tag = s"batch_$batchId"
-    val tagged = IndexStore.hasTag(spark, indexDir, tag)
-    val preFold =
-      if (tagged) IndexStore.readBefore(spark, indexDir, tag)
-      else IndexStore.read(spark, indexDir)
-    val kept = preFold match {
+    // the new version's write streams from the old version's files
+    // (distinct dirs) — numBuckets rows, no self-overwrite hazard
+    val (preFold, _) = IndexStore.foldOnce(batch.sparkSession, indexDir,
+        s"batch_$batchId") {
+      case None =>
+        Curation.dsirIndex(batch.filter(isTarget), batch, textCol,
+          numBuckets)
+      case Some(idx) =>
+        Curation.refreshDsirIndex(idx, batch.filter(isTarget), batch,
+          textCol)
+    }
+    preFold match {
       case None => batch
       case Some(idx) =>
         Curation.dsirScores(idx, batch, textCol, idCol)
           .filter(col("weight_q") >= minWeightQ)
     }
-    if (!tagged) {
-      val newIdx = preFold match {
-        case None =>
-          Curation.dsirIndex(batch.filter(isTarget), batch, textCol,
-            numBuckets)
-        case Some(idx) =>
-          Curation.refreshDsirIndex(idx, batch.filter(isTarget), batch,
-            textCol)
-      }
-      // the new version's write streams from the old version's files
-      // (distinct dirs) — numBuckets rows, no self-overwrite hazard
-      IndexStore.write(newIdx, indexDir, Some(tag))
-    }
-    kept
   }
 
   /** Standing-PQ-index maintenance at ingest (`foreachBatch` body,
@@ -552,13 +543,7 @@ object StreamOps {
       indexDir: String, vecCol: String, idCol: String, numSub: Int,
       ksub: Int, iters: Int = 1, scale: Int = 1000): DataFrame = {
     import graft.ops.{IndexStore, Similarity}
-    val spark = batch.sparkSession
-    val tag = s"batch_$batchId"
-    val tagged = IndexStore.hasTag(spark, indexDir, tag)
-    val preFold =
-      if (tagged) IndexStore.readBefore(spark, indexDir, tag)
-      else IndexStore.read(spark, indexDir)
-    val newIdx = preFold match {
+    def fold(preFold: Option[DataFrame]) = preFold match {
       case None =>
         Similarity.pqIndex(batch, vecCol, idCol, numSub, ksub, iters,
           scale)
@@ -566,8 +551,9 @@ object StreamOps {
         Similarity.refreshPqIndex(idx, batch, vecCol, idCol, numSub,
           scale)
     }
-    if (!tagged) IndexStore.write(newIdx, indexDir, Some(tag))
-    newIdx.filter(col("role") === "code")
+    val (preFold, written) = IndexStore.foldOnce(batch.sparkSession,
+      indexDir, s"batch_$batchId")(fold)
+    written.getOrElse(fold(preFold)).filter(col("role") === "code")
       .join(batch.select(col(idCol).as("id")), Seq("id"), "left_semi")
       .select(col("id"), col("sub"), col("code"))
   }
@@ -588,19 +574,14 @@ object StreamOps {
   def postingsIngestBatchOnce(batch: DataFrame, batchId: Long,
       indexDir: String, textCol: String, idCol: String): DataFrame = {
     import graft.ops.{IndexStore, Retrieval}
-    val spark = batch.sparkSession
-    val tag = s"batch_$batchId"
-    val tagged = IndexStore.hasTag(spark, indexDir, tag)
-    val preFold =
-      if (tagged) IndexStore.readBefore(spark, indexDir, tag)
-      else IndexStore.read(spark, indexDir)
-    val newIdx = preFold match {
+    def fold(preFold: Option[DataFrame]) = preFold match {
       case None => Retrieval.postingsIndex(batch, textCol, idCol)
       case Some(idx) =>
         Retrieval.refreshPostingsIndex(idx, batch, textCol, idCol)
     }
-    if (!tagged) IndexStore.write(newIdx, indexDir, Some(tag))
-    newIdx.filter(col("role") === "len")
+    val (preFold, written) = IndexStore.foldOnce(batch.sparkSession,
+      indexDir, s"batch_$batchId")(fold)
+    written.getOrElse(fold(preFold)).filter(col("role") === "len")
       .join(batch.select(col(idCol).cast("long").as("id")), Seq("id"),
         "left_semi")
       .select(col("id"), col("dl"))
@@ -622,18 +603,14 @@ object StreamOps {
       width: Int): DataFrame = {
     import graft.ops.{IndexStore, Sketches}
     val spark = batch.sparkSession
-    val tag = s"batch_$batchId"
-    val tagged = IndexStore.hasTag(spark, sketchDir, tag)
-    val preFold =
-      if (tagged) IndexStore.readBefore(spark, sketchDir, tag)
-      else IndexStore.read(spark, sketchDir)
-    val fresh = Sketches.cmsCounters(batch, valueCol, depth, width)
-    val newCounters = preFold match {
-      case None => fresh
-      case Some(prev) => Sketches.cmsMerge(prev, fresh)
+    IndexStore.foldOnce(spark, sketchDir, s"batch_$batchId") { preFold =>
+      val fresh = Sketches.cmsCounters(batch, valueCol, depth, width)
+      val newCounters = preFold match {
+        case None => fresh
+        case Some(prev) => Sketches.cmsMerge(prev, fresh)
+      }
+      newCounters.localCheckpoint()
     }
-    if (!tagged) IndexStore.write(newCounters.localCheckpoint(),
-      sketchDir, Some(tag))
     IndexStore.read(spark, sketchDir).get
   }
 
@@ -647,18 +624,14 @@ object StreamOps {
       sketchDir: String, valueCol: String, m: Int): DataFrame = {
     import graft.ops.{IndexStore, Sketches}
     val spark = batch.sparkSession
-    val tag = s"batch_$batchId"
-    val tagged = IndexStore.hasTag(spark, sketchDir, tag)
-    val preFold =
-      if (tagged) IndexStore.readBefore(spark, sketchDir, tag)
-      else IndexStore.read(spark, sketchDir)
-    val fresh = Sketches.hllRegisters(batch, valueCol, m)
-    val newRegs = preFold match {
-      case None => fresh
-      case Some(prev) => Sketches.hllMerge(prev, fresh)
+    IndexStore.foldOnce(spark, sketchDir, s"batch_$batchId") { preFold =>
+      val fresh = Sketches.hllRegisters(batch, valueCol, m)
+      val newRegs = preFold match {
+        case None => fresh
+        case Some(prev) => Sketches.hllMerge(prev, fresh)
+      }
+      newRegs.localCheckpoint()
     }
-    if (!tagged) IndexStore.write(newRegs.localCheckpoint(), sketchDir,
-      Some(tag))
     IndexStore.read(spark, sketchDir).get
   }
 
@@ -674,18 +647,14 @@ object StreamOps {
       k: Int): DataFrame = {
     import graft.ops.{IndexStore, Sketches}
     val spark = batch.sparkSession
-    val tag = s"batch_$batchId"
-    val tagged = IndexStore.hasTag(spark, sketchDir, tag)
-    val preFold =
-      if (tagged) IndexStore.readBefore(spark, sketchDir, tag)
-      else IndexStore.read(spark, sketchDir)
-    val fresh = Sketches.kmvKeyed(batch, keyCol, hashCol, k)
-    val folded = preFold match {
-      case None => fresh
-      case Some(prev) => Sketches.kmvMergeKeyed(prev, fresh, k)
+    IndexStore.foldOnce(spark, sketchDir, s"batch_$batchId") { preFold =>
+      val fresh = Sketches.kmvKeyed(batch, keyCol, hashCol, k)
+      val folded = preFold match {
+        case None => fresh
+        case Some(prev) => Sketches.kmvMergeKeyed(prev, fresh, k)
+      }
+      folded.localCheckpoint()
     }
-    if (!tagged) IndexStore.write(folded.localCheckpoint(), sketchDir,
-      Some(tag))
     IndexStore.read(spark, sketchDir).get
   }
 
@@ -766,17 +735,13 @@ object StreamOps {
       stateDir: String): DataFrame = {
     import graft.ops.IndexStore
     val spark = batch.sparkSession
-    val tag = s"batch_$batchId"
-    val tagged = IndexStore.hasTag(spark, stateDir, tag)
-    val preFold =
-      if (tagged) IndexStore.readBefore(spark, stateDir, tag)
-      else IndexStore.read(spark, stateDir)
-    val folded = preFold match {
-      case None => cusumInit(batch)
-      case Some(prev) => cusumFold(prev, batch)
+    IndexStore.foldOnce(spark, stateDir, s"batch_$batchId") { preFold =>
+      val folded = preFold match {
+        case None => cusumInit(batch)
+        case Some(prev) => cusumFold(prev, batch)
+      }
+      folded.localCheckpoint()
     }
-    if (!tagged) IndexStore.write(folded.localCheckpoint(), stateDir,
-      Some(tag))
     IndexStore.read(spark, stateDir).get
   }
 
@@ -792,19 +757,15 @@ object StreamOps {
       sketchDir: String, keyCol: String, valueCol: String): DataFrame = {
     import graft.ops.{IndexStore, Sketches}
     val spark = batch.sparkSession
-    val tag = s"batch_$batchId"
-    val tagged = IndexStore.hasTag(spark, sketchDir, tag)
-    val preFold =
-      if (tagged) IndexStore.readBefore(spark, sketchDir, tag)
-      else IndexStore.read(spark, sketchDir)
-    val fresh = Sketches.quantileHistogram(batch, keyCol, valueCol)
-    val folded = preFold match {
-      case None => fresh
-      case Some(prev) => prev.unionByName(fresh).groupBy("key", "b")
-        .agg(org.apache.spark.sql.functions.sum("c").as("c"))
+    IndexStore.foldOnce(spark, sketchDir, s"batch_$batchId") { preFold =>
+      val fresh = Sketches.quantileHistogram(batch, keyCol, valueCol)
+      val folded = preFold match {
+        case None => fresh
+        case Some(prev) => prev.unionByName(fresh).groupBy("key", "b")
+          .agg(org.apache.spark.sql.functions.sum("c").as("c"))
+      }
+      folded.localCheckpoint()
     }
-    if (!tagged) IndexStore.write(folded.localCheckpoint(), sketchDir,
-      Some(tag))
     IndexStore.read(spark, sketchDir).get
   }
 }

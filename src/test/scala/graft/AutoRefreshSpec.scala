@@ -269,40 +269,6 @@ class AutoRefreshSpec extends SparkSpec {
       r.getDouble(1))).toSeq === Seq(("x", 40.0), ("y", 20.0)))
   }
 
-  test("startViewFoldSink keeps a matview fresh as a stream lands " +
-      "(the streaming twin of the PUT auto-fold)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ar6")
-    Seq(("a", 1L)).toDF("g", "k")
-      .write.parquet(dir.resolve("base.parquet").toString)
-    val cat = new graft.engine.Catalog(spark)
-    cat.registerTable("st1", dir.resolve("base.parquet").toString)
-    val engine = new graft.engine.Engine(spark, cat)
-    val p = dir.resolve("mv").toString
-    engine.execute(s"matview create where table = st1 and path = $p " +
-      s"""and spec = {"keys": ["g"], "aggs": [
-        {"fn": "count", "alias": "n"},
-        {"fn": "sum", "expr": "k", "alias": "sk"}]}""")
-    val mem = MemoryStream[(String, Long)]
-    val src = mem.toDF().toDF("g", "k")
-    val q = graft.streaming.StreamIngest.startViewFoldSink(engine,
-      "st1", src, dir.resolve("ckpt").toString, flushSeconds = 1)
-    try {
-      mem.addData(("a", 10L), ("b", 2L))
-      q.processAllAvailable()
-      val got = engine.execute(s"matview get where path = $p")
-      assert(got.contains(""""g":"a","n":2,"sk":11"""), got)
-      assert(got.contains(""""g":"b","n":1,"sk":2"""), got)
-      mem.addData(("b", 5L))
-      q.processAllAvailable()
-      val got2 = engine.execute(s"matview get where path = $p")
-      assert(got2.contains(""""g":"b","n":2,"sk":7"""), got2)
-    } finally q.stop()
-    assert(engine.execute("get view auto refresh")
-      .contains("no fold errors"))
-  }
-
   test("PUT ingest auto-folds registered INDEX families (vindex sq8 + " +
       "sindex): searches serve the new rows with no refresh command, " +
       "and the targets are listed") {
