@@ -20,8 +20,8 @@ import graft.ingest.SchemaInference
   *     approx=true,
   *     max_time/max_volume; FROM supports `a [inner|left] join b on
   *     a.x = b.y [and ...]`; transparent serving from registered
-  *     rollups / matviews / join matviews; `explain sql ...` reports
-  *     which plan would answer
+  *     rollup / matview / join matview artifacts; `explain sql ...`
+  *     reports which plan would answer
   *   create view <name> on <table> (src as dst, ...)
   *   partition <table> using <tsCol> by <n> <unit> into <path>
   *   drop partition <table|path> before <bucket> | older than <n> <u>
@@ -32,10 +32,10 @@ import graft.ingest.SchemaInference
   *     delete (as the boundary map allows)/drop/get:
   *     matview, join matview, rollup, vindex, tindex, sindex,
   *     dedup index (shingle|simhash|embedding|exact), monitor, layout,
-  *     graph tricount. The five whose lineage rides a `wm_` version
-  *     tag (rollup, vindex, tindex, sindex, dedup index) are each
-  *     declared once, in the family table [[families]]: the one place
-  *     to add such a family. Plus `sync all where table =`,
+  *     graph tricount. The six whose lineage rides a `wm_` version
+  *     tag (matview, rollup, vindex, tindex, sindex, dedup index) are
+  *     each declared once, in the family table [[families]]: the one
+  *     place to add such a family. Plus `sync all where table =`,
   *     `artifact verify where table =`, `attach all`,
   *     `index versions|retain|get` (AS-OF audit),
   *     `get view auto refresh` / `set view auto refresh = on|off`
@@ -235,17 +235,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     safeTsdIds += table -> id
   }
 
-  @volatile private var matviews = Map.empty[String, graft.dialect.MatViewServe.Meta]
-
-  /** Registered standing JOIN matviews by artifact path (`join matview
-    * create` / `join matview attach`) — looked up by side-table name
-    * when an ingest batch lands, for the auto-fold. */
+  /** Each registered standing JOIN matview by artifact path (`join
+    * matview create` / `join matview attach`) — looked up by side-table
+    * name when an ingest batch lands, for the auto-fold. */
   @volatile private var joinMatviews = Map.empty[String, graft.ops.JoinMatView.Spec]
 
   /** When true (default), an ingest batch landing in a table
     * auto-folds into every registered standing aggregate artifact over
-    * that table — matviews, rollups, and join matviews — in the same
-    * call, so transparently-SERVED state never silently goes stale
+    * that table — each [[families]] artifact and join matview — in the
+    * same call, so transparently-SERVED state never silently goes stale
     * behind the table it claims to summarize. `set view auto refresh =
     * off` restores manual-refresh operation; a fold failure (or a
     * crash between the table append and the fold) is recorded in
@@ -291,7 +289,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private case class DIndexMeta(path: String, kind: String,
       idCol: String, contentCol: String, shingleN: Int)
 
-  /** A standing-index family whose lineage rides a `wm_` version tag
+  /** A standing-artifact family whose lineage rides a `wm_` version tag
     * (the [[graft.ops.IndexStore]] tag protocol). Each is declared once,
     * in [[families]]; the PUT auto-fold, `<family> sync|refresh|drop`,
     * `get <family>s`, `sync all`, `artifact verify`, `drop partition`'s
@@ -307,8 +305,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       /** Fold a delta (meta, delta, batch tag, the delta's watermark when
         * known) and return the main store's committed version. */
       foldOf: (M, DataFrame, Option[String], Option[Long]) => Long,
-      /** `<family> refresh`'s reply detail, from the committed version. */
-      refreshedOf: (M, Long) => String = (_: M, v: Long) => s"version $v",
+      /** `<family> refresh`'s reply detail, from the committed version;
+        * None when the family's refresh is not keyed by table. */
+      refreshedOf: Option[(M, Long) => String] =
+        Some((_: M, v: Long) => s"version $v"),
       /** The `artifact verify` rebuild from the current base, or why the
         * family refuses one. */
       rebuildOf: M => Either[String, DataFrame => DataFrame],
@@ -333,6 +333,17 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     def unregister(t: String): String =
       Engine.this.unregister(word, t, reg)(reg -= _)
 
+    /** `<family> refresh where table = <t> and source = <table|path>`:
+      * fold a delta into the standing artifact, committing a fresh
+      * version; history is never rescanned. */
+    def refreshCommand: Option[Command] = refreshedOf.map(detail =>
+      cmd(s"$word refresh", Write) { t =>
+        val table = reqArg(t, "table", s"$word refresh")
+        val a = apply(table)
+        val delta = tableOrPath(reqArg(t, "source", s"$word refresh"))
+        s"$word for $table refreshed (${detail(a.meta, a.fold(delta, None))})"
+      })
+
     /** The family's artifact over one table. */
     final class Artifact(val meta: M) {
       def word: String = Family.this.word
@@ -345,7 +356,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       def fold(delta: DataFrame, tag: Option[String],
           deltaWm: Option[Long] = None): Long =
         foldOf(meta, delta, tag, deltaWm)
-      def refreshed(v: Long): String = refreshedOf(meta, v)
       def rebuild: Either[String, DataFrame => DataFrame] = rebuildOf(meta)
       def fix: String = verifyFix.getOrElse(
         s"run `$word sync` or rebuild with `$word create`")
@@ -354,13 +364,32 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     }
   }
 
+  /** Each registered matview by table name (`matview create|attach`).
+    * `matview refresh|delete` are keyed by path (a view the engine has
+    * not registered can still fold a batch), so the family generates no
+    * table-keyed refresh. */
+  private val mviews = new Family[graft.dialect.MatViewServe.Meta](
+    "matview", _.path,
+    foldOf = foldMatview,
+    refreshedOf = None,
+    rebuildOf = m => Right(graft.ops.MatView.partials(_, m.keys, m.aggs)),
+    verifyFix = Some(
+      "run `matview sync` (missed adds) or rebuild with `matview create`"),
+    retainOf = m => deleteRefusal(m.aggs).toLeft { (dropped, _, tag) =>
+      subtractMatview(m, dropped, Some(tag))
+      s"${dropped.count()} tombstones folded"
+    },
+    lineOf = (tbl, m) => s"$tbl: keys=${m.keys.mkString(",")} " +
+      s"aggs=${m.aggs.map(a => s"${a.fn}:${a.alias}").mkString(",")} " +
+      s"path=${m.path}")
+
   /** Registered standing rollups by table name (`rollup create`). */
   private val rollups = new Family[graft.dialect.RollupServe.Meta](
     "rollup", _.path,
     foldOf = foldRollup,
-    refreshedOf = (m, v) =>
+    refreshedOf = Some((m, v) =>
       s"${graft.ops.IndexStore.readVersion(spark, m.path, v).count()} " +
-        s"${m.grain} buckets",
+        s"${m.grain} buckets"),
     rebuildOf = m => Right(graft.ops.Rollup.build(_, m.tsCol, m.grain,
       m.dims, m.valueCols)),
     verifyFix = Some("rebuild with `rollup create`"),
@@ -429,10 +458,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         s" path=${m.path}"
     })
 
-  /** The `wm_`-tagged standing-index families, in fold order: the one
-    * place such a family is declared. */
+  /** The `wm_`-tagged standing-artifact families, in fold order: the
+    * one place such a family is declared. */
   private val families: Seq[Family[_]] =
-    Seq(rollups, vindexes, tindexes, sindexes, dindexes)
+    Seq(mviews, rollups, vindexes, tindexes, sindexes, dindexes)
 
   /** Registered Z-order layouts by table (`layout zorder`): a
     * Morton-clustered directory-partitioned copy whose quads a 2-D box
@@ -473,9 +502,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         rollups.get(table).flatMap(a =>
             graft.dialect.RollupServe.tryServe(spark, a.meta, cmd)
               .map(df => (s"standing rollup at ${a.path}", df)))
-          .orElse(matviews.get(table).flatMap(m =>
-            graft.dialect.MatViewServe.tryServe(spark, m, cmd)
-              .map(df => (s"matview at ${m.path}", df))))
+          .orElse(mviews.get(table).flatMap(a =>
+            graft.dialect.MatViewServe.tryServe(spark, a.meta, cmd)
+              .map(df => (s"matview at ${a.path}", df))))
       }
     } catch { case _: Exception => None }
 
@@ -1198,14 +1227,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     cmd("matview create", Write)(matviewCreate),
     cmd("matview refresh", Write)(matviewRefresh),
     cmd("matview delete", Write)(matviewDelete),
-    cmd("matview sync", Write)(matviewSync),
     cmd("matview get", Read)(matviewGet),
     cmd("matview attach", Write)(matviewAttach),
-    exact("get matviews", Read)(_ => listing("matviews", matviews) {
-      (tbl, m) => s"$tbl: keys=${m.keys.mkString(",")} " +
-        s"aggs=${m.aggs.map(a => s"${a.fn}:${a.alias}").mkString(",")} " +
-        s"path=${m.path}"
-    }),
 
     cmd("dedup index create", Write)(dedupIndexCreate),
     cmd("dedup index attach", Write)(dedupIndexAttach),
@@ -1323,21 +1346,14 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     exact("get views", Read)(_ => catalog.viewNames.mkString("\n"))) ++
     families.flatMap(familyCommands)
 
-  /** The entries every standing-index family shares: `<family> sync`,
-    * `<family> refresh where table = <t> and source = <table|path>`
-    * (fold a delta into the standing artifact, committing a fresh
-    * version; history is never rescanned), `<family> drop` and
+  /** The entries every standing-artifact family shares: `<family>
+    * sync`, its table-keyed refresh when it has one, `<family> drop` and
     * `get <family>s`. */
-  private def familyCommands(f: Family[_]): Seq[Command] = Seq(
-    cmd(s"${f.word} sync", Write)(familySync(f, _)),
-    cmd(s"${f.word} refresh", Write) { t =>
-      val table = reqArg(t, "table", s"${f.word} refresh")
-      val a = f(table)
-      val delta = tableOrPath(reqArg(t, "source", s"${f.word} refresh"))
-      s"${f.word} for $table refreshed (${a.refreshed(a.fold(delta, None))})"
-    },
-    cmd(s"${f.word} drop", Write)(f.unregister),
-    exact(s"get ${f.plural}", Read)(_ => f.listing))
+  private def familyCommands(f: Family[_]): Seq[Command] =
+    cmd(s"${f.word} sync", Write)(familySync(f, _)) +:
+      f.refreshCommand.toSeq :+
+      cmd(s"${f.word} drop", Write)(f.unregister) :+
+      exact(s"get ${f.plural}", Read)(_ => f.listing)
 
   private val byLength = commands.sortBy(-_.prefix.length)
 
@@ -1385,7 +1401,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private def autoRefreshReport(): String = {
     val st = if (autoRefreshViews) "on" else "off"
     val targets =
-      matviews.toSeq.map { case (tb, m) => s"$tb: matview ${m.path}" } ++
       joinMatviews.toSeq.flatMap { case (p, sp) =>
         Seq(s"${sp.left}: join matview $p",
           s"${sp.right}: join matview $p") } ++
@@ -1437,23 +1452,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     graft.ops.MatView.specFromJson(row.getAs[String]("spec"))
   }
 
-  /** The lineage watermark of a stored matview: the artifact's `wm_`
-    * version tag when present, else the state rows' rider column (see
-    * [[graft.ops.MatView.WatermarkCol]]); -1 when neither exists
-    * (no-lineage view or a pre-tag artifact emptied by deletes —
-    * sync refuses those and says to rebuild). */
-  private def mvWmOf(path: String,
-      state: org.apache.spark.sql.DataFrame): Long = {
-    // version tags first (the jmv/index-family scheme — they keep
-    // lineage across a state whose groups were ALL retired by deletes
-    // or a partition drop; rider columns vanish with the rows, which
-    // silently disabled sync on an emptied matview — found by the
-    // concurrency soak); the rider column is the pre-tag-artifact
-    // fallback
-    val t = indexWmOf(path)
-    if (t >= 0) t else wmColOf(state, graft.ops.MatView.WatermarkCol)
-  }
-
   /** Read a lineage-watermark rider column (-1 when absent or the
     * state has no rows — sync refuses those and says to rebuild). */
   private def wmColOf(state: org.apache.spark.sql.DataFrame,
@@ -1466,12 +1464,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     }
   }
 
-  /** Lineage watermark of a standing INDEX artifact (vindex/tindex/
-    * sindex), carried as a `wm_<n>` tag on the CURRENT committed
-    * version — tags commit atomically WITH the fold's data (the
-    * IndexStore tag protocol), so there is no state where the fold
-    * landed but its watermark didn't. -1 = no lineage (artifact
-    * created over an unstamped table, or a pre-watermark artifact). */
+  /** Lineage watermark of a [[families]] artifact, carried as a
+    * `wm_<n>` tag on the CURRENT committed version — tags commit
+    * atomically WITH the fold's data (the IndexStore tag protocol), so
+    * there is no state where the fold landed but its watermark didn't.
+    * -1 = no lineage (artifact created over an unstamped table, or a
+    * pre-watermark artifact). */
   private def indexWmOf(path: String): Long =
     graft.ops.IndexStore.currentTags(spark, path)
       .filter(_.startsWith("wm_"))
@@ -1481,7 +1479,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private def wmTag(n: Long): Seq[String] =
     if (n >= 0) Seq(s"wm_$n") else Nil
 
-  /** The `wm_` watermark an index-family fold of `delta` commits: the
+  /** The `wm_` watermark a family fold of `delta` commits: the
     * artifact's, advanced to the delta's highest tsd_id — `deltaWm`
     * when the caller knows it, else scanned. -1 stays -1. */
   private def foldedWm(path: String, delta: org.apache.spark.sql.DataFrame,
@@ -1511,8 +1509,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** Fold `delta` into the main store at `path` (`what` names it when
     * it has none), once per `tag`: `f` maps the current state to the
     * next, and a lineage-stamped delta advances the store's `wm_` tag
-    * in the SAME commit as the fold (mirrors the matview watermark
-    * rider). Returns the store's committed version. */
+    * in the SAME commit as the fold. Returns the store's committed
+    * version. */
   private def foldInto(path: String, what: String, delta: DataFrame,
       tag: Option[String], deltaWm: Option[Long])(
       f: DataFrame => DataFrame): Long =
@@ -1588,21 +1586,17 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val path = reqArg(head, "path", "matview create")
     val (keys, aggs) = graft.ops.MatView.specFromJson(specJson)
     val base = catalog.table(table)
-    // lineage watermark: the highest tsd_id snapshot the create saw —
-    // committed BOTH as a `wm_` version tag (survives an emptied
-    // state, like the jmv/index families) and as the rider column on
-    // the state rows (the pre-tag layout, kept for AS-OF readers).
-    // -1 when the table carries no tsd lineage.
-    val wm0 = mvTableWm(base)
+    // lineage watermark: the highest tsd_id snapshot the create saw,
+    // committed as a `wm_` version tag (-1, no tag, when the table
+    // carries no tsd lineage)
+    val rows = graft.ops.IndexStore.write(
+      graft.ops.MatView.partials(base, keys, aggs).localCheckpoint(), path,
+      wmTag(mvTableWm(base)))
     import org.apache.spark.sql.functions.lit
-    val state = graft.ops.MatView.partials(base, keys, aggs)
-      .withColumn(graft.ops.MatView.WatermarkCol, lit(wm0))
-    val rows = graft.ops.IndexStore.write(state.localCheckpoint(), path,
-      wmTag(wm0))
     graft.ops.IndexStore.write(spark.range(1).select(
       lit(graft.ops.MatView.specToJson(keys, aggs)).as("spec")),
       mvSpecDir(path))
-    matviews += table -> graft.dialect.MatViewServe.Meta(path, keys, aggs)
+    mviews.register(table, graft.dialect.MatViewServe.Meta(path, keys, aggs))
     catalog.recordArtifact(s"matview:$path",
       s"matview attach where table = $table and path = $path")
     val n = graft.ops.IndexStore.read(spark, path).get.count()
@@ -1617,41 +1611,92 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val table = reqArg(t, "table", "matview attach")
     val path = reqArg(t, "path", "matview attach")
     val (keys, aggs) = mvRecordedSpec(path)
-    matviews += table -> graft.dialect.MatViewServe.Meta(path, keys, aggs)
+    mviews.register(table, graft.dialect.MatViewServe.Meta(path, keys, aggs))
     s"matview attached for $table at $path (keys ${keys.mkString(",")})"
   }
 
   /** `matview refresh where path = <dir> and source = <table|path>` —
     * fold a batch into the standing view (count/sum add, min/max
     * lattice-join) under the RECORDED spec. Batch-sized work; base
-    * history never rescanned. */
+    * history never rescanned. A lineage-stamped batch advances the
+    * watermark (so a manual refresh of a crash-missed batch keeps sync
+    * exact); an unstamped batch leaves it alone. */
   private def matviewRefresh(t: String): String = {
     val path = reqArg(t, "path", "matview refresh")
     val (keys, aggs) = mvRecordedSpec(path)
-    val state = graft.ops.IndexStore.read(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no matview at $path"))
-    val wm = mvWmOf(path, state)
-    val src = tableOrPath(reqArg(t, "source", "matview refresh"))
-    // a lineage-stamped batch advances the watermark (so a manual
-    // refresh of a crash-missed batch keeps sync exact); an unstamped
-    // batch leaves it alone
-    val newWm = if (wm >= 0) math.max(wm, mvTableWm(src)) else wm
-    foldMatview(graft.dialect.MatViewServe.Meta(path, keys, aggs), state,
-      src, newWm)
+    foldMatview(graft.dialect.MatViewServe.Meta(path, keys, aggs),
+      tableOrPath(reqArg(t, "source", "matview refresh")), None, None)
     val n = graft.ops.IndexStore.read(spark, path).get.count()
     s"matview refreshed at $path: $n groups"
   }
 
-  /** Fold `delta` into matview `m`'s `state` and commit it with `tags`,
-    * carrying `newWm` as the rider column and the `wm_` tag. The commit
-    * is the fold's one action, so nothing is checkpointed. */
+  /** The matview fold body — shared by `matview refresh`, the ingest
+    * auto-fold and `matview sync`: fold `delta` into the view and
+    * advance its `wm_` tag in the same commit (see [[foldedWm]]). The
+    * commit is the fold's one action, so nothing is checkpointed.
+    * Returns the committed version. */
   private def foldMatview(m: graft.dialect.MatViewServe.Meta,
-      state: DataFrame, delta: DataFrame, newWm: Long,
-      tags: Seq[String] = Nil): Long =
-    graft.ops.IndexStore.write(graft.ops.MatView.fold(stripWm(state),
-        graft.ops.MatView.partials(delta, m.keys, m.aggs), m.keys, m.aggs)
-      .withColumn(graft.ops.MatView.WatermarkCol, lit(newWm)),
-      m.path, tags ++ wmTag(newWm))
+      delta: DataFrame, tag: Option[String], deltaWm: Option[Long]): Long = {
+    val newWm = foldedWm(m.path, delta, deltaWm)
+    graft.ops.IndexStore.write(graft.ops.MatView.fold(
+        stripWm(stateAt(m.path, "matview state")),
+        graft.ops.MatView.partials(delta, m.keys, m.aggs), m.keys, m.aggs),
+      m.path, tag.toSeq ++ wmTag(newWm))
+  }
+
+  /** Why a recorded aggregate spec cannot absorb deletes, if it
+    * cannot: min/max is not self-maintainable under deletes (the IVM
+    * boundary), and without a count an emptied group cannot retire. */
+  private def deleteRefusal(
+      aggs: Seq[graft.ops.MatView.AggSpec]): Option[String] =
+    if (aggs.exists(a => a.fn == "min" || a.fn == "max"))
+      Some("records min/max (not self-maintainable under deletes — " +
+        "rebuild it after the drop)")
+    else if (!aggs.exists(_.fn == "count"))
+      Some("records no count (group retirement undecidable)")
+    else None
+
+  /** The rows of `df` a store with lineage watermark `wm` has folded
+    * (`tsd_id <= wm`); a lineage-less store or frame passes whole. */
+  private def foldedRows(df: DataFrame, wm: Long): DataFrame =
+    if (wm >= 0 && df.columns.contains("tsd_id"))
+      df.filter(col("tsd_id").cast("long") <= wm)
+    else df
+
+  /** Abort, with the state intact, when a subtract drove some group's
+    * count negative: the deleted rows were not all folded into it. */
+  private def requireSubset(folded: DataFrame,
+      aggs: Seq[graft.ops.MatView.AggSpec], what: String,
+      sync: String): Unit = {
+    val neg = folded.filter(col(aggs.find(_.fn == "count").get.alias) < 0)
+      .count()
+    require(neg == 0L,
+      s"$what: $neg group(s) went count-negative — the deleted rows are " +
+        "not a subset of previously folded rows (if the view is behind, " +
+        s"run `$sync` first); aborted, original state intact")
+  }
+
+  /** The matview subtract, shared by `matview delete` and `drop
+    * partition`: fold `dels` OUT of matview `m` under its spec
+    * ([[graft.ops.MatView.foldDelete]]: count/sum subtract, zero-count
+    * groups retire) and commit with `tag` beside the unchanged `wm_`
+    * tag. Only rows the view has FOLDED ever contributed partials —
+    * rows above the watermark (appended while auto refresh was off, or
+    * after a fold crash) were never added, and subtracting theirs would
+    * silently under-count any group whose count stays non-negative
+    * (ADVICE r11); dropping them unfolded is exact, since a later
+    * `matview sync` replays tsd_id > wm from a base that no longer
+    * holds them. Returns the committed state. */
+  private def subtractMatview(m: graft.dialect.MatViewServe.Meta,
+      dels: DataFrame, tag: Option[String]): DataFrame = {
+    val wm = indexWmOf(m.path) // deletes never advance ingest lineage
+    val folded = graft.ops.MatView.foldDelete(
+      stripWm(stateAt(m.path, "matview state")), foldedRows(dels, wm),
+      m.keys, m.aggs).localCheckpoint()
+    requireSubset(folded, m.aggs, s"matview at ${m.path}", "matview sync")
+    graft.ops.IndexStore.write(folded, m.path, tag.toSeq ++ wmTag(wm))
+    folded
+  }
 
   /** Parse the delete set of a `… delete` command: either an inline
     * `ids = (v1, v2, …)` literal list (longs, else strings) or
@@ -1695,31 +1740,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   private def matviewDelete(t: String): String = {
     val path = reqArg(t, "path", "matview delete")
     val (keys, aggs) = mvRecordedSpec(path)
-    val state = graft.ops.IndexStore.read(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no matview at $path"))
-    val wm = mvWmOf(path, state) // deletes don't advance ingest lineage
-    import org.apache.spark.sql.functions.{col, lit}
-    // only rows the view has FOLDED (tsd_id <= wm) ever contributed
-    // partials — subtracting an unfolded row would silently
-    // under-count (the drop-partition/jmv-delete as-of discipline);
-    // lineage-less frames fall through unfiltered
-    val dels0 = tableOrPath(reqArg(t, "source", "matview delete"))
-    val dels =
-      if (wm >= 0 && dels0.columns.contains("tsd_id"))
-        dels0.filter(col("tsd_id").cast("long") <= wm)
-      else dels0
-    val folded = graft.ops.MatView.foldDelete(stripWm(state),
-      dels, keys, aggs)
-      .withColumn(graft.ops.MatView.WatermarkCol, lit(wm))
-      .localCheckpoint()
-    val cntAlias = aggs.find(_.fn == "count").get.alias
-    val negGroups = folded.filter(col(cntAlias) < 0).count()
-    require(negGroups == 0L,
-      s"matview delete: $negGroups group(s) went count-negative — the " +
-        "delete batch is not a subset of previously folded rows; " +
-        "aborted, original state intact")
-    graft.ops.IndexStore.write(folded, path, wmTag(wm))
-    s"matview deleted at $path: ${folded.count()} groups remain"
+    val left = subtractMatview(graft.dialect.MatViewServe.Meta(path, keys,
+      aggs), tableOrPath(reqArg(t, "source", "matview delete")), None)
+    s"matview deleted at $path: ${left.count()} groups remain"
   }
 
   private def jmvRecordedSpec(path: String): graft.ops.JoinMatView.Spec = {
@@ -1904,10 +1927,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       // R_old: the right side AS OF its watermark — the snapshot the
       // left delta must join so ΔL⋈ΔR isn't also counted by the
       // right-delta fold below (which joins the FULL current left)
-      val rightOld =
-        if (wmR >= 0 && rightT.columns.contains("tsd_id"))
-          rightT.filter(col("tsd_id").cast("long") <= wmR)
-        else rightT
+      val rightOld = foldedRows(rightT, wmR)
       var st = stripWm(state)
       if (nL > 0) st = graft.ops.JoinMatView.refresh(st, noSysCols(dL),
         noSysCols(rightOld), spec, "left")
@@ -1936,51 +1956,58 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * either side never enter the subtraction. */
   private def joinMatviewDelete(t: String): String = {
     val (spec, path, dels, other, side) = jmvDeltaArgs(t, "delete")
-    val state = graft.ops.IndexStore.read(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no join matview at $path"))
-    import graft.ops.JoinMatView.{WmLeftCol, WmRightCol}
-    // deletes don't advance ingest lineage — watermarks ride through
-    val (wmL, wmR) = jmvWmsOf(path, state)
-    val (wmSide, wmOther) =
-      if (side == "left") (wmL, wmR) else (wmR, wmL)
-    // the state holds partials of L_asof(wmL) ⋈ R_asof(wmR), so the
-    // subtractive fold mirrors BOTH snapshots (same as the
-    // drop-partition path, ADVICE r12): (a) only delete rows this
-    // side had folded (tsd_id <= wmSide) ever contributed pairs —
-    // unfolded rows subtract nothing; (b) those pairs joined the
-    // other side AS OF ITS watermark — joining the current other
-    // table would subtract deletes ⋈ Δother partials the state never
-    // contained, a silent under-count the count-negative check
-    // cannot see. Lineage-less frames fall through unfiltered.
-    import org.apache.spark.sql.functions.{col, lit}
-    val delsAsOf =
-      if (wmSide >= 0 && dels.columns.contains("tsd_id"))
-        dels.filter(col("tsd_id").cast("long") <= wmSide)
-      else dels
-    val otherAsOf =
-      if (wmOther >= 0 && other.columns.contains("tsd_id"))
-        other.filter(col("tsd_id").cast("long") <= wmOther)
-      else other
     val bc = "(?i)\\bbroadcast\\s*=\\s*false".r.findFirstIn(t).isEmpty
+    val left = subtractJoinMatview(path, spec, side, dels, other, None, bc)
+    s"join matview deleted at $path: ${left.count()} groups remain"
+  }
+
+  /** The join matview subtract, shared by `join matview delete` and
+    * `drop partition`: fold `dels`, rows of `side`, OUT of the join
+    * matview at `path` (count/sum subtract the partials of `dels ⋈
+    * other`, zero-count groups retire) and commit with `tag` beside the
+    * unchanged watermark pair. The state holds partials of
+    * L_asof(wmL) ⋈ R_asof(wmR), so the subtract mirrors BOTH snapshots
+    * (ADVICE r11/r12): (a) only rows this side had folded ever
+    * contributed pairs — rows above its watermark subtract nothing and
+    * are exact to drop unfolded (`join matview sync` replays them from
+    * the base); (b) those pairs joined the OTHER side as of ITS
+    * watermark — joining the current `other` table would subtract
+    * partials the state never contained, a silent under-count the
+    * count-negative check cannot see. Returns the committed state. */
+  private def subtractJoinMatview(path: String,
+      spec: graft.ops.JoinMatView.Spec, side: String, dels: DataFrame,
+      other: DataFrame, tag: Option[String],
+      broadcastDelta: Boolean = true): DataFrame = {
+    import graft.ops.JoinMatView.{WmLeftCol, WmRightCol}
+    val state = stateAt(path, "join matview")
+    // deletes never advance ingest lineage — watermarks ride through
+    val (wmL, wmR) = jmvWmsOf(path, state)
+    val (wmSide, wmOther) = if (side == "left") (wmL, wmR) else (wmR, wmL)
     val folded = graft.ops.JoinMatView.delete(stripWm(state),
-        noSysCols(delsAsOf), noSysCols(otherAsOf), spec, side,
-        broadcastDelta = bc)
+        noSysCols(foldedRows(dels, wmSide)),
+        noSysCols(foldedRows(other, wmOther)), spec, side, broadcastDelta)
       .withColumn(WmLeftCol, lit(wmL))
       .withColumn(WmRightCol, lit(wmR))
       .localCheckpoint()
-    val cntAlias = spec.aggs.find(_.fn == "count").get.alias
-    val negGroups = folded.filter(col(cntAlias) < 0).count()
-    require(negGroups == 0L,
-      s"join matview delete: $negGroups group(s) went count-negative — " +
-        "the delete batch is not a subset of previously folded rows; " +
-        "aborted, original state intact")
-    graft.ops.IndexStore.write(folded, path, jmvWmTags(wmL, wmR))
-    s"join matview deleted at $path: ${folded.count()} groups remain"
+    requireSubset(folded, spec.aggs, s"join matview at $path",
+      "join matview sync")
+    graft.ops.IndexStore.write(folded, path,
+      tag.toSeq ++ jmvWmTags(wmL, wmR))
+    folded
   }
 
-  /** Fold an ingest batch into every registered standing aggregate
-    * artifact over `table` — matviews (watermark advanced in the SAME
-    * IndexStore commit), rollups, and join matviews (the batch is the
+  /** Each join matview `table` is a side of: (path, spec, side). */
+  private def joinMatviewsOver(table: String)
+      : Seq[(String, graft.ops.JoinMatView.Spec, String)] =
+    joinMatviews.toSeq.flatMap { case (p, spec) =>
+      (if (spec.left == table) Some("left")
+        else if (spec.right == table) Some("right") else None)
+        .map((p, spec, _))
+    }
+
+  /** Fold an ingest batch into every registered standing artifact over
+    * `table` — each [[families]] artifact (watermark advanced in the
+    * SAME IndexStore commit) and each join matview (the batch is the
     * delta side; the other side joins as of now). Called from
     * [[ingest]] after the table append commits, when auto refresh is
     * on. A failed fold NEVER fails the ingest (the rows are already
@@ -2005,9 +2032,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * checkpointed Structured Streaming's retry-the-last-batch
     * discipline; see [[graft.streaming.StreamIngest.startTransactionalSink]]
     * for the sink wrapper. Fold errors are recorded, never thrown
-    * (see [[autoFoldViews]] rationale). `tsdId` < 0 leaves matview
-    * lineage watermarks untouched (a stream batch carries no tsd
-    * lineage; `matview sync` stays scoped to the PUT path). */
+    * (see [[autoFoldViews]] rationale). With `tsdId` < 0 (a stream
+    * batch) a family artifact's watermark advances to the batch's own
+    * highest `tsd_id`, and stays put when the batch carries none. */
   def foldStandingViews(table: String,
       batch: org.apache.spark.sql.DataFrame, tsdId: Int = -1,
       batchTag: Option[String] = None): Unit = tableLocked(table) {
@@ -2021,88 +2048,58 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val batchWm =
       if (tsdId >= 0 && batch.columns.contains("tsd_id")) tsdId.toLong
       else -1L
-    matviews.get(table).foreach { m =>
-      try if (!tagged(m.path)) {
-        val state = stateAt(m.path, "matview state")
-        val wm = mvWmOf(m.path, state)
-        // LINEAGE GAP CHECK: a ledger entry for this table strictly
-        // between the view's watermark and this batch means a batch
-        // was appended but never folded (auto refresh was off, or its
-        // fold failed/crashed). Folding THIS batch alone and advancing
-        // the watermark would orphan those rows FOREVER — `matview
-        // sync` filters tsd_id > wm, finds nothing, and reports "in
-        // sync" while the view silently diverges. On a gap, fold the
-        // sync slice (every table row above the watermark — the
-        // current batch is already appended and is included) instead
-        // of the batch alone; the common contiguous path stays
-        // batch-sized.
-        val gapped = wm >= 0 && batchWm > wm &&
+    joinMatviewsOver(table).foreach { case (path, spec, sd) =>
+      try if (!tagged(path)) {
+        import graft.ops.JoinMatView.{WmLeftCol, WmRightCol}
+        val state = stateAt(path, "join matview")
+        val (wmL, wmR) = jmvWmsOf(path, state)
+        val (wmSide, wmOther) = if (sd == "left") (wmL, wmR) else (wmR, wmL)
+        val otherName = if (sd == "left") spec.right else spec.left
+        val otherT = catalog.table(otherName)
+        // two lineage anomalies route to the sync decomposition
+        // instead of the batch-vs-other-current fold: (a) a gap on
+        // THIS side (same orphaned-batch hazard as the family folds'
+        // gap check below); (b) unfolded rows on the OTHER side —
+        // batch ⋈ other_current would count Δthis⋈Δother now AND again
+        // when the other side folds (the double-count the refresh
+        // guard refuses on the command surface)
+        val sideGap = wmSide >= 0 && batchWm > wmSide &&
           tsdLedger.list(Some(table))
-            .exists(e => e.fileId > wm && e.fileId < batchWm)
-        val (deltaRows, newWm) =
-          if (gapped) {
-            val base = catalog.table(table)
-            (base.filter(col("tsd_id").cast("long") > wm),
-              mvTableWm(base))
-          } else (batch, if (wm >= 0) math.max(wm, batchWm) else wm)
-        foldMatview(m, state, deltaRows, newWm, batchTag.toSeq)
-      } catch { case e: Exception =>
-        foldError(s"matview $table (${m.path}): ${e.getMessage}")
-      }
-    }
-    joinMatviews.foreach { case (path, spec) =>
-      val side = if (spec.left == table) Some("left")
-        else if (spec.right == table) Some("right") else None
-      side.foreach { sd =>
-        try if (!tagged(path)) {
-          import graft.ops.JoinMatView.{WmLeftCol, WmRightCol}
-          val state = stateAt(path, "join matview")
-          val (wmL, wmR) = jmvWmsOf(path, state)
-          val (wmSide, wmOther) = if (sd == "left") (wmL, wmR) else (wmR, wmL)
-          val otherName = if (sd == "left") spec.right else spec.left
-          val otherT = catalog.table(otherName)
-          // two lineage anomalies route to the sync decomposition
-          // instead of the batch-vs-other-current fold: (a) a gap on
-          // THIS side (same orphaned-batch hazard as the matview
-          // branch); (b) unfolded rows on the OTHER side — batch ⋈
-          // other_current would count Δthis⋈Δother now AND again when
-          // the other side folds (the double-count the refresh guard
-          // refuses on the command surface)
-          val sideGap = wmSide >= 0 && batchWm > wmSide &&
-            tsdLedger.list(Some(table))
-              .exists(e => e.fileId > wmSide && e.fileId < batchWm)
-          val otherPending = wmOther >= 0 && mvTableWm(otherT) > wmOther
-          if (sideGap || otherPending) jmvSyncFold(path, spec, batchTag)
-          else {
-            val newWmSide =
-              if (wmSide >= 0) math.max(wmSide, batchWm) else wmSide
-            val (newL, newR) =
-              if (sd == "left") (newWmSide, wmR) else (wmL, newWmSide)
-            val folded = graft.ops.JoinMatView.refresh(stripWm(state),
-                noSysCols(batch), noSysCols(otherT), spec, sd)
-              .withColumn(WmLeftCol, lit(newL))
-              .withColumn(WmRightCol, lit(newR))
-            graft.ops.IndexStore.write(folded, path,
-              batchTag.toSeq ++ jmvWmTags(newL, newR))
-          }
-        } catch { case e: Exception =>
-          foldError(s"join matview $table ($path): ${e.getMessage}")
+            .exists(e => e.fileId > wmSide && e.fileId < batchWm)
+        val otherPending = wmOther >= 0 && mvTableWm(otherT) > wmOther
+        if (sideGap || otherPending) jmvSyncFold(path, spec, batchTag)
+        else {
+          val newWmSide =
+            if (wmSide >= 0) math.max(wmSide, batchWm) else wmSide
+          val (newL, newR) =
+            if (sd == "left") (newWmSide, wmR) else (wmL, newWmSide)
+          val folded = graft.ops.JoinMatView.refresh(stripWm(state),
+              noSysCols(batch), noSysCols(otherT), spec, sd)
+            .withColumn(WmLeftCol, lit(newL))
+            .withColumn(WmRightCol, lit(newR))
+          graft.ops.IndexStore.write(folded, path,
+            batchTag.toSeq ++ jmvWmTags(newL, newR))
         }
+      } catch { case e: Exception =>
+        foldError(s"join matview $table ($path): ${e.getMessage}")
       }
     }
-    // ---- standing INDEX families: a PUT into a vindex/tindex/sindex-
-    // backed table must keep the index serving the new rows too —
-    // round-10 left these on manual refresh, so a PUT silently staled
-    // BM25/ANN serving. Same error discipline (record, never throw),
-    // same exactly-once tag protocol; the tindex/sindex folds are
-    // additionally idempotent by construction (per-doc replace /
-    // bottom-k lattice union).
-    // on a lineage gap (a batch appended but never folded — the same
-    // ledger check as the matview branch) the fold takes the sync
-    // slice instead of the batch alone, so the artifact's wm_ tag
-    // never advances past an unfolded batch. Beside the delta it
-    // returns the delta's watermark where it is known without a scan:
-    // a contiguous batch's is the tsd_id ingest just stamped
+    // ---- the [[families]], in fold order: same error discipline
+    // (record, never throw), same exactly-once tag protocol; the
+    // tindex/sindex folds are additionally idempotent by construction
+    // (per-doc replace / bottom-k lattice union).
+    // LINEAGE GAP CHECK: a ledger entry for this table strictly between
+    // the artifact's watermark and this batch means a batch was
+    // appended but never folded (auto refresh was off, or its fold
+    // failed/crashed). Folding THIS batch alone and advancing the
+    // watermark would orphan those rows FOREVER — `<family> sync`
+    // filters tsd_id > wm, finds nothing, and reports "in sync" while
+    // the artifact silently diverges. On a gap the fold takes the sync
+    // slice (every table row above the watermark — the current batch
+    // is already appended and is included) instead of the batch alone.
+    // Beside the delta it returns the delta's watermark where it is
+    // known without a scan: a contiguous batch's is the tsd_id ingest
+    // just stamped
     def indexDelta(artifactPath: String)
         : (org.apache.spark.sql.DataFrame, Option[Long]) = {
       val wm = indexWmOf(artifactPath)
@@ -2122,43 +2119,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       } catch { case e: Exception =>
         foldError(s"${a.word} $table (${a.path}): ${e.getMessage}")
       }
-    }
-  }
-
-  /** `matview sync where table = <t>` — the crash-exact reconcile:
-    * fold exactly the table rows whose `tsd_id` lies above the view's
-    * recorded watermark (batches appended while auto refresh was off,
-    * or lost to a crash between a table append and its auto-fold),
-    * advancing the watermark in the same commit. Idempotent: a second
-    * sync is a no-op. Refuses loudly when the view carries no lineage
-    * watermark (base table without system columns, pre-watermark
-    * artifact, or a state emptied by deletes) — rebuild with `matview
-    * create` instead; and refuses a table without a `tsd_id` column. */
-  private def matviewSync(t: String): String = {
-    val table = reqArg(t, "table", "matview sync")
-    val m = matviews.getOrElse(table, throw new IllegalArgumentException(
-      s"no matview registered for $table — matview create/attach first"))
-    val state = graft.ops.IndexStore.read(spark, m.path).getOrElse(
-      throw new IllegalArgumentException(s"no matview state at ${m.path}"))
-    val wm = mvWmOf(m.path, state)
-    require(wm >= 0,
-      s"matview for $table has no lineage watermark (created over a " +
-        "table without tsd_id system columns, or a pre-tag artifact " +
-        "whose state was emptied by deletes) — sync cannot prove which " +
-        "rows are folded; rebuild with `matview create`")
-    val base = catalog.table(table)
-    require(base.columns.contains("tsd_id"),
-      s"table $table carries no tsd_id column — sync cannot identify " +
-        "missed batches")
-    import org.apache.spark.sql.functions.col
-    val missed = base.filter(col("tsd_id").cast("long") > wm)
-    val nMissed = missed.count()
-    if (nMissed == 0L) s"matview for $table in sync (watermark $wm)"
-    else {
-      val newWm = mvTableWm(base)
-      foldMatview(m, state, missed, newWm)
-      s"matview for $table synced: $nMissed missed row(s) folded, " +
-        s"watermark $wm -> $newWm"
     }
   }
 
@@ -2199,20 +2159,14 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       catch { case e: Exception =>
         out += s"$label: verify FAILED — ${e.getMessage}" }
     val base = catalog.table(table)
-    matviews.get(table).foreach(m => attempt(s"matview ${m.path}") {
-      diff(s"matview ${m.path}", stripWm(stored(m.path)),
-        graft.ops.MatView.partials(base, m.keys, m.aggs),
-        "run `matview sync` (missed adds) or rebuild with `matview create`")
-    })
-    joinMatviews.foreach { case (p, spec) =>
-      if (spec.left == table || spec.right == table)
-        attempt(s"join matview $p") {
-          diff(s"join matview $p", stripWm(stored(p)),
-            graft.ops.JoinMatView.create(
-              noSysCols(catalog.table(spec.left)),
-              noSysCols(catalog.table(spec.right)), spec),
-            "run `join matview sync` or rebuild with `join matview create`")
-        }
+    joinMatviewsOver(table).foreach { case (p, spec, _) =>
+      attempt(s"join matview $p") {
+        diff(s"join matview $p", stripWm(stored(p)),
+          graft.ops.JoinMatView.create(
+            noSysCols(catalog.table(spec.left)),
+            noSysCols(catalog.table(spec.right)), spec),
+          "run `join matview sync` or rebuild with `join matview create`")
+      }
     }
     families.flatMap(_.get(table)).foreach { a =>
       val label = s"${a.word} ${a.path}"
@@ -2233,9 +2187,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
 
   /** `sync all where table = <t>` — one command reconciling EVERY
     * registered standing artifact over a table after a crash or an
-    * auto-refresh-off window: matview sync, join matview sync (each
-    * jmv the table participates in), and every standing-index family's
-    * sync ([[families]]).
+    * auto-refresh-off window: join matview sync (each jmv the table
+    * participates in) and every family's sync ([[families]]).
     * Per-artifact tolerant — one artifact without lineage reports its
     * refusal while the rest still reconcile (the operational pairing
     * of `attach all`: restart recovery re-registers the fleet, sync
@@ -2246,12 +2199,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     def attempt(label: String)(body: => String): Unit =
       out += (try body
         catch { case e: Exception => s"FAILED $label: ${e.getMessage}" })
-    if (matviews.contains(table))
-      attempt(s"matview $table")(
-        matviewSync(s"matview sync where table = $table"))
-    joinMatviews.foreach { case (p, spec) =>
-      if (spec.left == table || spec.right == table)
-        attempt(s"join matview $p")(jmvSyncFold(p, spec, None))
+    joinMatviewsOver(table).foreach { case (p, spec, _) =>
+      attempt(s"join matview $p")(jmvSyncFold(p, spec, None))
     }
     families.filter(_.get(table).isDefined).foreach(f =>
       attempt(s"${f.word} $table")(familySync(f, t)))
@@ -2267,12 +2216,14 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     else lines.mkString("\n")
   }
 
-  /** `<family> sync where table = <t>` for a standing-index family —
-    * the twin of `matview sync`: fold exactly the table rows whose
-    * tsd_id lies above the artifact's `wm_` lineage tag (batches
-    * appended while auto refresh was off, or lost between append and
-    * fold), advancing the tag in the same IndexStore commit.
-    * Idempotent; refuses loudly without lineage. */
+  /** `<family> sync where table = <t>` — the crash-exact reconcile:
+    * fold exactly the table rows whose tsd_id lies above the artifact's
+    * `wm_` lineage tag (batches appended while auto refresh was off, or
+    * lost between append and fold), advancing the tag in the same
+    * IndexStore commit. Idempotent; refuses loudly without lineage
+    * (including a matview written before the tag protocol, whose only
+    * lineage is the retired rider column) and without a `tsd_id`
+    * column. */
   private def familySync(f: Family[_], t: String): String = {
     val kind = f.word
     val table = reqArg(t, "table", s"$kind sync")
@@ -4378,11 +4329,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * count). */
   private def retainRollup(meta: graft.dialect.RollupServe.Meta,
       dropped: DataFrame, survivors: DataFrame, tag: String): String = {
-    val rwm = indexWmOf(meta.path)
-    val recomputeBase =
-      if (rwm >= 0 && survivors.columns.contains("tsd_id"))
-        survivors.filter(col("tsd_id").cast("long") <= rwm)
-      else survivors
+    val recomputeBase = foldedRows(survivors, indexWmOf(meta.path))
     rewrite(meta.path, "rollup artifact", Some(tag))(
       graft.ops.Rollup.deleteRows(_, dropped, recomputeBase.drop("__par"),
         meta.dims, meta.valueCols))
@@ -5582,28 +5529,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     import org.apache.spark.sql.functions.lit
     val base = catalog.table(table)
     if (!base.columns.contains("__par")) return Seq.empty
-    def hasMinMax(aggs: Seq[graft.ops.MatView.AggSpec]) =
-      aggs.exists(a => a.fn == "min" || a.fn == "max")
-    def noCount(aggs: Seq[graft.ops.MatView.AggSpec]) =
-      !aggs.exists(_.fn == "count")
     // ---- boundary map, checked before ANY side effect ----
     val refusals = Seq.newBuilder[String]
-    matviews.get(table).foreach { m =>
-      if (hasMinMax(m.aggs)) refusals +=
-        s"matview at ${m.path} records min/max (not self-maintainable " +
-          "under deletes — rebuild it after the drop)"
-      else if (noCount(m.aggs)) refusals +=
-        s"matview at ${m.path} records no count (group retirement " +
-          "undecidable)"
-    }
-    joinMatviews.foreach { case (p, spec) =>
-      if (spec.left == table || spec.right == table) {
-        if (hasMinMax(spec.aggs)) refusals +=
-          s"join matview at $p records min/max (not self-maintainable " +
-            "under deletes)"
-        else if (noCount(spec.aggs)) refusals +=
-          s"join matview at $p records no count"
-      }
+    val jmvs = joinMatviewsOver(table)
+    jmvs.foreach { case (p, spec, _) =>
+      deleteRefusal(spec.aggs).foreach(why =>
+        refusals += s"join matview at $p $why")
     }
     families.flatMap(_.get(table)).foreach(a =>
       a.retain.left.foreach(why => refusals += s"${a.word} at ${a.path} $why"))
@@ -5639,94 +5570,16 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     val receipts = Seq.newBuilder[String]
     refused.foreach(r => receipts += s"STALE (forced): $r")
     def tagged(p: String) = graft.ops.IndexStore.hasTag(spark, p, tag)
-    def noPar(df: org.apache.spark.sql.DataFrame) = df.drop("__par")
 
-    matviews.get(table)
-      .filterNot(m => hasMinMax(m.aggs) || noCount(m.aggs))
-      .foreach { m =>
-        if (tagged(m.path))
-          receipts += s"matview at ${m.path}: already folded (drop tag)"
-        else {
-          val state = stateAt(m.path, "matview state")
-          val wm = mvWmOf(m.path, state) // retention doesn't advance lineage
-          // subtract ONLY rows the view has folded (tsd_id <= wm) —
-          // rows above the lineage watermark (appended while auto
-          // refresh was off, or after a fold crash) were never added,
-          // and subtracting their partials would silently under-count
-          // any group whose count stays non-negative (ADVICE r11);
-          // dropping them unfolded is exact: a later `matview sync`
-          // replays tsd_id > wm from the base, where they no longer
-          // exist
-          val foldable =
-            if (wm >= 0 && droppedRows.columns.contains("tsd_id"))
-              droppedRows.filter(col("tsd_id").cast("long") <= wm)
-            else droppedRows
-          val folded = graft.ops.MatView.foldDelete(stripWm(state),
-            foldable, m.keys, m.aggs)
-            .withColumn(graft.ops.MatView.WatermarkCol, lit(wm))
-            .localCheckpoint()
-          val cntAlias = m.aggs.find(_.fn == "count").get.alias
-          val neg = folded.filter(col(cntAlias) < 0).count()
-          require(neg == 0L,
-            s"drop partition $table: matview at ${m.path} went " +
-              s"count-negative on $neg group(s) — the view has not " +
-              "folded all dropped rows (run `matview sync` first); " +
-              "aborted with all state intact")
-          graft.ops.IndexStore.write(folded, m.path,
-            Seq(tag) ++ wmTag(wm))
-          receipts += s"matview at ${m.path}: $nDrop tombstones folded"
-        }
-      }
-    joinMatviews.foreach { case (p, spec) =>
-      val side = if (spec.left == table) Some("left")
-        else if (spec.right == table) Some("right") else None
-      side.filterNot(_ => hasMinMax(spec.aggs) || noCount(spec.aggs))
-        .foreach { sd =>
-          if (tagged(p))
-            receipts += s"join matview at $p: already folded (drop tag)"
+    jmvs.filter(j => deleteRefusal(j._2.aggs).isEmpty).foreach {
+      case (p, spec, sd) =>
+        receipts += s"join matview at $p: " + (
+          if (tagged(p)) "already folded (drop tag)"
           else {
-            import graft.ops.JoinMatView.{WmLeftCol, WmRightCol}
-            val state = stateAt(p, "join matview")
-            val (wmL, wmR) = jmvWmsOf(p, state)
-            val (wmSide, wmOther) =
-              if (sd == "left") (wmL, wmR) else (wmR, wmL)
-            val otherName = if (sd == "left") spec.right else spec.left
-            // the state holds partials of L_asof(wmL) ⋈ R_asof(wmR),
-            // so the subtractive fold must mirror BOTH snapshots
-            // (ADVICE r11): (a) only dropped rows this side had
-            // folded (tsd_id <= wmSide) contributed pairs — rows
-            // above the watermark subtract nothing and are exact to
-            // drop unfolded (`join matview sync` replays > wmSide
-            // from the post-drop base); (b) those pairs joined the
-            // OTHER side AS OF ITS watermark — joining the current
-            // other table would subtract dropped ⋈ Δother partials
-            // the state never contained (silent under-count)
-            val foldable =
-              if (wmSide >= 0 && droppedRows.columns.contains("tsd_id"))
-                droppedRows.filter(col("tsd_id").cast("long") <= wmSide)
-              else droppedRows
-            val otherCur = catalog.table(otherName)
-            val otherAsOf =
-              if (wmOther >= 0 && otherCur.columns.contains("tsd_id"))
-                otherCur.filter(col("tsd_id").cast("long") <= wmOther)
-              else otherCur
-            val folded = graft.ops.JoinMatView.delete(stripWm(state),
-              noPar(noSysCols(foldable)),
-              noPar(noSysCols(otherAsOf)), spec, sd)
-              .withColumn(WmLeftCol, lit(wmL))
-              .withColumn(WmRightCol, lit(wmR))
-              .localCheckpoint()
-            val cntAlias = spec.aggs.find(_.fn == "count").get.alias
-            val neg = folded.filter(col(cntAlias) < 0).count()
-            require(neg == 0L,
-              s"drop partition $table: join matview at $p went " +
-                s"count-negative on $neg group(s) — run `join matview " +
-                "sync` first; aborted with all state intact")
-            graft.ops.IndexStore.write(folded, p,
-              Seq(tag) ++ jmvWmTags(wmL, wmR))
-            receipts += s"join matview at $p: $nDrop tombstones folded"
-          }
-        }
+            subtractJoinMatview(p, spec, sd, droppedRows, catalog.table(
+              if (sd == "left") spec.right else spec.left), Some(tag))
+            s"$nDrop tombstones folded"
+          })
     }
     // a re-run skips an artifact only when every one of its stores
     // carries the drop tag (sidecars commit after the main store)

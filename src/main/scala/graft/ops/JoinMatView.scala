@@ -57,15 +57,14 @@ import org.apache.spark.sql.functions._
 object JoinMatView {
   import MatView.AggSpec
 
-  /** Per-side lineage watermark columns — the jmv twin of
-    * [[MatView.WatermarkCol]]: the highest ingest-ledger `tsd_id` of
-    * each BASE side whose rows are folded into this state, riding on
-    * the state rows so they commit atomically WITH every fold. The
-    * pair is what `join matview sync` reads to replay exactly the
-    * missed rows per side, and what the refresh guard reads to refuse
-    * a fold that would double-count the cross delta ΔA⋈ΔB (folding a
-    * left delta against a right snapshot that itself contains
-    * unfolded rows). -1 = that side carries no tsd lineage. */
+  /** Per-side lineage watermark columns: the highest ingest-ledger
+    * `tsd_id` of each BASE side whose rows are folded into this state,
+    * riding on the state rows so they commit atomically WITH every
+    * fold. The pair is what `join matview sync` reads to replay
+    * exactly the missed rows per side, and what the refresh guard
+    * reads to refuse a fold that would double-count the cross delta
+    * ΔA⋈ΔB (folding a left delta against a right snapshot that itself
+    * contains unfolded rows). -1 = that side carries no tsd lineage. */
   val WmLeftCol = "__graft_wm_left"
   val WmRightCol = "__graft_wm_right"
 

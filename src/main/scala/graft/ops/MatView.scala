@@ -30,18 +30,13 @@ import org.apache.spark.sql.functions._
   * corruption. fold == rebuild is exactly distributivity; q166 proves
   * it against a one-shot GROUP BY oracle. */
 object MatView {
-  /** Ingest-lineage watermark column the ENGINE rides on stored matview
-    * state rows (every row carries the same value): the highest
-    * `tsd_id` ingest batch folded into the view. It lives ON the state
-    * rows so it commits in the SAME IndexStore write as the fold it
-    * describes (PERF lesson 28 — a scalar derived from a versioned
-    * artifact never gets its own commit point); `matview sync` replays
-    * exactly the rows with `tsd_id > watermark` after a crash between
-    * a table append and its auto-fold. -1 / absent = the view has no
-    * lineage (base table without system columns, or a pre-watermark
-    * artifact): folds work, sync refuses loudly. The ops in this
-    * object never see the column — the Engine strips it before every
-    * fold and re-attaches it after. */
+  /** The retired ingest-lineage watermark column older engines rode on
+    * stored matview state rows (the highest folded `tsd_id`). A
+    * matview's lineage is now the `wm_<tsd_id>` IndexStore version tag
+    * every family artifact carries, committed in the same write as the
+    * fold and kept across an emptied state; the column is no longer
+    * written, and readers drop it so artifacts that still carry it
+    * serve and fold unchanged. */
   val WatermarkCol = "_graft_mv_wm"
 
   /** One aggregate column: `fn` in count|sum|min|max over SQL `expr`,

@@ -229,6 +229,18 @@ final class KafkaMiniBroker(port: Int = 0) {
     }
   }
 
+  /** Retention test hook: append `msgs` and age the whole log out in
+    * one step, under the partition's lock — messages retention took
+    * before any consumer could fetch them. */
+  def appendExpired(topic: String, msgs: Seq[Array[Byte]],
+      partition: Int = 0): Unit = {
+    val l = logOf(topic, partition)
+    l.synchronized {
+      l.buf ++= msgs
+      truncate(topic, l.hw, partition)
+    }
+  }
+
   def topicSize(topic: String, partition: Int = 0): Int = {
     val l = logOf(topic, partition); l.synchronized(l.buf.length)
   }

@@ -2,16 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The five `wm_`-tagged standing-index families (rollup, vindex,
-  * tindex, sindex, dedup index) driven together through the command
-  * surface: every `<family> sync`, `sync all`, `artifact verify` and the
-  * auto-fold inventory, over one lineage-stamped table whose batch was
-  * missed while auto refresh was off. */
+/** The six `wm_`-tagged standing-artifact families (matview, rollup,
+  * vindex, tindex, sindex, dedup index) driven together through the
+  * command surface: every `<family> sync`, `sync all`, `artifact verify`
+  * and the auto-fold inventory, over one lineage-stamped table whose
+  * batch was missed while auto refresh was off. */
 class ArtifactFamilySpec extends SparkSpec {
   import spark.implicits._
 
   test("a missed batch: each family's sync folds it once, sync all and " +
-      "artifact verify see all five, the sidecars serve it") {
+      "artifact verify see all six, the sidecars serve it") {
     val dir = java.nio.file.Files.createTempDirectory("af1")
     Seq((1L, "2024-01-01 10:00:00", 10L, "alpha beta gamma",
         Array(1.0f, 0.0f)),
@@ -24,8 +24,11 @@ class ArtifactFamilySpec extends SparkSpec {
     val cat = new graft.engine.Catalog(spark)
     cat.registerTable("af", dir.resolve("af.parquet").toString)
     val engine = new graft.engine.Engine(spark, cat)
-    val p = Seq("ru", "vx", "tx", "sx", "dx")
+    val p = Seq("mv", "ru", "vx", "tx", "sx", "dx")
       .map(n => n -> dir.resolve(n).toString).toMap
+    engine.execute(s"matview create where table = af and path = ${p("mv")} " +
+      """and spec = {"keys": ["id"], "aggs": [{"fn": "count", """ +
+      """"alias": "n"}, {"fn": "sum", "expr": "v", "alias": "sv"}]}""")
     engine.execute(s"rollup create where table = af and path = ${p("ru")} " +
       "and time = ts and value = v and grain = hour")
     engine.execute(s"vindex create where table = af and path = ${p("vx")} " +
@@ -45,7 +48,8 @@ class ArtifactFamilySpec extends SparkSpec {
         """"text": "kappa lambda mu", "vec": [0.5, 0.5]}""")
       .mkString("\n"))
 
-    val words = Seq("rollup", "vindex", "tindex", "sindex", "dedup index")
+    val words =
+      Seq("matview", "rollup", "vindex", "tindex", "sindex", "dedup index")
     words.foreach { w =>
       val first = engine.execute(s"$w sync where table = af")
       assert(first.startsWith(s"$w for af synced: 2 missed row(s)"), first)
@@ -56,21 +60,21 @@ class ArtifactFamilySpec extends SparkSpec {
     words.foreach(w =>
       assert(all.linesIterator.count(_.startsWith(s"$w for af in sync")) === 1,
         all))
-    assert(all.linesIterator.size === 5, all)
+    assert(all.linesIterator.size === 6, all)
 
     val verify = engine.execute("artifact verify where table = af")
-    assert(verify.linesIterator.count(_.contains("VERIFIED exact")) === 4,
+    assert(verify.linesIterator.count(_.contains("VERIFIED exact")) === 5,
       verify)
     assert(verify.contains(s"vindex ${p("vx")}: verify REFUSED"), verify)
     assert(!verify.contains("DIVERGED") && !verify.contains("FAILED"),
       verify)
 
     val inv = engine.execute("get view auto refresh")
-    Seq("rollup" -> "ru", "vindex" -> "vx", "tindex" -> "tx",
-        "sindex" -> "sx", "dedup index" -> "dx").foreach { case (w, n) =>
+    Seq("matview" -> "mv", "rollup" -> "ru", "vindex" -> "vx",
+        "tindex" -> "tx", "sindex" -> "sx", "dedup index" -> "dx").foreach { case (w, n) =>
       assert(inv.contains(s"af: $w ${p(n)}"), inv)
     }
-    assert(inv.linesIterator.count(_.startsWith("af: ")) === 5, inv)
+    assert(inv.linesIterator.count(_.startsWith("af: ")) === 6, inv)
 
     // the synced batch reaches both sidecars: the trigram sidecar serves
     // `tindex like`, and the Bloom prefilter passes a re-sent copy of a

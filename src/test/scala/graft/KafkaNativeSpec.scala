@@ -270,11 +270,11 @@ class KafkaNativeSpec extends SparkSpec {
       while (lines().size < 2 && System.currentTimeMillis < deadline)
         Thread.sleep(30)
       assert(lines().size === 2, s"setup batch: ${lines()}")
-      // consumer is drained at offset 2, sleeping: retention now eats
-      // the WHOLE log including 4 messages it never saw
-      producer.produceStrings("tr",
-        (0 until 4).map(i => s"""{"lost": $i}"""))
-      broker.truncate("tr", 6L)
+      // consumer is drained at offset 2: retention now eats the WHOLE
+      // log including 4 messages it never saw (appended and truncated
+      // in one step, so no fetch can see them)
+      broker.appendExpired("tr",
+        (0 until 4).map(i => s"""{"lost": $i}""".getBytes))
       producer.produceStrings("tr", Seq("""{"m": "recovered"}"""))
       deadline = System.currentTimeMillis + 15000
       while (!lines().exists(_.contains("recovered")) &&

@@ -115,6 +115,7 @@ class CommandTableSpec extends SparkSpec {
     "matview sync where table = t" -> Write,
     "matview get where path = /a/mv" -> Read,
     "matview attach where table = t" -> Write,
+    "matview drop where table = t" -> Write,
     "get matviews" -> Read,
     "dedup index create where table = t" -> Write,
     "dedup index attach where table = t" -> Write,
@@ -239,6 +240,7 @@ class CommandTableSpec extends SparkSpec {
       "matview delete where" -> "matview delete requires path =",
       "matview sync where" -> "matview sync requires table =",
       "matview get where" -> "matview get requires path =",
+      "matview drop where" -> "matview drop requires table =",
       "join matview create where" -> "join matview create requires spec =",
       "join matview refresh where" -> "join matview refresh requires path =",
       "join matview delete where" -> "join matview delete requires path =",
