@@ -53,7 +53,7 @@ object EdgeSql {
         val eq = s.indexOf('=')
         require(eq > 0, s"bad option syntax at: $s")
         val key = s.substring(0, eq).trim.toLowerCase
-        var v = s.substring(eq + 1).trim
+        val v = s.substring(eq + 1).trim
         val (value, rest2) =
           if (v.startsWith("(")) {
             val close = v.indexOf(')')
@@ -609,8 +609,7 @@ object EdgeSql {
   /** Aggregate functions with the reference's decomposition semantics
     * (unify_results.py:190-307), decimal-stabilized for doubles. */
   private def compileAgg(f: String, arg: String, alias: String,
-      approx: Boolean = false, casts: Seq[String] = Nil,
-      tz: Option[String] = None): Column = {
+      approx: Boolean, casts: Seq[String], tz: Option[String]): Column = {
     val a = arg.trim
     // aggregate arguments may be full expressions (sum(a*b)) — the
     // unnamed-function passthrough path of the reference

@@ -42,10 +42,16 @@ import graft.ingest.SchemaInference
   *   pipeline clean / quality check / profile table / hybrid search /
   *     compact / merge into / merge scd2 into / layout zorder|scan
   *   ingest & ops: REST PUT (hash-idempotent, journaled ledger),
-  *     run msg client / exit msg client, policy add/get, blockchain
-  *     insert/get, get tsd list|diff, get partitions / rows count /
-  *     columns / streaming / queries time / event|error|query log,
-  *     set <var> = <value> / get dictionary, get tables / get views
+  *     policy add/get, blockchain insert/get, get tsd list|diff, get
+  *     partitions / rows count / columns / streaming / queries time /
+  *     event|error|query log, set <var> = <value> / get dictionary,
+  *     get tables / get views
+  *   ingest services — run|exit kafka consumer, run plc client / exit
+  *     plc / get plc clients|values|struct, run|exit msg client,
+  *     run|exit streamer — and the `get processes` board live in
+  *     [[Services]]: one lifecycle (re-declaration check, attach
+  *     record, board row, exit) for all four; only their entries in
+  *     [[commands]], with their lock classes, stay here
   *
   * ==Thread-safety contract==
   * The engine serves concurrent callers (the reference schedules up to
@@ -130,7 +136,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       * object-store caveat). Requires a root-backed catalog; rootless
       * engines ignore it. */
     val sharedLedger: Boolean = false) {
-  import Engine.{Command, Lock, Read, Unguarded, Write}
+  import Engine.{Command, Lock, Read, Unguarded, Write, arg, reqArg}
 
   /** Transport for `dest=kafka@host:port` output
     * (api/al_kafka.py get_producer/send_data; dest registry
@@ -779,8 +785,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
             java.nio.file.Files.writeString(ar.resolve(s"$hash.json"),
               trimmed)
           } catch { case e: Exception =>
-            logRing(errorLog, (System.currentTimeMillis,
-              s"archive $hash", Option(e.getMessage).getOrElse("") )) }
+            logError(s"archive $hash", Option(e.getMessage).getOrElse("")) }
         }
         // register AFTER the data exists, with the schema of what was
         // actually WRITTEN (policy-mapped + stamped — inferring from the
@@ -812,6 +817,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     buf += entry
     if (buf.length > processLogCap) buf.remove(0, buf.length - processLogCap)
   }
+
+  private[engine] def logEvent(line: String): Unit =
+    logRing(eventLog, (System.currentTimeMillis, line))
+
+  private[engine] def logError(what: String, err: String): Unit =
+    logRing(errorLog, (System.currentTimeMillis, what, err))
 
   private def renderLog(rows: Seq[(Long, String)]): String =
     if (rows.isEmpty) "log is empty"
@@ -886,18 +897,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     try body finally l.unlock()
   }
 
-  /** The value of option `key = <value>` in a command: the first
-    * whitespace-delimited token after the `=` (the key matches
-    * case-insensitively, as a whole word). */
-  private def arg(text: String, key: String): Option[String] =
-    s"(?i)\\b$key\\s*=\\s*(\\S+)".r.findFirstMatchIn(text).map(_.group(1))
-
-  /** [[arg]] for a required option: missing, it fails with
-    * `<cmd> requires <key> =`. */
-  private def reqArg(text: String, key: String, cmd: String): String =
-    arg(text, key).getOrElse(
-      throw new IllegalArgumentException(s"$cmd requires $key ="))
-
   /** [[arg]] whose value may be quoted (`"..."` or `'...'`), so it can
     * carry spaces; an unquoted value is the bare token. */
   private def quotedArg(text: String, key: String): Option[String] =
@@ -948,6 +947,19 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     remove(table)
     s"$family for $table dropped"
   }
+
+  /** The `get processes` board and the four ingest services (Kafka
+    * consumer, PLC client, msg client, streamer). */
+  private[engine] val services = new Services(this)
+
+  /** Put a component's own row on the `get processes` board. */
+  def registerService(name: String, active: () => Boolean,
+      details: () => String): Unit =
+    services.registerService(name, active, details)
+
+  /** Live watch-dir streamers' queries by table (`run streamer`). */
+  def streamerQueries: Map[String,
+    org.apache.spark.sql.streaming.StreamingQuery] = services.streamerQueries
 
   private def cmd(prefix: String, lock: Lock)(run: String => String) =
     new Command(prefix, lock, exact = false, run)
@@ -1271,8 +1283,8 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // subscription, not deliver every message twice). stop() joins no
     // thread that needs the write gate, so the exit is safe on this
     // side too.
-    cmd("run msg client", Write)(runMsgClient),
-    cmd("exit msg client", Write)(_ => exitMsgClient()),
+    cmd("run msg client", Write)(services.runMsgClient),
+    cmd("exit msg client", Write)(_ => services.exitMsgClient()),
     // scheduler-family commands are Write even though they only touch
     // the (internally synchronized) task registry: `task run` re-enters
     // execute() with the TASK's command, and a Write task reached from
@@ -1306,7 +1318,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // scheduler family
     cmd("delete archive", Write)(deleteArchive),
     cmd("run ha sync", Write)(haSync),
-    cmd("run streamer", Write)(runStreamer),
+    cmd("run streamer", Write)(services.runStreamer),
     // `exit streamer` / `exit kafka consumer` hold NEITHER the write
     // gate NOR the retention read gate: they only touch internally-
     // synchronized registries, and both JOIN worker threads. `exit
@@ -1322,22 +1334,22 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // exit's read hold. Unguarded execution touches no files
     // and no foldable state, so neither lock is needed. Regressions:
     // StreamerExitSpec (both shapes).
-    cmd("exit streamer", Unguarded)(exitStreamer),
+    cmd("exit streamer", Unguarded)(services.exitStreamer),
     // kafka consumer start: check-then-insert brackets the offset
     // claims and a broker probe (same reasoning as run msg client)
-    cmd("run kafka consumer", Write)(runKafkaConsumer),
-    cmd("exit kafka consumer", Unguarded)(_ => exitKafkaConsumer()),
+    cmd("run kafka consumer", Write)(services.runKafkaConsumer),
+    cmd("exit kafka consumer", Unguarded)(_ => services.exitKafkaConsumer()),
     // plc client start: check-then-insert brackets a TCP connect —
     // write-side serialization keeps duplicate declarations atomic,
     // same reasoning as run msg client / run kafka consumer
-    cmd("run plc client", Write)(runPlcClient),
-    cmd("get plc clients", Read)(_ => getPlcClients()),
-    cmd("get plc values", Read)(getPlcValues),
-    cmd("get plc struct", Read)(getPlcStruct),
+    cmd("run plc client", Write)(services.runPlcClient),
+    cmd("get plc clients", Read)(_ => services.getPlcClients()),
+    cmd("get plc values", Read)(services.getPlcValues),
+    cmd("get plc struct", Read)(services.getPlcStruct),
     // exit plc joins its poll thread, which takes no engine locks —
     // holding none here keeps the join free of lock-order hazards
-    cmd("exit plc", Unguarded)(exitPlc),
-    cmd("get processes", Read)(t => processesReport(
+    cmd("exit plc", Unguarded)(services.exitPlc),
+    cmd("get processes", Read)(t => services.processes(
       "(?i)where\\s+format\\s*=\\s*json".r.findFirstIn(t).isDefined)),
     exact("get dictionary", Read)(_ =>
       dict.toSeq.sortBy(_._1).map { case (k, v) => s"$k = $v" }
@@ -1388,9 +1400,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       }
     }
     catch { case e: Throwable =>
-      logRing(errorLog,
-        (System.currentTimeMillis, t,
-          Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
+      logError(t, Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
       throw e
     }
   }
@@ -2312,814 +2322,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     rendered(t, out)
   }
 
-  /** Background-service board for `get processes`
-    * (member_cmd.py:8521 get_processes_stat: every service reports
-    * Running / Not declared plus a details line). Components
-    * self-register on start — [[HttpFrontend.start]] registers
-    * "REST Server", `run msg client` registers "Msg Client", `run
-    * scheduler` shows through [[taskScheduler]] — and the board also
-    * carries the honest NOT-declared rows (TCP block protocol,
-    * Kafka) with their scope/environment receipts as details. */
-  private val services = new java.util.concurrent.ConcurrentHashMap[
-    String, (() => Boolean, () => String)]()
-
-  def registerService(name: String, active: () => Boolean,
-      details: () => String): Unit = services.put(name, (active, details))
-
-  private def processesReport(json: Boolean): String = {
-    import scala.jdk.CollectionConverters._
-    val dynamic = services.asScala.toMap
-    // fixed board order, reference get_processes_stat
-    val board: Seq[(String, () => Boolean, () => String)] = Seq(
-      ("TCP Server", () => false,
-        () => "out of parity scope (SURVEY: the reference's native " +
-          "block protocol; Spark exchanges replace it)"),
-      ("REST Server", () => false, () => ""),
-      ("Operator", () => dataDir.isDefined,
-        () => dataDir.fold("")(d => s"ingest root $d")),
-      ("Message Broker", () => false, () => ""),
-      ("Msg Client", () => msgClients.synchronized(msgClients.nonEmpty),
-        () => msgClients.synchronized {
-          if (msgClients.isEmpty) ""
-          else {
-            val reconnecting =
-              msgClients.valuesIterator.count(c => !c.isConnected)
-            s"${msgClients.size} client(s)" +
-              (if (reconnecting > 0) s" ($reconnecting reconnecting)"
-               else "")
-          }
-        }),
-      ("Streamer", () => false, () => ""),
-      ("Scheduler", () => taskScheduler.ids.exists(taskScheduler.isRunning),
-        () => { val on = taskScheduler.ids.filter(taskScheduler.isRunning)
-          if (on.isEmpty) "" else s"scheduler id(s) ${on.mkString(", ")}" }),
-      ("Blockchain Sync", () => false,
-        () => "policy store is local and synchronous here (no " +
-          "background sync thread needed)"),
-      ("Kafka Consumer", () => false,
-        () => "start with `run kafka consumer where ip = .. and " +
-          "port = .. and topic = .. and dir = ..` (native wire-" +
-          "protocol client — no connector jar needed)"),
-      ("PLC Client", () => false,
-        () => "start with `run plc client where type = modbus and " +
-          "hostname = .. and port = .. and name = .. and frequency " +
-          "= .. and dir = .. and map = [..]` (native Modbus TCP " +
-          "stack — no pymodbus equivalent needed)"))
-    val rows = board.map { case (name, act, det) =>
-      val (a, d) = dynamic.get(name).map(v => (v._1(), v._2()))
-        .getOrElse((act(), det()))
-      (name, if (a) "Running" else "Not declared", d)
-    } ++ dynamic.keys.filterNot(board.map(_._1).contains).toSeq.sorted
-      .map { n => val (a, d) = dynamic(n)
-        (n, if (a()) "Running" else "Not declared", d()) }
-    // user-supplied strings (topic names, watch-dir paths) reach the
-    // details cell — escape them or a quote/backslash yields invalid
-    // JSON output
-    def jstr(s: String): String = Render.jsonStr(s)
-    if (json)
-      rows.map { case (n, st, d) =>
-        val detail = if (d.isEmpty) "" else s""", "Details": ${jstr(d)}"""
-        s"""${jstr(n)}: {"Status": ${jstr(st)}$detail}"""
-      }.mkString("{", ", ", "}")
-    else renderBoard(Seq("Process", "Status", "Details"),
-      rows.map(r => Seq(r._1, r._2, r._3)))
-  }
-
-  /** Column-aligned status board (`| a | b |` rows under a header) —
-    * the one renderer behind `get processes` and `get plc clients`. */
-  private def renderBoard(header: Seq[String],
-      rows: Seq[Seq[String]]): String = {
-    val widths = header.indices.map(i =>
-      (header(i) +: rows.map(_(i))).map(_.length).max)
-    def line(cells: Seq[String]) =
-      cells.zip(widths).map { case (c, w) => c.padTo(w, ' ') }
-        .mkString("| ", " | ", " |")
-    (line(header) +: rows.map(line)).mkString("\n")
-  }
-
-  /** One live native Kafka consumer: poll thread + stop flag +
-    * `health` ("" while polling cleanly; a consecutive-failure
-    * summary once fetches start erroring, surfaced in `get
-    * processes` details so a broker outage is visible on the board
-    * instead of hiding behind a Running status). */
-  private final class KafkaConsumerHandle(val topics: String,
-      val client: graft.streaming.KafkaNativeClient,
-      val stop: java.util.concurrent.atomic.AtomicBoolean,
-      val artifactKey: String) {
-    @volatile var thread: Thread = null
-    val health = new java.util.concurrent.atomic.AtomicReference[String]("")
-  }
-
-  private val kafkaConsumers = scala.collection.mutable.ArrayBuffer
-    .empty[KafkaConsumerHandle]
-
-  /** `run kafka consumer where ip = <host> and port = <n> and
-    * topic = <t>[,<t2>…] and dir = <landing> [and reset =
-    * earliest|latest] [and poll = <ms>]` — the reference's Kafka
-    * client mode (cmd/member_cmd.py:21481, api/al_kafka.py:124-226:
-    * subscribe and continuously poll, `reset` = auto_offset_reset),
-    * over the NATIVE v0 wire client — no connector jar. Every polled
-    * message value lands as one NDJSON file in the watch dir, so the
-    * ordinary watch-dir → mapping-policy → table chain takes over:
-    * the same downstream as `run msg client`, making Kafka vs MQTT
-    * purely a which-transport choice (the reference routes both
-    * through the same mapping machinery). */
-  private def runKafkaConsumer(t: String): String = {
-    val host = reqArg(t, "ip", "run kafka consumer")
-    val port = reqArg(t, "port", "run kafka consumer").toInt
-    val topics = reqArg(t, "topic", "run kafka consumer").split(",")
-      .map(_.trim).filter(_.nonEmpty).toSeq
-    val dir = java.nio.file.Paths.get(reqArg(t, "dir", "run kafka consumer"))
-    java.nio.file.Files.createDirectories(dir)
-    val earliest =
-      arg(t, "reset").map(_.toLowerCase).getOrElse("latest") match {
-        case "earliest" => true
-        case "latest" => false
-        case other => throw new IllegalArgumentException(
-          s"reset must be earliest|latest, got $other")
-      }
-    val pollMs = arg(t, "poll").map(_.toLong).getOrElse(500L)
-    // one live consumer per topic per OFFSET JOURNAL: the journal is
-    // keyed (topic, partition) under the catalog root, so a second
-    // consumer of the same topic — from this engine OR another engine
-    // over the same root — would clobber the first's cursor and turn
-    // its restart resume into silent message loss. The claim registry
-    // is JVM-wide and keyed by the root (Engine.kafkaTopicClaims), as
-    // wide as the journal it protects; the reference gets the same
-    // exclusion from its consumer group — here the journal scope IS
-    // the group. Claims release on exit and on poll-thread death.
-    // idempotent on an IDENTICAL re-declaration: `attach all` (or a
-    // retried command) while THIS engine already polls these topics
-    // under the same command is a no-op; a CONFLICTING re-declaration
-    // (same topics, different dir/reset/poll) is refused loudly —
-    // silently keeping the old config would make the new command a
-    // 200-status lie
-    kafkaConsumers.synchronized {
-      val mine = kafkaConsumers.filter(_.thread.isAlive)
-        .map(_.topics).toSet
-      if (mine.contains(topics.mkString(", "))) {
-        val key = s"kafka consumer:${topics.mkString(",")}"
-        val recorded = catalog.artifactRecord(key)
-        require(recorded.contains(t.trim),
-          s"kafka consumer for ${topics.mkString(", ")} already " +
-            "running with a different configuration — exit it first " +
-            s"(recorded: ${recorded.getOrElse("?")})")
-        return s"kafka consumer already polling ${topics.mkString(", ")}"
-      }
-    }
-    val claimScope = Engine.claimScope(catalog, this)
-    val scopeClaims = Engine.kafkaTopicClaims.computeIfAbsent(claimScope,
-      _ => new java.util.concurrent.ConcurrentHashMap[
-        String, java.lang.Boolean]())
-    val claimed = scala.collection.mutable.ArrayBuffer.empty[String]
-    topics.foreach { tp =>
-      if (scopeClaims.putIfAbsent(tp, java.lang.Boolean.TRUE) != null) {
-        claimed.foreach(scopeClaims.remove(_)) // roll back partial claims
-        throw new IllegalArgumentException(
-          s"kafka consumer already polling topic $tp against this " +
-            "offset journal — exit it first (the per-topic journal " +
-            "admits one cursor per metadata root)")
-      }
-      claimed += tp
-    }
-    val client = new graft.streaming.KafkaNativeClient(host, port)
-    // connectivity + auto-create probe; enumerate EVERY partition the
-    // Metadata response reports (not just partition 0) and seed each
-    // partition's starting offset independently. Partition counts are
-    // RE-PROBED periodically in the loop: a repartitioned topic's new
-    // partitions are picked up live (seeded from earliest — everything
-    // in a NEW partition is data this consumer has never seen,
-    // whatever the initial reset policy was). A probe failure here
-    // (broker down) must release the topic claims before propagating,
-    // or the failed connect would block every retry forever.
-    val (partCount, offsets) =
-      try {
-        val pc = scala.collection.mutable.Map(
-          topics.map(tp => tp -> client.partitions(tp)): _*)
-        // seed order: the catalog's journaled cursor FIRST (the
-        // offset after the last batch this node landed — a restarted
-        // consumer resumes there, re-ingesting nothing), then the
-        // reset policy for a partition never consumed here before
-        val off = scala.collection.mutable.Map(topics.flatMap { tp =>
-          (0 until pc(tp)).map(p =>
-            (tp, p) -> catalog.kafkaOffset(tp, p)
-              .getOrElse(client.listOffset(tp, earliest, p)))
-        }: _*)
-        (pc, off)
-      } catch {
-        case e: Throwable =>
-          topics.foreach(scopeClaims.remove(_))
-          try client.close()
-          catch { case scala.util.control.NonFatal(_) => () }
-          throw e
-      }
-    // high-water marks from the last fetch, for the board's lag figure
-    val hws = scala.collection.mutable.Map.empty[(String, Int), Long]
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val epoch = java.lang.Long.toHexString(System.nanoTime())
-    val artifactKey = s"kafka consumer:${topics.mkString(",")}"
-    val handle = new KafkaConsumerHandle(topics.mkString(", "),
-      client, stop, artifactKey)
-    // consecutive-failure streaks PER (topic, partition) — a healthy
-    // partition's success must not erase the degraded status of a
-    // persistently failing sibling (poll-thread-private)
-    val errStreaks =
-      scala.collection.mutable.Map.empty[(String, Int), Int]
-    val th = new Thread(() => try {
-      var rounds = 0L
-      while (!stop.get()) {
-        var drained = true
-        // partition re-probe every ~50 rounds (one Metadata exchange
-        // per topic — control-plane cheap at any poll interval)
-        if (rounds % 50 == 49) topics.foreach { tp =>
-          try {
-            val now = client.partitions(tp)
-            val known = partCount(tp)
-            if (now > known) {
-              (known until now).foreach { p =>
-                offsets((tp, p)) = catalog.kafkaOffset(tp, p).getOrElse(
-                  client.listOffset(tp, earliest = true, p))
-              }
-              partCount(tp) = now
-              logRing(eventLog, (System.currentTimeMillis,
-                s"kafka consumer $tp: discovered partitions " +
-                  s"$known..${now - 1}"))
-            }
-          } catch { case _: Exception => () } // next probe retries
-        }
-        rounds += 1
-        val parts = topics.flatMap(tp =>
-          (0 until partCount(tp)).map(p => tp -> p))
-        parts.foreach { case (tp, p) =>
-          try {
-            val (msgs, hw) = client.fetch(tp, offsets((tp, p)),
-              partition = p)
-            hws((tp, p)) = hw
-            errStreaks.remove((tp, p))
-            if (msgs.nonEmpty) {
-              // one NDJSON landing per FETCH batch (the reference's
-              // consumer also lands poll batches, not single records,
-              // api/al_kafka.py:158-226 buffering) — messages are
-              // one-line JSON docs, the line-oriented contract the
-              // whole watch-dir chain already has. A payload with an
-              // embedded newline (pretty-printed JSON) would land as
-              // SEVERAL broken lines, so violators are re-serialized
-              // compact (still exactly one row per message); a payload
-              // that is not JSON at all routes to <dir>/err intact —
-              // it must neither corrupt the landing nor be dropped
-              // silently.
-              val lines = msgs.flatMap { m =>
-                val raw = new String(m._3,
-                  java.nio.charset.StandardCharsets.UTF_8)
-                normalizeNdjsonPayload(raw).orElse {
-                  quarantinePayload(dir,
-                    s"k${epoch}_${tp.replaceAll("[^A-Za-z0-9]", "_")}" +
-                      s"_${p}_${m._1}.bad", raw,
-                    s"kafka consumer $tp/$p",
-                    s"offset ${m._1}")
-                  None
-                }
-              }
-              if (lines.nonEmpty) {
-                val f = dir.resolve(s"k${epoch}_${n.incrementAndGet()}_" +
-                  s"${tp.replaceAll("[^A-Za-z0-9]", "_")}_$p.json")
-                graft.streaming.Landing.write(f, lines.mkString("\n"))
-              }
-              offsets((tp, p)) = msgs.last._1 + 1
-              // journal AFTER the landing: a crash between the two
-              // re-delivers at most this one batch
-              catalog.saveKafkaOffset(tp, p, msgs.last._1 + 1)
-              drained = false
-            }
-          } catch {
-            case graft.streaming.KafkaOffsetOutOfRange(_, _, _) =>
-              // broker retention truncated past our offset: re-seed
-              // from the surviving log start (al_kafka.py's
-              // auto_offset_reset recovery) instead of spinning on
-              // the dead offset forever
-              try {
-                val seeded = client.listOffset(tp, earliest = true, p)
-                logRing(eventLog, (System.currentTimeMillis,
-                  s"kafka consumer $tp/$p: offset out of range, " +
-                    s"re-seeded to $seeded"))
-                offsets((tp, p)) = seeded
-                drained = false // retry the fetch promptly
-              } catch { case e: Exception =>
-                logRing(errorLog, (System.currentTimeMillis,
-                  s"kafka consumer $tp/$p reseed",
-                  Option(e.getMessage).getOrElse(""))) }
-            case e: Exception =>
-              errStreaks((tp, p)) = errStreaks.getOrElse((tp, p), 0) + 1
-              logRing(errorLog, (System.currentTimeMillis,
-                s"kafka consumer $tp/$p",
-                Option(e.getMessage).getOrElse("")))
-          }
-        }
-        // board health, recomputed once per round from ALL partitions:
-        // degraded streaks first (one healthy partition cannot erase a
-        // failing sibling's status), then the consumer-lag figure
-        // (messages the broker holds that this consumer hasn't landed)
-        val lag = offsets.iterator.map { case (k, o) =>
-          math.max(hws.getOrElse(k, o) - o, 0L) }.sum
-        val degraded = errStreaks.toSeq.sortBy(_._1)
-        handle.health.set(
-          if (degraded.nonEmpty) {
-            val ((dt, dp), k) = degraded.head
-            s"degraded: $dt/$dp x$k" +
-              (if (degraded.size > 1) s" (+${degraded.size - 1} more)"
-               else "") +
-              (if (lag > 0) s"; lag $lag" else "")
-          } else if (lag > 0) s"lag $lag" else "")
-        if (drained && !stop.get())
-          try Thread.sleep(pollMs)
-          catch { case _: InterruptedException => stop.set(true) }
-      }
-      client.close()
-    } finally {
-      // release the journal-scope claims however the loop ends — a
-      // dead consumer must not block a replacement
-      topics.foreach(scopeClaims.remove(_))
-    }, s"graft-kafka-consumer-$epoch")
-    th.setDaemon(true)
-    handle.thread = th
-    th.start()
-    kafkaConsumers.synchronized { kafkaConsumers += handle }
-    // the ingest topology is part of the standing fleet: `attach all`
-    // after an engine restart re-issues this exact command, and the
-    // offset journal makes the resumed consumer land nothing twice
-    // (an explicit `exit kafka consumer` drops the record — a stopped
-    // service must stay stopped)
-    catalog.recordArtifact(artifactKey, t.trim)
-    registerService("Kafka Consumer",
-      () => kafkaConsumers.synchronized(
-        kafkaConsumers.exists(_.thread.isAlive)),
-      () => kafkaConsumers.synchronized(
-        kafkaConsumers.filter(_.thread.isAlive).map { h =>
-          val hlth = h.health.get()
-          if (hlth.isEmpty) h.topics else s"${h.topics} ($hlth)"
-        }.mkString("; ")))
-    s"kafka consumer polling ${topics.mkString(", ")} at $host:$port " +
-      s"(reset ${if (earliest) "earliest" else "latest"}, landing in $dir)"
-  }
-
-  /** The line-oriented landing contract, enforced at EVERY message
-    * transport (Kafka consumer, MQTT msg client): every payload is
-    * parsed — a valid single-line JSON doc passes through verbatim, a
-    * valid multiline (pretty-printed) doc re-serializes compact, and
-    * a non-JSON payload returns None so the caller can quarantine it
-    * (it must neither corrupt the NDJSON landing nor vanish
-    * silently). The parse is µs on sensor-doc sizes; downstream
-    * re-parses every line anyway. */
-  private def normalizeNdjsonPayload(raw: String): Option[String] =
-    try {
-      val parsed = org.json4s.jackson.JsonMethods.parse(raw)
-      Some(
-        if (raw.indexOf('\n') < 0 && raw.indexOf('\r') < 0) raw
-        else org.json4s.jackson.JsonMethods.compact(parsed))
-    } catch { case _: Exception => None }
-
-  /** Route a contract-violating payload to the err dir BESIDE the
-    * watch dir (`<dir>.err` — never inside it: the streamer's file
-    * source lists the watch dir and must not see .bad files as data)
-    * and record the event in the error ring. */
-  private def quarantinePayload(dir: java.nio.file.Path, name: String,
-      raw: String, who: String, where: String): Unit = {
-    val ed = dir.resolveSibling(dir.getFileName.toString + ".err")
-    java.nio.file.Files.createDirectories(ed)
-    graft.streaming.Landing.write(ed.resolve(name), raw)
-    logRing(errorLog, (System.currentTimeMillis, who,
-      s"non-JSON payload at $where routed to $ed"))
-  }
-
-  /** `exit kafka consumer` — stop every native consumer loop.
-    * Cooperative first, forceful second: the stop flag alone lets an
-    * in-flight LANDING (file write + offset journal) finish — an
-    * interrupt during that window would abort the write via
-    * `ClosedByInterruptException` AFTER bytes hit disk but BEFORE the
-    * offset journals, re-landing the batch on restart. Only a thread
-    * still alive after the grace join (parked in the poll sleep or a
-    * wedged socket) gets interrupted. */
-  private def exitKafkaConsumer(): String = {
-    val victims = kafkaConsumers.synchronized {
-      val v = kafkaConsumers.toList; kafkaConsumers.clear(); v
-    }
-    victims.foreach(_.stop.set(true))
-    victims.foreach(_.thread.join(1500))
-    victims.foreach { h => if (h.thread.isAlive) h.thread.interrupt() }
-    victims.foreach(_.thread.join(2000))
-    victims.foreach(h => catalog.removeArtifact(h.artifactKey))
-    s"stopped ${victims.size} kafka consumer(s)"
-  }
-
-  /** One live PLC poller: poll thread + stop flag + the board
-    * counters the reference keeps per client (clients_info_,
-    * api/plc_client.py:270-276 — protocol, status, frequency,
-    * Reads). `reads` counts LANDED polls only: an empty poll (every
-    * point failed) lands nothing and does not count, the reference's
-    * PLC_modbus_empty_poll semantics. */
-  private final class PlcClientHandle(val name: String,
-      val protocol: String, val frequency: Double,
-      val stop: java.util.concurrent.atomic.AtomicBoolean,
-      val artifactKey: String, val command: String) {
-    @volatile var thread: Thread = null
-    @volatile var status: String = "running"
-    val reads = new java.util.concurrent.atomic.AtomicLong
-    val health = new java.util.concurrent.atomic.AtomicReference[String]("")
-  }
-
-  // insertion-ordered and RETAINING terminated entries, like the
-  // reference's clients_info_ (a terminated client stays on the
-  // board and its name becomes reusable)
-  private val plcClients = scala.collection.mutable.LinkedHashMap
-    .empty[String, PlcClientHandle]
-
-  /** `map = [ ... ]` is a bracketed JSON value with spaces — the \S+
-    * option grammar cannot carry it; take the balanced bracket span
-    * (string-literal aware, so a `]` inside a name does not close
-    * early). */
-  private def modbusMapJson(t: String): String = {
-    val m = "(?i)\\bmap\\s*=\\s*\\[".r.findFirstMatchIn(t).getOrElse(
-      throw new IllegalArgumentException(
-        "plc command requires map = [ ... ]"))
-    val from = m.end - 1
-    var depth = 0; var i = from; var end = -1; var inStr = false
-    while (i < t.length && end < 0) {
-      val c = t.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '[' => depth += 1
-        case ']' => depth -= 1; if (depth == 0) end = i
-        case _ => ()
-      }
-      i += 1
-    }
-    require(end > from, "plc command: unbalanced brackets in map =")
-    t.substring(from, end + 1)
-  }
-
-  /** `run plc client where type = modbus and hostname = <h> and
-    * port = <p> and name = <id> and frequency = <sec> and dir =
-    * <landing> [and device_id = <unit>] [and timeout = <ms>] [and
-    * table = <t> | and dynamic = true] and map = [ ... ]` — the
-    * reference's industrial
-    * poller (`run plc client`, cmd/member_cmd.py:21390,
-    * api/plc_client.py:219) for its Modbus TCP connector
-    * (api/modbus_client.py): every `frequency` seconds read the map's
-    * points over a native Modbus TCP client (graft wire stack, no
-    * pymodbus), decode long/float/byte + swap/scale/offset, and land
-    * ONE wide NDJSON row per poll — {"timestamp", "duration",
-    * <name>: value, ...} — in the watch dir, where the ordinary
-    * streamer → mapping-policy → table chain takes over (the same
-    * downstream as the Kafka and MQTT transports; the reference
-    * routes all three through add_data). With `dynamic = true` (and
-    * no table), each point lands its own row in a
-    * `{name}_{field}` subdirectory — one table per map point
-    * (modbus_client.py:92 modbus_dynamic_table_name).
-    *
-    * Reads are BATCHED: single-address points of one kind merge into
-    * contiguous block reads (ModbusMap.plan), so a wide map costs a
-    * handful of TCP round-trips per poll. A failed point drops its
-    * column from that row (never a null placeholder); a poll where
-    * EVERY point fails lands nothing and does not count a Read. The
-    * reference's opcua/etherip types are declared out of parity
-    * scope (SURVEY §2.1) — only `type = modbus` is accepted. */
-  private def runPlcClient(t: String): String = {
-    import graft.streaming.{ModbusMap, ModbusTcpClient}
-    val ptype = reqArg(t, "type", "run plc client").toLowerCase
-    require(ptype == "modbus",
-      s"run plc client: type $ptype is out of parity scope " +
-        "(SURVEY §2.1) — only type = modbus is supported")
-    val host = reqArg(t, "hostname", "run plc client")
-    val port = reqArg(t, "port", "run plc client").toInt
-    val name = reqArg(t, "name", "run plc client")
-    val unit = arg(t, "device_id").map(_.toInt).getOrElse(1)
-    val freq = reqArg(t, "frequency", "run plc client").toDouble
-    require(freq > 0, "frequency must be > 0 seconds")
-    val dir = java.nio.file.Paths.get(reqArg(t, "dir", "run plc client"))
-    java.nio.file.Files.createDirectories(dir)
-    val dynamic = arg(t, "dynamic").exists(_.equalsIgnoreCase("true"))
-    val table = arg(t, "table")
-    require(!(dynamic && table.isDefined),
-      "run plc client: dynamic = true cannot be combined with " +
-        "table = ... (omit table =)")
-    val points = ModbusMap.parse(modbusMapJson(t))
-    // the read plan is immutable for the life of the client — compile
-    // once here, reuse every poll cycle (SCALING.md's 'compiles ONCE')
-    val compiledPlan = ModbusMap.plan(points)
-    val ops = compiledPlan._1
-    // idempotent on an IDENTICAL re-declaration (the attach-all
-    // replay path); a conflicting re-declaration of a RUNNING name is
-    // refused loudly (the reference refuses duplicate client names,
-    // api/plc_client.py:287); a terminated client's name is reusable
-    val artifactKey = s"plc client:$name"
-    plcClients.synchronized {
-      plcClients.get(name).filter(_.status == "running").foreach { h =>
-        require(h.command == t.trim,
-          s"plc client $name already running with a different " +
-            s"configuration — exit it first (recorded: ${h.command})")
-        return s"plc client $name already polling"
-      }
-    }
-    val client = new ModbusTcpClient(host, port,
-      timeoutMs = arg(t, "timeout").map(_.toInt).getOrElse(5000))
-    client.connect() // fail fast on an unreachable server
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val handle = new PlcClientHandle(name, ptype, freq, stop,
-      artifactKey, t.trim)
-    val epoch = java.lang.Long.toHexString(System.nanoTime())
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val isoUtc = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
-      .withZone(java.time.ZoneOffset.UTC)
-    val errStreaks = scala.collection.mutable.Map.empty[String, Int]
-    def pollOnce(): Boolean = {
-      import org.json4s._
-      val t0 = System.currentTimeMillis
-      val read = ModbusMap.readAll(client, unit, points, compiledPlan)
-      val t1 = System.currentTimeMillis
-      val decoded: Seq[(String, JValue)] = read.flatMap {
-        case (p, Right(v)) =>
-          errStreaks.remove(p.name)
-          Some(p.name -> v)
-        case (p, Left(err)) =>
-          // failed point: omit the column (no null placeholder),
-          // surface the streak on the board like the Kafka loop
-          errStreaks(p.name) = errStreaks.getOrElse(p.name, 0) + 1
-          logRing(errorLog, (System.currentTimeMillis,
-            s"plc client $name ${p.tag}", err))
-          None
-      }
-      handle.health.set(
-        if (errStreaks.isEmpty) ""
-        else {
-          val (worstName, k) = errStreaks.maxBy(_._2)
-          s"degraded: $worstName x$k" +
-            (if (errStreaks.size > 1) s" (+${errStreaks.size - 1} more)"
-             else "")
-        })
-      if (decoded.isEmpty) return false // empty poll: no land, no Read
-      val ts = JString(isoUtc.format(java.time.Instant.ofEpochMilli(t0)))
-      if (dynamic) {
-        decoded.foreach { case (field, v) =>
-          val sub = dir.resolve(ModbusMap.dynamicTableName(name, field))
-          java.nio.file.Files.createDirectories(sub)
-          val row = JObject(List("timestamp" -> ts, "value" -> v))
-          graft.streaming.Landing.write(
-            sub.resolve(s"p${epoch}_${n.incrementAndGet()}.json"),
-            org.json4s.jackson.JsonMethods.compact(row))
-        }
-      } else {
-        val row = JObject(
-          ("timestamp" -> ts) :: ("duration" -> JLong(t1 - t0)) ::
-            decoded.toList)
-        graft.streaming.Landing.write(
-          dir.resolve(s"p${epoch}_${n.incrementAndGet()}.json"),
-          org.json4s.jackson.JsonMethods.compact(row))
-      }
-      true
-    }
-    val th = new Thread(() => try {
-      while (!stop.get()) {
-        val began = System.currentTimeMillis
-        try { if (pollOnce()) handle.reads.incrementAndGet() }
-        catch { case scala.util.control.NonFatal(e) =>
-          logRing(errorLog, (System.currentTimeMillis,
-            s"plc client $name poll",
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))) }
-        // sliced sleep: a long frequency must not pin `exit plc`
-        // against the grace join — the stop flag is honored within
-        // ~50 ms without resorting to an interrupt mid-landing
-        var leftMs = (math.max(freq -
-          (System.currentTimeMillis - began) / 1000.0, 0) * 1000).toLong
-        while (!stop.get() && leftMs > 0) {
-          val nap = math.min(leftMs, 50L)
-          try Thread.sleep(nap)
-          catch { case _: InterruptedException => stop.set(true) }
-          leftMs -= nap
-        }
-      }
-    } finally {
-      handle.status = "terminated"
-      try client.close()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }, s"graft-plc-$name")
-    th.setDaemon(true)
-    handle.thread = th
-    th.start()
-    plcClients.synchronized { plcClients(name) = handle }
-    // the ingest topology is part of the standing fleet: `attach
-    // all` after an engine restart re-issues this exact command (an
-    // explicit `exit plc` drops the record)
-    catalog.recordArtifact(artifactKey, t.trim)
-    registerService("PLC Client",
-      () => plcClients.synchronized(
-        plcClients.valuesIterator.exists(_.status == "running")),
-      () => plcClients.synchronized {
-        plcClients.valuesIterator.filter(_.status == "running").map { h =>
-          val hl = h.health.get()
-          s"${h.name} (${h.protocol})" + (if (hl.isEmpty) "" else s" $hl")
-        }.mkString("; ")
-      })
-    s"plc client $name polling $host:$port every ${freq}s " +
-      s"(${points.size} point(s) in ${ops.size} read(s), " +
-      s"landing in $dir)"
-  }
-
-  /** `get plc clients` — the reference's status board
-    * (api/plc_client.py:99): Client Name | Protocol | Status |
-    * Frequency | Reads. Terminated clients stay listed. */
-  private def getPlcClients(): String = {
-    val rows = plcClients.synchronized {
-      plcClients.valuesIterator.map(h =>
-        Seq(h.name, h.protocol, h.status, h.frequency.toString,
-          h.reads.get.toString)).toSeq
-    }
-    if (rows.isEmpty) return "no plc clients declared"
-    renderBoard(Seq("Client Name", "Protocol", "Status", "Frequency",
-      "Reads"), rows)
-  }
-
-  /** `get plc values where type = modbus and hostname = <h> and
-    * port = <p> [and device_id = <unit>] and map = [ ... ]` — the
-    * reference's ONE-SHOT read (`get plc values`,
-    * api/plc_client.py:627): connect, execute one batched poll
-    * cycle, render each point's decoded value (or its error) as one
-    * JSON object, disconnect. The diagnostic twin of `run plc
-    * client` — same map grammar, same decode, no landing. */
-  private def getPlcValues(t: String): String = {
-    import graft.streaming.{ModbusMap, ModbusTcpClient}
-    val ptype = reqArg(t, "type", "get plc values").toLowerCase
-    require(ptype == "modbus",
-      s"get plc values: type $ptype is out of parity scope " +
-        "(SURVEY §2.1) — only type = modbus is supported")
-    val points = ModbusMap.parse(modbusMapJson(t))
-    val unit = arg(t, "device_id").map(_.toInt).getOrElse(1)
-    val client = new ModbusTcpClient(reqArg(t, "hostname", "get plc values"),
-      reqArg(t, "port", "get plc values").toInt,
-      timeoutMs = arg(t, "timeout").map(_.toInt).getOrElse(5000))
-    try {
-      client.connect()
-      import org.json4s._
-      val fields = ModbusMap.readAll(client, unit, points).map {
-        case (p, Right(v)) => p.name -> v
-        case (p, Left(err)) =>
-          p.name -> JObject(List("error" -> JString(err)))
-      }
-      org.json4s.jackson.JsonMethods.compact(JObject(fields.toList))
-    } finally client.close()
-  }
-
-  /** `get plc struct where type = modbus and hostname = <h> and
-    * port = <p> [and device_id = <unit>] [and max_registers = <n>]
-    * [and scan_chunk = <n>] [and format = nodes|map|get_value|
-    * run_client] [and name/frequency/table/dir = ..]` — the
-    * reference's device DISCOVERY (`modbus_struct` + chunked
-    * `discover_all_points`, api/modbus_client.py:906-1065): probe the
-    * four point kinds in chunk-sized block reads over address 0..max,
-    * collect the readable addresses, and render them as canonical
-    * tags (`nodes`), a ready-to-edit register map (`map`, default), or
-    * a ready-to-run command (`get_value` / `run_client`). Chunk
-    * granularity matches the reference: a chunk read that trips
-    * ILLEGAL DATA ADDRESS marks the whole chunk unreadable and the
-    * scan moves on. */
-  private def getPlcStruct(t: String): String = {
-    import graft.streaming.{ModbusError, ModbusTcp, ModbusTcpClient}
-    val ptype = reqArg(t, "type", "get plc struct").toLowerCase
-    require(ptype == "modbus",
-      s"get plc struct: type $ptype is out of parity scope " +
-        "(SURVEY §2.1) — only type = modbus is supported")
-    val host = reqArg(t, "hostname", "get plc struct")
-    val port = reqArg(t, "port", "get plc struct").toInt
-    val unit = arg(t, "device_id").map(_.toInt).getOrElse(1)
-    // reference defaults: 50 addresses probed in chunks of 10
-    val maxAddr = math.max(1, math.min(
-      arg(t, "max_registers").map(_.toInt).getOrElse(50), 65536))
-    val chunk = math.max(1, math.min(
-      arg(t, "scan_chunk").map(_.toInt).getOrElse(10),
-      ModbusTcp.MaxRegistersPerRead))
-    val format = arg(t, "format").map(_.toLowerCase).getOrElse("map")
-    require(Seq("nodes", "map", "get_value", "run_client")
-      .contains(format),
-      s"get plc struct: format $format (expected nodes, map, " +
-        "get_value, or run_client)")
-    val client = new ModbusTcpClient(host, port,
-      timeoutMs = arg(t, "timeout").map(_.toInt).getOrElse(5000))
-    // ILLEGAL DATA ADDRESS is per-chunk information (the device
-    // answered: nothing there) — a TRANSPORT failure is not. An
-    // accepting-but-unresponsive endpoint would otherwise cost a
-    // socket timeout per chunk across four kind scans, an unbounded
-    // stall under user-set max_registers/scan_chunk; two consecutive
-    // transport failures abort the whole discovery instead.
-    var transportDead = false
-    val tags = try {
-      client.connect()
-      def scan(prefix: String,
-          read: (Int, Int) => IndexedSeq[Int]): Seq[(String, Int)] = {
-        val found = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
-        var addr = 0
-        var ioStreak = 0
-        while (addr < maxAddr && !transportDead) {
-          val count = math.min(chunk, maxAddr - addr)
-          try {
-            val vals = read(addr, count)
-            ioStreak = 0
-            (0 until vals.length).foreach(i => found += ((prefix, addr + i)))
-          } catch {
-            case ModbusError(_, _) => ioStreak = 0 // device answered
-            case _: java.io.IOException =>
-              ioStreak += 1
-              if (ioStreak >= 2) transportDead = true
-          }
-          addr += count
-        }
-        found.toSeq
-      }
-      scan("hr", (a, c) => client.readHoldingRegisters(unit, a, c)) ++
-        scan("ir", (a, c) => client.readInputRegisters(unit, a, c)) ++
-        scan("c", (a, c) => client.readCoils(unit, a, c)) ++
-        scan("di", (a, c) => client.readDiscreteInputs(unit, a, c))
-    } finally client.close()
-    require(!transportDead,
-      s"get plc struct: $host:$port stopped answering mid-scan " +
-        "(transport failures on consecutive chunk reads) — discovery " +
-        "aborted; check the device and retry")
-    require(tags.nonEmpty,
-      "get plc struct: discovery found no readable addresses in the " +
-        s"configured range (device_id=$unit, max_registers=$maxAddr) " +
-        "— increase max_registers or set an explicit map")
-    val sorted = tags.distinct.sortBy { case (p, a) => (p, a) }
-    if (format == "nodes")
-      return sorted.map { case (p, a) => s""""$p:$a"""" }
-        .mkString("[", ", ", "]")
-    val mapJson = sorted.map { case (p, a) =>
-      val srcKey = p match {
-        case "hr" => "register"
-        case "ir" => "inputRegister"
-        case "c" => "coil"
-        case _ => "input"
-      }
-      s"""{"name": "${p}_$a", "$srcKey": $a}"""
-    }.mkString("[", ", ", "]")
-    format match {
-      case "map" => mapJson
-      case "get_value" =>
-        s"get plc values where type = modbus and hostname = $host " +
-          s"and port = $port and device_id = $unit and map = $mapJson"
-      case _ =>
-        val name = arg(t, "name").getOrElse("modbus_client")
-        val freq = arg(t, "frequency").getOrElse("1")
-        val table = arg(t, "table").getOrElse("modbus_readings")
-        val dir = arg(t, "dir").getOrElse("plc_land")
-        s"run plc client where type = modbus and hostname = $host " +
-          s"and port = $port and device_id = $unit and " +
-          s"frequency = $freq and name = $name and table = $table " +
-          s"and dir = $dir and map = $mapJson"
-    }
-  }
-
-  /** `exit plc <name|all>` — stop the named poller (or every
-    * poller), reference cmd `exit plc 1` / `exit plc all`
-    * (member_cmd.py:21942). Cooperative stop + interrupt out of the
-    * frequency sleep; the artifact record drops so a stopped client
-    * stays stopped across `attach all`. */
-  private def exitPlc(t: String): String = {
-    val who = t.trim.split("\\s+").drop(2).mkString(" ")
-    require(who.nonEmpty, "usage: exit plc <name|all>")
-    // the exit targets EVERY named handle, running or not: a client
-    // whose thread died on its own still has an attach record, and an
-    // explicit exit must drop it (a stopped service stays stopped
-    // across `attach all`) — only the stop/join applies to live ones
-    val named = plcClients.synchronized {
-      if (who.equalsIgnoreCase("all")) plcClients.valuesIterator.toList
-      else List(plcClients.get(who).getOrElse(
-        throw new IllegalArgumentException(s"no plc client $who")))
-    }
-    val victims = named.filter(_.status == "running")
-    // cooperative first (let an in-flight poll finish its landing —
-    // an interrupt mid-write truncates the NDJSON file), forceful
-    // for a thread still parked in the frequency sleep or a wedged
-    // socket — the exit-kafka-consumer discipline
-    victims.foreach(_.stop.set(true))
-    victims.foreach { h => if (h.thread != null) h.thread.join(1500) }
-    victims.foreach { h =>
-      if (h.thread != null && h.thread.isAlive) h.thread.interrupt() }
-    victims.foreach { h => if (h.thread != null) h.thread.join(2000) }
-    // flip status HERE, not only in the poll thread's finally: a
-    // thread wedged past the grace joins (blocked in a socket read —
-    // interrupt cannot unblock java.io reads) would otherwise leave
-    // the handle "running", making an immediate identical
-    // re-declaration a silent no-op against a stop-flagged zombie
-    named.foreach { h =>
-      h.status = "terminated"
-      catalog.removeArtifact(h.artifactKey)
-    }
-    s"stopped ${victims.size} plc client(s)"
-  }
-
   /** `connect dbms <name> where type = jdbc and url = <jdbc-url> and
     * dbtable = <remote table> [and driver = <class>] [and user = ..]
     * [and password = ..] [and fetchsize = n] [and partition_column =
@@ -3254,97 +2456,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         }
       } finally { watchdog.cancel(); conn.close() }
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
-
-  /** Live watch-dir streamers by table (`run streamer` /
-    * `exit streamer`). */
-  private val streamers = scala.collection.mutable.Map.empty[
-    String, org.apache.spark.sql.streaming.StreamingQuery]
-  def streamerQueries: Map[String,
-    org.apache.spark.sql.streaming.StreamingQuery] =
-    streamers.synchronized(streamers.toMap)
-
-  /** `run streamer where dir = <watch> and table = <t> [and policy =
-    * <id>] [and flush = <seconds>] [and archive = <dir>]` — the
-    * reference's streamer/watch-dir background process as a COMMAND
-    * (member_cmd.py:21339 `run streamer` writes buffered streaming
-    * data through the mapping layer; the watch-dir → mapping-policy →
-    * table chain is §2.1 row 10). One Structured Streaming query per
-    * table: file-watch source (optionally archiving processed files),
-    * policy mapping (or the registered schema when no policy), then
-    * the TRANSACTIONAL sink — one foreachBatch owning both the
-    * idempotent table append and the standing-view folds, so a
-    * checkpoint replay duplicates neither. Shows on `get processes`
-    * as Streamer and in `get streaming` as `streamer_<table>`. */
-  private def runStreamer(t: String): String = {
-    val dir = reqArg(t, "dir", "run streamer")
-    val table = reqArg(t, "table", "run streamer")
-    val flush = arg(t, "flush").map(_.toLong).getOrElse(60L)
-    // idempotent on an IDENTICAL re-declaration (the attach-all
-    // replay path); a conflicting one (same table, different
-    // dir/policy/flush) is refused loudly
-    streamers.synchronized {
-      if (streamers.get(table).exists(_.isActive)) {
-        val recorded = catalog.artifactRecord(s"streamer:$table")
-        require(recorded.contains(t.trim),
-          s"streamer for $table already running with a different " +
-            s"configuration — exit it first " +
-            s"(recorded: ${recorded.getOrElse("?")})")
-        return s"streamer for $table already running"
-      }
-    }
-    val raw = graft.streaming.StreamIngest.watchDir(spark, dir,
-      archiveDir = arg(t, "archive"))
-    val rows = arg(t, "policy") match {
-      case Some(id) =>
-        val pj = catalog.policy(id).getOrElse(
-          throw new IllegalArgumentException(s"unknown mapping policy: $id"))
-        graft.streaming.StreamIngest.pipeline(raw,
-          graft.ingest.MappingPolicy.fromJson(pj))._1
-      case None =>
-        val schema = catalog.tableSchema(table).getOrElse(
-          throw new IllegalArgumentException("run streamer without " +
-            s"policy = requires table $table registered with a schema"))
-        val user = org.apache.spark.sql.types.StructType(
-          schema.fields.filterNot(f => Set("row_id", "insert_timestamp",
-            "tsd_name", "tsd_id", "__par")(f.name)))
-        raw.select(org.apache.spark.sql.functions.from_json(
-          col("value"), user).as("r")).select("r.*")
-    }
-    val path = catalog.tablePath(table)
-      .orElse(dataDir.map(r => s"$r/$table"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"unknown table $table — register it (or set a data dir) first"))
-    if (catalog.tablePath(table).isEmpty)
-      catalog.registerTable(table, path, Some(rows.schema))
-    val q = graft.streaming.StreamIngest.startTransactionalSink(
-      this, table, rows, path, s"${path}_ckpt_streamer", flush,
-      name = Some(s"streamer_$table"))
-    streamers.synchronized { streamers(table) = q }
-    catalog.recordArtifact(s"streamer:$table", t.trim)
-    registerService("Streamer",
-      () => streamers.synchronized(streamers.values.exists(_.isActive)),
-      () => streamers.synchronized(streamers.filter(_._2.isActive)
-        .keys.toSeq.sorted.mkString(", ")))
-    s"streamer for $table watching $dir (flush ${flush} s)"
-  }
-
-  /** `exit streamer [table]` — stop one table's streamer or all. */
-  private def exitStreamer(t: String): String = {
-    val which = "(?i)^exit streamer\\s+(\\S+)".r
-      .findFirstMatchIn(t.trim).map(_.group(1))
-    val victims = streamers.synchronized {
-      which match {
-        case Some(tb) => streamers.get(tb).map(tb -> _).toSeq
-        case None => streamers.toSeq
-      }
-    }
-    require(which.isEmpty || victims.nonEmpty,
-      s"no streamer for ${which.get}")
-    victims.foreach { case (tb, q) =>
-      q.stop(); streamers.synchronized { streamers.remove(tb) }
-      catalog.removeArtifact(s"streamer:$tb") }
-    s"stopped ${victims.size} streamer(s)"
-  }
 
   /** Archive dir for raw ingested payloads (hash-addressed; the
     * reference's archive of source files that HA copies between
@@ -3591,7 +2702,7 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
             Some(s"Test table $dbms.$name schema failed: ledger has " +
               s"${expect.size} columns, storage has ${actual.size}")
           else expect.zip(actual).collectFirst {
-            case ((en, et), (an, at)) if en != an =>
+            case ((en, _), (an, _)) if en != an =>
               s"Test table $dbms.$name schema failed: column '$an' " +
                 s"where ledger expects '$en'"
             case ((en, et), (_, at)) if norm(et) != norm(at) =>
@@ -3745,92 +2856,6 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
             java.time.LocalDateTime.parse(full.replace(' ', 'T'))
               .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
           })
-
-  private val msgClients =
-    scala.collection.mutable.Map.empty[String, graft.streaming.MqttClient]
-
-  /** `run msg client where broker = <host> and port = <n> and
-    * topic = <t>[,<t2>…] and dir = <watch-dir> [and qos = 1]` — the
-    * reference's client mode (`run msg client`,
-    * tcpip/mqtt_client.py:495-513): SUBSCRIBE to an EXTERNAL broker
-    * and land every delivered message as one NDJSON file in the watch
-    * dir — from there the ordinary watch-dir → mapping-policy → table
-    * streaming chain takes over (the same downstream as broker mode,
-    * so client vs broker is purely a which-side-initiates choice).
-    * QoS 1 by default: the client PUBACKs AFTER the file lands, and
-    * duplicate redeliveries are absorbed by the ingest gates. */
-  private def runMsgClient(t: String): String = {
-    val host = reqArg(t, "broker", "run msg client")
-    val port = reqArg(t, "port", "run msg client").toInt
-    val topics = reqArg(t, "topic", "run msg client").split(",")
-      .map(_.trim).filter(_.nonEmpty)
-    val dir = java.nio.file.Paths.get(reqArg(t, "dir", "run msg client"))
-    java.nio.file.Files.createDirectories(dir)
-    val qos = arg(t, "qos").map(_.toInt).getOrElse(1)
-    require(qos >= 0 && qos <= 1,
-      s"run msg client: qos $qos unsupported — this client implements " +
-        "QoS 0/1 only (QoS 2 receiver flow is not implemented)")
-    // idempotent on an IDENTICAL re-declaration (the attach-all
-    // replay path): a live client for these topics under the same
-    // command is a no-op — but a conflicting re-declaration (same
-    // topics, different dir/qos/broker) is refused loudly, never
-    // silently ignored (write-side serialization makes this
-    // check-then-insert atomic)
-    val mcKey = s"msg client:${topics.mkString(",")}"
-    msgClients.synchronized {
-      if (msgClients.get(mcKey).exists(_.isRunning)) {
-        val recorded = catalog.artifactRecord(mcKey)
-        require(recorded.contains(t.trim),
-          s"msg client for ${topics.mkString(", ")} already running " +
-            s"with a different configuration — exit it first " +
-            s"(recorded: ${recorded.getOrElse("?")})")
-        return s"msg client already subscribed to ${topics.mkString(", ")}"
-      }
-    }
-    // file names must be unique ACROSS client restarts and across two
-    // clients sharing a dir/topic: a bare per-client counter restarts
-    // at 1 and a landing REPLACES an existing name, overwriting an
-    // unprocessed landing (and Spark's file source tracks seen paths —
-    // a re-used name is silently skipped). A per-client nano-epoch
-    // prefix + the counter makes every landing a fresh path.
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val clientEpoch = java.lang.Long.toHexString(System.nanoTime())
-    val client = new graft.streaming.MqttClient(host, port,
-      s"graft-$clientEpoch",
-      (topic, payload) => {
-        val stem = s"m${clientEpoch}_${n.incrementAndGet()}_" +
-          topic.replaceAll("[^A-Za-z0-9]", "_")
-        // same landing contract as the Kafka consumer: one-line JSON
-        // per file; pretty-printed folds compact, garbage quarantines
-        normalizeNdjsonPayload(payload) match {
-          case Some(line) =>
-            graft.streaming.Landing.write(dir.resolve(stem + ".json"), line)
-          case None => quarantinePayload(dir, stem + ".bad", payload,
-            s"msg client $topic", "mqtt delivery")
-        }
-      })
-    client.start(topics.toSeq.map(tp => (tp, qos)))
-    msgClients.synchronized {
-      // a dead previous client under the same key is superseded
-      msgClients.get(mcKey).foreach(_.stop())
-      msgClients(mcKey) = client
-    }
-    catalog.recordArtifact(mcKey, t.trim)
-    s"msg client subscribed to ${topics.mkString(", ")} at $host:$port " +
-      s"(qos $qos, landing in $dir)"
-  }
-
-  /** `exit msg client` — disconnect every running msg client. */
-  private def exitMsgClient(): String = {
-    val n = msgClients.synchronized {
-      val k = msgClients.size
-      msgClients.valuesIterator.foreach(_.stop())
-      msgClients.keysIterator.foreach(catalog.removeArtifact)
-      msgClients.clear()
-      k
-    }
-    s"$n msg client(s) disconnected"
-  }
 
   /** `matview get where path = <dir> [and format = table]` — serve the
     * #groups-row artifact. */
@@ -5651,21 +4676,15 @@ object Engine {
       if (exact) low == prefix else low.startsWith(prefix)
   }
 
-  /** JVM-wide live-consumer topic claims, keyed by the catalog
-    * metadata root the offset journal lives under. The per-engine
-    * duplicate-topic guard alone is not enough: two Engine instances
-    * over ONE catalog root would each pass their local check and then
-    * clobber the shared (topic, partition) cursor — this registry
-    * makes the claim as wide as the journal it protects. Rootless
-    * catalogs key by engine identity (journal is in-memory anyway, no
-    * cross-engine hazard). Claims release on consumer exit and on
-    * poll-thread death. */
-  private[engine] val kafkaTopicClaims =
-    new java.util.concurrent.ConcurrentHashMap[
-      String,
-      java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]]()
-  private[engine] def claimScope(catalog: Catalog, engine: AnyRef): String =
-    catalog.metaRoot
-      .map(_.toAbsolutePath.normalize.toString)
-      .getOrElse("engine:" + System.identityHashCode(engine).toHexString)
+  /** The value of option `key = <value>` in a command: the first
+    * whitespace-delimited token after the `=` (the key matches
+    * case-insensitively, as a whole word). */
+  private[engine] def arg(text: String, key: String): Option[String] =
+    s"(?i)\\b$key\\s*=\\s*(\\S+)".r.findFirstMatchIn(text).map(_.group(1))
+
+  /** [[arg]] for a required option: missing, it fails with
+    * `<cmd> requires <key> =`. */
+  private[engine] def reqArg(text: String, key: String, cmd: String): String =
+    arg(text, key).getOrElse(
+      throw new IllegalArgumentException(s"$cmd requires $key ="))
 }

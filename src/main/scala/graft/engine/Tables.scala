@@ -17,10 +17,6 @@ import org.apache.spark.sql.types._
   * nothing here forces a collect or a full scan.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Columns stored as parquet TIMESTAMP(NANOS), which Spark cannot read
     * natively ([PARQUET_TYPE_ILLEGAL]). We read them as raw nanosecond
     * longs (spark.sql.legacy.parquet.nanosAsLong) and truncate to
@@ -51,9 +47,4 @@ object Tables {
       else d
     }
   }
-
-  /** Register every table as a temp view so spark.sql / the dialect
-    * front-end can resolve bare table names. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

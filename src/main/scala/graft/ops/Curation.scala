@@ -41,8 +41,6 @@ import org.apache.spark.sql.functions._
   *    row — 20 sources or 20k, never corpus-sized.
   */
 object Curation {
-  import TextOps.P
-
   /** Hashed n-gram feature buckets of a document: unigrams then bigrams,
     * in text order (the fold order every weight sum uses), polynomial
     * hash mod `numBuckets`. Native one-pass kernel

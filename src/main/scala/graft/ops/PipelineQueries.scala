@@ -80,10 +80,6 @@ object PipelineQueries {
       s"(a, c) -> (a*31 + c) % $P)"
 
   /** Word 3-gram shingles (short docs collapse to one whole-doc shingle). */
-  private def sShingles(toks: String) =
-    s"CASE WHEN size($toks) < 3 THEN array(array_join($toks, ' ')) " +
-      s"ELSE transform(sequence(0, size($toks) - 3), " +
-      s"i -> array_join(slice($toks, i + 1, 3), ' ')) END"
   private def dShingles(toks: String) = dShinglesN(toks, 3)
   private def dShinglesN(toks: String, n: Int) =
     s"CASE WHEN len($toks) < $n THEN [array_to_string($toks, ' ')] " +
@@ -91,16 +87,11 @@ object PipelineQueries {
       s"i -> array_to_string(($toks)[i+1:i+$n], ' ')) END"
 
   /** Distinct shingle hashes — the Jaccard/MinHash input set. */
-  private def sShingleHashes =
-    s"array_distinct(transform(${sShingles(sToks("text"))}, s -> ${sPoly("s")}))"
   private def dShingleHashes =
     s"list_distinct(list_transform(${dShingles(dToks("text"))}, s -> ${dPoly("s")}))"
 
   /** MinHash signature, k=16: sig_i = min over hashes of
     * (h*(1+7919*i) + (1+104729*i)) mod P. */
-  private def sMinhash(hs: String) =
-    s"transform(sequence(0, 15), i -> array_min(transform($hs, " +
-      s"h -> (h*(1 + 7919*cast(i as bigint)) + (1 + 104729*cast(i as bigint))) % $P)))"
   private def dMinhash(hs: String) =
     s"list_transform(range(16), i -> list_min(list_transform($hs, " +
       s"h -> (h*(1 + 7919*i) + (1 + 104729*i)) % $P)))"
@@ -115,11 +106,6 @@ object PipelineQueries {
       s"(a, v) -> (a*1000003 + v) % $P))"
 
   /** 32-bit SimHash over a precomputed token-hash array column. */
-  private def sSimhash(th: String) =
-    s"aggregate(sequence(0, 31), cast(0 as bigint), (acc, j) -> acc + " +
-      s"CASE WHEN aggregate($th, cast(0 as bigint), (a, h) -> a + " +
-      s"CASE WHEN shiftright(h, j) % 2 = 1 THEN 1 ELSE -1 END) > 0 " +
-      s"THEN shiftleft(cast(1 as bigint), j) ELSE 0 END)"
   private def dSimhash(th: String) =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), range(32)), (acc, j) -> acc + " +
       s"CASE WHEN list_reduce(list_prepend(CAST(0 AS BIGINT), $th), (a, h) -> a + " +
@@ -127,17 +113,9 @@ object PipelineQueries {
       s"THEN (CAST(1 AS BIGINT) << j) ELSE 0 END)"
 
   /** Left-fold dot product of two float-array columns, double accumulator. */
-  private def sDot(a: String, b: String) =
-    s"aggregate(zip_with($a, $b, (x, y) -> cast(x as double) * cast(y as double)), " +
-      s"cast(0 as double), (s, v) -> s + v)"
   private def dDot(a: String, b: String) =
     s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(len($a)), " +
       s"i -> CAST(($a)[i+1] AS DOUBLE) * CAST(($b)[i+1] AS DOUBLE))), (s, v) -> s + v)"
-
-  private def sCos(a: String, b: String) =
-    s"${sDot(a, b)} / (sqrt(${sDot(a, a)}) * sqrt(${sDot(b, b)}))"
-  private def dCos(a: String, b: String) =
-    s"${dDot(a, b)} / (sqrt(${dDot(a, a)}) * sqrt(${dDot(b, b)}))"
 
   /** 4-bit random-hyperplane LSH signature: bit j = 1 iff
     * dot(v, plane_j) > 0; plane component = quadratic congruential mix
@@ -149,13 +127,6 @@ object PipelineQueries {
     val y = s"($x * 2654435761 % $P)"
     s"(($y * $y % $P + $x) * 2654435761 % $P % 2001 - 1000)"
   }
-  private def sVecLsh(v: String) =
-    s"aggregate(sequence(0, 3), cast(0 as bigint), (acc, j) -> acc + " +
-      s"CASE WHEN aggregate(zip_with($v, sequence(cast(0 as bigint), " +
-      s"cast(size($v) as bigint) - 1), (x, i) -> cast(x as double) * " +
-      s"cast(${planeInt("(i + cast(j as bigint)*64)")} as double) " +
-      s"/ 1000.0), cast(0 as double), (s, p) -> s + p) > 0 " +
-      s"THEN shiftleft(cast(1 as bigint), j) ELSE 0 END)"
   private def dVecLsh(v: String) = dVecLshT(v, 0)
   /** Table `t`'s 4-bit signature (plane index J = t*4 + j — the same
     * independent-family offset vec_lsh uses for OR-amplification). */

@@ -120,12 +120,6 @@ object TextOps {
   def hamming(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** Byte blocks of a 32-bit signature (pigeonhole LSH for hamming <= 3:
-    * two sigs within distance 3 must agree on >= 1 of the 4 blocks). */
-  def simHashBlocks(sig: Column): Column =
-    transform(sequence(lit(0), lit(3)),
-      i => call_function("shiftright", sig, i * 8) % 256)
-
   // -------------------------------------------------------------------
   // Language ID / quality / token counting
   // -------------------------------------------------------------------

@@ -241,10 +241,6 @@ final class KafkaMiniBroker(port: Int = 0) {
     }
   }
 
-  def topicSize(topic: String, partition: Int = 0): Int = {
-    val l = logOf(topic, partition); l.synchronized(l.buf.length)
-  }
-
   private def partsOf(topic: String): Array[PartLog] =
     topics.synchronized {
       topics.getOrElseUpdate(topic, Array.fill(1)(new PartLog))

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 
 /** The one way a transport lands a file in a watched directory (Kafka
   * consumer, PLC poller, MQTT msg client, and the `.err` quarantine
-  * beside them).
+  * beside them), and the line-oriented contract of what lands there.
   *
   * Spark's file source needs a file to appear whole: a trigger that
   * lists a file still being written reads a truncated row and marks
@@ -32,5 +32,32 @@ object Landing {
           Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
       }
     } finally Files.deleteIfExists(tmp)
+  }
+
+  /** The line-oriented landing contract, enforced at EVERY message
+    * transport (Kafka consumer, MQTT msg client): every payload is
+    * parsed — a valid single-line JSON doc passes through verbatim, a
+    * valid multiline (pretty-printed) doc re-serializes compact, and
+    * a non-JSON payload returns None so the caller can quarantine it
+    * (it must neither corrupt the NDJSON landing nor vanish
+    * silently). The parse is µs on sensor-doc sizes; downstream
+    * re-parses every line anyway. */
+  def normalizeNdjsonPayload(raw: String): Option[String] =
+    try {
+      val parsed = org.json4s.jackson.JsonMethods.parse(raw)
+      Some(
+        if (raw.indexOf('\n') < 0 && raw.indexOf('\r') < 0) raw
+        else org.json4s.jackson.JsonMethods.compact(parsed))
+    } catch { case _: Exception => None }
+
+  /** Land a contract-violating payload as `name` in the err dir BESIDE
+    * the watch dir `dir` (`<dir>.err` — never inside it: the streamer's
+    * file source lists the watch dir and must not see .bad files as
+    * data); returns that err dir, for the caller's error log. */
+  def quarantinePayload(dir: Path, name: String, raw: String): Path = {
+    val ed = dir.resolveSibling(dir.getFileName.toString + ".err")
+    Files.createDirectories(ed)
+    write(ed.resolve(name), raw)
+    ed
   }
 }

@@ -205,7 +205,6 @@ final class ModbusTcpServer(bank0: ModbusBank = ModbusBank()) {
     java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
 
   def setBank(b: ModbusBank): Unit = bank.set(b)
-  def getBank: ModbusBank = bank.get()
 
   /** Bind and serve; `port` 0 picks an ephemeral port. A fixed port
     * lets tests restart the server at the same address (client
