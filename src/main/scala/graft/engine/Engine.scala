@@ -600,11 +600,12 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     * dropped, values cast). Appends to the table's storage path and
     * returns the appended row count.
     *
-    * A PUT runs about three small Spark jobs of its own (JSON schema
-    * inference and the append) plus its auto-folds: a table with a
-    * rollup and a matview takes about a dozen jobs per PUT in all. The
-    * batching for high-frequency small PUTs is the watch-dir/stream
-    * path (StreamIngest), exactly the reference's streaming mode. */
+    * A small PUT of JSON objects runs two Spark jobs of its own (JSON
+    * schema inference and a shuffle-free append) plus one aggregate
+    * and one write per auto-folded rollup or matview: a table with one
+    * of each takes six jobs per PUT in all. The batching for
+    * high-frequency small PUTs is the watch-dir/stream path
+    * (StreamIngest), exactly the reference's streaming mode. */
   def ingest(table: String, body: String,
       instructions: Option[String] = None): Long = {
     import spark.implicits._
@@ -648,9 +649,9 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
     // UNIQUE(file_hash) makes re-ingest of an identical payload a no-op
     // (tsd_info hash_index, db_info.py:1750) — the idempotence a
     // retrying REST client needs
+    val payload = trimmed.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val hash = java.security.MessageDigest.getInstance("MD5")
-      .digest(trimmed.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
+      .digest(payload).map("%02x".format(_)).mkString
     val existingPath = catalog.tablePath(table)
     // auto-create target (create_table.py:156 create_new_table): the
     // table is REGISTERED only after its first write succeeds, so a
@@ -695,6 +696,10 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
       case None =>
         if (lines.forall(_.startsWith("{")))
           alignedCount = Some(lines.size.toLong)
+        // the inference job stays even for a registered table: reading
+        // the lines with its typed schema parses differently from
+        // infer-then-cast — a JSON string "12.5" into a double column,
+        // or an object into a string column, comes out otherwise
         val raw = spark.read.json(spark.createDataset(lines))
         val sysNames = Set("row_id", "insert_timestamp", "tsd_name", "tsd_id")
         // auto-create aligns to the reference's inference rules
@@ -757,13 +762,20 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
               TimePartitions.write(stamped, tsCol, unit, pn, path,
                 org.apache.spark.sql.SaveMode.Append)
             case None =>
-              // REBALANCE before the append (guide §6): a PUT batch
-              // inherits the JSON reader's partition count and was
-              // appending one near-empty file per core per PUT; AQE
-              // sizes the append adaptively (small batch -> one file)
-              // so table scans and folds stop paying per-file opens
-              // that grow with PUT count
-              stamped.hint("REBALANCE").write.mode("append").parquet(path)
+              // one file per PUT (guide §6): a PUT batch inherits the
+              // JSON reader's partition count and was appending one
+              // near-empty file per core per PUT, so table scans and
+              // folds paid per-file opens that grew with PUT count. A
+              // body under 2 MB appends from one task with no shuffle; a
+              // larger one takes REBALANCE, which AQE sizes adaptively.
+              // 2 MB is below the measured break-even (median PUT into
+              // a plain table, 4 cores, REBALANCE -> one task: 256 KB
+              // 230 -> 186 ms, 1 MB 222 -> 211, 2 MB 277 -> 268, 4 MB
+              // 424 -> 449, 8 MB 672 -> 759): past it the one-task JSON
+              // parse costs more than the shuffle job it saves
+              (if (payload.length < (2 << 20)) stamped.coalesce(1)
+               else stamped.hint("REBALANCE"))
+                .write.mode("append").parquet(path)
           }
         } catch { case e: Throwable =>
           // roll the reservation back or a transient write failure would
@@ -1643,14 +1655,15 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
   /** The matview fold body — shared by `matview refresh`, the ingest
     * auto-fold and `matview sync`: fold `delta` into the view and
     * advance its `wm_` tag in the same commit (see [[foldedWm]]). The
-    * commit is the fold's one action, so nothing is checkpointed.
-    * Returns the committed version. */
+    * delta enters as per-row partials, so the fold is one aggregate
+    * (one shuffle), and the commit is its one action, so nothing is
+    * checkpointed. Returns the committed version. */
   private def foldMatview(m: graft.dialect.MatViewServe.Meta,
       delta: DataFrame, tag: Option[String], deltaWm: Option[Long]): Long = {
     val newWm = foldedWm(m.path, delta, deltaWm)
     graft.ops.IndexStore.write(graft.ops.MatView.fold(
         stripWm(stateAt(m.path, "matview state")),
-        graft.ops.MatView.partials(delta, m.keys, m.aggs), m.keys, m.aggs),
+        graft.ops.MatView.rows(delta, m.keys, m.aggs), m.keys, m.aggs),
       m.path, tag.toSeq ++ wmTag(newWm))
   }
 

@@ -256,8 +256,13 @@ object IndexStore {
     // fold/serve re-listed and re-opened all of them. AQE sizes the
     // output adaptively: tiny artifact -> one file, huge artifact ->
     // advisory-sized files (a fixed coalesce(1) would be wrong at
-    // scale; REBALANCE also splits skewed partitions).
-    try df.hint("REBALANCE").write.mode("overwrite").parquet(vDir)
+    // scale; REBALANCE also splits skewed partitions). Skipped over an
+    // aggregate (a fold, a create's grouped pass): its output is already
+    // a shuffle that AQE has coalesced the same way, and a second
+    // exchange only adds a job. Unions, anti-joins and index builds
+    // keep the hint.
+    val out = if (aggregated(df)) df else df.hint("REBALANCE")
+    try out.write.mode("overwrite").parquet(vDir)
     finally sc.setJobDescription(prevDesc)
     tags.foreach { t =>
       fs.create(new Path(vDir, s"_GRAFT_TAG_$t"), false).close()
@@ -285,6 +290,18 @@ object IndexStore {
         fs.delete(st.getPath, false)
     }
     next
+  }
+
+  /** True when `df`'s analyzed plan, below any Projects and Filters,
+    * is an Aggregate. */
+  private def aggregated(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    @annotation.tailrec def top(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, c) => top(c)
+      case Filter(_, c) => top(c)
+      case other => other
+    }
+    top(df.queryExecution.analyzed).isInstanceOf[Aggregate]
   }
 
   /** All tags stamped on the CURRENT committed version. Because a tag

@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
   *   - create: one grouped partial pass over the base table; the
   *     artifact holds one row per group (state size = |groups|, never
   *     |rows|), committed through the crash-atomic [[IndexStore]].
-  *   - refresh: partials of the BATCH fold into the state by key —
-  *     count/sum add, min/max lattice-join. Batch-sized work; the
-  *     base table's history is never rescanned.
+  *   - refresh: the BATCH folds into the state by key — count/sum
+  *     add, min/max lattice-join — in one aggregate over the state and
+  *     the batch's per-row partials ([[rows]]); create is that merge
+  *     over per-row partials alone. Batch-sized work; the base table's
+  *     history is never rescanned.
   *   - delete ([[foldDelete]]): count/sum SUBTRACT a tombstone
   *     batch's partials and zero-count groups retire, so fold-with-
   *     deletes == rebuild (q177); min/max are not self-maintainable
@@ -49,12 +51,10 @@ object MatView {
       s"unsupported agg fn $fn (distributive algebra only)")
   }
 
-  private def partialCol(a: AggSpec): Column = a.fn match {
-    case "count" if a.expr.trim == "1" => count(lit(1)).as(a.alias)
-    case "count" => count(expr(a.expr)).as(a.alias)
-    case "sum" => sum(expr(a.expr)).as(a.alias)
-    case "min" => min(expr(a.expr)).as(a.alias)
-    case "max" => max(expr(a.expr)).as(a.alias)
+  private def rowCol(a: AggSpec): Column = a.fn match {
+    case "count" if Set("1", "*")(a.expr.trim) => lit(1L).as(a.alias)
+    case "count" => when(expr(a.expr).isNull, 0L).otherwise(1L).as(a.alias)
+    case _ => expr(a.expr).as(a.alias)
   }
 
   private def foldCol(a: AggSpec): Column = a.fn match {
@@ -63,9 +63,12 @@ object MatView {
     case "max" => max(col(a.alias)).as(a.alias)
   }
 
-  /** Grouped partials of `df` — the create pass AND the per-batch
-    * refresh pass (same shape; distributivity is the whole point). */
-  def partials(df: DataFrame, keys: Seq[String],
+  /** The per-row partials of `df`, one row per input row: its keys,
+    * then per agg `count` 1 (`count(expr)` 0 or 1) and the value itself
+    * as its own sum, min and max. [[fold]] merges them into the state
+    * with the aggregate it merges grouped partials with, so a refresh
+    * is one shuffle. */
+  def rows(df: DataFrame, keys: Seq[String],
       aggs: Seq[AggSpec]): DataFrame = {
     require(keys.nonEmpty && aggs.nonEmpty, "keys and aggs required")
     require(aggs.map(_.alias).distinct.size == aggs.size,
@@ -75,16 +78,24 @@ object MatView {
     keys.foreach(k => require(k.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"matview keys must be plain columns (got '$k'); project the " +
         "expression into a column first"))
-    val cols = aggs.map(partialCol)
-    df.groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
+    df.select(keys.map(col) ++ aggs.map(rowCol): _*)
   }
 
-  /** Fold batch partials into the standing state by key. */
+  /** Grouped partials of `df` — the create pass: the fold's merge over
+    * its per-row partials alone (distributivity is the whole point). */
+  def partials(df: DataFrame, keys: Seq[String],
+      aggs: Seq[AggSpec]): DataFrame = merge(rows(df, keys, aggs), keys, aggs)
+
+  /** Fold batch partials, grouped ([[partials]]) or per-row ([[rows]]),
+    * into the standing state by key. */
   def fold(state: DataFrame, batch: DataFrame, keys: Seq[String],
+      aggs: Seq[AggSpec]): DataFrame =
+    merge(state.unionByName(batch), keys, aggs)
+
+  private def merge(df: DataFrame, keys: Seq[String],
       aggs: Seq[AggSpec]): DataFrame = {
     val cols = aggs.map(foldCol)
-    state.unionByName(batch)
-      .groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
+    df.groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
   }
 
   /** Fold a DELETE batch out of the standing state — the tombstone

@@ -33,9 +33,11 @@ import graft.dialect.Increments
   *
   * Late data needs no watermark: a delta row at ANY timestamp merges into
   * its bucket (a streaming windowed agg would have dropped it). Each
-  * refresh shuffles O(delta-agg + rollup) rows on the bucket key — the
-  * rollup side is tiny by construction, so refresh cost is dominated by
-  * the one pass over the delta.
+  * refresh is ONE aggregate, the same merge that unions stored rollups:
+  * every delta row enters as a one-row partial ([[rows]]), the
+  * aggregate's map side combines them, and one shuffle on the bucket
+  * key meets the state — the rollup side is tiny by construction, so
+  * refresh cost is dominated by the one pass over the delta.
   *
   * The rollup records its own grain in a constant `grain` column (the
   * geometry discipline of [[Dedup.embeddingIndex]]): [[serve]] and
@@ -72,22 +74,29 @@ object Rollup {
 
   /** Rollup schema: `grain_ts` (ts truncated to `grain`), `dims...`,
     * `n` row count, then per measure `nv_<m>`, `sum_dec_<m>`,
-    * `min_<m>`, `max_<m>`, and the recorded `grain`. */
+    * `min_<m>`, `max_<m>`, and the recorded `grain`: [[combine]] over
+    * the per-row partials of `df`. */
   def build(df: DataFrame, tsCol: String, grain: String,
+      dims: Seq[String], measures: Seq[String]): DataFrame =
+    combine(rows(df, tsCol, grain, dims, measures), dims, grain, tsCol)
+
+  /** The per-row partials of `df`: each event row as a one-row rollup
+    * at `grain` — `n` 1, `nv_<m>` 0 or 1, and the value itself as its
+    * own sum, min and max. */
+  private def rows(df: DataFrame, tsCol: String, grain: String,
       dims: Seq[String], measures: Seq[String]): DataFrame = {
     Increments.unitSeconds(grain) // validates the unit name
     require(measures.nonEmpty, "rollup needs at least one measure")
-    val aggs = count(lit(1)).as("n") +: measures.flatMap { m =>
-      Seq(count(col(m)).as(s"nv_$m"),
-        sum(col(m).cast(DecimalType(18, 2)))
-          .cast(DecimalType(28, 2)).as(s"sum_dec_$m"),
-        min(col(m)).as(s"min_$m"),
-        max(col(m)).as(s"max_$m"))
+    val parts = lit(1L).as("n") +: measures.flatMap { m =>
+      Seq(when(col(m).isNull, 0L).otherwise(1L).as(s"nv_$m"),
+        col(m).cast(DecimalType(18, 2)).cast(DecimalType(28, 2))
+          .as(s"sum_dec_$m"),
+        col(m).as(s"min_$m"),
+        col(m).as(s"max_$m"))
     }
-    df.groupBy(date_trunc(grain, col(tsCol)).as("grain_ts") +: dims.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("grain", lit(grain))
-      .withColumn("ts_col", lit(tsCol))
+    df.select((date_trunc(grain, col(tsCol)).as("grain_ts") +:
+      dims.map(col)) ++ parts :+ lit(grain).as("grain") :+
+      lit(tsCol).as("ts_col"): _*)
   }
 
   def build(df: DataFrame, tsCol: String, grain: String,
@@ -168,7 +177,7 @@ object Rollup {
     require(gs.length <= 1, "mixed-grain rollup: " + gs.mkString(", "))
     gs.headOption.map { g =>
       require(ids.forall(_._2 == tsCol), mixedIdentity(ids :+ (g -> tsCol)))
-      combine(cur.unionByName(build(delta, tsCol, g, dims, measures)),
+      combine(cur.unionByName(rows(delta, tsCol, g, dims, measures)),
         dims, g, tsCol)
     }
   }
@@ -226,18 +235,31 @@ object Rollup {
       foldStore(spark, dir, delta, tsCol, grain, dims, measures, tags))
 
   /** [[refreshStore]]'s fold and commit, returning the number of the
-    * version it committed. */
+    * version it committed. It folds at the registered `(grain, tsCol)`
+    * (an EMPTIED state keeps its schema but not its identity rows — see
+    * [[grainOf]]) and checks the state's identity inside the commit's
+    * own job: a stored row of another grain or ts_col fails the write,
+    * which commits nothing (readers skip its uncommitted `v=` dir).
+    * Only then does the probe run, to refuse a mixed identity as
+    * [[refresh]] does, or to fold a state of one foreign grain at it. */
   def foldStore(spark: SparkSession, dir: String, delta: DataFrame,
       tsCol: String, grain: String, dims: Seq[String],
       measures: Seq[String], tags: Seq[String]): Long = {
-    // an EMPTIED state (every bucket retired by deletes/drops) keeps
-    // its schema but not its identity rows — fold at the CALLER'S
-    // registered grain, never grainOf's guess (see grainOf)
-    val next = IndexStore.read(spark, dir)
-      .flatMap(foldAt(_, delta, tsCol, dims, measures))
-      .getOrElse(build(delta, tsCol, grain, dims, measures))
-    // one action reads `next`, so no checkpoint before the commit
-    IndexStore.write(next, dir, tags)
+    // one action reads each fold, so no checkpoint before the commit
+    def commit(next: DataFrame) = IndexStore.write(next, dir, tags)
+    IndexStore.read(spark, dir) match {
+      case None => commit(build(delta, tsCol, grain, dims, measures))
+      case Some(cur) =>
+        val same = col("grain") <=> lit(grain) && col("ts_col") <=> lit(tsCol)
+        val checked = cur.filter(when(same, lit(true)).otherwise(raise_error(
+          lit(s"rollup state at $dir is not (grain=$grain, ts_col=$tsCol)"))))
+        try commit(combine(checked.unionByName(
+          rows(delta, tsCol, grain, dims, measures)), dims, grain, tsCol))
+        catch { case e: Exception
+            if identityOf(cur).exists(_ != (grain -> tsCol)) =>
+          commit(foldAt(cur, delta, tsCol, dims, measures).getOrElse(throw e))
+        }
+    }
   }
 
   def refreshStore(spark: SparkSession, dir: String, delta: DataFrame,

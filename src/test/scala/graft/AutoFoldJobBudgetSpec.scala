@@ -33,8 +33,10 @@ object JobCount {
 }
 
 /** The PUT auto-fold's Spark job budget: a PUT into a table with a
-  * registered rollup and matview (auto refresh on) stays within 13
-  * jobs, and both folded artifacts still equal a from-scratch create. */
+  * registered rollup and matview (auto refresh on) runs 6 jobs — JSON
+  * schema inference, the shuffle-free append, and one aggregate plus
+  * one write per fold — whatever the size of the folded state, and
+  * both folded artifacts still equal a from-scratch create. */
 class AutoFoldJobBudgetSpec extends SparkSpec {
 
   private def body(k: Int): String = (0 until 20).map { i =>
@@ -47,7 +49,7 @@ class AutoFoldJobBudgetSpec extends SparkSpec {
     df.drop(graft.ops.MatView.WatermarkCol).collect().map(_.toString)
       .toSeq.sorted
 
-  test("a PUT folds its rollup and matview in at most 13 Spark jobs; " +
+  test("a PUT folds its rollup and matview in 6 Spark jobs; " +
       "served totals equal the table and each artifact equals a fresh " +
       "create") {
     val dir = java.nio.file.Files.createTempDirectory("afjb")
@@ -67,7 +69,7 @@ class AutoFoldJobBudgetSpec extends SparkSpec {
     engine.ingest("jb", body(2))
     val (n, jobs) = JobCount(spark)(engine.ingest("jb", body(3)))
     assert(n === 20L)
-    assert(jobs <= 13, s"PUT with rollup + matview auto-fold ran $jobs jobs")
+    assert(jobs === 6, s"PUT with rollup + matview auto-fold ran $jobs jobs")
     assert(engine.execute("get view auto refresh").contains("no fold errors"))
 
     val table = cat.tablePath("jb").get
@@ -96,5 +98,29 @@ class AutoFoldJobBudgetSpec extends SparkSpec {
       sorted(graft.ops.IndexStore.read(spark, p).get))
     assert(folded === fresh)
     assert(folded.head.nonEmpty && folded(1).length === 4)
+  }
+
+  test("the 50th folded PUT into a table runs as many Spark jobs as " +
+      "the 1st") {
+    val dir = java.nio.file.Files.createTempDirectory("afj50")
+    val engine = new graft.engine.Engine(spark, new graft.engine.Catalog(spark))
+    engine.dataDir = Some(dir.resolve("data").toString)
+    engine.ingest("j50", body(1))
+    engine.ingest("j50", body(2))
+    engine.execute(s"rollup create where table = j50 and path = " +
+      s"${dir.resolve("ru")} and time = ts and value = v and grain = " +
+      "minute and dims = (device)")
+    engine.execute(s"matview create where table = j50 and path = " +
+      s"${dir.resolve("mv")} and spec = " +
+      """{"keys": ["device"], "aggs": [{"fn": "count", "alias": "n"}, """ +
+      """{"fn": "sum", "expr": "v", "alias": "sv"}]}""")
+    val jobs = (3 until 53).map(k => JobCount(spark)(engine.ingest("j50", body(k))))
+    assert(jobs.forall(_._1 === 20L))
+    assert(jobs.head._2 === 6 && jobs.last._2 === jobs.head._2,
+      s"jobs per folded PUT: ${jobs.map(_._2).mkString(",")}")
+    assert(engine.execute("get view auto refresh").contains("no fold errors"))
+    val audit = engine.execute("artifact verify where table = j50")
+    assert(audit.linesIterator.count(_.contains("VERIFIED exact")) === 2,
+      audit)
   }
 }

@@ -24,7 +24,7 @@ class IndexFoldSpec extends SparkSpec {
   }
 
   test("a PUT into a tindex-backed table takes the batch's watermark " +
-      "from the ledger: 9 Spark jobs, and the index verifies exact") {
+      "from the ledger: 8 Spark jobs, and the index verifies exact") {
     val (dir, engine) = engineAt("ifjb")
     engine.ingest("tj", docs(1))
     val tx = dir.resolve("tx")
@@ -33,7 +33,7 @@ class IndexFoldSpec extends SparkSpec {
     engine.ingest("tj", docs(2))
     val (n, jobs) = JobCount(spark)(engine.ingest("tj", docs(3)))
     assert(n === 20L)
-    assert(jobs === 9, s"PUT with tindex auto-fold ran $jobs jobs")
+    assert(jobs === 8, s"PUT with tindex auto-fold ran $jobs jobs")
     noFoldErrors(engine)
     val audit = engine.execute("artifact verify where table = tj")
     assert(audit.contains(s"tindex $tx: VERIFIED exact"), audit)
