@@ -20,6 +20,14 @@ import org.apache.spark.sql.SparkSession
   * the measured build side fits task memory, where a static
   * SHUFFLE_HASH hint OOM'd the 10x probe), and AQE itself is on by
   * default since Spark 3.2.
+  *
+  * The local filesystem (`file:`) is [[graft.io.LocalFs]]. Without
+  * Hadoop's native library the stock one forks a `chmod` process for
+  * every file and committer dir it creates: 34 per PUT into a
+  * table with a rollup and a matview (`tools/forkcount.sh`), some of
+  * them on the PUT thread under the table lock. The replacement sets
+  * the same modes with a system call and writes the same `.crc`
+  * files.
   */
 object Sessions {
   /** The AQE sort-merge→shuffled-hash rewrite bound, derived from the
@@ -76,6 +84,7 @@ object Sessions {
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         shjThreshold(cores))
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFs].getName)
 
   /** A local-mode session for this repo's mains: master/parallelism from
     * `$SPARK_GRAFT_CPUS` (driver contract — the driver re-runs the bench
@@ -87,7 +96,9 @@ object Sessions {
     * job only adds scheduling cost (at Spark's default threshold of 32
     * paths, a streamer batch's file list is listed by a job with one
     * task per file). [[defaults]] leaves it alone: embedders may run a
-    * cluster. */
+    * cluster. Hadoop caches one local filesystem per JVM, the first one
+    * created, so a `file:` filesystem made before this session keeps
+    * the stock class: that is logged as a WARN. */
   def local(app: String, defaultCpus: String = "32"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     val spark = defaults(SparkSession.builder()
@@ -104,6 +115,13 @@ object Sessions {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    if (!fs.isInstanceOf[graft.io.LocalFs])
+      org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
+        s"file: resolves to ${fs.getClass.getName}, not " +
+          s"${classOf[graft.io.LocalFs].getName}: a local filesystem was " +
+          "created before this session, and its creates may fork chmod")
     spark
   }
 }

@@ -73,11 +73,10 @@ import graft.ingest.SchemaInference
   *       [[Engine.Write]] commands hold its exclusive side, so DDL,
   *       sync, retention and HA still run one at a time and alone.
   *       Every command that commits an artifact version or rewrites a
-  *       directory is therefore a Write entry. A few Write entries are
-  *       broader than they need to be (`layout scan` only reads;
-  *       `set query log` and `reset ... log` touch
-  *       monitor-synchronized state) and stay so until a follow-up
-  *       narrows them;
+  *       directory is therefore a Write entry. One is broader than
+  *       it needs to be: `layout scan` only reads, but
+  *       `Layout.zorderWrite` rewrites the directory it reads in
+  *       place, so it stays Write until that rewrite swaps instead;
   *     - per-table locks ([[tableLocked]]). REST PUT's
   *       reserve-append-fold section and the streaming view-fold sinks
   *       hold the gate's shared side plus the locks of the table and
@@ -1019,22 +1018,25 @@ final class Engine(val spark: SparkSession, val catalog: Catalog,
         s"${java.time.Instant.ofEpochMilli(ts)} $cmd -> $err"
       }.mkString("\n")
     }),
-    exact("reset event log", Write)(_ => synchronized {
+    // the reset/set twins of the `get` logs above are Read like them:
+    // they touch only this monitor's logs and counters, no table or
+    // artifact, so a blocked writer must not hold them up
+    exact("reset event log", Read)(_ => synchronized {
       eventLog.clear(); "event log reset"
     }),
-    exact("reset error log", Write)(_ => synchronized {
+    exact("reset error log", Read)(_ => synchronized {
       errorLog.clear(); "error log reset"
     }),
-    exact("reset query log", Write)(_ => synchronized {
+    exact("reset query log", Read)(_ => synchronized {
       queryLog.clear(); "query log reset"
     }),
-    exact("reset queries time", Write)(_ => synchronized {
+    exact("reset queries time", Read)(_ => synchronized {
       // QueryMonitor.reset (job_instance.py:44-48)
       java.util.Arrays.fill(queryBuckets, 0L)
       queryMonitorStart = System.currentTimeMillis
       "queries time reset"
     }),
-    cmd("set query log", Write)(t => synchronized {
+    cmd("set query log", Read)(t => synchronized {
       val rest = t.toLowerCase.substring("set query log".length).trim
       val profileRx = "profile\\s+(\\d+)\\s+seconds?".r
       rest match {

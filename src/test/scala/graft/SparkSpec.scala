@@ -13,6 +13,8 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the engine's local filesystem, as Sessions.defaults sets it
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFs].getName)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()

@@ -26,6 +26,15 @@ object TableLockSpec {
     entered.get(id).countDown()
     release.get(id).await()
   }
+
+  /** `body` on a daemon thread. */
+  def async[A](body: => A): FutureTask[A] = {
+    val f = new FutureTask[A](() => body)
+    val t = new Thread(f)
+    t.setDaemon(true)
+    t.start()
+    f
+  }
 }
 
 /** Writes into different tables run at the same time; writes into one
@@ -55,14 +64,6 @@ class TableLockSpec extends SparkSpec {
         """{"fn": "sum", "expr": "v", "alias": "sv"}]}""")
     }
     engine
-  }
-
-  private def async[A](body: => A): FutureTask[A] = {
-    val f = new FutureTask[A](() => body)
-    val t = new Thread(f)
-    t.setDaemon(true)
-    t.start()
-    f
   }
 
   /** Start `foldStandingViews(table, …)` with a one-row delta whose UDF

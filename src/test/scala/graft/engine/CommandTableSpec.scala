@@ -8,7 +8,8 @@ import graft.SparkSpec
   * matches fails as `unknown command`. A pin changes only together with
   * the reason beside its entry in [[Engine.commands]]; the pins marked
   * `IndexStore commit` are Write because that commit is a single-writer
-  * protocol. */
+  * protocol, and the `monitor-held` ones are Read because they touch
+  * only state the engine's monitor guards. */
 class CommandTableSpec extends SparkSpec {
   import Engine.{Read, Unguarded, Write}
 
@@ -19,11 +20,11 @@ class CommandTableSpec extends SparkSpec {
     "get query log" -> Read,
     "get event log" -> Read,
     "get error log" -> Read,
-    "reset event log" -> Write,
-    "reset error log" -> Write,
-    "reset query log" -> Write,
-    "reset queries time" -> Write,
-    "set query log profile 2 seconds" -> Write,
+    "reset event log" -> Read, // monitor-held event log only
+    "reset error log" -> Read, // monitor-held error log only
+    "reset query log" -> Read, // monitor-held query log only
+    "reset queries time" -> Read, // monitor-held histogram only
+    "set query log profile 2 seconds" -> Read, // monitor-held switch only
     "get streaming" -> Read,
     "get status" -> Read,
     "create view v on t (a as b)" -> Write,
